@@ -4,10 +4,26 @@ Re-expresses reference avro/JdbcAvroIO.java Spark-first: pyspark 4.1.2
 does not bundle the spark-avro datasource, so we encode Avro binary
 ourselves — but where dbeam streams one ResultSet single-threaded,
 here EVERY partition of the DataFrame encodes and writes its own
-`part-NNNNN.avro` concurrently via mapInPandas (Arrow batches in,
+`part-NNNNN.avro` concurrently via mapInArrow (Arrow batches in,
 (file, rows, bytes) stats out). No driver collect, no shuffle: the
 write is map-only, so at 100 TB it scales with the number of
 partitions exactly like Spark's built-in file sinks.
+
+Encoding is column → binary → row join. Each column of a batch
+becomes one Arrow large_binary array holding every row's complete
+union cell (branch byte + Avro value), built from the column's Arrow
+buffers by one numpy "lengths + payload" kernel (`_cells`); one
+`binary_join_element_wise` concatenates the cells into rows, and each
+block of 4096 rows is a slice of the joined buffer. No Python object
+exists per cell or per row. Ints, timestamps, dates, floats, doubles,
+booleans, strings and bytes take this path, and so do decimals with
+scale 0–6, via Arrow's decimal→string cast, whose text at those
+scales is exactly Python's `str(Decimal)`. Two kinds of column take
+the scalar encoders (`_make_cell_encoder`) instead, into the same kind
+of array: arrays, which have no flat payload, and decimals with scale
+above 6, where Python's E-notation (`0E-10`) differs from Arrow's
+(`0.E-10`). `OcfEncoder.encode_rows` keeps the all-scalar path as the
+reference the property tests compare against.
 
 Codecs: null, deflate1-9 (stdlib zlib — dbeam's default deflate6, ref
 args/JdbcAvroArgs.java), plus the spec's bzip2 and xz (stdlib bz2 /
@@ -18,7 +34,7 @@ error.
 
 from __future__ import annotations
 
-import io
+import contextlib
 import json
 import os
 import struct
@@ -30,7 +46,6 @@ from pyspark.sql import DataFrame
 
 _MAGIC = b"Obj\x01"
 _BLOCK_ROWS = 4096
-_NULL_MASK = "__dbeam_isnull__"
 
 # Guards the session-conf save/flip/restore window in write_avro
 # against concurrent writers on the same SparkSession (see the
@@ -119,21 +134,14 @@ def _make_cell_encoder(avro_type):
     raise ValueError(f"Unsupported Avro type: {avro_type!r} (logical={logical})")
 
 
-def _normalize_series(s, avro_type, null_mask=None):
+def _normalize_series(s, avro_type):
     """pandas Series → list of python scalars matching the Avro type
-    (timestamps → epoch millis, like dbeam's JdbcAvroRecord).
-
-    `null_mask` (bool series) marks SQL NULLs for float/double columns:
-    Arrow→pandas collapses NULL and NaN into NaN, but dbeam writes NULL
-    as Avro null and NaN as a real double (JdbcAvroRecord reads
-    getDouble + wasNull), so the writer carries the mask explicitly."""
+    (timestamps → epoch millis, like dbeam's JdbcAvroRecord)."""
     import pandas as pd
 
     t = avro_type
     if isinstance(t, dict) and "logicalType" in t:
         t = t["type"]
-    if null_mask is not None:
-        return [None if m else v for v, m in zip(s, null_mask)]
     if pd.api.types.is_datetime64_any_dtype(s.dtype):
         ms = s.astype("int64") // 1_000_000  # ns → ms
         return [None if pd.isna(v) else int(m) for v, m in zip(s, ms)]
@@ -162,285 +170,152 @@ def _normalize_series(s, avro_type, null_mask=None):
     return out
 
 
-# Length-prefix table (union marker + zigzag(len)) for short strings.
-_LEN_PREFIX = None
+# ------------------------------------------------------- column builder
 
 
-def _len_prefix_table():
-    global _LEN_PREFIX
-    if _LEN_PREFIX is None:
-        _LEN_PREFIX = [b"\x02" + _zigzag(n) for n in range(4096)]
-    return _LEN_PREFIX
+def _cells(null, varint=None, offsets=None, data=None):
+    """The shared "lengths + payload" kernel: a large_binary array of
+    union cells built from one offsets vector and one payload buffer.
 
-
-def _varint_cells(vals, null):
-    """Vectorized Avro union+varint cells for an int64 array.
-
-    Returns a list of per-cell byte strings (b'\\x00' for null, else
-    b'\\x02' + zigzag-varint). All arithmetic is numpy; the only
-    per-cell Python work is slicing the shared output buffer."""
+    A null cell is b"\x00". A non-null cell i is b"\x02", then the
+    zigzag varint of ``varint[i]`` (ints and timestamps: the value;
+    strings and bytes: the length), then the raw payload bytes
+    ``data[offsets[i]:offsets[i + 1]]`` (IEEE floats, booleans, string
+    and bytes contents). Either part may be absent. All arithmetic is
+    numpy over whole columns; no Python object exists per cell."""
     import numpy as np
+    import pyarrow as pa
 
-    z = (vals.astype(np.uint64) << np.uint64(1)) ^ (
-        vals >> np.int64(63)
-    ).astype(np.uint64)
-    nbytes = np.ones(len(z), dtype=np.int64)
-    for k in range(1, 10):
-        nbytes += (z >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-    cell_len = np.where(null, 1, nbytes + 1)
-    ends = np.cumsum(cell_len)
-    offs = ends - cell_len
-    buf = np.zeros(int(ends[-1]) if len(ends) else 0, dtype=np.uint8)
-    nn = ~null
-    buf[offs[nn]] = 2
-    for k in range(10):
-        sel = nn & (nbytes > k)
-        if not sel.any():
-            break
-        byte = (z[sel] >> np.uint64(7 * k)) & np.uint64(0x7F)
-        cont = (nbytes[sel] > k + 1).astype(np.uint64) << np.uint64(7)
-        buf[offs[sel] + 1 + k] = (byte | cont).astype(np.uint8)
-    raw = buf.tobytes()
-    return [raw[a:b] for a, b in zip(offs.tolist(), ends.tolist())]
-
-
-def _fixed_cells(vals, null, width, dtype_code):
-    """Vectorized cells for IEEE float/double columns (fixed width)."""
-    import numpy as np
-
-    n = len(vals)
-    cell_len = np.where(null, 1, width + 1)
-    ends = np.cumsum(cell_len)
-    offs = ends - cell_len
-    buf = np.zeros(int(ends[-1]) if n else 0, dtype=np.uint8)
-    nn = ~null
-    buf[offs[nn]] = 2
-    payload = (
-        np.ascontiguousarray(vals[nn])
-        .astype(dtype_code)
-        .view(np.uint8)
-        .reshape(-1, width)
-    )
-    idx = offs[nn][:, None] + 1 + np.arange(width)
-    buf[idx] = payload
-    raw = buf.tobytes()
-    return [raw[a:b] for a, b in zip(offs.tolist(), ends.tolist())]
-
-
-def _column_cells(s, avro_type, null_mask):
-    """Per-cell encoded bytes (incl. union branch) for one column, or
-    None if this column needs the scalar fallback path."""
-    import numpy as np
-    import pandas as pd
-
-    t = avro_type
-    if isinstance(t, dict) and "logicalType" in t:
-        t = t["type"]
-    dt = s.dtype
-    if t in ("long", "int"):
-        if pd.api.types.is_datetime64_any_dtype(dt):
-            null = pd.isna(s).to_numpy()
-            ms = s.astype("int64").to_numpy() // 1_000_000
-            return _varint_cells(ms, null)
-        if dt in (np.int64, np.int32, np.int16, np.int8):
-            vals = s.to_numpy().astype(np.int64)
-            return _varint_cells(vals, np.zeros(len(vals), dtype=bool))
-        if dt in (np.float64, np.float32):  # nullable ints via NaN
-            null = np.isnan(s.to_numpy())
-            vals = np.nan_to_num(s.to_numpy()).astype(np.int64)
-            return _varint_cells(vals, null)
-        return None
-    if t == "double" and dt == np.float64:
-        null = (
-            null_mask.to_numpy()
-            if null_mask is not None
-            else np.zeros(len(s), dtype=bool)
+    n = len(null)
+    valid = ~null
+    nb = np.zeros(n, dtype=np.int64)  # varint bytes per cell
+    if varint is not None and n:
+        z = (varint.astype(np.uint64) << np.uint64(1)) ^ (
+            varint >> np.int64(63)
+        ).astype(np.uint64)
+        nb[valid] = 1
+        for k in range(1, 10):
+            more = valid & (z >= (np.uint64(1) << np.uint64(7 * k)))
+            if not more.any():
+                break
+            nb += more
+    plen = 0
+    if offsets is not None:
+        raw = np.diff(offsets)
+        plen = np.where(null, 0, raw)
+    ends = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(1 + nb + plen, out=ends[1:])
+    starts = ends[:-1]
+    buf = np.empty(int(ends[-1]), dtype=np.uint8)
+    buf[starts] = valid.view(np.uint8) << 1
+    for k in range(int(nb.max()) if n else 0):
+        sel = nb > k
+        byte = ((z[sel] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(
+            np.uint8
         )
-        return _fixed_cells(s.to_numpy(), null, 8, "<f8")
-    if t == "float" and dt in (np.float32, np.float64):
-        null = (
-            null_mask.to_numpy()
-            if null_mask is not None
-            else np.zeros(len(s), dtype=bool)
-        )
-        return _fixed_cells(s.to_numpy(), null, 4, "<f4")
-    if t == "boolean" and dt == np.bool_:
-        lut = (b"\x02\x00", b"\x02\x01")
-        return [lut[v] for v in s.to_numpy().astype(np.uint8).tolist()]
-    if t == "string":
-        table = _len_prefix_table()
-        cells = []
-        for v in s:
-            if v is None or (isinstance(v, float) and v != v):
-                cells.append(b"\x00")
-                continue
-            e = (v if isinstance(v, str) else str(v)).encode("utf-8")
-            ln = len(e)
-            cells.append(
-                (table[ln] if ln < 4096 else b"\x02" + _zigzag(ln)) + e
-            )
-        return cells
-    return None
+        byte |= (nb[sel] > k + 1).view(np.uint8) << 7
+        buf[starts[sel] + 1 + k] = byte
+    if offsets is not None:
+        src = data[offsets[0]:offsets[-1]]
+        if (raw[null] != 0).any():  # null slots may still carry bytes
+            src = src[np.repeat(valid, raw)]
+        if len(src):
+            # payload positions: +1 where a cell's payload starts, -1
+            # where the cell ends; the running sum marks the payload
+            edge = np.zeros(len(buf) + 1, dtype=np.int8)
+            edge[starts + 1 + nb] += 1
+            edge[ends[1:]] -= 1
+            buf[np.cumsum(edge[:-1], dtype=np.int8).view(bool)] = src
+    return pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(),
+        n,
+        [None, pa.py_buffer(ends), pa.py_buffer(buf)],
+    )
 
 
-# ------------------------------------------------------- arrow fast path
-#
-# Cell encoders that read Arrow buffers directly (validity bitmap +
-# data/offset buffers) instead of going through pandas. Two wins over
-# the pandas path: (1) no Arrow→pandas conversion per batch, and
-# (2) SQL NULL vs float NaN is distinguished natively by the validity
-# bitmap, so the _NULL_MASK projection the pandas path needs for
-# double/float columns disappears entirely.
-
-
-def _arrow_null_mask(arr):
-    """Boolean numpy array: True where the Arrow array slot is null."""
+def _unpack_bits(buf, offset: int, n: int):
+    """n bits of a little-endian Arrow bitmap, from bit ``offset``, as
+    a numpy bool array."""
     import numpy as np
 
-    n = len(arr)
-    if arr.null_count == 0:
-        return np.zeros(n, dtype=bool)
-    buf = arr.buffers()[0]
-    bits = np.unpackbits(
-        np.frombuffer(buf, dtype=np.uint8), bitorder="little"
-    )
-    return bits[arr.offset:arr.offset + n] == 0
+    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), bitorder="little")
+    return bits[offset:offset + n].view(bool)
 
 
 def _arrow_data(arr, dtype):
     """Zero-copy view of a fixed-width Arrow array's data buffer."""
     import numpy as np
 
-    n = len(arr)
     return np.frombuffer(arr.buffers()[1], dtype=dtype)[
-        arr.offset:arr.offset + n
+        arr.offset:arr.offset + len(arr)
     ]
-
-
-def _arrow_bits(arr, buffer_index, bit_offset):
-    """Unpack a bit-packed Arrow buffer (bool data) to numpy bool."""
-    import numpy as np
-
-    n = len(arr)
-    bits = np.unpackbits(
-        np.frombuffer(arr.buffers()[buffer_index], dtype=np.uint8),
-        bitorder="little",
-    )
-    return bits[bit_offset:bit_offset + n] == 1
-
-
-def _varlen_cells(offs, data, null):
-    """Vectorized cells for var-length payloads (string/binary): union
-    branch + zigzag-varint length + raw bytes, all assembled in one
-    shared numpy buffer (no per-cell Python string objects)."""
-    import numpy as np
-
-    n = len(offs) - 1
-    lens = np.diff(offs)
-    lens = np.where(null, 0, lens)  # null slots may carry garbage offsets
-    z = lens.astype(np.uint64) << np.uint64(1)  # zigzag of non-negative
-    nb = np.ones(n, dtype=np.int64)
-    for k in range(1, 10):
-        nb += (z >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-    cell_len = np.where(null, 1, 1 + nb + lens)
-    ends = np.cumsum(cell_len)
-    starts = ends - cell_len
-    buf = np.zeros(int(ends[-1]) if n else 0, dtype=np.uint8)
-    nn = ~null
-    buf[starts[nn]] = 2
-    for k in range(10):
-        sel = nn & (nb > k)
-        if not sel.any():
-            break
-        byte = (z[sel] >> np.uint64(7 * k)) & np.uint64(0x7F)
-        cont = (nb[sel] > k + 1).astype(np.uint64) << np.uint64(7)
-        buf[starts[sel] + 1 + k] = (byte | cont).astype(np.uint8)
-    total_payload = int(lens.sum())
-    if total_payload:
-        # scatter payload bytes: for every byte of every cell, dst =
-        # src + per-cell shift (one fancy-index assignment, no loop)
-        src_start = offs[:-1].astype(np.int64)
-        shift = starts + 1 + nb - src_start
-        reps = lens
-        src_idx = np.repeat(src_start, reps) + (
-            np.arange(total_payload, dtype=np.int64)
-            - np.repeat(np.cumsum(reps) - reps, reps)
-        )
-        dst_idx = src_idx + np.repeat(shift, reps)
-        buf[dst_idx] = data[src_idx]
-    raw = buf.tobytes()
-    return [raw[a:b] for a, b in zip(starts.tolist(), ends.tolist())]
 
 
 _TS_DIVISOR = {"s": None, "ms": 1, "us": 1_000, "ns": 1_000_000}
 
 
 def _arrow_column_cells(arr, avro_type):
-    """Per-cell encoded bytes for one Arrow array, or None if this
-    column needs the scalar fallback path (arrays, decimals, ...)."""
+    """The column's union cells as a large_binary array, or None if
+    this column needs the scalar fallback (arrays, decimals with scale
+    above 6, Arrow types that don't match the Avro type)."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     t = avro_type
     if isinstance(t, dict) and "logicalType" in t:
         t = t["type"]
     at = arr.type
+    n = len(arr)
+    if arr.null_count == n:
+        return _cells(np.ones(n, dtype=bool))
+    null = (
+        ~_unpack_bits(arr.buffers()[0], arr.offset, n)
+        if arr.null_count
+        else np.zeros(n, dtype=bool)
+    )
     if t in ("long", "int"):
         if pa.types.is_timestamp(at):
-            null = _arrow_null_mask(arr)
-            us = _arrow_data(arr, np.int64)
-            div = _TS_DIVISOR.get(at.unit)
-            if div is None:  # seconds
-                ms = us * 1000
-            else:
-                ms = us // div
-            return _varint_cells(np.where(null, 0, ms), null)
-        if pa.types.is_date32(at):
-            null = _arrow_null_mask(arr)
-            days = _arrow_data(arr, np.int32).astype(np.int64)
-            return _varint_cells(
-                np.where(null, 0, days * 86_400_000), null
-            )
-        widths = {
-            pa.int64(): np.int64, pa.int32(): np.int32,
-            pa.int16(): np.int16, pa.int8(): np.int8,
-        }
-        dt = widths.get(at)
-        if dt is not None:
-            null = _arrow_null_mask(arr)
-            vals = _arrow_data(arr, dt).astype(np.int64)
-            return _varint_cells(np.where(null, 0, vals), null)
-        return None
-    if t == "double" and at == pa.float64():
-        null = _arrow_null_mask(arr)
-        return _fixed_cells(_arrow_data(arr, np.float64), null, 8, "<f8")
-    if t == "float" and at == pa.float32():
-        null = _arrow_null_mask(arr)
-        return _fixed_cells(_arrow_data(arr, np.float32), null, 4, "<f4")
-    if t == "boolean" and at == pa.bool_():
-        null = _arrow_null_mask(arr)
-        vals = _arrow_bits(arr, 1, arr.offset)
-        lut = (b"\x02\x00", b"\x02\x01")
-        return [
-            b"\x00" if nu else lut[v]
-            for nu, v in zip(null.tolist(), vals.tolist())
-        ]
+            div = _TS_DIVISOR[at.unit]
+            v = _arrow_data(arr, np.int64)
+            v = v * 1000 if div is None else v // div
+        elif pa.types.is_date32(at):
+            v = _arrow_data(arr, np.int32).astype(np.int64) * 86_400_000
+        elif pa.types.is_signed_integer(at):
+            v = _arrow_data(arr, at.to_pandas_dtype()).astype(np.int64)
+        else:
+            return None
+        return _cells(null, varint=v)
+    fixed = (
+        ("double", pa.float64()), ("float", pa.float32()),
+        ("boolean", pa.bool_()),
+    )
+    if (t, at) in fixed:
+        if at == pa.bool_():  # bit-packed: one payload byte per value
+            width = 1
+            data = _unpack_bits(arr.buffers()[1], arr.offset, n).view(np.uint8)
+        else:
+            width = at.byte_width
+            data = _arrow_data(arr, at.to_pandas_dtype()).view(np.uint8)
+        offsets = np.arange(0, (n + 1) * width, width, dtype=np.int64)
+        return _cells(null, offsets=offsets, data=data)
+    if t == "string" and pa.types.is_decimal(at) and 0 <= at.scale <= 6:
+        # At these scales Arrow's decimal text is exactly str(Decimal);
+        # above them Python switches to E-notation and Arrow's differs.
+        arr = pc.cast(arr, pa.large_string())
+        at = arr.type
     if t in ("string", "bytes") and (
         pa.types.is_string(at) or pa.types.is_large_string(at)
         or pa.types.is_binary(at) or pa.types.is_large_binary(at)
     ):
-        null = _arrow_null_mask(arr)
-        odt = (
-            np.int64
-            if pa.types.is_large_string(at) or pa.types.is_large_binary(at)
-            else np.int32
-        )
-        n = len(arr)
-        offs = np.frombuffer(arr.buffers()[1], dtype=odt)[
-            arr.offset:arr.offset + n + 1
-        ].astype(np.int64)
+        large = pa.types.is_large_string(at) or pa.types.is_large_binary(at)
+        offsets = np.frombuffer(
+            arr.buffers()[1], dtype=np.int64 if large else np.int32
+        )[arr.offset:arr.offset + n + 1].astype(np.int64)
         data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-        return _varlen_cells(offs, data, null)
+        return _cells(
+            null, varint=np.diff(offsets), offsets=offsets, data=data
+        )
     return None
 
 
@@ -520,58 +395,23 @@ class OcfEncoder:
         buf += self.sync
         return bytes(buf)
 
-    def encode_pdf(self, pdf, null_masks=None) -> Iterator[bytes]:
-        """Yield OCF blocks straight from a pandas DataFrame.
-
-        Vectorized fast path: each column becomes a list of pre-encoded
-        cell byte strings (numpy varint/IEEE assembly — ~5× less CPU
-        than the per-cell scalar encoders), rows are assembled with one
-        C-level join per block. Columns the vectorizer doesn't cover
-        (arrays, bytes, object-dtype dates) fall back to the scalar
-        encoder per column — semantics identical either way.
-
-        `null_masks` maps float/double field names to boolean Series
-        marking SQL NULLs (Arrow→pandas collapses NULL and NaN; dbeam
-        writes NULL as Avro null but NaN as a real double)."""
-        from itertools import chain
-
-        null_masks = null_masks or {}
-        names = [f["columnName"] for f in self.schema["fields"]]
-        cols = []
-        for name, t, enc in zip(names, self._field_types, self._encoders):
-            cells = _column_cells(pdf[name], t, null_masks.get(name))
-            if cells is None:  # scalar fallback for this column only
-                cells = [
-                    b"\x00" if v is None else b"\x02" + enc(v)
-                    for v in _normalize_series(
-                        pdf[name], t, null_masks.get(name)
-                    )
-                ]
-            cols.append(cells)
-        n = len(pdf)
-        for start in range(0, n, _BLOCK_ROWS):
-            end = min(start + _BLOCK_ROWS, n)
-            block = b"".join(
-                chain.from_iterable(
-                    zip(*(c[start:end] for c in cols))
-                )
-            )
-            data = self._compress(block)
-            yield _zigzag(end - start) + _zigzag(len(data)) + data + self.sync
-
     def encode_batch(self, rb) -> Iterator[bytes]:
         """Yield OCF blocks straight from an Arrow RecordBatch.
 
-        Fastest path: cells are built from Arrow buffers (validity
-        bitmap + data/offset arrays) with no pandas conversion and no
-        per-cell Python objects for fixed-width and string/binary
-        columns. SQL NULL vs float NaN comes from the validity bitmap,
-        so no external null mask is needed. Columns the Arrow
-        vectorizer doesn't cover (arrays, decimals) fall back to the
-        scalar encoder via to_pylist — semantics identical."""
-        from itertools import chain
+        Each column becomes one large_binary array of encoded union
+        cells (see ``_cells``); one Arrow element-wise join turns them
+        into rows, and each block of ``_BLOCK_ROWS`` rows is a slice of
+        the joined data buffer. Columns the Arrow builder doesn't cover
+        take the scalar encoders, one column at a time, into the same
+        kind of array — the bytes are identical either way."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        idx = {n: i for i, n in enumerate(rb.schema.names)}
+        n = rb.num_rows
+        if not n:
+            return
+        idx = {name: i for i, name in enumerate(rb.schema.names)}
         cols = []
         for f, t, enc in zip(
             self.schema["fields"], self._field_types, self._encoders
@@ -581,21 +421,25 @@ class OcfEncoder:
             if cells is None:  # scalar fallback for this column only
                 import pandas as pd
 
-                cells = [
-                    b"\x00" if v is None else b"\x02" + enc(v)
-                    for v in _normalize_series(pd.Series(arr.to_pandas()), t)
-                ]
+                cells = pa.array(
+                    [
+                        b"\x00" if v is None else b"\x02" + enc(v)
+                        for v in _normalize_series(
+                            pd.Series(arr.to_pandas()), t
+                        )
+                    ],
+                    pa.large_binary(),
+                )
             cols.append(cells)
-        n = rb.num_rows
+        rows = pc.binary_join_element_wise(
+            *cols, pa.scalar(b"", pa.large_binary())
+        )
+        ends = np.frombuffer(rows.buffers()[1], dtype=np.int64)
+        data = rows.buffers()[2]
         for start in range(0, n, _BLOCK_ROWS):
             end = min(start + _BLOCK_ROWS, n)
-            block = b"".join(
-                chain.from_iterable(
-                    zip(*(c[start:end] for c in cols))
-                )
-            )
-            data = self._compress(block)
-            yield _zigzag(end - start) + _zigzag(len(data)) + data + self.sync
+            block = self._compress(data[int(ends[start]):int(ends[end])])
+            yield _zigzag(end - start) + _zigzag(len(block)) + block + self.sync
 
     def encode_rows(self, columns: list[list]) -> Iterator[bytes]:
         """Yield OCF blocks for rows given as normalized columns."""
@@ -654,7 +498,8 @@ def write_avro(
                 }
             )
 
-        pid = TaskContext.get().partitionId()
+        ctx = TaskContext.get()
+        pid = ctx.partitionId()
         schema = json.loads(schema_json)
         path = os.path.join(output_dir, f"{filename_prefix}-{pid:05d}.avro")
         if resume and os.path.exists(path):
@@ -669,16 +514,23 @@ def write_avro(
         enc = OcfEncoder(schema, codec)
         rows = 0
         crc = 0
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as fh:
-            hdr = enc.header()
-            fh.write(hdr)
-            crc = zlib.crc32(hdr, crc)
-            for rb in batches:
-                for block in enc.encode_batch(rb):
-                    fh.write(block)
-                    crc = zlib.crc32(block, crc)
-                rows += rb.num_rows
+        # one tmp file per attempt: a retried or speculative attempt
+        # of this partition never writes into another attempt's file
+        tmp = f"{path}.{ctx.attemptNumber()}.tmp"
+        try:
+            with open(tmp, "wb") as fh:
+                hdr = enc.header()
+                fh.write(hdr)
+                crc = zlib.crc32(hdr, crc)
+                for rb in batches:
+                    for block in enc.encode_batch(rb):
+                        fh.write(block)
+                        crc = zlib.crc32(block, crc)
+                    rows += rb.num_rows
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
         os.replace(tmp, path)
         yield stat(path, rows, crc & 0xFFFFFFFF, False)
 

@@ -10,8 +10,8 @@ args/JdbcExportArgs.java Spark-first:
   (ParallelQueryBuilder) map to the JDBC source's native
   partitionColumn/lowerBound/upperBound/numPartitions — each range is
   an independent task-side scan; bounds come from the same MIN/MAX
-  query dbeam runs (`findInputBounds`), executed through a one-row
-  JDBC read so the driver needs no extra DB client.
+  query dbeam runs (`findInputBounds`), executed like dbeam does: on
+  one plain java.sql connection, here opened on the Spark driver.
 - --fetchSize → option("fetchsize"); --preCommand →
   option("sessionInitStatement") (runs per connection, the Spark
   equivalent of dbeam's pre-command-on-the-export-connection).
@@ -94,23 +94,52 @@ def _base_reader(spark: SparkSession, opts: JdbcExportOptions, password: str | N
     return reader
 
 
+def _connect(
+    spark: SparkSession,
+    url: str,
+    username: str | None,
+    password: str | None,
+):
+    """One java.sql connection opened on the Spark driver. The known
+    driver class is registered through Spark's DriverRegistry first,
+    so a driver added with --jars resolves exactly as it does for the
+    JDBC reader."""
+    jvm = spark._jvm
+    driver = driver_for_url(url)
+    if driver:
+        jvm.org.apache.spark.sql.execution.datasources.jdbc.DriverRegistry.register(
+            driver
+        )
+    props = jvm.java.util.Properties()
+    if username:
+        props.setProperty("user", username)
+    if password is not None:
+        props.setProperty("password", password)
+    return jvm.java.sql.DriverManager.getConnection(url, props)
+
+
 def find_input_bounds(
     spark: SparkSession,
     opts: JdbcExportOptions,
     password: str | None,
     min_max_sql: str,
 ) -> tuple[int, int]:
-    """Run dbeam's MIN/MAX bounds query through a one-row JDBC read
-    (ref ParallelQueryBuilder.findInputBounds)."""
-    row = (
-        _base_reader(spark, opts, password)
-        .option("dbtable", f"({min_max_sql}) bounds_query")
-        .load()
-        .collect()
-    )
-    if not row or row[0][0] is None:
-        raise ValueError("Result Set for Min/Max returned zero records")
-    return int(row[0][0]), int(row[0][1])
+    """Run dbeam's MIN/MAX bounds query on one driver-side connection,
+    after every --preCommand statement (ref
+    ParallelQueryBuilder.findInputBounds). A NULL MIN means the table
+    is empty, which dbeam reports as no record."""
+    conn = _connect(spark, opts.connectionUrl, opts.username, password)
+    try:
+        stmt = conn.createStatement()
+        for command in opts.preCommand:
+            stmt.execute(command)
+        rs = stmt.executeQuery(min_max_sql)
+        low = rs.getLong(1) if rs.next() else None
+        if low is None or rs.wasNull():
+            raise ValueError("Result Set for Min/Max returned zero records")
+        return low, rs.getLong(2)
+    finally:
+        conn.close()
 
 
 def collect_source_type_names(
@@ -126,13 +155,7 @@ def collect_source_type_names(
     arrives as StringType); these names feed
     ``spark_schema_to_avro(logical_type_hints=...)`` so logical types
     survive into the exported schema."""
-    jvm = spark._jvm
-    props = jvm.java.util.Properties()
-    if opts.username:
-        props.setProperty("user", opts.username)
-    if password is not None:
-        props.setProperty("password", password)
-    conn = jvm.java.sql.DriverManager.getConnection(opts.connectionUrl, props)
+    conn = _connect(spark, opts.connectionUrl, opts.username, password)
     try:
         stmt = conn.createStatement()
         rs = stmt.executeQuery(
@@ -218,12 +241,7 @@ def list_tables(
     INFORMATION_SCHEMA, PG_CATALOG) are skipped."""
     jvm = spark._jvm
     gw = spark.sparkContext._gateway
-    props = jvm.java.util.Properties()
-    if username:
-        props.setProperty("user", username)
-    if password is not None:
-        props.setProperty("password", password)
-    conn = jvm.java.sql.DriverManager.getConnection(connection_url, props)
+    conn = _connect(spark, connection_url, username, password)
     try:
         md = conn.getMetaData()
         types = gw.new_array(jvm.java.lang.String, 1)

@@ -152,6 +152,58 @@ def test_ocf_roundtrip_codecs(codec, tmp_path):
     assert rows == [(1, "x", [1, 2]), (None, "y", []), (3, None, None)]
 
 
+@pytest.mark.parametrize(
+    "codec",
+    ["null", "deflate6", "bzip2", "xz", "snappy", "zstandard"],
+)
+def test_export_types_never_take_the_per_cell_path(codec, monkeypatch):
+    """Every column kind of a lineitem-shaped export batch is built by
+    the Arrow column builder: with the per-cell scalar encoders patched
+    to raise, the batch still encodes, byte-identical to the scalar
+    reference. A type that slips back onto the per-cell path fails
+    here, with no timing involved."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    import dbeam_spark.avro.writer as writer
+
+    day_ms = 86_400_000
+    columns = [  # (name, Spark type, Arrow type, values, scalar values)
+        ("L_ORDERKEY", T.LongType(), pa.int64(), [1, 2, 3, 2**40], None),
+        ("L_LINENUMBER", T.IntegerType(), pa.int32(), [1, 2, None, -7], None),
+        ("L_TAX", T.DecimalType(15, 2), pa.decimal128(15, 2),
+         [Decimal("0.08"), None, Decimal("-1.50"), Decimal("0.00")], None),
+        ("L_RETURNFLAG", T.StringType(), pa.string(), ["R", "A", None, "N"], None),
+        ("L_SHIPDATE", T.DateType(), pa.date32(), [8036, None, 0, -1],
+         [8036 * day_ms, None, 0, -day_ms]),
+        ("L_COMMENT", T.StringType(), pa.string(),
+         ["slyly ironic", "", "é" * 70, None], None),
+        ("L_FLAG", T.BooleanType(), pa.bool_(), [True, None, False, True], None),
+        ("L_TS", T.TimestampType(), pa.timestamp("us", tz="UTC"),
+         [1_700_000_000_123_456, None, -1, 0], [1_700_000_000_123, None, -1, 0]),
+    ]
+    schema = spark_schema_to_avro(
+        T.StructType([T.StructField(n, t) for n, t, *_ in columns]), "lineitem"
+    )
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(vals, at) for _, _, at, vals, _ in columns],
+        names=[n for n, *_ in columns],
+    )
+    want = b"".join(
+        OcfEncoder(schema, codec).encode_rows(
+            [vals if scalar is None else scalar for *_, vals, scalar in columns]
+        )
+    )
+
+    def per_cell(*args, **kwargs):
+        raise AssertionError("a column took the per-cell scalar path")
+
+    monkeypatch.setattr(writer, "_normalize_series", per_cell)
+    monkeypatch.setattr(writer, "_make_cell_encoder", lambda avro_type: per_cell)
+    assert b"".join(OcfEncoder(schema, codec).encode_batch(rb)) == want
+
+
 def test_unknown_codec_rejected():
     with pytest.raises(ValueError, match="lz77"):
         OcfEncoder(spark_schema_to_avro(T.StructType([]), "t"), "lz77")

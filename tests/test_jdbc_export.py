@@ -77,6 +77,71 @@ def test_parallel_export_ranges(spark, derby_db, tmp_path):
     assert sorted(r[0] for r in rows) == list(range(1000))
 
 
+def test_bounds_probe_rejects_empty_table(spark, derby_db):
+    """MIN/MAX over an empty table is one row of NULLs: dbeam reports
+    it as no record, and so does the driver-side probe."""
+    from dbeam_spark.sources.jdbc import _connect, find_input_bounds
+
+    conn = _connect(spark, derby_db, "dbeam", None)
+    try:
+        conn.createStatement().execute("CREATE TABLE EMPTY_BOUNDS (ID BIGINT)")
+    finally:
+        conn.close()
+    opts = opts_for(derby_db, "/tmp/unused", table="EMPTY_BOUNDS")
+    with pytest.raises(ValueError, match="returned zero records"):
+        find_input_bounds(
+            spark, opts, None, "SELECT MIN(ID), MAX(ID) FROM EMPTY_BOUNDS"
+        )
+
+
+def test_parallel_export_negative_split_keys(spark, derby_db, tmp_path):
+    """Negative split keys: the probe's bounds and the range queries
+    built from them cover every key exactly once."""
+    from dbeam_spark.sources.jdbc import find_input_bounds
+
+    spark.range(-500, 250).selectExpr(
+        "id AS K", "CONCAT('v', id) AS V"
+    ).write.format("jdbc").option("url", derby_db).option(
+        "user", "dbeam"
+    ).option("dbtable", "NEG_KEYS").mode("overwrite").save()
+    opts = opts_for(
+        derby_db, tmp_path / "neg", table="NEG_KEYS",
+        splitColumn="K", queryParallelism=3,
+    )
+    assert find_input_bounds(
+        spark, opts, None, "SELECT MIN(K), MAX(K) FROM NEG_KEYS"
+    ) == (-500, 249)
+    metrics = run_export(spark, opts)
+    assert metrics["recordCount"] == 750
+    queries = [
+        Path(p).read_text().strip()
+        for p in sorted(glob.glob(str(tmp_path / "neg" / "_queries" / "*.sql")))
+    ]
+    assert len(queries) == 3
+    assert queries[0].endswith("AND K >= -500 AND K < -250")
+    assert queries[-1].endswith("AND K <= 249")
+    assert sorted(r[0] for r in read_all(tmp_path / "neg")) == list(
+        range(-500, 250)
+    )
+
+
+def test_bounds_probe_runs_pre_commands(spark, derby_db):
+    """--preCommand statements run on the probe's connection before
+    the MIN/MAX query: connected as another user, the unqualified
+    COFFEES only resolves after SET SCHEMA."""
+    from dbeam_spark.sources.jdbc import find_input_bounds
+
+    sql = "SELECT MIN(C_ID), MAX(C_ID) FROM COFFEES"
+    opts = opts_for(derby_db, "/tmp/unused", username="other")
+    with pytest.raises(Exception, match="does not exist"):
+        find_input_bounds(spark, opts, None, sql)
+    opts = opts_for(
+        derby_db, "/tmp/unused", username="other",
+        preCommand=["SET SCHEMA DBEAM"],
+    )
+    assert find_input_bounds(spark, opts, None, sql) == (0, 999)
+
+
 def test_limit(spark, derby_db, tmp_path):
     out = tmp_path / "limit"
     metrics = run_export(spark, opts_for(derby_db, out, limit=10))
@@ -571,3 +636,95 @@ def test_export_checksums(spark, derby_db, tmp_path):
     Path(p0).unlink()
     rep = validate_export(str(out))
     assert not rep.ok
+
+
+_RETRY_CHILD = r'''
+import glob, json, os, sys
+
+from dbeam_spark.avro.writer import file_crc32
+from dbeam_spark.jobs import jdbc_avro_job
+from dbeam_spark.options import JdbcExportOptions
+from dbeam_spark.session import get_spark
+
+work = sys.argv[1]
+spark = get_spark(
+    "retry-determinism", master="local[2,2]", shuffle_partitions=2,
+    extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "100"},
+)
+url = f"jdbc:derby:{work}/db"
+spark.range(0, 1000).selectExpr("id AS ID", "CONCAT('v', id) AS V").write.format(
+    "jdbc"
+).option("url", url + ";create=true").option("user", "dbeam").option(
+    "dbtable", "T"
+).save()
+
+
+def export(out):
+    jdbc_avro_job.run_export(spark, JdbcExportOptions(
+        connectionUrl=url, table="T", output=out, username="dbeam",
+        skipPartitionCheck=True, splitColumn="ID", queryParallelism=2,
+    ))
+    with open(os.path.join(out, "_CHECKSUMS.json")) as fh:
+        checksums = json.load(fh)
+    return {
+        "checksums": checksums,
+        "crcs": {os.path.basename(p): file_crc32(p)
+                 for p in sorted(glob.glob(out + "/part-*.avro"))},
+        "tmp": sorted(glob.glob(out + "/**/*.tmp", recursive=True)),
+    }
+
+
+clean = export(os.path.join(work, "clean"))
+read_jdbc = jdbc_avro_job.read_jdbc
+
+
+def faulty_read_jdbc(*args, **kwargs):
+    plan = read_jdbc(*args, **kwargs)
+
+    def fail_first_attempt(batches):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        for i, rb in enumerate(batches):
+            if i == 1 and ctx.attemptNumber() == 0:
+                open(f"{work}/fault-{ctx.partitionId()}", "w").close()
+                raise RuntimeError("injected fault after one batch")
+            yield rb
+
+    plan.df = plan.df.mapInArrow(fail_first_attempt, plan.df.schema)
+    return plan
+
+
+jdbc_avro_job.read_jdbc = faulty_read_jdbc
+retried = export(os.path.join(work, "retried"))
+faults = len(glob.glob(f"{work}/fault-*"))
+print(json.dumps({"clean": clean, "retried": retried, "faults": faults}))
+'''
+
+
+def test_retried_partitions_write_identical_files(tmp_path):
+    """A task that fails after its writer got one batch is retried
+    (local[2,2]); each attempt writes its own tmp file, the failed one
+    removes it, and the export is byte-identical to a clean run."""
+    import os
+    import subprocess
+    import sys
+
+    repo = str(Path(__file__).resolve().parents[1])
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_CHILD, str(tmp_path)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["faults"] == 2  # both partitions failed once
+    clean, retried = got["clean"], got["retried"]
+    assert retried["checksums"] == clean["checksums"]
+    assert retried["crcs"] == clean["crcs"]
+    assert {n: r["crc32"] for n, r in clean["checksums"].items()} == clean["crcs"]
+    assert sum(r["rows"] for r in clean["checksums"].values()) == 1000
+    assert retried["tmp"] == [] and clean["tmp"] == []

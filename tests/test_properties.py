@@ -4,7 +4,12 @@ invariants for any bounds."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+import datetime
+from decimal import Context, Decimal
+
+import numpy as np
+import pyarrow as pa
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
@@ -78,136 +83,134 @@ def test_generate_ranges_invariants(min_v, span, parallelism):
         assert prev.end == nxt.start_incl and prev.end_excl
 
 
+def _decimals(scale: int, digits: int):
+    return st.one_of(
+        st.none(),
+        st.integers(-(10**digits), 10**digits).map(
+            lambda u: Decimal(u).scaleb(-scale, Context(prec=60))
+        ),
+    )
+
+
+_DAY_MS = 86_400_000
+
+# (name, Spark type, Arrow type, values, Arrow's Python value →
+# encode_rows input)
+_ARROW_COLUMNS = [
+    ("a", T.LongType(), pa.int64(), _longs, None),
+    ("d", T.DoubleType(), pa.float64(), st.one_of(
+        st.none(), st.floats(allow_infinity=False, width=64)  # NaN too
+    ), None),
+    ("s", T.StringType(), pa.string(), _strings, None),
+    ("b", T.BooleanType(), pa.bool_(), _bools, None),
+    ("e", T.BinaryType(), pa.binary(), _blobs, None),
+    ("i8", T.ByteType(), pa.int8(), st.one_of(
+        st.none(), st.integers(-(2**7), 2**7 - 1)
+    ), None),
+    ("i16", T.ShortType(), pa.int16(), st.one_of(
+        st.none(), st.integers(-(2**15), 2**15 - 1)
+    ), None),
+    ("i32", T.IntegerType(), pa.int32(), st.one_of(
+        st.none(), st.integers(-(2**31), 2**31 - 1)
+    ), None),
+    ("f32", T.FloatType(), pa.float32(), st.one_of(
+        st.none(), st.floats(width=32, allow_nan=False)
+    ), None),
+    ("dt", T.DateType(), pa.date32(), st.one_of(
+        st.none(), st.integers(-700_000, 700_000)  # days, years 53–3886
+    ), lambda d: (d - datetime.date(1970, 1, 1)).days * _DAY_MS),
+    ("ls", T.StringType(), pa.large_string(), _strings, None),
+    ("dec0", T.DecimalType(38, 0), pa.decimal128(38, 0), _decimals(0, 30), None),
+    ("dec2", T.DecimalType(15, 2), pa.decimal128(15, 2), _decimals(2, 14), None),
+    ("dec6", T.DecimalType(38, 6), pa.decimal128(38, 6), _decimals(6, 30), None),
+    # scale 10 takes the scalar fallback: zero and values below 1e-6
+    # print in E-notation there (0E-10, 5E-10)
+    ("dec10", T.DecimalType(38, 10), pa.decimal128(38, 10), st.one_of(
+        _decimals(10, 3), _decimals(10, 30)
+    ), None),
+    ("arr", T.ArrayType(T.IntegerType()), pa.list_(pa.int32()), _arrays, None),
+]
+
+
+def _wide_rows(n: int) -> list[tuple]:
+    """Deterministic rows of every column kind, with NULLs, edge values
+    and strings long enough for 2- and 3-byte varint lengths."""
+    import random
+
+    rng = random.Random(7)
+    words = ["", "a", "é" * 40, "x" * 64, "ü" * 5000, "漢字" * 1400]
+
+    rows = []
+    for i in range(n):
+        rows.append(tuple(None if (i + 3 * j) % 11 == 0 else v for j, v in enumerate((
+            rng.randint(-(2**63), 2**63 - 1) if i % 3 else i - n // 2,
+            rng.uniform(-1e300, 1e300) if i % 5 else float("nan"),
+            words[i % len(words)],
+            i % 2 == 0,
+            bytes(range(256)) * (i % 40),  # up to 9984 bytes
+            rng.randint(-128, 127),
+            rng.randint(-(2**15), 2**15 - 1),
+            rng.randint(-(2**31), 2**31 - 1),
+            float(np.float32(rng.uniform(-1e30, 1e30))),
+            rng.randint(-700_000, 700_000),
+            words[(i + 3) % len(words)],
+            Decimal(rng.randint(-(10**20), 10**20)),
+            Decimal(rng.randint(-(10**13), 10**13)).scaleb(-2),
+            Decimal(rng.randint(-(10**9), 10**9)).scaleb(-6),
+            Decimal(rng.randint(-(10**(i % 25)), 10**(i % 25))).scaleb(-10),
+            list(range(-(i % 5), i % 7)),
+        ))))
+    return rows
+
+
+_ALL_NULL = tuple(None for _ in _ARROW_COLUMNS)
+
+
 @settings(max_examples=40, deadline=None)
 @given(
     rows=st.lists(
-        st.tuples(_longs, _doubles, _strings, _bools),
-        min_size=1,
+        st.tuples(*(values for _, _, _, values, _ in _ARROW_COLUMNS)),
         max_size=60,
     ),
+    cut=st.integers(0, 60),
 )
-def test_vectorized_encoder_matches_scalar(rows):
-    """encode_pdf (numpy fast path) must be byte-identical to the
-    scalar encode_rows for any longs/doubles/strings/bools, including
-    None, NaN via mask, negative varint edges, and unicode."""
-    import numpy as np
-    import pandas as pd
-
-    from dbeam_spark.avro.writer import _normalize_series
-
+@example(rows=[], cut=0)  # empty batch
+@example(rows=[_ALL_NULL] * 5, cut=1)  # every column all-null
+@example(rows=_wide_rows(10_000), cut=4095)  # several 4096-row blocks
+def test_arrow_encoder_matches_scalar(rows, cut):
+    """encode_batch (the Arrow column builder) must be byte-identical
+    to the scalar encode_rows for every column kind an export carries:
+    ints of every width, NaN doubles beside NULLs (the validity bitmap
+    tells them apart), float32, booleans, dates, string/binary/
+    large_string (unicode, multi-byte varint lengths), decimals on the
+    cast path (scale 0, 2, 6), the scalar fallback (scale-10 decimals,
+    arrays), all-null columns, the empty batch, and slices (non-zero
+    Arrow offsets)."""
+    names = [name for name, *_ in _ARROW_COLUMNS]
     schema = spark_schema_to_avro(
         T.StructType(
-            [
-                T.StructField("a", T.LongType()),
-                T.StructField("d", T.DoubleType()),
-                T.StructField("s", T.StringType()),
-                T.StructField("b", T.BooleanType()),
-            ]
+            [T.StructField(name, st_) for name, st_, *_ in _ARROW_COLUMNS]
         ),
         "prop",
     )
     enc = OcfEncoder(schema, "null")
-    cols = list(map(list, zip(*rows)))
-    scalar = b"".join(enc.encode_rows(cols))
-
-    # pandas frame the way Arrow delivers it: float col holds NaN for
-    # null (mask carries true nullness), object cols hold None
-    mask = pd.Series([v is None for v in cols[1]])
-    pdf = pd.DataFrame(
-        {
-            "a": pd.Series(cols[0], dtype="object"),
-            "d": pd.Series(
-                [float("nan") if v is None else v for v in cols[1]],
-                dtype="float64",
-            ),
-            "s": pd.Series(cols[2], dtype="object"),
-            "b": pd.Series(cols[3], dtype="object"),
-        }
+    cols = (
+        list(map(list, zip(*rows))) if rows else [[] for _ in _ARROW_COLUMNS]
     )
-    # object-dtype long column exercises the per-column fallback;
-    # ALSO exercise the numpy path when no nulls are present
-    fast = b"".join(enc.encode_pdf(pdf, {"d": mask}))
-    assert fast == scalar
-    if all(v is not None for v in cols[0]):
-        pdf2 = pdf.assign(a=np.array(cols[0], dtype=np.int64))
-        fast2 = b"".join(enc.encode_pdf(pdf2, {"d": mask}))
-        assert fast2 == scalar
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    rows=st.lists(
-        st.tuples(
-            _longs,
-            st.one_of(
-                st.none(),
-                st.floats(allow_infinity=False, width=64),  # NaN allowed
-            ),
-            _strings,
-            _bools,
-            _blobs,
-        ),
-        min_size=1,
-        max_size=60,
-    ),
-)
-def test_arrow_encoder_matches_scalar(rows):
-    """encode_batch (Arrow-buffer fast path) must be byte-identical to
-    the scalar encode_rows for longs/doubles/strings/bools/binary,
-    including None, real NaN doubles (validity bitmap distinguishes
-    NULL from NaN — the pandas path needed an external mask for this),
-    negative varint edges, and unicode."""
-    import pyarrow as pa
-
-    schema = spark_schema_to_avro(
-        T.StructType(
-            [
-                T.StructField("a", T.LongType()),
-                T.StructField("d", T.DoubleType()),
-                T.StructField("s", T.StringType()),
-                T.StructField("b", T.BooleanType()),
-                T.StructField("e", T.BinaryType()),
-            ]
-        ),
-        "prop",
-    )
-    enc = OcfEncoder(schema, "null")
-    cols = list(map(list, zip(*rows)))
-    scalar = b"".join(enc.encode_rows(cols))
     rb = pa.RecordBatch.from_arrays(
-        [
-            pa.array(cols[0], type=pa.int64()),
-            pa.array(cols[1], type=pa.float64()),
-            pa.array(cols[2], type=pa.string()),
-            pa.array(cols[3], type=pa.bool_()),
-            pa.array(cols[4], type=pa.binary()),
-        ],
-        names=["a", "d", "s", "b", "e"],
+        [pa.array(c, type=at) for c, (_, _, at, _, _) in zip(cols, _ARROW_COLUMNS)],
+        names=names,
     )
-    assert b"".join(enc.encode_batch(rb)) == scalar
-    # sliced batches exercise non-zero Arrow buffer offsets (validity
-    # bit offsets, offset-buffer views); block boundaries differ so
-    # compare decoded rows, not bytes
-    if rb.num_rows >= 2:
-        import tempfile
-
-        half = rb.num_rows // 2
-        sliced = (
-            enc.header()
-            + b"".join(enc.encode_batch(rb.slice(0, half)))
-            + b"".join(enc.encode_batch(rb.slice(half)))
-        )
-        with tempfile.NamedTemporaryFile(suffix=".avro") as fh:
-            fh.write(sliced)
-            fh.flush()
-            _, got = read_avro_file(fh.name)
-        want = [
-            tuple(None if v is None else v for v in r) for r in rows
-        ]
-        for (a, d, s, b, e), (ga, gd, gs, gb, ge) in zip(want, got):
-            assert ga == a and gs == s and gb == b
-            assert ge == (bytes(e) if e is not None else None)
-            assert gd == d or (d != d and gd != gd)  # NaN-safe
+    scalar = [
+        [v if f is None or v is None else f(v) for v in arr.to_pylist()]
+        for arr, (*_, f) in zip(rb.columns, _ARROW_COLUMNS)
+    ]
+    assert b"".join(enc.encode_batch(rb)) == b"".join(enc.encode_rows(scalar))
+    lo = cut % (len(rows) + 1)
+    hi = len(rows) - (len(rows) - lo) // 4
+    assert b"".join(enc.encode_batch(rb.slice(lo, hi - lo))) == b"".join(
+        enc.encode_rows([c[lo:hi] for c in scalar])
+    )
 
 
 @settings(max_examples=30, deadline=None)
