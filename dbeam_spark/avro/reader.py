@@ -2,8 +2,9 @@
 
 Used by tests to round-trip exported files and by `read_avro` to load
 Avro exports back into Spark (distributed: one task per file).
-Supports the writer's output surface: null/deflate codecs, primitive
-types, arrays, ["null", T] unions.
+Decodes the writer's output surface — primitive types, arrays and
+["null", T] unions — under every codec; the container itself (header,
+blocks, codecs) is read through ocf.py, which the writer shares.
 """
 
 from __future__ import annotations
@@ -11,57 +12,33 @@ from __future__ import annotations
 import io
 import json
 import struct
-import zlib
 
-
-def _read_long(buf: io.BytesIO) -> int:
-    shift = 0
-    acc = 0
-    while True:
-        b = buf.read(1)[0]
-        acc |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1)
-
-
-def _read_bytes(buf: io.BytesIO) -> bytes:
-    return buf.read(_read_long(buf))
-
-
-def _read_str(buf: io.BytesIO) -> str:
-    return _read_bytes(buf).decode("utf-8")
+from dbeam_spark.avro import ocf
+from dbeam_spark.avro.ocf import read_bytes, read_long
 
 
 def _make_decoder(avro_type):
-    t = avro_type
-    if isinstance(t, dict) and "logicalType" in t:
-        t = t["type"]
-    if isinstance(t, list):  # union — assume ["null", T]
-        inner = _make_decoder(t[1])
-
-        def dec_union(buf):
-            return None if _read_long(buf) == 0 else inner(buf)
-
-        return dec_union
+    if isinstance(avro_type, list):  # union — assume ["null", T]
+        inner = _make_decoder(avro_type[1])
+        return lambda buf: None if read_long(buf) == 0 else inner(buf)
+    t, _ = ocf.unwrap(avro_type)
     if isinstance(t, dict) and t.get("type") == "array":
         item = _make_decoder(t["items"])
 
         def dec_array(buf):
             out = []
             while True:
-                n = _read_long(buf)
+                n = read_long(buf)
                 if n == 0:
                     return out
                 if n < 0:
-                    _read_long(buf)  # block byte size, unused
+                    read_long(buf)  # block byte size, unused
                     n = -n
                 out.extend(item(buf) for _ in range(n))
 
         return dec_array
     if t in ("long", "int"):
-        return _read_long
+        return read_long
     if t == "double":
         return lambda buf: struct.unpack("<d", buf.read(8))[0]
     if t == "float":
@@ -69,20 +46,15 @@ def _make_decoder(avro_type):
     if t == "boolean":
         return lambda buf: buf.read(1) == b"\x01"
     if t == "bytes":
-        return _read_bytes
+        return read_bytes
     if t == "string":
-        return _read_str
+        return lambda buf: read_bytes(buf).decode("utf-8")
     raise ValueError(f"Unsupported Avro type: {avro_type!r}")
 
 
 def _plain_type(t):
-    if isinstance(t, dict) and "logicalType" in t:
-        t = t["type"]
-    if isinstance(t, list):  # ["null", T]
-        return _plain_type(t[1])
-    if isinstance(t, dict) and t.get("type") == "array":
-        return "array"
-    return t
+    t, _ = ocf.unwrap(t)
+    return "array" if isinstance(t, dict) else t
 
 
 # Avro spec schema-resolution promotions (writer type → allowed
@@ -99,43 +71,51 @@ _PROMOTIONS = {
 }
 
 
-def _resolve(writer_fields: list, reader_fields: list):
+def _promoted(dec, conv):
+    def promote(buf):
+        v = dec(buf)
+        return None if v is None else conv(v)
+
+    return promote
+
+
+def _resolve(writer_fields: list, reader_fields: list | None):
     """Avro schema resolution (spec §Schema Resolution): match fields
     by name; writer-only fields are decoded and DISCARDED (their bytes
     must still be consumed); reader-only fields take their declared
     default (error if none — exactly the spec's failure mode); matched
     fields decode with the WRITER type and promote to the reader type
-    where the spec allows. Returns (per-writer-field actions, output
-    arity, defaults-by-slot)."""
-    reader_slots = {f["name"]: i for i, f in enumerate(reader_fields)}
-    actions = []
-    for wf in writer_fields:
-        dec = _make_decoder(wf["type"])
-        slot = reader_slots.get(wf["name"])
-        conv = None
-        if slot is not None:
-            wt, rt = _plain_type(wf["type"]), _plain_type(
-                reader_fields[slot]["type"]
-            )
-            if wt != rt:
-                if (wt, rt) not in _PROMOTIONS:
-                    raise ValueError(
-                        f"cannot resolve field {wf['name']!r}: "
-                        f"writer {wt} → reader {rt}"
-                    )
-                conv = _PROMOTIONS[(wt, rt)]
-        actions.append((dec, slot, conv))
-    defaults: dict[int, object] = {}
-    writer_names = {f["name"] for f in writer_fields}
-    for i, rf in enumerate(reader_fields):
-        if rf["name"] not in writer_names:
+    where the spec allows. Returns one decoder per writer field and
+    the function from their decoded values to the reader's row; with
+    no reader fields, the row is the writer's."""
+    decoders = [_make_decoder(f["type"]) for f in writer_fields]
+    if reader_fields is None:
+        return decoders, tuple
+    index = {f["name"]: i for i, f in enumerate(writer_fields)}
+    take = []  # per reader field: (writer index, None) or (None, default)
+    for rf in reader_fields:
+        i = index.get(rf["name"])
+        if i is None:
             if "default" not in rf:
                 raise ValueError(
                     f"reader field {rf['name']!r} absent from writer "
                     "schema and has no default"
                 )
-            defaults[i] = rf["default"]
-    return actions, len(reader_fields), defaults
+            take.append((None, rf["default"]))
+            continue
+        wt, rt = _plain_type(writer_fields[i]["type"]), _plain_type(rf["type"])
+        if wt != rt:
+            if (wt, rt) not in _PROMOTIONS:
+                raise ValueError(
+                    f"cannot resolve field {rf['name']!r}: "
+                    f"writer {wt} → reader {rt}"
+                )
+            if _PROMOTIONS[(wt, rt)] is not None:
+                decoders[i] = _promoted(decoders[i], _PROMOTIONS[(wt, rt)])
+        take.append((i, None))
+    return decoders, lambda vals: tuple(
+        d if i is None else vals[i] for i, d in take
+    )
 
 
 def read_avro_file(
@@ -149,126 +129,37 @@ def read_avro_file(
     numeric/string promotions apply (the contract that lets a consumer
     evolve its schema while reading years of old exports; reference
     dbeam consumers rely on the same Java Avro behavior)."""
-    with open(path, "rb") as fh:
-        raw = fh.read()
-    buf = io.BytesIO(raw)
-    assert buf.read(4) == b"Obj\x01", "not an Avro OCF"
-    meta: dict[str, bytes] = {}
-    while True:
-        n = _read_long(buf)
-        if n == 0:
-            break
-        if n < 0:
-            _read_long(buf)
-            n = -n
-        for _ in range(n):
-            key = _read_str(buf)
-            meta[key] = _read_bytes(buf)
-    sync = buf.read(16)
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    if reader_schema is not None:
-        actions, arity, defaults = _resolve(
-            schema["fields"], reader_schema["fields"]
-        )
-    else:
-        decoders = [_make_decoder(f["type"]) for f in schema["fields"]]
     rows: list[tuple] = []
-    while buf.tell() < len(raw):
-        count = _read_long(buf)
-        size = _read_long(buf)
-        data = buf.read(size)
-        if codec == "deflate":
-            data = zlib.decompress(data, -15)
-        elif codec == "bzip2":
-            import bz2
-
-            data = bz2.decompress(data)
-        elif codec == "xz":
-            import lzma
-
-            data = lzma.decompress(data)
-        elif codec == "snappy":
-            import pyarrow as pa
-
-            # block = raw snappy + 4-byte BE CRC32 of the uncompressed
-            # data; raw snappy leads with the uncompressed size varint.
-            body, crc = data[:-4], data[-4:]
-            usize, shift, pos = 0, 0, 0
-            while True:
-                b = body[pos]
-                usize |= (b & 0x7F) << shift
-                pos += 1
-                if not b & 0x80:
-                    break
-                shift += 7
-            data = pa.Codec("snappy").decompress(
-                body, decompressed_size=usize, asbytes=True
-            )
-            if struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF) != crc:
-                raise ValueError("snappy block CRC mismatch")
-        elif codec == "zstandard":
-            import pyarrow as pa
-
-            # Frame content size may be absent from the header, so use
-            # pyarrow's streaming decompressor instead of Codec.
-            data = pa.input_stream(
-                pa.BufferReader(data), compression="zstd"
-            ).read()
-        elif codec != "null":
-            raise ValueError(f"Unsupported avro codec: {codec}")
-        assert buf.read(16) == sync, "sync marker mismatch"
-        block = io.BytesIO(data)
-        if reader_schema is not None:
+    with open(path, "rb") as fh:
+        meta, sync = ocf.read_header(fh)
+        schema = json.loads(meta["avro.schema"])
+        codec = ocf.codec(meta.get("avro.codec", b"null").decode())
+        decoders, row = _resolve(
+            schema["fields"],
+            None if reader_schema is None else reader_schema["fields"],
+        )
+        for count, payload in ocf.blocks(fh, sync):
+            block = io.BytesIO(codec.decompress(payload))
             for _ in range(count):
-                out = [None] * arity
-                for i, v in defaults.items():
-                    out[i] = v
-                for dec, slot, conv in actions:
-                    v = dec(block)
-                    if slot is not None:
-                        out[slot] = (
-                            conv(v) if conv is not None and v is not None
-                            else v
-                        )
-                rows.append(tuple(out))
-        else:
-            for _ in range(count):
-                rows.append(tuple(d(block) for d in decoders))
+                rows.append(row([d(block) for d in decoders]))
     return (reader_schema if reader_schema is not None else schema), rows
+
+
+def read_avro_schema(path: str) -> dict:
+    """The writer schema of one OCF file, from its header alone."""
+    with open(path, "rb") as fh:
+        meta, _ = ocf.read_header(fh)
+    return json.loads(meta["avro.schema"])
 
 
 def count_ocf_rows(path: str) -> int:
     """Row count from BLOCK HEADERS only — each OCF block leads with
-    (row count, byte size) varints, so counting skips every payload
-    byte (no decompression, no decoding). Used by resumable exports
-    to credit already-landed files into the metrics at ~disk-seek
-    cost. Raises on a malformed/truncated container, so a partial
-    file (impossible under the writer's tmp+rename protocol, but
-    cheap to defend against) is never silently counted."""
+    (row count, byte size) varints, so counting seeks over every
+    payload byte (no read, no decompression, no decoding). Used by
+    resumable exports to credit already-landed files into the metrics
+    at ~disk-seek cost. Raises on a malformed/truncated container, so
+    a partial file (impossible under the writer's tmp+rename protocol,
+    but cheap to defend against) is never silently counted."""
     with open(path, "rb") as fh:
-        raw = fh.read()
-    buf = io.BytesIO(raw)
-    if buf.read(4) != b"Obj\x01":
-        raise ValueError(f"not an Avro OCF: {path}")
-    while True:
-        n = _read_long(buf)
-        if n == 0:
-            break
-        if n < 0:
-            _read_long(buf)
-            n = -n
-        for _ in range(n):
-            _read_str(buf)
-            _read_bytes(buf)
-    sync = buf.read(16)
-    total = 0
-    while buf.tell() < len(raw):
-        n_rows = _read_long(buf)
-        size = _read_long(buf)
-        if buf.seek(size, io.SEEK_CUR) > len(raw):
-            raise ValueError(f"truncated OCF block in {path}")
-        if buf.read(16) != sync:
-            raise ValueError(f"sync marker mismatch in {path}")
-        total += n_rows
-    return total
+        _, sync = ocf.read_header(fh)
+        return sum(count for count, _ in ocf.blocks(fh, sync, skip=True))

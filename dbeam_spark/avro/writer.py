@@ -19,17 +19,16 @@ exists per cell or per row. Ints, timestamps, dates, floats, doubles,
 booleans, strings and bytes take this path, and so do decimals with
 scale 0–6, via Arrow's decimal→string cast, whose text at those
 scales is exactly Python's `str(Decimal)`. Two kinds of column take
-the scalar encoders (`_make_cell_encoder`) instead, into the same kind
-of array: arrays, which have no flat payload, and decimals with scale
-above 6, where Python's E-notation (`0E-10`) differs from Arrow's
-(`0.E-10`). `OcfEncoder.encode_rows` keeps the all-scalar path as the
-reference the property tests compare against.
+the scalar encoders (`_make_cell_encoder`) on Arrow's own Python
+values instead, into the same kind of array: arrays, which have no
+flat payload, and decimals with scale above 6, where Python's
+E-notation (`0E-10`) differs from Arrow's (`0.E-10`).
+`OcfEncoder.encode_rows` keeps the all-scalar path as the reference
+the property tests compare against.
 
-Codecs: null, deflate1-9 (stdlib zlib — dbeam's default deflate6, ref
-args/JdbcAvroArgs.java), plus the spec's bzip2 and xz (stdlib bz2 /
-lzma), and snappy / zstandardN via pyarrow's bundled codecs (no
-native pip packages needed). Unknown codec names raise a clear
-error.
+The container — varints, header, blocks and the codecs (dbeam's
+default is deflate6, ref args/JdbcAvroArgs.java) — is ocf.py's,
+shared with the reader.
 """
 
 from __future__ import annotations
@@ -44,7 +43,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
-_MAGIC = b"Obj\x01"
+from dbeam_spark.avro import ocf
+
 _BLOCK_ROWS = 4096
 
 # Guards the session-conf save/flip/restore window in write_avro
@@ -62,65 +62,37 @@ WRITER_VERSION = 2
 
 # ---------------------------------------------------------------- encoding
 
-def _zigzag(n: int) -> bytes:
-    """Avro long: zigzag + varint."""
-    n = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _enc_bytes(b: bytes) -> bytes:
-    return _zigzag(len(b)) + b
-
-
-def _enc_str(s: str) -> bytes:
-    return _enc_bytes(s.encode("utf-8"))
-
-
 def _make_cell_encoder(avro_type):
-    """Encoder for a non-null Avro type value (already normalized to
-    python scalars by the column normalizer)."""
-    t = avro_type
-    logical = None
-    if isinstance(t, dict) and "logicalType" in t:
-        logical = t["logicalType"]
-        t = t["type"]
+    """Encoder for a non-null value of an Avro type, given as the
+    Python value the scalar path carries (timestamps and dates as
+    epoch millis)."""
+    t, logical = ocf.unwrap(avro_type)
     if isinstance(t, dict) and t.get("type") == "array":
-        item_type = t["items"]
-        nullable_items = isinstance(item_type, list)
-        inner = _make_cell_encoder(
-            item_type[1] if nullable_items else item_type
-        )
+        nullable_items = isinstance(t["items"], list)
+        inner = _make_cell_encoder(t["items"])
 
-        def enc_array(v) -> bytes:
-            items = list(v)
+        def enc_array(items) -> bytes:
             if not items:
-                return _zigzag(0)
-            buf = bytearray(_zigzag(len(items)))
+                return ocf.encode_long(0)
+            buf = bytearray(ocf.encode_long(len(items)))
             for it in items:
                 if nullable_items:
-                    # Arrow surfaces a NULL item in a numeric array
-                    # as float NaN, not None — both mean null here
-                    if it is None or (
-                        isinstance(it, float) and it != it
-                    ):
-                        buf += _zigzag(0)
+                    if it is None:
+                        buf += b"\x00"
                         continue
-                    buf += _zigzag(1)
+                    buf += b"\x02"
+                elif it is None:
+                    raise ValueError(
+                        "NULL array item under a schema without nullable "
+                        "items; export with --nullableArrayItems"
+                    )
                 buf += inner(it)
-            buf += _zigzag(0)
+            buf += ocf.encode_long(0)
             return bytes(buf)
 
         return enc_array
     if t in ("long", "int"):
-        return lambda v: _zigzag(int(v))
+        return lambda v: ocf.encode_long(int(v))
     if t == "double":
         return lambda v: struct.pack("<d", float(v))
     if t == "float":
@@ -128,46 +100,22 @@ def _make_cell_encoder(avro_type):
     if t == "boolean":
         return lambda v: b"\x01" if v else b"\x00"
     if t == "bytes":
-        return lambda v: _enc_bytes(bytes(v))
+        return lambda v: ocf.encode_bytes(bytes(v))
     if t == "string":
-        return lambda v: _enc_str(str(v))
+        return lambda v: ocf.encode_bytes(str(v).encode("utf-8"))
     raise ValueError(f"Unsupported Avro type: {avro_type!r} (logical={logical})")
 
 
-def _normalize_series(s, avro_type):
-    """pandas Series → list of python scalars matching the Avro type
-    (timestamps → epoch millis, like dbeam's JdbcAvroRecord)."""
-    import pandas as pd
+def _array_as_bytes(list_type):
+    """--arrayMode=bytes: the cell is the Avro binary encoding of the
+    array with ["null", T] items, T the Avro type of the element."""
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    t = avro_type
-    if isinstance(t, dict) and "logicalType" in t:
-        t = t["type"]
-    if pd.api.types.is_datetime64_any_dtype(s.dtype):
-        ms = s.astype("int64") // 1_000_000  # ns → ms
-        return [None if pd.isna(v) else int(m) for v, m in zip(s, ms)]
-    import datetime
+    from dbeam_spark.avro.schema import _avro_primitive
 
-    # pandas uses NaN as the missing marker for non-float columns that
-    # came through Arrow; only there does NaN mean SQL NULL. For real
-    # double/float columns NaN is a legitimate value — dbeam writes it
-    # as an Avro double (JdbcAvroRecord reads getDouble + wasNull), so
-    # pass it through instead of nulling it.
-    nan_is_null = t not in ("double", "float")
-    out = []
-    for v in s:
-        if v is None or (
-            nan_is_null and isinstance(v, float) and v != v
-        ):
-            out.append(None)
-        elif isinstance(v, datetime.datetime) and t == "long":
-            out.append(int(v.timestamp() * 1000))
-        elif isinstance(v, datetime.date) and t == "long":
-            out.append(
-                (v - datetime.date(1970, 1, 1)).days * 86_400_000
-            )
-        else:
-            out.append(v)
-    return out
+    item = _avro_primitive(from_arrow_type(list_type.value_type), False)
+    array = _make_cell_encoder({"type": "array", "items": ["null", item]})
+    return lambda v: ocf.encode_bytes(array(v))
 
 
 # ------------------------------------------------------- column builder
@@ -254,17 +202,51 @@ def _arrow_data(arr, dtype):
 _TS_DIVISOR = {"s": None, "ms": 1, "us": 1_000, "ns": 1_000_000}
 
 
-def _arrow_column_cells(arr, avro_type):
+def _epoch_millis(arr):
+    """A timestamp or date32 array's values as numpy int64 epoch
+    millis (floored, like dbeam's JdbcAvroRecord; dates at midnight),
+    or None for any other type. Null slots hold arbitrary values."""
+    import numpy as np
+    import pyarrow as pa
+
+    at = arr.type
+    if pa.types.is_timestamp(at):
+        div = _TS_DIVISOR[at.unit]
+        v = _arrow_data(arr, np.int64)
+        return v * 1000 if div is None else v // div
+    if pa.types.is_date32(at):
+        return _arrow_data(arr, np.int32).astype(np.int64) * 86_400_000
+    return None
+
+
+def _py_values(arr) -> list:
+    """The column's values for the scalar encoders: Arrow's own Python
+    values, with timestamp and date array items as epoch millis."""
+    import pyarrow as pa
+
+    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
+        offsets = arr.offsets.to_numpy()
+        items = arr.values.slice(offsets[0], offsets[-1] - offsets[0])
+        millis = _epoch_millis(items)
+        if millis is not None:
+            items = pa.array(
+                millis, mask=items.is_null().to_numpy(zero_copy_only=False)
+            )
+            arr = type(arr).from_arrays(
+                pa.array(offsets - offsets[0]), items, mask=arr.is_null()
+            )
+    return arr.to_pylist()
+
+
+def _arrow_column_cells(arr, t):
     """The column's union cells as a large_binary array, or None if
-    this column needs the scalar fallback (arrays, decimals with scale
-    above 6, Arrow types that don't match the Avro type)."""
+    this column of base Avro type ``t`` needs the scalar fallback
+    (arrays, decimals with scale above 6, Arrow types that don't match
+    the Avro type)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    t = avro_type
-    if isinstance(t, dict) and "logicalType" in t:
-        t = t["type"]
     at = arr.type
     n = len(arr)
     if arr.null_count == n:
@@ -275,15 +257,10 @@ def _arrow_column_cells(arr, avro_type):
         else np.zeros(n, dtype=bool)
     )
     if t in ("long", "int"):
-        if pa.types.is_timestamp(at):
-            div = _TS_DIVISOR[at.unit]
-            v = _arrow_data(arr, np.int64)
-            v = v * 1000 if div is None else v // div
-        elif pa.types.is_date32(at):
-            v = _arrow_data(arr, np.int32).astype(np.int64) * 86_400_000
-        elif pa.types.is_signed_integer(at):
+        v = _epoch_millis(arr)
+        if v is None and pa.types.is_signed_integer(at):
             v = _arrow_data(arr, at.to_pandas_dtype()).astype(np.int64)
-        else:
+        if v is None:
             return None
         return _cells(null, varint=v)
     fixed = (
@@ -319,56 +296,12 @@ def _arrow_column_cells(arr, avro_type):
     return None
 
 
-def _codec_compress(codec: str):
-    if codec in (None, "", "null"):
-        return "null", lambda b: b
-    if codec.startswith("deflate"):
-        level = int(codec[len("deflate"):] or 6)
-        # Avro deflate blocks are raw-deflate (no zlib header)
-        def compress(b: bytes) -> bytes:
-            c = zlib.compressobj(level, zlib.DEFLATED, -15)
-            return c.compress(b) + c.flush()
-
-        return "deflate", compress
-    if codec == "bzip2":
-        import bz2
-
-        return "bzip2", bz2.compress
-    if codec == "xz":
-        import lzma
-
-        # Avro xz codec = raw .xz container (spec 1.11)
-        return "xz", lzma.compress
-    if codec == "snappy":
-        # Spec: raw-snappy block + 4-byte big-endian CRC32 of the
-        # UNCOMPRESSED data. pyarrow bundles snappy (no pip needed).
-        import pyarrow as pa
-
-        c = pa.Codec("snappy")
-
-        def compress(b: bytes) -> bytes:
-            return c.compress(b, asbytes=True) + struct.pack(
-                ">I", zlib.crc32(b) & 0xFFFFFFFF
-            )
-
-        return "snappy", compress
-    if codec.startswith("zstandard"):
-        # zstandardN like deflateN; Avro/zstd default level is 3.
-        import pyarrow as pa
-
-        level = int(codec[len("zstandard"):] or 3)
-        c = pa.Codec("zstd", compression_level=level)
-        return "zstandard", lambda b: c.compress(b, asbytes=True)
-    raise ValueError(f"Unsupported avro codec: {codec}")
-
-
 class OcfEncoder:
     """Streaming OCF encoder for one output file."""
 
     def __init__(self, avro_schema: dict, codec: str = "deflate6") -> None:
         self.schema = avro_schema
-        codec_name, self._compress = _codec_compress(codec)
-        self._codec_name = codec_name
+        self._codec = ocf.codec(codec)
         # deterministic per-schema sync marker (content-derived, so
         # retried partitions produce identical files)
         import hashlib
@@ -377,23 +310,12 @@ class OcfEncoder:
             json.dumps(avro_schema, sort_keys=True).encode()
         ).digest()
         self._field_types = [
-            f["type"][1] if isinstance(f["type"], list) else f["type"]
-            for f in avro_schema["fields"]
+            ocf.unwrap(f["type"])[0] for f in avro_schema["fields"]
         ]
         self._encoders = [_make_cell_encoder(t) for t in self._field_types]
 
     def header(self) -> bytes:
-        meta = {
-            "avro.schema": json.dumps(self.schema).encode(),
-            "avro.codec": self._codec_name.encode(),
-        }
-        buf = bytearray(_MAGIC)
-        buf += _zigzag(len(meta))
-        for k, v in meta.items():
-            buf += _enc_str(k) + _enc_bytes(v)
-        buf += _zigzag(0)
-        buf += self.sync
-        return bytes(buf)
+        return ocf.header(self.schema, self._codec.name, self.sync)
 
     def encode_batch(self, rb) -> Iterator[bytes]:
         """Yield OCF blocks straight from an Arrow RecordBatch.
@@ -419,14 +341,14 @@ class OcfEncoder:
             arr = rb.column(idx[f["columnName"]])
             cells = _arrow_column_cells(arr, t)
             if cells is None:  # scalar fallback for this column only
-                import pandas as pd
-
+                if t == "bytes" and (
+                    pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type)
+                ):
+                    enc = _array_as_bytes(arr.type)
                 cells = pa.array(
                     [
                         b"\x00" if v is None else b"\x02" + enc(v)
-                        for v in _normalize_series(
-                            pd.Series(arr.to_pandas()), t
-                        )
+                        for v in _py_values(arr)
                     ],
                     pa.large_binary(),
                 )
@@ -438,8 +360,8 @@ class OcfEncoder:
         data = rows.buffers()[2]
         for start in range(0, n, _BLOCK_ROWS):
             end = min(start + _BLOCK_ROWS, n)
-            block = self._compress(data[int(ends[start]):int(ends[end])])
-            yield _zigzag(end - start) + _zigzag(len(block)) + block + self.sync
+            payload = data[int(ends[start]):int(ends[end])]
+            yield ocf.block(end - start, self._codec.compress(payload), self.sync)
 
     def encode_rows(self, columns: list[list]) -> Iterator[bytes]:
         """Yield OCF blocks for rows given as normalized columns."""
@@ -456,8 +378,7 @@ class OcfEncoder:
                     else:
                         block += b"\x02"  # union branch 1 (zigzag(1))
                         block += enc(v)
-            data = self._compress(bytes(block))
-            yield _zigzag(end - start) + _zigzag(len(data)) + data + self.sync
+            yield ocf.block(end - start, self._codec.compress(bytes(block)), self.sync)
 
 
 def write_avro(

@@ -34,7 +34,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dbeam_spark.avro.reader import read_avro_file
+from dbeam_spark.avro.reader import read_avro_schema
 from dbeam_spark.avro.writer import write_avro
 from dbeam_spark.sources.avro import read_avro
 
@@ -73,7 +73,7 @@ def compact_runs(
     first_part = sorted(runs[0].glob("part-*.avro"))
     if not first_part:
         raise FileNotFoundError(f"No part files in {runs[0]}")
-    avro_schema, _ = read_avro_file(str(first_part[0]))
+    avro_schema = read_avro_schema(str(first_part[0]))
 
     df: DataFrame | None = None
     n_files = 0

@@ -1495,7 +1495,7 @@ def _join_completeness_report(spark: SparkSession, joined) -> DataFrame:
        AND v.vts <= p.pts
     )
     SELECT CAST(COUNT(DISTINCT pid) AS BIGINT) AS n_purchases,
-           CAST(SUM(CASE WHEN vid IS NOT NULL THEN 1 ELSE 0 END)
+           CAST(COALESCE(SUM(CASE WHEN vid IS NOT NULL THEN 1 ELSE 0 END), 0)
                 AS BIGINT) AS n_match_rows,
            CAST(COUNT(DISTINCT CASE WHEN vid IS NOT NULL THEN pid END)
                 AS BIGINT) AS n_matched_purchases,
@@ -1636,7 +1636,7 @@ def _events_stream_nib_sampled(
        AND v.vts <= p.pts
     )
     SELECT CAST(COUNT(DISTINCT pid) AS BIGINT) AS n_purchases,
-           CAST(SUM(CASE WHEN vid IS NOT NULL THEN 1 ELSE 0 END)
+           CAST(COALESCE(SUM(CASE WHEN vid IS NOT NULL THEN 1 ELSE 0 END), 0)
                 AS BIGINT) AS n_match_rows,
            CAST(COUNT(DISTINCT CASE WHEN vid IS NOT NULL THEN pid END)
                 AS BIGINT) AS n_matched_purchases,

@@ -6,11 +6,15 @@ the generated SQL strings are byte-identical to what the reference's
 tests assert (see tests/test_query_builder.py), so a dbeam user can
 diff `_queries/query_*.sql` between the two systems.
 
-In the Spark engine these strings serve two roles:
-- they are written to the output's `_queries/` metadata, like dbeam;
-- the split ranges (`generate_ranges`) become the Spark JDBC source's
-  partition predicates, so each range is an independent executor-side
-  scan instead of dbeam's one-Beam-bundle-per-query.
+In the Spark engine these strings are written to the output's
+`_queries/` metadata, like dbeam, but a split export does not run the
+ranges `generate_ranges` builds. sources/jdbc.py hands the same
+MIN/MAX bounds to the Spark JDBC source's
+partitionColumn/lowerBound/upperBound/numPartitions, and Spark builds
+its own partition predicates from them. Those cover every row: NULL
+split keys land in the first partition (`K < x OR K IS NULL`) and the
+last range is open-ended (`K >= y`), where dbeam's range queries skip
+NULL keys and end at `K <= max`.
 """
 
 from __future__ import annotations

@@ -1,9 +1,11 @@
 """Read dbeam-style Avro exports back into Spark, distributed.
 
 The inverse of avro/writer.py: schema comes from the first file's
-header (driver-side, cheap); data decoding is one task per file via
-mapInPandas over the file list — no driver collect, scales with file
-count exactly like Spark's native file sources.
+header alone (driver-side, no block is read); data decoding is one
+task per file via mapInPandas over the file list — no driver collect,
+scales with file count exactly like Spark's native file sources. Both
+go through avro/reader.py, and so through the one definition of the
+container format in avro/ocf.py.
 """
 
 from __future__ import annotations
@@ -15,7 +17,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from dbeam_spark.avro.reader import read_avro_file
+from dbeam_spark.avro.ocf import unwrap
+from dbeam_spark.avro.reader import read_avro_file, read_avro_schema
 
 _PRIMITIVES = {
     "long": T.LongType(),
@@ -29,15 +32,11 @@ _PRIMITIVES = {
 
 
 def _avro_to_spark_type(avro_type, logical_as_timestamp: bool) -> T.DataType:
-    t = avro_type
-    if isinstance(t, list):  # ["null", T]
-        t = t[1] if t[0] == "null" else t[0]
-    if isinstance(t, dict) and t.get("logicalType") == "timestamp-millis":
+    t, logical = unwrap(avro_type)
+    if logical == "timestamp-millis":
         return T.TimestampType() if logical_as_timestamp else T.LongType()
-    if isinstance(t, dict) and t.get("type") == "array":
+    if isinstance(t, dict):  # array
         return T.ArrayType(_avro_to_spark_type(t["items"], logical_as_timestamp))
-    if isinstance(t, dict):
-        t = t.get("type")
     if t in _PRIMITIVES:
         return _PRIMITIVES[t]
     raise ValueError(f"Unsupported Avro type: {avro_type!r}")
@@ -78,16 +77,13 @@ def read_avro(
     if reader_schema is not None:
         avro_schema = reader_schema
     else:
-        avro_schema, _ = read_avro_file(files[0])  # header-only cost
+        avro_schema = read_avro_schema(files[0])
     spark_schema = avro_schema_to_spark(avro_schema, logical_as_timestamp)
     names = [f.name for f in spark_schema.fields]
     ts_cols = {
         f["name"]
         for f in avro_schema["fields"]
-        if logical_as_timestamp
-        and isinstance(f["type"], list)
-        and isinstance(f["type"][1], dict)
-        and f["type"][1].get("logicalType") == "timestamp-millis"
+        if logical_as_timestamp and unwrap(f["type"])[1] == "timestamp-millis"
     }
 
     paths_df = spark.createDataFrame(

@@ -57,8 +57,6 @@ def query_builder_args(opts: JdbcExportOptions, sql_text: str | None = None) -> 
             with open(opts.sqlFile) as fh:
                 sql_text = fh.read()
         args = QueryBuilderArgs.create_from_query(sql_text)
-    from dataclasses import replace
-
     return replace(
         args,
         limit=opts.limit,

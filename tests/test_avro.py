@@ -129,6 +129,55 @@ def test_merge_input_schema_propagates_docs():
     assert "sparkType" in next(f for f in merged["fields"] if f["name"] == "name")["doc"]
 
 
+def test_array_mode_bytes_cells_are_avro_arrays(tmp_path):
+    """--arrayMode=bytes writes each array as the Avro binary encoding
+    of the array with ["null", T] items (timestamps as epoch millis).
+    The bytes depend on the row alone — not on a NULL item elsewhere
+    in the batch, nor on where Arrow keeps the strings — and decode
+    with the item schema."""
+    import io
+
+    import pyarrow as pa
+
+    from dbeam_spark.avro.reader import _make_decoder
+
+    columns = [
+        ("ints", T.ArrayType(T.LongType()), pa.list_(pa.int64()), "long"),
+        ("texts", T.ArrayType(T.StringType()), pa.list_(pa.string()), "string"),
+        ("stamps", T.ArrayType(T.TimestampType()),
+         pa.list_(pa.timestamp("us", tz="UTC")), "long"),
+    ]
+    schema = spark_schema_to_avro(
+        T.StructType([T.StructField(n, t) for n, t, *_ in columns]),
+        "t", array_mode="bytes",
+    )
+    assert {f["type"][1] for f in schema["fields"]} == {"bytes"}
+    row = ([1, -2, 2**40], ["a", "é"], [1_700_000_000_123_456, -1])
+    other = ([None, 5], [None, "zz" * 50], [None])
+
+    def cells(rows):
+        rb = pa.RecordBatch.from_arrays(
+            [pa.array(list(c), at) for c, (_, _, at, _) in zip(zip(*rows), columns)],
+            names=[n for n, *_ in columns],
+        )
+        enc = OcfEncoder(schema, "null")
+        p = tmp_path / "bytes.avro"
+        p.write_bytes(enc.header() + b"".join(enc.encode_batch(rb)))
+        return read_avro_file(str(p))[1]
+
+    alone = cells([row])[0]
+    mixed = cells([other, row, other])
+    assert mixed[1] == alone
+    decoders = [
+        _make_decoder({"type": "array", "items": ["null", item]})
+        for *_, item in columns
+    ]
+    decode = [d(io.BytesIO(b)) for d, b in zip(decoders, alone)]
+    assert decode == [[1, -2, 2**40], ["a", "é"], [1_700_000_000_123, -1]]
+    decode = [d(io.BytesIO(b)) for d, b in zip(decoders, mixed[0])]
+    assert decode == [[None, 5], [None, "zz" * 50], [None]]
+
+
 @pytest.mark.parametrize(
     "codec",
     ["null", "deflate1", "deflate9", "bzip2", "xz", "snappy", "zstandard"],
@@ -199,9 +248,24 @@ def test_export_types_never_take_the_per_cell_path(codec, monkeypatch):
     def per_cell(*args, **kwargs):
         raise AssertionError("a column took the per-cell scalar path")
 
-    monkeypatch.setattr(writer, "_normalize_series", per_cell)
     monkeypatch.setattr(writer, "_make_cell_encoder", lambda avro_type: per_cell)
     assert b"".join(OcfEncoder(schema, codec).encode_batch(rb)) == want
+
+
+def test_null_array_item_needs_nullable_items():
+    """Without --nullableArrayItems the item type is no union, so a
+    NULL item has no encoding: the export fails and names the flag
+    (rather than writing the string "None" or a NaN)."""
+    import pyarrow as pa
+
+    schema = spark_schema_to_avro(
+        T.StructType([T.StructField("a", T.ArrayType(T.StringType()))]), "t"
+    )
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array([["x", None]], pa.list_(pa.string()))], names=["a"]
+    )
+    with pytest.raises(ValueError, match="--nullableArrayItems"):
+        list(OcfEncoder(schema, "null").encode_batch(rb))
 
 
 def test_unknown_codec_rejected():
@@ -251,6 +315,34 @@ def test_nan_vs_null_doubles(spark, tmp_path):
     assert by_id[1] == 1.5
     assert by_id[2] is None
     assert isinstance(by_id[3], float) and math.isnan(by_id[3])
+
+
+def test_read_avro_plans_from_the_header_alone(spark, tmp_path, monkeypatch):
+    """read_avro and compact_runs take the schema from a part file's
+    header: with the reader's value decoders patched to raise on the
+    driver, both still plan (data decoding happens in the tasks), with
+    the right schema."""
+    from dbeam_spark.avro import reader
+    from dbeam_spark.jobs.compact_runs import compact_runs
+    from dbeam_spark.sources.avro import read_avro
+
+    df = spark.range(0, 100, numPartitions=2).selectExpr(
+        "id", "CAST(id AS STRING) AS s", "timestamp_millis(id) AS ts"
+    )
+    avro = spark_schema_to_avro(df.schema, "t", use_logical_types=True)
+    for run in ("run_00000", "run_00001"):
+        write_avro(df, str(tmp_path / run), avro)
+        (tmp_path / run / "_SUCCESS").write_text("")
+
+    def decode_on_driver(avro_type):
+        raise AssertionError("read a data block on the driver")
+
+    monkeypatch.setattr(reader, "_make_decoder", decode_on_driver)
+    back = read_avro(spark, str(tmp_path / "run_00000"))
+    assert [(f.name, f.dataType.simpleString()) for f in back.schema] == [
+        ("id", "bigint"), ("s", "string"), ("ts", "timestamp")
+    ]
+    assert compact_runs(spark, str(tmp_path), target_files=1)["rows"] == 200
 
 
 def test_read_avro_roundtrip_source(spark, tmp_path):
@@ -338,17 +430,19 @@ def test_typed_array_data_round_trip(spark, tmp_path):
     """typed_postgres array mode, END-TO-END on data (the slice
     reference e2e/ddl.sql exercises with real PG arrays): frames
     shaped exactly as Spark's Postgres JDBC dialect produces them —
-    int[] / text[] columns, NULL arrays, NULL items — survive the
-    OCF writer and read back value-exact. Fails if the writer or the
-    generated schema mishandles nullable items or null arrays."""
+    int[] / text[] / float8[] columns, NULL arrays, NULL items, NaN
+    items — survive the OCF writer and read back value-exact. Fails if
+    the writer or the generated schema mishandles nullable items, null
+    arrays, or takes a NaN item for a NULL one."""
     import glob as _glob
 
+    nan = float("nan")
     df = spark.createDataFrame(
         [
-            (0, [1, 2, 3], ["a", "b"], [10, None, 30]),
-            (1, [], ["x"], [None]),
-            (2, None, None, None),  # NULL arrays
-            (3, [7], [""], [0]),
+            (0, [1, 2, 3], ["a", "b"], [10, None, 30], [1.5, None, nan]),
+            (1, [], ["x"], [None], []),
+            (2, None, None, None, None),  # NULL arrays
+            (3, [7], [""], [0], [nan]),
         ],
         T.StructType(
             [
@@ -359,6 +453,7 @@ def test_typed_array_data_round_trip(spark, tmp_path):
                     "nullable_items",
                     T.ArrayType(T.IntegerType(), containsNull=True),
                 ),
+                T.StructField("doubles", T.ArrayType(T.DoubleType())),
             ]
         ),
     )
@@ -381,63 +476,8 @@ def test_typed_array_data_round_trip(spark, tmp_path):
     assert got[1] == ([], ["x"], [None])
     assert got[2] == (None, None, None)
     assert got[3] == ([7], [""], [0])
-
-
-def test_ocf_bytes_readable_by_java_avro_reference_reader(spark, tmp_path):
-    """Byte-compatibility proof for the pure-Python OCF writer: files
-    it produces are read back by the REFERENCE Java Avro library
-    (org.apache.avro on Spark's classpath — the same implementation
-    dbeam itself writes with), per codec. A container-format or
-    varint/union encoding bug would fail here even if our own Python
-    reader round-trips symmetrically."""
-    import glob as _glob
-
-    df = spark.createDataFrame(
-        [
-            (0, "alpha", 1.5, True, bytearray(b"\x00\xff"), [1, 2]),
-            (1, None, None, False, None, None),
-            (2, "", -2.25, None, bytearray(b""), []),
-        ],
-        T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("name", T.StringType()),
-                T.StructField("amount", T.DoubleType()),
-                T.StructField("flag", T.BooleanType()),
-                T.StructField("blob", T.BinaryType()),
-                T.StructField("tags", T.ArrayType(T.IntegerType())),
-            ]
-        ),
-    )
-    avro = spark_schema_to_avro(df.schema, "jtbl")
-    jvm = spark.sparkContext._jvm
-    for codec in ("null", "deflate6", "bzip2"):
-        out = str(tmp_path / f"jref_{codec}")
-        write_avro(df.repartition(1), out, avro, codec=codec)
-        path = sorted(_glob.glob(out + "/part-*.avro"))[0]
-        reader = jvm.org.apache.avro.file.DataFileReader(
-            jvm.java.io.File(path),
-            jvm.org.apache.avro.generic.GenericDatumReader(),
-        )
-        assert reader.getSchema().getName() == "jtbl"
-        got = {}
-        while reader.hasNext():
-            rec = reader.next()
-            rid = rec.get("id")
-            name = rec.get("name")
-            blob = rec.get("blob")
-            tags = rec.get("tags")
-            got[rid] = (
-                None if name is None else str(name),
-                rec.get("amount"),
-                rec.get("flag"),
-                None if blob is None else bytes(blob.array()),
-                None if tags is None else [t for t in tags],
-            )
-        reader.close()
-        assert got[0] == ("alpha", 1.5, True, b"\x00\xff", [1, 2]), codec
-        assert got[1] == (None, None, False, None, None), codec
-        assert got[2] == ("", -2.25, None, b"", []), codec
+    doubles = {r[0]: None if r[4] is None else list(map(repr, r[4])) for r in rows}
+    assert doubles == {0: ["1.5", "None", "nan"], 1: [], 2: None, 3: ["nan"]}
 
 
 def test_reader_schema_resolution(spark, tmp_path):
@@ -540,51 +580,140 @@ def test_read_avro_with_evolved_reader_schema(spark, tmp_path):
     assert got == [(1, "a", None), (2, "b", 9)]
 
 
-def test_java_avro_reads_python_ocf(spark, tmp_path):
+_AVRO_CODEC_META = {
+    "null": "null", "deflate1": "deflate", "deflate6": "deflate",
+    "deflate9": "deflate", "bzip2": "bzip2", "xz": "xz",
+    "snappy": "snappy", "zstandard": "zstandard",
+}
+
+
+@pytest.mark.parametrize("codec", list(_AVRO_CODEC_META))
+def test_java_avro_reads_python_ocf(spark, tmp_path, codec):
     """Cross-implementation compatibility: files produced by the
-    pure-Python OCF writer must be readable by the REFERENCE Java
-    Avro implementation (org.apache.avro on Spark's own classpath —
-    the same library dbeam-core's writer uses), codec included.
-    This is the jar-backed byte-compatibility check: a wrong sync
-    marker, block framing, zigzag varint or deflate stream makes
-    DataFileReader throw, and value round-trips are compared."""
-    df = spark.sql(
-        "SELECT * FROM VALUES "
-        "(1, 'alpha', CAST(1.5 AS DOUBLE), true), "
-        "(2, NULL, CAST(-2.25 AS DOUBLE), false), "
-        "(3, 'gamma', CAST(NULL AS DOUBLE), NULL) "
-        "AS t(id, s, d, b)"
-    ).coalesce(1)
-    avro = spark_schema_to_avro(df.schema, "t")
-    for codec in ("null", "deflate6", "bzip2"):
-        out = str(tmp_path / f"jref_{codec}")
-        write_avro(df, out, avro, codec=codec)
-        part = sorted(glob.glob(out + "/part-*.avro"))[0]
-        jvm = spark._jvm
-        jfile = jvm.java.io.File(part)
-        dreader = jvm.org.apache.avro.generic.GenericDatumReader()
-        freader = jvm.org.apache.avro.file.DataFileReader(jfile, dreader)
-        expect_meta = {"null": "null", "deflate6": "deflate",
-                       "bzip2": "bzip2"}[codec]
-        assert freader.getMetaString("avro.codec") == expect_meta
+    pure-Python OCF writer are read by the REFERENCE Java Avro library
+    (org.apache.avro on Spark's classpath — the same implementation
+    dbeam writes with), under every codec. A wrong sync marker, block
+    framing, zigzag varint, union branch or codec stream makes
+    DataFileReader throw or read wrong values, even where our own
+    Python reader round-trips symmetrically."""
+    df = spark.createDataFrame(
+        [
+            (0, "alpha", 1.5, True, bytearray(b"\x00\xff"), [1, 2]),
+            (1, None, None, False, None, None),
+            (2, "", -2.25, None, bytearray(b""), []),
+        ],
+        T.StructType(
+            [
+                T.StructField("id", T.LongType()),
+                T.StructField("name", T.StringType()),
+                T.StructField("amount", T.DoubleType()),
+                T.StructField("flag", T.BooleanType()),
+                T.StructField("blob", T.BinaryType()),
+                T.StructField("tags", T.ArrayType(T.IntegerType())),
+            ]
+        ),
+    )
+    avro = spark_schema_to_avro(df.schema, "jtbl")
+    out = str(tmp_path / f"jref_{codec}")
+    write_avro(df.repartition(1), out, avro, codec=codec)
+    (path,) = glob.glob(out + "/part-*.avro")
+    jvm = spark.sparkContext._jvm
+    reader = jvm.org.apache.avro.file.DataFileReader(
+        jvm.java.io.File(path),
+        jvm.org.apache.avro.generic.GenericDatumReader(),
+    )
+    try:
+        assert reader.getMetaString("avro.codec") == _AVRO_CODEC_META[codec]
+        jschema = reader.getSchema()
+        assert jschema.getName() == "jtbl"
+        assert [str(f.name()) for f in jschema.getFields()] == [
+            "id", "name", "amount", "flag", "blob", "tags"
+        ]
         got = {}
-        while freader.hasNext():
-            rec = freader.next()
-            rid = int(str(rec.get("id")))
-            sval = rec.get("s")
-            dval = rec.get("d")
-            got[rid] = (
-                None if sval is None else str(sval),
-                None if dval is None else float(str(dval)),
-                rec.get("b"),
+        while reader.hasNext():
+            rec = reader.next()
+            name, blob, tags = rec.get("name"), rec.get("blob"), rec.get("tags")
+            got[rec.get("id")] = (
+                None if name is None else str(name),
+                rec.get("amount"),
+                rec.get("flag"),
+                None if blob is None else bytes(blob.array()),
+                None if tags is None else list(tags),
             )
-        freader.close()
-        assert got == {
-            1: ("alpha", 1.5, True),
-            2: (None, -2.25, False),
-            3: ("gamma", None, None),
-        }, got
-        # schema fidelity through the reference parser
-        jschema = freader.getSchema()
-        names = [str(f.name()) for f in jschema.getFields()]
-        assert names == ["id", "s", "d", "b"]
+    finally:
+        reader.close()
+    assert got == {
+        0: ("alpha", 1.5, True, b"\x00\xff", [1, 2]),
+        1: (None, None, False, None, None),
+        2: ("", -2.25, None, b"", []),
+    }
+
+
+_JAVA_SCHEMA = {
+    "type": "record",
+    "name": "jwritten",
+    "fields": [
+        {"name": "id", "type": ["null", "long"], "default": None},
+        {"name": "name", "type": ["null", "string"], "default": None},
+        {"name": "amount", "type": ["null", "double"], "default": None},
+        {"name": "blob", "type": ["null", "bytes"], "default": None},
+        {"name": "tags", "type": ["null", {"type": "array", "items": "int"}],
+         "default": None},
+    ],
+}
+
+
+@pytest.mark.parametrize(
+    "codec", ["null", "deflate", "bzip2", "xz", "snappy", "zstandard"]
+)
+def test_python_reads_java_avro_ocf(spark, tmp_path, codec):
+    """The other direction: files Java's DataFileWriter writes with
+    each of its codecs — a random sync marker, small sync intervals so
+    the rows span many blocks — are read by read_avro_file and counted
+    by count_ocf_rows."""
+    import json
+
+    from dbeam_spark.avro import ocf
+    from dbeam_spark.avro.reader import count_ocf_rows
+
+    jvm = spark.sparkContext._jvm
+    avro = jvm.org.apache.avro
+    schema = avro.Schema.Parser().parse(json.dumps(_JAVA_SCHEMA))
+    want = []
+    for i in range(500):
+        want.append((
+            2**40 + i,
+            None if i % 7 == 0 else "é" * (i % 5) + str(i),
+            None if i % 11 == 0 else i / 8,
+            None if i % 13 == 0 else bytes([i % 256, 0, 255]),
+            None if i % 17 == 0 else list(range(-(i % 3), i % 6)),
+        ))
+    datum = avro.generic.GenericDatumReader(schema)
+    path = str(tmp_path / f"java_{codec}.avro")
+    writer = avro.file.DataFileWriter(avro.generic.GenericDatumWriter(schema))
+    writer.setCodec(avro.file.CodecFactory.fromString(codec))
+    writer.setSyncInterval(64)
+    writer.create(schema, jvm.java.io.File(path))
+    branches = ("long", "string", "double", "bytes", "array")
+    try:
+        for row in want:
+            # Avro's JSON encoding: {branch: value}, bytes as latin-1
+            as_json = {
+                f["name"]: None if v is None else {
+                    b: v.decode("latin-1") if b == "bytes" else v
+                }
+                for f, b, v in zip(_JAVA_SCHEMA["fields"], branches, row)
+            }
+            decoder = avro.io.DecoderFactory.get().jsonDecoder(
+                schema, json.dumps(as_json)
+            )
+            writer.append(datum.read(None, decoder))
+    finally:
+        writer.close()
+    with open(path, "rb") as fh:
+        _, sync = ocf.read_header(fh)
+        assert sum(1 for _ in ocf.blocks(fh, sync, skip=True)) > 10
+    schema_back, rows = read_avro_file(path)
+    assert schema_back["name"] == "jwritten"
+    assert rows == want
+    assert count_ocf_rows(path) == len(want)

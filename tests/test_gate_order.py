@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import importlib.util
 import sys
+from pathlib import Path
 
 from dbeam_spark.queries import QUERIES
 from dbeam_spark.queries.gate_order import FROZEN_ORDER, stable_names
@@ -20,11 +21,15 @@ from dbeam_spark.queries.gate_order import FROZEN_ORDER, stable_names
 
 def _entry_module():
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_under_test", "/root/repo/__spark_entry__.py"
+        "spark_entry_under_test",
+        Path(__file__).resolve().parents[1] / "__spark_entry__.py",
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["spark_entry_under_test"] = mod
-    spec.loader.exec_module(mod)
+    try:
+        spec.loader.exec_module(mod)
+    finally:
+        sys.modules.pop("spark_entry_under_test", None)
     return mod
 
 

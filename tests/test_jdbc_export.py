@@ -95,12 +95,17 @@ def test_bounds_probe_rejects_empty_table(spark, derby_db):
 
 
 def test_parallel_export_negative_split_keys(spark, derby_db, tmp_path):
-    """Negative split keys: the probe's bounds and the range queries
-    built from them cover every key exactly once."""
+    """Negative split keys and one NULL key: the probe's bounds ignore
+    the NULL, and the export still covers every row exactly once —
+    Spark's first partition also takes the NULL keys and its last
+    range is open-ended — while _queries/ records dbeam's range
+    queries, which leave the NULL row out."""
     from dbeam_spark.sources.jdbc import find_input_bounds
 
     spark.range(-500, 250).selectExpr(
         "id AS K", "CONCAT('v', id) AS V"
+    ).union(
+        spark.sql("SELECT CAST(NULL AS BIGINT) AS K, 'null key' AS V")
     ).write.format("jdbc").option("url", derby_db).option(
         "user", "dbeam"
     ).option("dbtable", "NEG_KEYS").mode("overwrite").save()
@@ -112,17 +117,28 @@ def test_parallel_export_negative_split_keys(spark, derby_db, tmp_path):
         spark, opts, None, "SELECT MIN(K), MAX(K) FROM NEG_KEYS"
     ) == (-500, 249)
     metrics = run_export(spark, opts)
-    assert metrics["recordCount"] == 750
+    assert metrics["recordCount"] == 751
     queries = [
         Path(p).read_text().strip()
         for p in sorted(glob.glob(str(tmp_path / "neg" / "_queries" / "*.sql")))
     ]
-    assert len(queries) == 3
-    assert queries[0].endswith("AND K >= -500 AND K < -250")
-    assert queries[-1].endswith("AND K <= 249")
-    assert sorted(r[0] for r in read_all(tmp_path / "neg")) == list(
+    assert [q.split("WHERE 1=1")[1] for q in queries] == [
+        " AND K >= -500 AND K < -250",
+        " AND K >= -250 AND K < 0",
+        " AND K >= 0 AND K <= 249",
+    ]
+    rows = read_all(tmp_path / "neg")
+    assert [r for r in rows if r[0] is None] == [(None, "null key")]
+    assert sorted(r[0] for r in rows if r[0] is not None) == list(
         range(-500, 250)
     )
+    # one part file per Spark partition: (min key, max key, NULL keys)
+    parts = []
+    for p in sorted(glob.glob(str(tmp_path / "neg" / "part-*.avro"))):
+        keys = [r[0] for r in read_avro_file(p)[1]]
+        known = [k for k in keys if k is not None]
+        parts.append((min(known), max(known), keys.count(None)))
+    assert parts == [(-500, -251, 1), (-250, -1, 0), (0, 249, 0)]
 
 
 def test_bounds_probe_runs_pre_commands(spark, derby_db):

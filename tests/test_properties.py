@@ -93,6 +93,8 @@ def _decimals(scale: int, digits: int):
 
 
 _DAY_MS = 86_400_000
+_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+_MS = datetime.timedelta(milliseconds=1)
 
 # (name, Spark type, Arrow type, values, Arrow's Python value →
 # encode_rows input)
@@ -129,7 +131,22 @@ _ARROW_COLUMNS = [
         _decimals(10, 3), _decimals(10, 30)
     ), None),
     ("arr", T.ArrayType(T.IntegerType()), pa.list_(pa.int32()), _arrays, None),
+    # array items are epoch millis like flat columns: floored, dates
+    # at midnight
+    ("ats", T.ArrayType(T.TimestampType()), pa.list_(pa.timestamp("us", tz="UTC")),
+     st.one_of(st.none(), st.lists(st.integers(-(2**55), 2**55), max_size=5)),
+     lambda items: [(t - _EPOCH) // _MS for t in items]),
+    ("adt", T.ArrayType(T.DateType()), pa.list_(pa.date32()),
+     st.one_of(st.none(), st.lists(st.integers(-700_000, 700_000), max_size=5)),
+     lambda items: [(d - datetime.date(1970, 1, 1)).days * _DAY_MS for d in items]),
+    # nullable items (_NULLABLE_ITEMS): a NaN item stays NaN, a NULL
+    # item is null
+    ("nd", T.ArrayType(T.DoubleType()), pa.list_(pa.float64()),
+     st.one_of(st.none(), st.lists(st.one_of(
+         st.none(), st.floats(allow_infinity=False, width=64)
+     ), max_size=5)), None),
 ]
+_NULLABLE_ITEMS = {"nd"}
 
 
 def _wide_rows(n: int) -> list[tuple]:
@@ -159,6 +176,9 @@ def _wide_rows(n: int) -> list[tuple]:
             Decimal(rng.randint(-(10**9), 10**9)).scaleb(-6),
             Decimal(rng.randint(-(10**(i % 25)), 10**(i % 25))).scaleb(-10),
             list(range(-(i % 5), i % 7)),
+            [rng.randint(-(2**55), 2**55) for _ in range(i % 4)],
+            [rng.randint(-700_000, 700_000) for _ in range(i % 3)],
+            [None, float("nan"), rng.uniform(-1e300, 1e300)][:i % 4],
         ))))
     return rows
 
@@ -184,8 +204,9 @@ def test_arrow_encoder_matches_scalar(rows, cut):
     tells them apart), float32, booleans, dates, string/binary/
     large_string (unicode, multi-byte varint lengths), decimals on the
     cast path (scale 0, 2, 6), the scalar fallback (scale-10 decimals,
-    arrays), all-null columns, the empty batch, and slices (non-zero
-    Arrow offsets)."""
+    arrays, with timestamp and date items and nullable double items),
+    all-null columns, the empty batch, and slices (non-zero Arrow
+    offsets)."""
     names = [name for name, *_ in _ARROW_COLUMNS]
     schema = spark_schema_to_avro(
         T.StructType(
@@ -193,6 +214,9 @@ def test_arrow_encoder_matches_scalar(rows, cut):
         ),
         "prop",
     )
+    for f in schema["fields"]:
+        if f["name"] in _NULLABLE_ITEMS:
+            f["type"][1]["items"] = ["null", f["type"][1]["items"]]
     enc = OcfEncoder(schema, "null")
     cols = (
         list(map(list, zip(*rows))) if rows else [[] for _ in _ARROW_COLUMNS]

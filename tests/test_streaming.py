@@ -296,3 +296,20 @@ def test_join_completeness_report_matches_batch(spark):
         row.n_unmatched_purchases
         == exp.n_purchases - exp.n_matched_purchases
     )
+
+
+def test_join_completeness_oracles_report_zeros_on_empty_input():
+    """On an empty events table both stream_join_completeness oracles
+    report all zeros, like the Spark side: SUM over no rows is NULL
+    in DuckDB too, so n_match_rows needs the same COALESCE."""
+    import duckdb
+
+    from dbeam_spark.queries import ORACLES
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events (event_id BIGINT, user_id BIGINT, "
+        "event_type VARCHAR, ts TIMESTAMP)"
+    )
+    for name in ("stream_join_completeness", "stream_join_completeness_sampled"):
+        assert con.execute(ORACLES[name]).fetchall() == [(0, 0, 0, 0)], name
