@@ -505,3 +505,18 @@ def file_crc32(path: str, chunk: int = 1 << 20) -> int:
                 break
             crc = zlib.crc32(buf, crc)
     return crc & 0xFFFFFFFF
+
+
+def write_checksums(output_dir, stats: list[dict]) -> None:
+    """`_CHECKSUMS.json`: CRC32, size and row count of each part file,
+    from the per-file stats `write_avro` returns."""
+    checksums = {
+        os.path.basename(s["file"]): {
+            "crc32": int(s["crc32"]),
+            "bytes": int(s["bytes"]),
+            "rows": int(s["rows"]),
+        }
+        for s in stats
+    }
+    with open(os.path.join(output_dir, "_CHECKSUMS.json"), "w") as fh:
+        fh.write(json.dumps(checksums, indent=2, sort_keys=True) + "\n")

@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbeam_spark.avro.reader import read_avro_schema
-from dbeam_spark.avro.writer import write_avro
+from dbeam_spark.avro.schema import to_json
+from dbeam_spark.avro.writer import write_avro, write_checksums
 from dbeam_spark.sources.avro import read_avro
 
 
@@ -99,22 +100,8 @@ def compact_runs(
     stats = write_avro(df, str(tmp), avro_schema, codec=codec)
     rows = sum(s["rows"] for s in stats)
     nbytes = sum(s["bytes"] for s in stats)
-    (tmp / "_AVRO_SCHEMA.avsc").write_text(json.dumps(avro_schema, indent=2))
-    (tmp / "_CHECKSUMS.json").write_text(
-        json.dumps(
-            {
-                os.path.basename(s["file"]): {
-                    "crc32": int(s["crc32"]),
-                    "bytes": int(s["bytes"]),
-                    "rows": int(s["rows"]),
-                }
-                for s in stats
-            },
-            indent=2,
-            sort_keys=True,
-        )
-        + "\n"
-    )
+    (tmp / "_AVRO_SCHEMA.avsc").write_text(to_json(avro_schema) + "\n")
+    write_checksums(tmp, stats)
     (tmp / "_METRICS.json").write_text(
         json.dumps(
             {

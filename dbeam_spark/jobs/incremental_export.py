@@ -46,7 +46,7 @@ from pyspark.sql import SparkSession
 from dbeam_spark.jobs.jdbc_avro_job import run_export
 from dbeam_spark.options import JdbcExportOptions, parse_args
 from dbeam_spark.passwords import read_password
-from dbeam_spark.query_builder import QueryBuilder
+from dbeam_spark.query_builder import base_query
 from dbeam_spark.sources.jdbc import _base_reader
 
 STATE_FILE = "_WATERMARK"
@@ -100,10 +100,9 @@ def run_incremental(
     )
 
     if opts.table:
-        base = QueryBuilder.from_table(opts.table).build()
+        base = base_query(opts.table)
     else:
-        with open(opts.sqlFile) as fh:
-            base = QueryBuilder.from_sql_query(fh.read()).build()
+        base = base_query(sql=Path(opts.sqlFile).read_text())
     lower = (
         f" AND {watermark_column} > {_literal(state['value'], numeric_watermark)}"
         if state["value"] is not None

@@ -26,11 +26,10 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 from dbeam_spark.avro.schema import merge_input_schema, spark_schema_to_avro, to_json
-from dbeam_spark.avro.writer import write_avro
+from dbeam_spark.avro.writer import write_avro, write_checksums
 from dbeam_spark.errors import ExportTimeoutError, FailedValidationError, exit_code
 from dbeam_spark.metrics import ExportMetrics
 from dbeam_spark.options import JdbcExportOptions, parse_args
-from dbeam_spark.partitions import parse_instant, parse_period, validate_partition
 from dbeam_spark.passwords import read_password
 from dbeam_spark.sources.jdbc import collect_source_type_names, read_jdbc
 
@@ -96,17 +95,6 @@ def run_export(
 ) -> dict:
     """Run the export; returns the metrics dict."""
     opts.validate()
-    validate_partition(
-        parse_instant(opts.partition) if opts.partition else None,
-        parse_period(opts.partitionPeriod),
-        partition_column=opts.partitionColumn,
-        skip_partition_check=opts.skipPartitionCheck,
-        min_partition_period=(
-            parse_instant(opts.minPartitionPeriod)
-            if opts.minPartitionPeriod
-            else None
-        ),
-    )
     password = read_password(
         opts.password, opts.passwordFile, opts.passwordFileKmsEncrypted
     )
@@ -172,21 +160,7 @@ def run_export(
         # partition streams out (zero extra read); validate_export
         # re-derives and compares — bit-rot / truncated-copy
         # detection for the export artifact.
-        (out / "_CHECKSUMS.json").write_text(
-            json.dumps(
-                {
-                    Path(s["file"]).name: {
-                        "crc32": int(s["crc32"]),
-                        "bytes": int(s["bytes"]),
-                        "rows": int(s["rows"]),
-                    }
-                    for s in stats
-                },
-                indent=2,
-                sort_keys=True,
-            )
-            + "\n"
-        )
+        write_checksums(out, stats)
 
     if not opts.dataOnly:
         metrics.save(str(out))

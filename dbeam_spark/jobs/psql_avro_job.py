@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import json
 import sys
-from datetime import timedelta
 
 from pyspark.sql import SparkSession
 
@@ -30,19 +29,13 @@ def create(argv: list[str]) -> JdbcExportOptions:
     return opts
 
 
-def _period(opts: JdbcExportOptions) -> str | timedelta:
-    # ref PsqlReplicationCheck.create uses the export's partition
-    # period (default one day) as the window replication must cover
-    return opts.partitionPeriod or timedelta(days=1)
-
-
 def run(
     spark: SparkSession,
     opts: JdbcExportOptions,
     password: str | None = None,
 ) -> dict:
     """checkReplication → runExport (ref PsqlAvroJob.main:47-49)."""
-    replication.check_replication(spark, opts, _period(opts), password)
+    replication.check_replication(spark, opts, password)
     return run_export(spark, opts)
 
 

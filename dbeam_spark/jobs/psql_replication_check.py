@@ -15,7 +15,7 @@ from pyspark.sql import SparkSession
 
 from dbeam_spark.errors import NotReadyError
 from dbeam_spark.options import JdbcExportOptions
-from dbeam_spark.query_builder import _add_period
+from dbeam_spark.partitions import add_period, partition_window
 
 REPLICATION_QUERY = (
     "SELECT now() AS current_timestamp, "
@@ -33,19 +33,6 @@ def validate_options(opts: JdbcExportOptions) -> None:
         raise ValueError("Partition parameter must be defined")
 
 
-def partition_plus_period(
-    partition: datetime, period: str | timedelta
-) -> datetime:
-    if isinstance(period, timedelta):
-        return partition + period
-    d = _add_period(partition.date(), period)
-    return datetime(
-        d.year, d.month, d.day,
-        partition.hour, partition.minute, partition.second,
-        tzinfo=partition.tzinfo,
-    )
-
-
 def is_replication_delayed(
     partition: datetime,
     last_replication: datetime,
@@ -53,7 +40,7 @@ def is_replication_delayed(
 ) -> bool:
     """True when replication has not yet covered partition+period
     (ref PsqlReplicationCheck.isReplicationDelayed)."""
-    return last_replication < partition_plus_period(partition, period)
+    return last_replication < add_period(partition, period)
 
 
 def query_replication(
@@ -78,12 +65,14 @@ def query_replication(
 def check_replication(
     spark: SparkSession,
     opts: JdbcExportOptions,
-    period: str | timedelta,
     password: str | None = None,
 ) -> None:
-    from dbeam_spark.partitions import parse_instant
-
+    """Raise NotReadyError unless replication covers the export's
+    partition plus its --partitionPeriod (ref
+    PsqlReplicationCheck.create uses the export's period, default one
+    day)."""
     validate_options(opts)
+    partition, period = partition_window(opts)
     last = query_replication(spark, opts, password)
-    if is_replication_delayed(parse_instant(opts.partition), last, period):
+    if is_replication_delayed(partition, last, period):
         raise NotReadyError("PostgreSQL replication is late")

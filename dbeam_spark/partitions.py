@@ -1,10 +1,16 @@
-"""Partition parsing and freshness validation.
+"""Partition instants, periods and the export's time window.
 
-Re-expresses reference options/JdbcExportArgsFactory.java:
+Re-expresses reference options/JdbcExportArgsFactory.java and the
+partition half of args/QueryBuilderArgs.java; all time arithmetic of
+the package lives here:
 - `parse_instant` accepts the same lenient `yyyy[-MM][-dd['T'HH[:mm[:ss]]]]`
   shapes (plus an optional offset), defaulting missing parts;
-- `parse_period` maps --partitionPeriod strings to calendar periods or
-  sub-daily timedeltas;
+- `parse_period` maps --partitionPeriod strings to calendar periods
+  ('P1D', 'P2W', 'P1M', 'P1Y') or sub-daily timedeltas ('PT1H');
+- `add_period` moves an instant by n periods, clamping to the month's
+  last day like java.time's `LocalDate.plusMonths`/`plusYears`;
+- `partition_bounds` is the [start, end) window of the partition
+  WHERE condition;
 - `validate_partition` fails exports aimed at partitions older than
   `min_partition` (default now - 2×period), unless skipped — the
   guard that keeps new data out of old partitions.
@@ -12,11 +18,11 @@ Re-expresses reference options/JdbcExportArgsFactory.java:
 
 from __future__ import annotations
 
+import calendar
 import re
-from datetime import date, datetime, timedelta, timezone
+from datetime import datetime, timedelta, timezone
 
 from dbeam_spark.errors import NotReadyError
-from dbeam_spark.query_builder import _leap
 
 _INSTANT_RE = re.compile(
     r"^(\d{4})(?:-(\d{2}))?(?:-(\d{2}))?"
@@ -56,7 +62,8 @@ def parse_period(value: str | None) -> str | timedelta:
     v = value.strip().upper()
     if "T" in v:
         m = re.fullmatch(r"PT(?:(\d+)H)?(?:(\d+)M)?(?:(\d+)S)?", v)
-        if not m:
+        # a bare 'PT' names no duration (java Duration.parse rejects it)
+        if not m or not any(m.groups()):
             raise ValueError(f"Unsupported partition period: {value}")
         h, mi, s = (int(x or 0) for x in m.groups())
         return timedelta(hours=h, minutes=mi, seconds=s)
@@ -65,29 +72,51 @@ def parse_period(value: str | None) -> str | timedelta:
     return v
 
 
-def _minus_period(dt: datetime, period: str | timedelta, times: int = 1) -> datetime:
+def partition_window(opts) -> tuple[datetime | None, str | timedelta]:
+    """The export's --partition and --partitionPeriod, parsed."""
+    partition = parse_instant(opts.partition) if opts.partition else None
+    return partition, parse_period(opts.partitionPeriod)
+
+
+def add_period(dt: datetime, period: str | timedelta, n: int = 1) -> datetime:
+    """dt moved by n (signed) periods. Months and years keep the day
+    of month, clamped to the target month's last day (2024-02-29 plus
+    P1Y is 2025-02-28), as java.time does."""
     if isinstance(period, timedelta):
-        return dt - period * times
+        return dt + period * n
     m = re.fullmatch(r"P(\d+)([DWMY])", period.upper())
     if not m:
         raise ValueError(f"Unsupported period: {period}")
-    n, unit = int(m.group(1)) * times, m.group(2)
-    d = dt.date()
-    if unit == "D":
-        d = d - timedelta(days=n)
-    elif unit == "W":
-        d = d - timedelta(weeks=n)
-    else:
-        months = n * (12 if unit == "Y" else 1)
-        month0 = d.year * 12 + (d.month - 1) - months
-        year, month = month0 // 12, month0 % 12 + 1
-        last = [31, 29 if _leap(year) else 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31][
-            month - 1
-        ]
-        d = date(year, month, min(d.day, last))
-    return datetime(
-        d.year, d.month, d.day, dt.hour, dt.minute, dt.second, tzinfo=timezone.utc
-    )
+    k, unit = int(m.group(1)) * n, m.group(2)
+    if unit in "DW":
+        return dt + timedelta(days=k * (7 if unit == "W" else 1))
+    month0 = dt.year * 12 + dt.month - 1 + k * (12 if unit == "Y" else 1)
+    year, month = divmod(month0, 12)
+    day = min(dt.day, calendar.monthrange(year, month + 1)[1])
+    return dt.replace(year=year, month=month + 1, day=day)
+
+
+def partition_bounds(
+    partition: datetime, period: str | timedelta
+) -> tuple[str, str]:
+    """[start, end) strings for the partition WHERE condition.
+
+    Calendar periods ('P1D', 'P1M', …) use date strings and calendar
+    arithmetic; sub-daily timedeltas use full ISO instants — matching
+    args/QueryBuilderArgs.java configurePartitionCondition.
+    """
+    end = add_period(partition, period)
+    if isinstance(period, str):
+        return partition.date().isoformat(), end.date().isoformat()
+    return _instant_str(partition), _instant_str(end)
+
+
+def _instant_str(dt: datetime) -> str:
+    """Java Instant.toString() shape: UTC wallclock + 'Z'."""
+    s = dt.isoformat()
+    if s.endswith("+00:00"):
+        s = s[: -len("+00:00")]
+    return s if s.endswith("Z") else s + "Z"
 
 
 def min_partition_datetime(
@@ -99,7 +128,7 @@ def min_partition_datetime(
     JdbcExportArgsFactory.createQueryArgs)."""
     if min_partition_period is not None:
         return min_partition_period
-    return _minus_period(now, period, times=2)
+    return add_period(now, period, -2)
 
 
 def validate_partition(

@@ -15,20 +15,27 @@ args/JdbcExportArgs.java Spark-first:
 - --fetchSize → option("fetchsize"); --preCommand →
   option("sessionInitStatement") (runs per connection, the Spark
   equivalent of dbeam's pre-command-on-the-export-connection).
-- partition/limit conditions are baked into the pushed-down dbtable
-  subquery via query_builder, so the database — not Spark — applies
-  them (same WHERE strings dbeam generates).
+- the partition condition is baked into the pushed-down dbtable
+  subquery (`export_query`), so the database — not Spark — applies it
+  (same WHERE strings dbeam generates); --limit is applied once,
+  engine-side, over the whole read.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from dbeam_spark.options import JdbcExportOptions
-from dbeam_spark.partitions import parse_instant, parse_period
-from dbeam_spark.query_builder import QueryBuilder, QueryBuilderArgs
+from dbeam_spark.partitions import (
+    parse_instant,
+    partition_bounds,
+    partition_window,
+    validate_partition,
+)
+from dbeam_spark.query_builder import base_query, min_max_query, range_queries
 
 # ref args/JdbcConnectionUtil.java driver mapping
 _DRIVERS = {
@@ -45,27 +52,6 @@ def driver_for_url(url: str) -> str | None:
         if url.startswith(f"jdbc:{key}:"):
             return cls
     return None
-
-
-def query_builder_args(opts: JdbcExportOptions, sql_text: str | None = None) -> QueryBuilderArgs:
-    """Build QueryBuilderArgs from export options (ref
-    JdbcExportArgsFactory.createQueryArgs)."""
-    if opts.table:
-        args = QueryBuilderArgs.create(opts.table)
-    else:
-        if sql_text is None:
-            with open(opts.sqlFile) as fh:
-                sql_text = fh.read()
-        args = QueryBuilderArgs.create_from_query(sql_text)
-    return replace(
-        args,
-        limit=opts.limit,
-        partition_column=opts.partitionColumn,
-        partition=parse_instant(opts.partition) if opts.partition else None,
-        partition_period=parse_period(opts.partitionPeriod),
-        split_column=opts.splitColumn,
-        query_parallelism=opts.queryParallelism,
-    )
 
 
 @dataclass
@@ -168,59 +154,77 @@ def collect_source_type_names(
         conn.close()
 
 
+def export_query(opts: JdbcExportOptions) -> str:
+    """The query an export pushes down: dbeam's base query narrowed to
+    the partition window. Like the reference's createQueryArgs, it
+    first fails exports aimed at a too-old partition."""
+    partition, period = partition_window(opts)
+    validate_partition(
+        partition,
+        period,
+        partition_column=opts.partitionColumn,
+        skip_partition_check=opts.skipPartitionCheck,
+        min_partition_period=(
+            parse_instant(opts.minPartitionPeriod)
+            if opts.minPartitionPeriod
+            else None
+        ),
+    )
+    if opts.table:
+        query = base_query(opts.table)
+    else:
+        query = base_query(sql=Path(opts.sqlFile).read_text())
+    if opts.partitionColumn and partition is not None:
+        start, end = partition_bounds(partition, period)
+        col = opts.partitionColumn
+        query += f" AND {col} >= '{start}' AND {col} < '{end}'"
+    return query
+
+
 def read_jdbc(
     spark: SparkSession,
     opts: JdbcExportOptions,
     password: str | None = None,
-    sql_text: str | None = None,
 ) -> JdbcSourcePlan:
     """Plan the export read: a (possibly range-partitioned) DataFrame
     plus the dbeam-parity SQL strings for metadata output."""
-    qargs = query_builder_args(opts, sql_text)
-    partitioned_qb = qargs._partitioned()
-
-    bounds: tuple[int, int] | None = None
-    if qargs.query_parallelism and qargs.split_column:
-        bounds = find_input_bounds(
-            spark, opts, password, partitioned_qb.min_max_query(qargs.split_column)
+    query = export_query(opts)
+    reader = _base_reader(spark, opts, password).option(
+        "dbtable", f"({query}) export_query"
+    )
+    if opts.queryParallelism and opts.splitColumn:
+        low, high = find_input_bounds(
+            spark, opts, password, min_max_query(query, opts.splitColumn)
         )
-        if qargs.limit is not None:
+        reader = (
+            reader.option("partitionColumn", opts.splitColumn)
+            .option("lowerBound", str(low))
+            # Spark's upperBound is exclusive; +1 keeps the max row
+            .option("upperBound", str(high + 1))
+            .option("numPartitions", str(opts.queryParallelism))
+        )
+        queries = range_queries(
+            query, opts.splitColumn, low, high, opts.queryParallelism
+        )
+        if opts.limit is not None:
             # dbeam bakes `LIMIT limit/k` into each range query (and so
             # exports k*floor(limit/k) rows); Spark executes un-limited
             # ranged reads plus ONE engine-side global limit. Record the
             # plan we actually run so _queries/ describes the executed
             # read, not dbeam's.
-            queries = replace(qargs, limit=None).build_queries(
-                find_bounds=lambda _sql: bounds
-            )
             queries.append(
-                f"-- LIMIT {qargs.limit} applied engine-side to the "
+                f"-- LIMIT {opts.limit} applied engine-side to the "
                 "union of the range queries above"
             )
-        else:
-            queries = qargs.build_queries(find_bounds=lambda _sql: bounds)
     else:
-        queries = qargs.build_queries()
-
-    reader = _base_reader(spark, opts, password).option(
-        "dbtable", f"({partitioned_qb.build()}) export_query"
-    )
-    if bounds is not None:
-        reader = (
-            reader.option("partitionColumn", qargs.split_column)
-            .option("lowerBound", str(bounds[0]))
-            # Spark's upperBound is exclusive; +1 keeps the max row
-            .option("upperBound", str(bounds[1] + 1))
-            .option("numPartitions", str(qargs.query_parallelism))
-        )
+        limit = f" LIMIT {opts.limit}" if opts.limit is not None else ""
+        queries = [query + limit]
     df = reader.load()
-    if qargs.limit is not None:
+    if opts.limit is not None:
         # LIMIT syntax is dialect-specific (Derby lacks it); dbeam bakes
         # it into SQL, we apply it engine-side for portability.
-        df = df.limit(qargs.limit)
-    return JdbcSourcePlan(
-        df=df, queries=queries, base_query=partitioned_qb.build()
-    )
+        df = df.limit(opts.limit)
+    return JdbcSourcePlan(df=df, queries=queries, base_query=query)
 
 
 def list_tables(

@@ -45,4 +45,47 @@ def derby_db(spark):
     return f"jdbc:derby:{dbdir}"
 
 
+class _ReaderRecorder:
+    """Stands in for the Spark JDBC reader and the DataFrame it loads."""
+
+    def __init__(self, record: dict) -> None:
+        self.record = record
+
+    def option(self, key, value):
+        self.record["options"][key] = value
+        return self
+
+    def load(self):
+        return self
+
+    def limit(self, n):
+        self.record["limit"] = n
+        return self
+
+
+@pytest.fixture
+def plan_strings(monkeypatch):
+    """Plan an export with `read_jdbc` but no database: the JDBC reader
+    and the bounds probe are replaced by recorders, the probe answers
+    `bounds`. Returns the plan's strings: reader options (`dbtable`,
+    range options), bounds probe, engine-side limit, `_queries/` list
+    and base query."""
+    from dbeam_spark.sources import jdbc
+
+    def plan(opts, bounds=None) -> dict:
+        record: dict = {"options": {}, "limit": None, "min_max": None}
+
+        def probe(spark, opts, password, min_max_sql):
+            record["min_max"] = min_max_sql
+            return bounds
+
+        monkeypatch.setattr(jdbc, "_base_reader", lambda *a: _ReaderRecorder(record))
+        monkeypatch.setattr(jdbc, "find_input_bounds", probe)
+        planned = jdbc.read_jdbc(None, opts)
+        record.update(queries=planned.queries, base_query=planned.base_query)
+        return record
+
+    return plan
+
+
 SF_DIR = "/root/testdata/sf0.001"

@@ -224,6 +224,12 @@ def test_compact_runs_append_only(spark, incr_db, tmp_path):
     assert len(parts) == 2
     ids = sorted(r[0] for r in _rows_in(snap))
     assert ids == list(range(350))
+    # the snapshot's metadata is written like an export's
+    schema = "_AVRO_SCHEMA.avsc"
+    assert (snap / schema).read_bytes() == (out / "run_00000" / schema).read_bytes()
+    cks = json.loads((snap / "_CHECKSUMS.json").read_text())
+    assert sorted(cks) == [Path(p).name for p in parts]
+    assert sum(r["rows"] for r in cks.values()) == 350
     # snapshot is derived: runs untouched, recompaction idempotent
     assert len(list(out.glob("run_*"))) == 2
     res2 = compact_runs(spark, str(out), target_files=2)

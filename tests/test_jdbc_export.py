@@ -655,14 +655,14 @@ def test_export_checksums(spark, derby_db, tmp_path):
 
 
 _RETRY_CHILD = r'''
-import glob, json, os, sys
+import glob, json, os, shutil, sys
 
 from dbeam_spark.avro.writer import file_crc32
 from dbeam_spark.jobs import jdbc_avro_job
 from dbeam_spark.options import JdbcExportOptions
 from dbeam_spark.session import get_spark
 
-work = sys.argv[1]
+work, resume = sys.argv[1], sys.argv[2] == "resume"
 spark = get_spark(
     "retry-determinism", master="local[2,2]", shuffle_partitions=2,
     extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "100"},
@@ -675,10 +675,11 @@ spark.range(0, 1000).selectExpr("id AS ID", "CONCAT('v', id) AS V").write.format
 ).save()
 
 
-def export(out):
+def export(out, resume=False):
     jdbc_avro_job.run_export(spark, JdbcExportOptions(
         connectionUrl=url, table="T", output=out, username="dbeam",
         skipPartitionCheck=True, splitColumn="ID", queryParallelism=2,
+        resume=resume,
     ))
     with open(os.path.join(out, "_CHECKSUMS.json")) as fh:
         checksums = json.load(fh)
@@ -712,16 +713,24 @@ def faulty_read_jdbc(*args, **kwargs):
 
 
 jdbc_avro_job.read_jdbc = faulty_read_jdbc
-retried = export(os.path.join(work, "retried"))
+retried_dir = os.path.join(work, "retried")
+if resume:
+    # a crashed earlier run landed partition 0 only: the retried
+    # attempts of the resumed run skip it and redo partition 1
+    os.makedirs(retried_dir)
+    shutil.copy(os.path.join(work, "clean", "part-00000.avro"), retried_dir)
+retried = export(retried_dir, resume=resume)
 faults = len(glob.glob(f"{work}/fault-*"))
 print(json.dumps({"clean": clean, "retried": retried, "faults": faults}))
 '''
 
 
-def test_retried_partitions_write_identical_files(tmp_path):
+@pytest.mark.parametrize("mode", ["fresh", "resume"])
+def test_retried_partitions_write_identical_files(tmp_path, mode):
     """A task that fails after its writer got one batch is retried
     (local[2,2]); each attempt writes its own tmp file, the failed one
-    removes it, and the export is byte-identical to a clean run."""
+    removes it, and the export is byte-identical to a clean run. In
+    --resume mode one partition has already landed and is skipped."""
     import os
     import subprocess
     import sys
@@ -732,7 +741,7 @@ def test_retried_partitions_write_identical_files(tmp_path):
         p for p in (repo, env.get("PYTHONPATH")) if p
     )
     proc = subprocess.run(
-        [sys.executable, "-c", _RETRY_CHILD, str(tmp_path)],
+        [sys.executable, "-c", _RETRY_CHILD, str(tmp_path), mode],
         cwd=repo, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]

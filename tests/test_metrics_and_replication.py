@@ -44,6 +44,10 @@ def test_replication_delay_decision():
     assert not is_replication_delayed(
         partition, utc(2025, 1, 1, 1), timedelta(hours=1)
     )
+    # leap day plus one year is 2025-02-28, like LocalDate.plusYears
+    leap = utc(2024, 2, 29)
+    assert is_replication_delayed(leap, utc(2025, 2, 27, 23), "P1Y")
+    assert not is_replication_delayed(leap, utc(2025, 2, 28), "P1Y")
 
 
 def test_replication_validate_options():
@@ -124,3 +128,14 @@ def test_psql_avro_job_delayed_replication_exits_20(monkeypatch, tmp_path):
     )
     assert psql_avro_job.main(argv) == 0
     assert len(calls) == 1
+
+    # the same gate with a sub-daily period: the check gets it parsed
+    hourly = argv + ["--partitionPeriod=PT1H"]
+    for replayed, code in ((utc(2025, 2, 28, 0, 30), 20), (utc(2025, 2, 28, 1), 0)):
+        monkeypatch.setattr(
+            psql_avro_job.replication,
+            "query_replication",
+            lambda spark, opts, password=None, t=replayed: t,
+        )
+        assert psql_avro_job.main(hourly) == code
+    assert len(calls) == 2

@@ -48,6 +48,10 @@ def test_parse_period():
     assert parse_period("PT1H") == timedelta(hours=1)
     with pytest.raises(ValueError):
         parse_period("1 day")
+    # a bare 'PT' is no duration (java Duration.parse rejects it) and
+    # would make a zero-width partition window
+    with pytest.raises(ValueError):
+        parse_period("PT")
 
 
 def test_min_partition_default_two_periods_back():
@@ -55,6 +59,9 @@ def test_min_partition_default_two_periods_back():
     assert min_partition_datetime(now, "P1D") == utc(2025, 3, 8, 12)
     assert min_partition_datetime(now, "P1M") == utc(2025, 1, 10, 12)
     assert min_partition_datetime(now, timedelta(hours=1)) == utc(2025, 3, 10, 10)
+    # calendar periods clamp to the month's last day
+    assert min_partition_datetime(utc(2024, 2, 29, 12), "P1Y") == utc(2022, 2, 28, 12)
+    assert min_partition_datetime(utc(2025, 4, 30), "P1M") == utc(2025, 2, 28)
 
 
 def test_validate_partition_too_old():

@@ -4,123 +4,113 @@ QueryBuilderTest.java / ParallelQueryBuilderTest.java."""
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta, timezone
-
 import pytest
 
+from dbeam_spark.options import JdbcExportOptions
 from dbeam_spark.query_builder import (
-    QueryBuilder,
-    QueryBuilderArgs,
+    base_query,
     generate_ranges,
-    queries_for_bounds,
+    min_max_query,
+    range_queries,
 )
 
 
-def args(table="some_table", **kw):
-    from dataclasses import replace
+@pytest.fixture
+def queries(plan_strings, tmp_path):
+    """`_queries/` strings of an export of `some_table` (or of the
+    user query `sql`), planned without a database."""
 
-    return replace(QueryBuilderArgs.create(table), **kw)
+    def plan(sql=None, **kw) -> list[str]:
+        if sql is not None:
+            (tmp_path / "q.sql").write_text(sql)
+            kw["sqlFile"] = str(tmp_path / "q.sql")
+        else:
+            kw["table"] = "some_table"
+        opts = JdbcExportOptions(
+            connectionUrl="jdbc:derby:memory:qb", output=str(tmp_path), **kw
+        )
+        return plan_strings(opts)["queries"]
+
+    return plan
 
 
-def test_table_query():
-    assert QueryBuilderArgs.create("some_table").build_queries() == [
-        "SELECT * FROM some_table WHERE 1=1"
-    ]
+def test_table_query(queries):
+    assert base_query("some_table") == "SELECT * FROM some_table WHERE 1=1"
+    assert queries() == ["SELECT * FROM some_table WHERE 1=1"]
 
 
-def test_user_query():
-    assert QueryBuilderArgs.create_from_query(
-        "SELECT * FROM some_table"
-    ).build_queries() == [
+def test_user_query(queries):
+    assert queries(sql="SELECT * FROM some_table") == [
         "SELECT * FROM (SELECT * FROM some_table) as user_sql_query WHERE 1=1"
     ]
 
 
 def test_user_query_strips_trailing_semicolon():
-    q = QueryBuilderArgs.create_from_query("SELECT * FROM some_table;")
-    assert q.build_queries() == [
+    assert base_query(sql="SELECT * FROM some_table;") == (
         "SELECT * FROM (SELECT * FROM some_table) as user_sql_query WHERE 1=1"
-    ]
+    )
 
 
 def test_invalid_table_name():
     with pytest.raises(ValueError):
-        QueryBuilderArgs.create("some-table;")
+        base_query("some-table;")
+    with pytest.raises(ValueError):
+        base_query(None)
 
 
-def test_limit():
-    assert args(limit=7).build_queries() == [
-        "SELECT * FROM some_table WHERE 1=1 LIMIT 7"
-    ]
+def test_limit(queries):
+    assert queries(limit=7) == ["SELECT * FROM some_table WHERE 1=1 LIMIT 7"]
 
 
-def test_partition_daily():
-    a = args(
-        partition_column="col",
-        partition=datetime(2027, 7, 31, tzinfo=timezone.utc),
-    )
-    assert a.build_queries() == [
+def test_partition_daily(queries):
+    assert queries(partitionColumn="col", partition="2027-07-31") == [
         "SELECT * FROM some_table WHERE 1=1 "
         "AND col >= '2027-07-31' AND col < '2027-08-01'"
     ]
 
 
-def test_partition_daily_with_limit():
-    a = args(
-        limit=5,
-        partition_column="col",
-        partition=datetime(2027, 7, 31, tzinfo=timezone.utc),
-    )
-    assert a.build_queries() == [
+def test_partition_daily_with_limit(queries):
+    assert queries(limit=5, partitionColumn="col", partition="2027-07-31") == [
         "SELECT * FROM some_table WHERE 1=1 "
         "AND col >= '2027-07-31' AND col < '2027-08-01' LIMIT 5"
     ]
 
 
-def test_partition_monthly():
-    a = args(
-        partition_column="col",
-        partition=datetime(2027, 7, 31, tzinfo=timezone.utc),
-        partition_period="P1M",
-    )
-    assert a.build_queries() == [
+def test_partition_monthly(queries):
+    assert queries(
+        partitionColumn="col", partition="2027-07-31", partitionPeriod="P1M"
+    ) == [
         "SELECT * FROM some_table WHERE 1=1 "
         "AND col >= '2027-07-31' AND col < '2027-08-31'"
     ]
+    # leap day plus one year clamps to Feb 28, like LocalDate.plusYears
+    assert queries(
+        partitionColumn="col", partition="2024-02-29", partitionPeriod="P1Y"
+    ) == [
+        "SELECT * FROM some_table WHERE 1=1 "
+        "AND col >= '2024-02-29' AND col < '2025-02-28'"
+    ]
 
 
-def test_partition_sub_daily():
-    a = args(
-        partition_column="col",
-        partition=datetime(2027, 7, 31, tzinfo=timezone.utc),
-        partition_period=timedelta(hours=1),
-    )
-    assert a.build_queries() == [
+def test_partition_sub_daily(queries):
+    assert queries(
+        partitionColumn="col", partition="2027-07-31", partitionPeriod="PT1H"
+    ) == [
         "SELECT * FROM some_table WHERE 1=1 "
         "AND col >= '2027-07-31T00:00:00Z' AND col < '2027-07-31T01:00:00Z'"
     ]
 
 
-def test_user_query_with_partition_and_limit():
-    from dataclasses import replace
-
-    a = replace(
-        QueryBuilderArgs.create_from_query("SELECT * FROM COFFEES WHERE SIZE > 10"),
+def test_user_query_with_partition_and_limit(queries):
+    assert queries(
+        sql="SELECT * FROM COFFEES WHERE SIZE > 10",
         limit=7,
-        partition_column="col",
-        partition=datetime(2027, 7, 31, tzinfo=timezone.utc),
-    )
-    assert a.build_queries() == [
+        partitionColumn="col",
+        partition="2027-07-31",
+    ) == [
         "SELECT * FROM (SELECT * FROM COFFEES WHERE SIZE > 10) as user_sql_query WHERE 1=1 "
         "AND col >= '2027-07-31' AND col < '2027-08-01' LIMIT 7"
     ]
-
-
-def test_limit_one_for_schema():
-    assert (
-        QueryBuilderArgs.create("t").sql_query_with_limit_one()
-        == "SELECT * FROM t WHERE 1=1 LIMIT 1"
-    )
 
 
 def test_generate_ranges_even():
@@ -148,8 +138,7 @@ def test_generate_ranges_uneven():
 
 
 def test_queries_for_bounds():
-    qb = QueryBuilder.from_table("coffees")
-    qs = queries_for_bounds(1, 41, 5, "id", qb)
+    qs = range_queries(base_query("coffees"), "id", 1, 41, 5)
     assert qs[0] == (
         "SELECT * FROM coffees WHERE 1=1 AND id >= 1 AND id < 9"
     )
@@ -157,14 +146,7 @@ def test_queries_for_bounds():
     assert len(qs) == 5
 
 
-def test_limit_split_by_parallelism():
-    a = args(limit=10, split_column="id", query_parallelism=2)
-    qs = a.build_queries(find_bounds=lambda sql: (0, 100))
-    assert all("LIMIT 5" in q for q in qs)
-
-
 def test_min_max_query():
-    qb = QueryBuilder.from_table("coffees")
-    assert qb.min_max_query("id") == (
+    assert min_max_query(base_query("coffees"), "id") == (
         "SELECT MIN(id) as min_s, MAX(id) as max_s FROM coffees WHERE 1=1"
     )
