@@ -1,18 +1,24 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
-SimHash, embedding-cosine.
+"""Deduplication operators: exact, n-gram Jaccard and containment,
+MinHash+LSH, SimHash, embedding-cosine.
 
 Scale design (100 TB of documents):
 - exact: one hash-groupBy on md5(text) — map-side partials, no data
   explosion.
-- n-gram Jaccard: shingle-explode → shingle-join. Exact but the join
-  fan-out is O(docs × shingles); the production path is MinHash-LSH.
-- MinHash+LSH: 128 permutations aggregated in ONE shuffle
-  (explode shingles → groupBy doc with 128 mins), then band-bucket
-  self-join on (band, signature) — candidate volume is O(docs × bands)
-  instead of all-pairs — then exact-Jaccard verification restricted to
-  candidates. Precision 1.0 by construction; recall governed by
-  (bands, rows) — 32×4 gives P(miss | J≥0.4) < 1e-3 per pair and
-  effectively 0 at J≥0.6.
+- n-gram Jaccard / containment: EXACT, via an AllPairs/PPJoin prefix
+  filter over xxhash64-hashed shingles (candidates come from joining
+  each doc's rarest shingles only), then one verify kernel for both
+  scores (`_shingle_intersections`): hashed-shingle arrays for
+  candidate docs only, intersected per pair in numpy.
+- MinHash+LSH: signatures are MAP-ONLY — tokenize → word 3-grams →
+  crc32 → 128 permuted mins inside one Arrow-batched pass over the
+  documents (`_minhash_matrix`), and each doc's 32 band ids are mixed
+  numpy-side (`_band_sigs`): no shingle explode, no shuffle. The only
+  exchange before candidates is ONE (band, sig) groupBy over
+  |docs|×32 rows with in-place, size-capped pair expansion —
+  candidate volume is O(docs × bands) instead of all-pairs — then
+  exact-Jaccard verification restricted to candidates. Precision 1.0
+  by construction; recall governed by (bands, rows) — 32×4 gives
+  P(miss | J≥0.4) < 1e-3 per pair and effectively 0 at J≥0.6.
 - SimHash: 64-bit fingerprint via bitwise vote aggregation (pure
   Catalyst, no UDF), pigeonhole banding on 16-bit chunks for
   hamming ≤ 3 candidates.
@@ -24,19 +30,120 @@ Scale design (100 TB of documents):
 from __future__ import annotations
 
 import random
+import re
+import sys
+import zlib
+from fractions import Fraction
 
-from pyspark.sql import Column, DataFrame, Window
+import numpy as np
+from pyspark import cloudpickle
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from dbeam_spark.operators.util import rebalance_for_arrow, round_half_up
+
+# The batch kernels below run inside mapInPandas closures on Python
+# workers. Ship them BY VALUE, like the closures themselves, so a
+# worker never imports this package: a driver that adds the checkout
+# to its own sys.path does not pass that path on to its workers.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # Mersenne prime 2^31-1: (a*x+b) stays < 2^62, no int64 overflow.
 _MERSENNE = 2147483647
 _NUM_PERM = 128
 _BANDS = 32
 _ROWS_PER_BAND = _NUM_PERM // _BANDS
+# band-id polynomial base (see _band_sigs)
+_MIX = np.int64(1000003)
 
 _rng = random.Random(42)
-_PERM_A = [_rng.randrange(1, _MERSENNE) for _ in range(_NUM_PERM)]
-_PERM_B = [_rng.randrange(0, _MERSENNE) for _ in range(_NUM_PERM)]
+_PERM_A = np.array(
+    [_rng.randrange(1, _MERSENNE) for _ in range(_NUM_PERM)], dtype=np.int64
+)
+_PERM_B = np.array(
+    [_rng.randrange(0, _MERSENNE) for _ in range(_NUM_PERM)], dtype=np.int64
+)
+_WS = re.compile(r"\s+")
+
+
+def _word_ngrams(text: str, n: int) -> set[str]:
+    """The DISTINCT word n-grams of one text (lowercased, split on
+    whitespace runs, joined by one space) — the shingle set every
+    Python-side path in this module hashes or compares. Empty when the
+    text has fewer than n tokens."""
+    toks = _WS.split(text.lower())
+    return {" ".join(toks[i: i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _minhash_matrix(ids, texts, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """One batch of (id, text) rows → (sids, M): the int64 ids of the
+    docs with at least n tokens (shorter docs get no signature) and
+    their len(sids)×128 int64 MinHash matrix,
+    M[d, k] = min over d's distinct n-grams g of
+    (_PERM_A[k]·(crc32(g) & 0x7FFFFFFF) + _PERM_B[k]) mod (2³¹−1).
+
+    A signature depends only on its own doc, so computing it where the
+    doc row already lives makes the signature stage map-only (no
+    explode, no exchange; signature volume = doc count). Any fixed
+    31-bit gram hash works — candidates are exact-verified downstream,
+    and the planted-duplicate recall of the 32×4 banding is
+    hash-independent."""
+    sids, mins = [], []
+    for sid, txt in zip(ids, texts):
+        grams = _word_ngrams(txt, n)
+        if not grams:
+            continue
+        x = np.fromiter(
+            (zlib.crc32(g.encode()) & 0x7FFFFFFF for g in grams),
+            dtype=np.int64,
+            count=len(grams),
+        )
+        # (|grams| × 128) permuted hashes; a*x < 2^62 so int64 is exact
+        mins.append(((x[:, None] * _PERM_A + _PERM_B) % _MERSENNE).min(axis=0))
+        sids.append(sid)
+    if not sids:
+        return np.empty(0, np.int64), np.empty((0, _NUM_PERM), np.int64)
+    return np.array(sids, dtype=np.int64), np.vstack(mins)
+
+
+def _band_sigs(M: np.ndarray) -> np.ndarray:
+    """d×128 MinHash matrix → d×32 band ids: each band's 4 rows folded
+    as ((m0·MIX + m1)·MIX + m2)·MIX + m3 in wrapping int64. The id is
+    an arbitrary deterministic hash — a grouping key only."""
+    Mb = M.reshape(len(M), _BANDS, _ROWS_PER_BAND)
+    with np.errstate(over="ignore"):
+        sig = Mb[:, :, 0]
+        for j in range(1, _ROWS_PER_BAND):
+            sig = sig * _MIX + Mb[:, :, j]
+    return sig
+
+
+def _threshold_fraction(threshold: float) -> tuple[int, int]:
+    """(num, den) with num/den ≤ threshold and den ≤ 10_000, for the
+    INTEGER-exact ⌈τ·|d|⌉ of the prefix filters.
+
+    Float arithmetic is not enough: ceil(0.8*5) = ceil(4.0000000000000002)
+    = 5 would silently shorten prefixes and lose pairs, so τ is taken
+    as the exact decimal fraction of its repr. The denominator is
+    bounded (exact for any realistic threshold like 0.8 or 0.725): an
+    unbounded repr such as 1/3 → 6004799503160661/18014398509481984
+    would make the generated `sz * num` expression overflow int64 under
+    ANSI mode for docs with ≳2,700 shingles. The bounded fraction is
+    never rounded UP: a larger τ' shortens prefixes / tightens bounds
+    and could drop a true pair, while stepping down ≤1e-4 only admits a
+    few extra candidates, which the exact verify stage then rejects."""
+    exact = Fraction(str(threshold))
+    frac = exact.limit_denominator(10_000)
+    if frac > exact:
+        frac = Fraction(frac.numerator - 1, frac.denominator)
+    return frac.numerator, frac.denominator
+
+
+def _x1e4_cutoff(threshold: float) -> int:
+    """The cutoff for a score quantized as ⌊score·10⁴⌋. Rounded, not
+    truncated: 0.57 * 10000 is 5699.999… in floating point, and int()
+    of it would admit a score of 5699 (0.5699…) at threshold 0.57."""
+    return round(threshold * 10_000)
 
 
 def shingle_table(
@@ -98,38 +205,6 @@ def _jaccard_from_inter(
     )
 
 
-def _verified_jaccard(
-    cand: DataFrame,
-    sh: DataFrame,
-    sizes: DataFrame,
-    threshold: float,
-    broadcast_candidates: bool = True,
-) -> DataFrame:
-    """Exact Jaccard for candidate (id_a, id_b) pairs via shingle join.
-
-    The candidate set is normally tiny relative to the shingle table
-    (LSH keeps only near-dup pairs), so it broadcasts by default — the
-    shingle side is filtered map-side with no shuffle of the big
-    relation. For corpora where candidates themselves are huge
-    (billions of pairs), pass broadcast_candidates=False and let AQE
-    pick the join strategy from runtime sizes."""
-    cand_b = F.broadcast(cand) if broadcast_candidates else cand
-    sh_a = cand_b.join(sh.withColumnRenamed("sid", "id_a"), "id_a")
-    sh_b = sh.select(
-        F.col("sid").alias("id_b2"), F.col("shingle").alias("shingle_b")
-    )
-    inter = (
-        sh_a.join(
-            sh_b,
-            (F.col("shingle") == F.col("shingle_b"))
-            & (F.col("id_b") == F.col("id_b2")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return _jaccard_from_inter(inter, sizes, threshold)
-
-
 # Above this many candidate pairs the verify stage stops broadcasting
 # the pair frame / its id set and lets AQE plan shuffle joins from
 # runtime sizes. ~1M (id_a, id_b) longs is ~16MB serialized — well
@@ -138,57 +213,46 @@ def _verified_jaccard(
 _BROADCAST_CAND_MAX = 1_000_000
 
 
-def _verified_jaccard_arrays(
+def _shingle_intersections(
     cand: DataFrame,
     sh: DataFrame,
-    threshold: float,
     broadcast_candidates: bool | None = None,
 ) -> DataFrame:
-    """Exact Jaccard for candidate pairs via per-doc shingle ARRAYS +
-    an Arrow set-intersection kernel — same semantics as
-    `_verified_jaccard` (distinct shingles, |∩|/|∪|, raw-double
-    threshold then 4-dp round), different physical shape.
+    """(id_a, id_b, i, sa, sb) for candidate (id_a, id_b) pairs over a
+    per-doc DISTINCT (sid, shingle) table: i = |A∩B|, sa = |A|,
+    sb = |B|. The one exact-verify kernel behind the Jaccard and the
+    containment pairs; callers score it in Spark, so rounding and
+    integer division match the SQL oracles.
 
-    Why: the exploded candidate×shingle join materializes
-    Σ_pairs |A| rows and sort-merges them against the full shingle
-    table — at the 30× probe that's a ~20M-row sort that spills
-    (68s, 4.3× for the last 3× step). Here each doc's shingle set is
-    collected ONCE (one combinable groupBy — the same shuffle the
-    signature stage already pays), candidate pairs pull both arrays
-    through two equi-joins, and the intersection is a C-level set op
-    per pair. Data through the joins is O(pairs × doc_size), never
-    candidates × corpus.
-
-    Exactness: Python's len(a & b) / (|a|+|b|-|∩|) is the same
-    small-int rational as the JVM division, bit-for-bit; rounding
-    stays in Spark so oracle ROUND semantics match.
+    Shape: each candidate doc's shingle set is collected ONCE as an
+    array (one combinable groupBy), candidate pairs pull both arrays
+    through two equi-joins, and the intersection is a C-level
+    sorted-array op per pair — data through the joins is
+    O(pairs × doc_size), never candidates × corpus. The exploded
+    candidate×shingle join this replaced materialized Σ_pairs |A| rows
+    and sort-merged them against the full shingle table (68 s and a
+    spill at the 30× probe).
 
     The shingle table is SEMI-JOIN filtered to docs that appear in a
     candidate pair BEFORE the array groupBy — near-dup candidates
     touch a small fraction of the corpus, and collecting arrays for
-    every doc made the first cut of this function SLOWER than the
-    exploded join it replaced (103s vs 68s at the 30x probe: a 30M-row
-    collect_list shuffle for 15k candidate docs).
+    every doc was SLOWER than the exploded join (103 s vs 68 s at the
+    30× probe: a 30M-row collect_list shuffle for 15k candidate docs).
 
     broadcast_candidates=None (the default) SIZE-GATES the broadcast:
     the candidate frame is checkpointed once (it feeds both the id
-    semi-join and the pair join — uncheckpointed, the upstream prefix
-    self-join evaluated twice) and counted; past _BROADCAST_CAND_MAX
-    pairs the hints are dropped and AQE plans shuffle joins. The
-    prefix filter bounds candidates on realistic corpora, but the set
-    is data-dependent — boilerplate-heavy corpora at 30x+ can push it
-    past driver broadcast limits (same size-gate precedent as
-    dedup_embedding's LSH fallback).
+    semi-join and the pair join — uncheckpointed, the upstream
+    candidate generation evaluates twice) and counted; past
+    _BROADCAST_CAND_MAX pairs the hints are dropped and AQE plans
+    shuffle joins. Candidate volume is data-dependent — boilerplate-
+    heavy corpora at 30×+ can push it past driver broadcast limits.
 
-    Shingles travel as xxhash64 INT64s, never strings (r9): the pair
-    join used to ship two ~50-150 STRING arrays per pair — at the
-    boilerplate-flood 30x probe the verify stage moved multi-GB of
-    strings for millions of verify-and-reject candidates. Set
-    cardinalities are preserved modulo xxhash64 collisions within
-    one doc's shingle set (≤ |d|²/2⁶⁵ ≈ 1e-15 for the largest docs —
-    far below every ulp guard in the repo), so |∩|/|∪| and the 4-dp
-    rounded value are unchanged, and the intersection kernel drops
-    from Python string sets to C-level sorted-array intersection."""
+    Shingles travel as xxhash64 INT64s, never strings (a string table
+    is hashed here): at the boilerplate-flood 30× probe, two ~50–150
+    STRING arrays per pair moved multi-GB through the pair join. Set
+    cardinalities are preserved modulo xxhash64 collisions within one
+    doc's shingle set (≤ |d|²/2⁶⁵ ≈ 1e-15 for the largest docs — far
+    below every ulp guard in the repo)."""
     if broadcast_candidates is None:
         cand = cand.localCheckpoint(eager=True)
         broadcast_candidates = cand.count() <= _BROADCAST_CAND_MAX
@@ -209,32 +273,49 @@ def _verified_jaccard_arrays(
     paired = a.join(cand_b, "id_a").join(b, "id_b")
 
     def part(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if not len(pdf):
                 continue
-            jraw = []
+            inter, sa, sb = [], [], []
             for ha, hb in zip(pdf["hs_a"], pdf["hs_b"]):
                 # arrays are per-doc DISTINCT by construction (the
                 # shingle table is distinct per (sid, shingle))
                 a_ = np.asarray(ha, dtype=np.int64)
                 b_ = np.asarray(hb, dtype=np.int64)
-                ninter = np.intersect1d(a_, b_, assume_unique=True).size
-                jraw.append(ninter / (a_.size + b_.size - ninter))
+                inter.append(np.intersect1d(a_, b_, assume_unique=True).size)
+                sa.append(a_.size)
+                sb.append(b_.size)
             yield pd.DataFrame(
                 {
                     "id_a": pdf["id_a"],
                     "id_b": pdf["id_b"],
-                    "jraw": jraw,
+                    "i": inter,
+                    "sa": sa,
+                    "sb": sb,
                 }
             )
 
-    scored = paired.mapInPandas(part, "id_a long, id_b long, jraw double")
-    return (
-        scored.filter(F.col("jraw") >= threshold)
-        .select("id_a", "id_b", F.round("jraw", 4).alias("jaccard"))
+    return paired.mapInPandas(
+        part, "id_a long, id_b long, i long, sa long, sb long"
+    )
+
+
+def _verified_jaccard_arrays(
+    cand: DataFrame,
+    sh: DataFrame,
+    threshold: float,
+    broadcast_candidates: bool | None = None,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for candidate pairs with exact shingle
+    Jaccard ≥ threshold, rounded to 4 dp after the raw-double filter.
+    i / (sa + sb − i) is a correctly rounded division of small ints,
+    the same double the JVM computes for the SQL oracles."""
+    inter = _shingle_intersections(cand, sh, broadcast_candidates)
+    jac = F.col("i") / (F.col("sa") + F.col("sb") - F.col("i"))
+    return inter.filter(jac >= threshold).select(
+        "id_a", "id_b", F.round(jac, 4).alias("jaccard")
     )
 
 
@@ -265,28 +346,11 @@ def ngram_jaccard_pairs(
     when the doc has almost nothing rarer (each doc contributes just
     ~(1−τ)·|d|+1 prefix rows), so ubiquitous shingles drop out of
     candidate generation entirely. Verification then computes the
-    exact intersection for candidates only (_verified_jaccard, AQE
-    picks the join strategy from the candidate volume).
+    exact intersection for candidates only (_verified_jaccard_arrays).
 
-    ⌈τ·|d|⌉ is evaluated in INTEGER arithmetic (exact decimal fraction
-    of the threshold): float ceil(0.8*5) = ceil(4.0000000000000002)
-    = 5 would silently shorten prefixes and lose pairs. The fraction
-    is bounded to denominator ≤ 10_000 (exact for any realistic
-    threshold like 0.8 or 0.725): an unbounded repr such as 1/3 →
-    6004799503160661/18014398509481984 would make the generated
-    `sz * num` expression overflow int64 under ANSI mode for docs
-    with ≳2,700 shingles."""
-    from fractions import Fraction
-
-    exact = Fraction(str(threshold))
-    frac = exact.limit_denominator(10_000)
-    if frac > exact:
-        # never round the filter threshold UP: a larger τ' shortens
-        # prefixes / tightens bounds and could drop a true pair.
-        # Stepping down ≤1e-4 only admits a few extra candidates,
-        # which the exact verify stage then rejects.
-        frac = Fraction(frac.numerator - 1, frac.denominator)
-    num, den = frac.numerator, frac.denominator
+    ⌈τ·|d|⌉ is evaluated in INTEGER arithmetic (see
+    _threshold_fraction)."""
+    num, den = _threshold_fraction(threshold)
     # eager checkpoint, not cache(): sizes/dfreq/prefix/verify all
     # consume the shingle table, and with a lazy cache their stages
     # launch CONCURRENTLY before the cache is populated — each
@@ -422,24 +486,15 @@ def containment_pairs(
     (490×) for +31% candidate-join rows — verify mass collapses to
     ~the true-pair set and re-enters the broadcast gate.
 
-    Verification is exact and array-based (the xxhash64 int64 shingle
-    precedent from _verified_jaccard_arrays — same ~1e-15 within-doc
-    collision caveat the Jaccard tier documents): candidate pairs pull
-    both docs' hashed shingle arrays through two equi-joins and a
-    C-level np.intersect1d computes i; the quantized score
-    i·10⁴ DIV min(sz) is evaluated in Spark SQL so the integer
-    truncation semantics match the DuckDB oracle bit-for-bit.
+    Verification is exact (`_shingle_intersections`, the same kernel
+    and ~1e-15 within-doc hash-collision caveat as the Jaccard pairs);
+    the quantized score i·10⁴ DIV min(sz) is evaluated in Spark SQL so
+    the integer truncation semantics match the DuckDB oracle
+    bit-for-bit.
 
-    ⌈τ·|d|⌉ uses the same integer-exact fraction machinery as
-    ngram_jaccard_pairs (never round the threshold UP; denominator
-    bounded so ANSI int64 arithmetic can't overflow)."""
-    from fractions import Fraction
-
-    exact = Fraction(str(threshold))
-    frac = exact.limit_denominator(10_000)
-    if frac > exact:
-        frac = Fraction(frac.numerator - 1, frac.denominator)
-    num, den = frac.numerator, frac.denominator
+    ⌈τ·|d|⌉ uses the same integer-exact fraction as
+    ngram_jaccard_pairs (_threshold_fraction)."""
+    num, den = _threshold_fraction(threshold)
     sh = (
         shingle_table(docs, id_col, text_col, n)
         .select("sid", F.xxhash64("shingle").alias("shingle"))
@@ -510,74 +565,11 @@ def containment_pairs(
         )
         .distinct()
     )
-    return _verified_containment_arrays(cand, sh, threshold)
-
-
-def _verified_containment_arrays(
-    cand: DataFrame,
-    sh: DataFrame,
-    threshold: float,
-    broadcast_candidates: bool | None = None,
-) -> DataFrame:
-    """Exact containment for candidate (id_a, id_b) pairs via per-doc
-    hashed shingle arrays — the containment twin of
-    _verified_jaccard_arrays (same size-gated broadcast, same Arrow
-    intersection kernel), emitting the integer-quantized
-    containment_x1e4 = i·10⁴ DIV min(|A|,|B|) with the DIV evaluated
-    in Spark SQL so truncation matches the DuckDB oracle exactly."""
-    if broadcast_candidates is None:
-        cand = cand.localCheckpoint(eager=True)
-        broadcast_candidates = cand.count() <= _BROADCAST_CAND_MAX
-    cand_ids = (
-        cand.select(F.col("id_a").alias("sid"))
-        .unionByName(cand.select(F.col("id_b").alias("sid")))
-        .distinct()
-    )
-    if broadcast_candidates:
-        cand_ids = F.broadcast(cand_ids)
-    sh_c = sh.join(cand_ids, "sid", "left_semi")
-    if dict(sh_c.dtypes)["shingle"] == "string":
-        sh_c = sh_c.select("sid", F.xxhash64("shingle").alias("shingle"))
-    arrs = sh_c.groupBy("sid").agg(F.collect_list("shingle").alias("hs"))
-    cand_b = F.broadcast(cand) if broadcast_candidates else cand
-    a = arrs.select(F.col("sid").alias("id_a"), F.col("hs").alias("hs_a"))
-    b = arrs.select(F.col("sid").alias("id_b"), F.col("hs").alias("hs_b"))
-    paired = a.join(cand_b, "id_a").join(b, "id_b")
-
-    def part(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            inter = []
-            mins = []
-            for ha, hb in zip(pdf["hs_a"], pdf["hs_b"]):
-                a_ = np.asarray(ha, dtype=np.int64)
-                b_ = np.asarray(hb, dtype=np.int64)
-                inter.append(
-                    np.intersect1d(a_, b_, assume_unique=True).size
-                )
-                mins.append(min(a_.size, b_.size))
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"],
-                    "id_b": pdf["id_b"],
-                    "i": inter,
-                    "mn": mins,
-                }
-            )
-
-    scored = paired.mapInPandas(
-        part, "id_a long, id_b long, i long, mn long"
-    )
-    cq = F.expr("i * 10000 DIV mn")
+    cq = F.expr("i * 10000 DIV least(sa, sb)")
     return (
-        scored.select(
-            "id_a", "id_b", cq.cast("long").alias("containment_x1e4")
-        )
-        .filter(F.col("containment_x1e4") >= int(threshold * 10000))
+        _shingle_intersections(cand, sh)
+        .select("id_a", "id_b", cq.cast("long").alias("containment_x1e4"))
+        .filter(F.col("containment_x1e4") >= _x1e4_cutoff(threshold))
     )
 
 
@@ -598,7 +590,7 @@ def exact_jaccard_of_pairs(
     a pair before any shingling (near-dup pairs touch a small, linear
     fraction of the corpus; the isin-list trap from CLAUDE.md is
     avoided — ids travel as a broadcast frame under the same size
-    gate `_verified_jaccard_arrays` uses), so total work is
+    gate `_shingle_intersections` uses), so total work is
     O(scan + pairs × doc_size) regardless of corpus pair density.
 
     Returns (id_a, id_b, jaccard) for every input pair whose BOTH
@@ -621,142 +613,10 @@ def exact_jaccard_of_pairs(
     sh = shingle_table(docs_f, id_col, text_col, n).localCheckpoint(
         eager=True
     )
-    # threshold 0.0 keeps every verified pair (jraw >= 0 always)
+    # threshold 0.0 keeps every verified pair (jaccard >= 0 always)
     return _verified_jaccard_arrays(
         pairs, sh, 0.0, broadcast_candidates=small
     )
-
-
-def minhash_signatures(
-    sh: DataFrame, num_perm: int = _NUM_PERM
-) -> DataFrame:
-    """128 MinHash values per doc: one shuffle on sid, then a numpy
-    partial-min per partition.
-
-    Shingles hash to [0, 2^31) via xxhash64 (JVM-side); the 128
-    permutations (a*x + b) mod 2^31-1 are evaluated as ONE Arrow-
-    batched numpy outer product + grouped min. The pure-Catalyst
-    formulation (128 separate `min(pmod(...))` aggregates) exceeds
-    spark.sql.codegen.maxFields=100, drops to interpreted expression
-    evaluation, and measures ~1.5× slower at sf0.1 (1.5s vs 1.0s) —
-    same cross-over CLAUDE.md records for wide vector math. Values are
-    bit-identical to the expression form (`minhash_signatures_expr`,
-    kept below as the spec)."""
-    import pandas as pd  # noqa: F401 — document worker deps
-
-    a_list, b_list = _PERM_A[:num_perm], _PERM_B[:num_perm]
-    cols = [f"mh{i}" for i in range(num_perm)]
-    schema = "sid long, " + ", ".join(f"{c} long" for c in cols)
-
-    def part(batches):
-        import numpy as np
-        import pandas as pd
-
-        A = np.array(a_list, dtype=np.int64)
-        B = np.array(b_list, dtype=np.int64)
-        acc = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = pdf["x"].to_numpy(dtype=np.int64)
-            # (n × 128) permuted hashes; a*x < 2^62 so int64 is exact
-            H = (x[:, None] * A[None, :] + B[None, :]) % _MERSENNE
-            g = pd.DataFrame(H, columns=cols)
-            g.insert(0, "sid", pdf["sid"].to_numpy())
-            g = g.groupby("sid", sort=False).min()
-            acc = g if acc is None else pd.concat([acc, g]).groupby(level=0).min()
-        if acc is not None:
-            yield acc.reset_index()
-
-    x = F.pmod(F.xxhash64("shingle"), F.lit(2**31)).alias("x")
-    # repartition on sid so the per-partition min IS the global min
-    withx = sh.select("sid", x).repartition("sid")
-    return withx.mapInPandas(part, schema)
-
-
-def minhash_signatures_maponly(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = _NUM_PERM,
-) -> DataFrame:
-    """Per-doc MinHash with ZERO shuffles: tokenize → shingle → hash →
-    128 permuted mins, all inside one Arrow-batched pass over the
-    documents themselves.
-
-    `minhash_signatures` aggregates an exploded shingle stream, which
-    costs a shuffle of O(docs × shingles) rows before the mins can be
-    taken. But a MinHash signature only depends on its OWN doc's
-    shingles — computing it where the doc row already lives turns the
-    signature stage into a map-only scan (the optimal shape at 100 TB:
-    no exchange, no explode, signature volume = doc count). Shingles
-    hash via crc32 (any fixed 31-bit hash works — candidates are
-    exact-verified downstream, and the planted-duplicate recall of the
-    32×4 banding is hash-independent)."""
-    a_list, b_list = _PERM_A[:num_perm], _PERM_B[:num_perm]
-    cols = [f"mh{i}" for i in range(num_perm)]
-    schema = "sid long, " + ", ".join(f"{c} long" for c in cols)
-
-    def part(batches):
-        import re
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        A = np.array(a_list, dtype=np.int64)[None, :]
-        B = np.array(b_list, dtype=np.int64)[None, :]
-        ws = re.compile(r"\s+")
-        for pdf in batches:
-            sids, mins = [], []
-            for sid, txt in zip(pdf[id_col], pdf[text_col]):
-                toks = ws.split(txt.lower())
-                if len(toks) < n:
-                    continue
-                grams = {
-                    " ".join(toks[i: i + n])
-                    for i in range(len(toks) - n + 1)
-                }
-                x = np.fromiter(
-                    (zlib.crc32(g.encode()) & 0x7FFFFFFF for g in grams),
-                    dtype=np.int64,
-                    count=len(grams),
-                )
-                mins.append(((x[:, None] * A + B) % _MERSENNE).min(axis=0))
-                sids.append(sid)
-            if sids:
-                out = pd.DataFrame(
-                    np.vstack(mins), columns=cols
-                )
-                out.insert(0, "sid", np.array(sids, dtype=np.int64))
-                yield out
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
-
-    # one parquet file -> one input split: rebalance so the signature
-    # compute parallelizes (no-op at scale, where splits abound)
-    sel = rebalance_for_arrow(
-        docs.select(F.col(id_col).alias(id_col), F.col(text_col))
-    )
-    return sel.mapInPandas(part, schema)
-
-
-def minhash_signatures_expr(
-    sh: DataFrame, num_perm: int = _NUM_PERM
-) -> DataFrame:
-    """Pure-Catalyst MinHash (the semantic spec for the numpy path —
-    bit-identical output, no Python workers). Slower above ~100
-    permutations because the aggregate exceeds codegen's field limit."""
-    x = F.pmod(F.xxhash64("shingle"), F.lit(2**31)).alias("x")
-    withx = sh.select("sid", x)
-    aggs = [
-        F.min(
-            F.pmod(F.lit(_PERM_A[i]) * F.col("x") + F.lit(_PERM_B[i]), F.lit(_MERSENNE))
-        ).alias(f"mh{i}")
-        for i in range(num_perm)
-    ]
-    return withx.groupBy("sid").agg(*aggs)
 
 
 def minhash_signatures_with_bands_maponly(
@@ -767,57 +627,20 @@ def minhash_signatures_with_bands_maponly(
 ) -> DataFrame:
     """(sid, mh array<long>[128], bands array<long>[32]) in ONE Arrow
     pass — the ARRAY layout for signature persistence: a 3-column
-    frame keeps every downstream plan narrow (the 128-individual-
-    column layout costs seconds of driver analysis per plan and holds
-    the estimator in interpreted evaluation), while the band sigs are
-    pre-mixed numpy-side exactly like minhash_band_buckets_maponly."""
-    a_list, b_list = _PERM_A[:_NUM_PERM], _PERM_B[:_NUM_PERM]
+    frame keeps every downstream plan narrow (a 128-individual-column
+    layout costs seconds of driver analysis per plan and holds the
+    estimator in interpreted evaluation), and `bands` holds the same
+    band ids minhash_band_buckets_maponly emits."""
 
     def part(batches):
-        import re
-        import zlib
-
-        import numpy as np
         import pandas as pd
 
-        A = np.array(a_list, dtype=np.int64)[None, :]
-        B = np.array(b_list, dtype=np.int64)[None, :]
-        ws = re.compile(r"\s+")
-        MIX = np.int64(1000003)
         for pdf in batches:
-            sids, mins = [], []
-            for sid, txt in zip(pdf[id_col], pdf[text_col]):
-                toks = ws.split(txt.lower())
-                if len(toks) < n:
-                    continue
-                grams = {
-                    " ".join(toks[i: i + n])
-                    for i in range(len(toks) - n + 1)
-                }
-                x = np.fromiter(
-                    (zlib.crc32(g.encode()) & 0x7FFFFFFF for g in grams),
-                    dtype=np.int64,
-                    count=len(grams),
+            sids, M = _minhash_matrix(pdf[id_col], pdf[text_col], n)
+            if len(sids):
+                yield pd.DataFrame(
+                    {"sid": sids, "mh": list(M), "bands": list(_band_sigs(M))}
                 )
-                mins.append(((x[:, None] * A + B) % _MERSENNE).min(axis=0))
-                sids.append(sid)
-            if not sids:
-                continue
-            M = np.vstack(mins)
-            Mb = M.reshape(len(sids), _BANDS, _ROWS_PER_BAND)
-            with np.errstate(over="ignore"):
-                sig = Mb[:, :, 0]
-                for j in range(1, _ROWS_PER_BAND):
-                    sig = sig * MIX + Mb[:, :, j]
-            yield pd.DataFrame(
-                {
-                    "sid": np.array(sids, dtype=np.int64),
-                    "mh": list(M),
-                    "bands": list(sig),
-                }
-            )
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
 
     return rebalance_for_arrow(
         docs.select(F.col(id_col), F.col(text_col))
@@ -833,64 +656,30 @@ def minhash_band_buckets_maponly(
 ) -> DataFrame:
     """(sid, band, sig) bucket rows straight out of ONE Arrow pass:
     the 128 per-doc MinHash values never leave the Python worker —
-    each doc's 32 band signatures are mixed in numpy (int64
-    wraparound polynomial over the 4 rows per band) and ship as 3
-    narrow columns. Versus materializing a 128-column signature frame
-    and exploding JVM-side, this removes the band explode, the
-    32-struct hash projection, AND the 128-column plan analysis cost
-    — the shuffle carries 3 longs per (doc, band). Bucket ids are an
-    arbitrary deterministic hash (grouping key only); callers needing
-    the raw signatures (the estimator paths) keep using
-    minhash_signatures_maponly."""
-    a_list, b_list = _PERM_A[:_NUM_PERM], _PERM_B[:_NUM_PERM]
+    only each doc's 32 band ids ship, as 3 narrow columns. Versus a
+    128-column signature frame exploded JVM-side, this removes the
+    band explode, the 32-struct hash projection AND the 128-column
+    plan analysis cost — the shuffle carries 3 longs per (doc, band).
+
+    A single-file input is round-robin rebalanced to at least
+    `min_parts` partitions (default: the session's parallelism) so the
+    signature compute does not run as one task."""
 
     def part(batches):
-        import re
-        import zlib
-
-        import numpy as np
         import pandas as pd
 
-        A = np.array(a_list, dtype=np.int64)[None, :]
-        B = np.array(b_list, dtype=np.int64)[None, :]
-        ws = re.compile(r"\s+")
-        band_idx = np.arange(_BANDS, dtype=np.int64)
-        MIX = np.int64(1000003)
         for pdf in batches:
-            sids, mins = [], []
-            for sid, txt in zip(pdf[id_col], pdf[text_col]):
-                toks = ws.split(txt.lower())
-                if len(toks) < n:
-                    continue
-                grams = {
-                    " ".join(toks[i: i + n])
-                    for i in range(len(toks) - n + 1)
-                }
-                x = np.fromiter(
-                    (zlib.crc32(g.encode()) & 0x7FFFFFFF for g in grams),
-                    dtype=np.int64,
-                    count=len(grams),
+            sids, M = _minhash_matrix(pdf[id_col], pdf[text_col], n)
+            if len(sids):
+                yield pd.DataFrame(
+                    {
+                        "sid": np.repeat(sids, _BANDS),
+                        "band": np.tile(
+                            np.arange(_BANDS, dtype=np.int64), len(sids)
+                        ),
+                        "sig": _band_sigs(M).reshape(-1),
+                    }
                 )
-                mins.append(((x[:, None] * A + B) % _MERSENNE).min(axis=0))
-                sids.append(sid)
-            if not sids:
-                continue
-            M = np.vstack(mins).reshape(len(sids), _BANDS, _ROWS_PER_BAND)
-            with np.errstate(over="ignore"):
-                sig = M[:, :, 0]
-                for j in range(1, _ROWS_PER_BAND):
-                    sig = sig * MIX + M[:, :, j]
-            yield pd.DataFrame(
-                {
-                    "sid": np.repeat(
-                        np.array(sids, dtype=np.int64), _BANDS
-                    ),
-                    "band": np.tile(band_idx, len(sids)),
-                    "sig": sig.reshape(-1),
-                }
-            )
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
 
     return rebalance_for_arrow(
         docs.select(F.col(id_col), F.col(text_col)), min_parts=min_parts
@@ -899,7 +688,17 @@ def minhash_band_buckets_maponly(
 
 def _bucket_groups(buckets: DataFrame, max_bucket: int) -> DataFrame:
     """(sid, band, sig) bucket rows → (band, sig, ids) member lists:
-    one groupBy collecting each bucket's sorted members, size-capped.
+    ONE groupBy collecting each bucket's sorted members, size-capped.
+
+    The bucket self-join formulation shuffles the exploded bands twice
+    and measured ~2× slower end-to-end at sf0.1 (8.7s → 4.7s for the
+    full minhash pipeline). Pair expansion is quadratic per bucket
+    either way (a join over the same key materializes the same k²
+    rows in one task), so degenerate buckets larger than `max_bucket`
+    — hash collisions over boilerplate shingles, never near-dup
+    clusters that other bands wouldn't also catch — are dropped to
+    bound task size at the 100 TB scale.
+
     Split out from the pair expansion so a caller can materialize the
     SMALL grouped frame once (only buckets with ≥2 members survive)
     and expand pairs from it more than one way without recomputing
@@ -912,8 +711,14 @@ def _bucket_groups(buckets: DataFrame, max_bucket: int) -> DataFrame:
 
 
 def _expand_bucket_pairs(grp: DataFrame, distinct: bool) -> DataFrame:
-    """(band, sig, ids) member lists → (id_a, id_b) pairs, in-place
-    capped expansion (see lsh_candidates for the shape rationale)."""
+    """(band, sig, ids) member lists → (id_a, id_b) pairs, expanded in
+    place. ids is sorted, so (ids[i], ids[j>i]) already satisfies
+    id_a < id_b. The HOF lambda is interpreted, but it only runs over
+    matched buckets (a few per near-dup cluster), not the full corpus.
+    A J≈0.9 pair collides in ~2/3 of the 32 bands, so the raw pair
+    stream carries ~20× duplicates: `distinct=False` lets a caller
+    that is about to collect anyway dedupe in a set instead of paying
+    a second shuffle (≈0.3s of the sf0.1 wall)."""
     pairs = F.explode(
         F.expr(
             "flatten(transform(ids, (x, i) -> "
@@ -923,60 +728,6 @@ def _expand_bucket_pairs(grp: DataFrame, distinct: bool) -> DataFrame:
     )
     out = grp.select(pairs.alias("p")).select("p.id_a", "p.id_b")
     return out.distinct() if distinct else out
-
-
-def _candidates_from_buckets(
-    buckets: DataFrame, max_bucket: int, distinct: bool
-) -> DataFrame:
-    """(sid, band, sig) bucket rows → (id_a, id_b) candidate pairs:
-    one groupBy collecting each bucket's sorted members, in-place
-    capped pair expansion (see lsh_candidates for the shape
-    rationale)."""
-    return _expand_bucket_pairs(
-        _bucket_groups(buckets, max_bucket), distinct
-    )
-
-
-def lsh_candidates(
-    signatures: DataFrame, max_bucket: int = 1000, distinct: bool = True
-) -> DataFrame:
-    """Band the signature into (_BANDS × _ROWS_PER_BAND) buckets and
-    emit each bucket's member pairs.
-
-    Returns distinct (id_a, id_b) candidate pairs with id_a < id_b.
-
-    Spark-first shape: ONE shuffle — groupBy (band, sig) collecting
-    the bucket's members, then expand pairs in-place. The bucket
-    self-join formulation shuffles the exploded bands twice and
-    measured ~2× slower end-to-end at sf0.1 (8.7s → 4.7s for the full
-    minhash pipeline). Pair expansion is quadratic per bucket either
-    way (a join over the same key materializes the same k² rows in one
-    task), so degenerate buckets larger than `max_bucket` — hash
-    collisions over boilerplate shingles, never near-dup clusters that
-    other bands wouldn't also catch — are dropped to bound task size
-    at the 100 TB scale."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.hash(
-                    *[F.col(f"mh{b * _ROWS_PER_BAND + j}") for j in range(_ROWS_PER_BAND)]
-                ).alias("sig"),
-            )
-            for b in range(_BANDS)
-        ]
-    )
-    buckets = signatures.select(
-        F.col("sid"), F.explode(bands).alias("bd")
-    ).select("sid", F.col("bd.band").alias("band"), F.col("bd.sig").alias("sig"))
-    # ids is sorted, so (ids[i], ids[j>i]) already satisfies id_a < id_b.
-    # The HOF lambda is interpreted, but it only runs over matched
-    # buckets (a few per near-dup cluster), not the full corpus.
-    # A J≈0.9 pair collides in ~2/3 of the 32 bands, so the raw pair
-    # stream carries ~20× duplicates. `distinct=False` lets a caller
-    # that is about to collect anyway dedupe in a set instead of
-    # paying this second shuffle (≈0.3s of the sf0.1 wall).
-    return _candidates_from_buckets(buckets, max_bucket, distinct)
 
 
 def minhash_lsh_pairs(
@@ -993,8 +744,8 @@ def minhash_lsh_pairs(
     exhaustive `ngram_jaccard_pairs` result.
 
     Pipeline shape (each step's cost scales with what it must touch):
-    1. Signatures are computed MAP-ONLY per doc
-       (minhash_signatures_maponly): no shingle explode, no shuffle —
+    1. Band buckets are computed MAP-ONLY per doc
+       (minhash_band_buckets_maponly): no shingle explode, no shuffle —
        the only exchange before candidates is the (band, sig) groupBy
        over |docs|×32 rows.
     2. The candidate pair set is tiny by the bucket-cap construction
@@ -1087,24 +838,10 @@ def minhash_lsh_pairs(
             # (BigDecimal.valueOf == Decimal(repr(x));
             # tests/test_operators.py pins the equivalence against
             # F.round over random doubles).
-            import re as _re
-
-            from dbeam_spark.operators.util import round_half_up
-
-            texts = {
-                r[0]: r[1]
+            gset = {
+                r[0]: _word_ngrams(r[1], n)
                 for r in _candidate_docs([id_col, text_col]).collect()
             }
-            ws = _re.compile(r"\s+")
-
-            def _grams(t: str) -> set:
-                toks = ws.split(t.lower())
-                return {
-                    " ".join(toks[i: i + n])
-                    for i in range(len(toks) - n + 1)
-                }
-
-            gset = {i: _grams(t) for i, t in texts.items()}
             rows = [
                 (ia, ib, round_half_up(jraw, 4))
                 for ia, ib, jraw in (
@@ -1135,7 +872,7 @@ def minhash_lsh_pairs(
     # intersection), not the exploded shingle join: at the r9
     # boilerplate-flood 30x probe the exploded join sort-merged
     # Σ_pairs|A| ≈ 300M rows for millions of verify-and-reject
-    # candidates (57s wall) — the exact shape _verified_jaccard_arrays
+    # candidates (57s wall) — the exact shape _shingle_intersections
     # was built to replace. The helper does its own checkpoint,
     # candidate-id semi-prune and broadcast size-gating. The distinct
     # pair expansion reads the SAME checkpointed bucket frame the
@@ -1158,15 +895,14 @@ def _pairwise_text_jaccard(
     """Exact n-gram Jaccard per candidate pair, texts joined in and
     each pair scored independently in one Arrow batch pass.
 
-    Semantically identical to the shingle-join `_verified_jaccard`
-    (distinct word n-grams, |∩|/|∪|): the raw ratio is an exact
-    rational of small ints, so the Python float division equals the
-    JVM double division bit-for-bit, and the 4-dp ROUND + threshold
-    filter stay in Spark so rounding semantics match the SQL oracle.
-    Scale shape: the pair list and candidate texts are both
-    O(near-dup pairs) — two joins over candidate-only rows, then a
-    map-only scoring stage; nothing here ever touches the full
-    corpus."""
+    Same semantics as the hashed-array verify (distinct word n-grams,
+    |∩|/|∪|): the raw ratio is an exact rational of small ints, so the
+    Python float division equals the JVM double division bit-for-bit,
+    and the 4-dp ROUND + threshold filter stay in Spark so rounding
+    semantics match the SQL oracle. Scale shape: the pair list and
+    candidate texts are both O(near-dup pairs) — two joins over
+    candidate-only rows, then a map-only scoring stage; nothing here
+    ever touches the full corpus."""
     ta = cand_docs.select(
         F.col(id_col).alias("id_a"), F.col(text_col).alias("text_a")
     )
@@ -1178,29 +914,15 @@ def _pairwise_text_jaccard(
     )
 
     def part(batches):
-        import re
-
         import pandas as pd
-
-        ws = re.compile(r"\s+")
-
-        def grams(txt):
-            toks = ws.split(txt.lower())
-            return {
-                " ".join(toks[i: i + n])
-                for i in range(len(toks) - n + 1)
-            }
 
         for pdf in batches:
             if not len(pdf):
                 continue
-            jraw = [
-                (
-                    lambda ga, gb: len(ga & gb)
-                    / (len(ga | gb) or 1)
-                )(grams(a), grams(b))
-                for a, b in zip(pdf["text_a"], pdf["text_b"])
-            ]
+            jraw = []
+            for a, b in zip(pdf["text_a"], pdf["text_b"]):
+                ga, gb = _word_ngrams(a, n), _word_ngrams(b, n)
+                jraw.append(len(ga & gb) / (len(ga | gb) or 1))
             yield pd.DataFrame(
                 {
                     "id_a": pdf["id_a"],
@@ -1294,7 +1016,7 @@ def simhash_pairs(
                 .alias("cv"),
             )
         )
-    # Same single-shuffle bucket-group shape as lsh_candidates: explode
+    # Same single-shuffle bucket-group shape as _bucket_groups: explode
     # each fingerprint into its n_chunks (chunk-index, chunk-value)
     # buckets, group, and expand member pairs in place. The previous
     # formulation self-joined the fingerprint table once per chunk
@@ -1603,7 +1325,7 @@ def incremental_minhash_index(
             "a_is_new",
             "b_is_new",
         )
-        .filter(F.col("est_jaccard_x1e4") >= int(threshold * 10000))
+        .filter(F.col("est_jaccard_x1e4") >= _x1e4_cutoff(threshold))
     )
     out = out.localCheckpoint(eager=True)  # materialize BEFORE write
     # idempotent landing: overwrite THIS batch's subdirectory only

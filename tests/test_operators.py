@@ -54,11 +54,10 @@ def test_minhash_lsh_equals_exhaustive(docs):
 
 def test_bucket_group_expansion_matches_direct(spark):
     """The split _bucket_groups → _expand_bucket_pairs pipeline (the
-    r9 shared-checkpoint shape inside minhash_lsh_pairs) must equal
-    _candidates_from_buckets on every axis: cap filtering, id_a<id_b
-    ordering, distinct vs raw multiplicity — and expanding from a
-    localCheckpoint'd group frame must be identical to expanding the
-    live one (the fallback regime reads the checkpoint)."""
+    r9 shared-checkpoint shape inside minhash_lsh_pairs) on every
+    axis: cap filtering, id_a<id_b ordering, distinct vs raw
+    multiplicity — expanded from a localCheckpoint'd group frame, as
+    the fallback regime reads it."""
     # bucket (0,1): ids {1,2,3}; bucket (1,1): ids {2,3} (dup pair
     # across bands); bucket (2,2): 5 ids — dropped by max_bucket=4;
     # bucket (3,3): singleton — dropped by the >1 filter
@@ -69,12 +68,6 @@ def test_bucket_group_expansion_matches_direct(spark):
         + [(99, 3, 3)]
     )
     buckets = spark.createDataFrame(rows, ["sid", "band", "sig"])
-    direct_raw = [
-        (r.id_a, r.id_b)
-        for r in dedup._candidates_from_buckets(
-            buckets, max_bucket=4, distinct=False
-        ).collect()
-    ]
     grp = dedup._bucket_groups(buckets, max_bucket=4)
     ck = grp.localCheckpoint(eager=True)
     split_raw = [
@@ -82,12 +75,114 @@ def test_bucket_group_expansion_matches_direct(spark):
         for r in dedup._expand_bucket_pairs(ck, distinct=False).collect()
     ]
     want_raw = [(1, 2), (1, 3), (2, 3), (2, 3)]  # (2,3) once per band
-    assert sorted(direct_raw) == sorted(split_raw) == want_raw
+    assert sorted(split_raw) == want_raw
     split_distinct = {
         (r.id_a, r.id_b)
         for r in dedup._expand_bucket_pairs(ck, distinct=True).collect()
     }
     assert split_distinct == {(1, 2), (1, 3), (2, 3)}
+
+
+def test_minhash_kernel_matches_bigint_reference(spark):
+    """Both signature layouts against a plain-Python reference: each
+    of the 128 mins is min((a·(crc32(g) & 0x7FFFFFFF) + b) mod 2³¹−1)
+    over the doc's DISTINCT word 3-grams, with (a, b) drawn from
+    random.Random(42); each band id folds its 4 mins as
+    ((m0·M + m1)·M + m2)·M + m3 mod 2⁶⁴ (signed), M = 1000003; a doc
+    under 3 tokens gets no signature; and posexplode(bands) of the
+    array layout is exactly the (sid, band, sig) bucket layout."""
+    import random
+    import zlib
+
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "The Quick brown fox jumps over the lazy cat"),
+        (3, "two words"),  # < 3 tokens: dropped
+        (4, "a b c a b c a b c a b c"),  # 3-grams repeat
+        (5, "x y z"),  # exactly one 3-gram
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    p = 2**31 - 1
+    rng = random.Random(42)
+    perm_a = [rng.randrange(1, p) for _ in range(128)]
+    perm_b = [rng.randrange(0, p) for _ in range(128)]
+
+    def signed64(v):
+        v &= 2**64 - 1
+        return v - 2**64 if v >= 2**63 else v
+
+    want_mh, want_bands = {}, {}
+    for sid, txt in rows:
+        toks = txt.lower().split()
+        grams = {" ".join(toks[i: i + 3]) for i in range(len(toks) - 2)}
+        if not grams:
+            continue
+        xs = [zlib.crc32(g.encode()) & 0x7FFFFFFF for g in grams]
+        mh = [min((a * x + b) % p for x in xs) for a, b in zip(perm_a, perm_b)]
+        bands = []
+        for k in range(32):
+            v = 0
+            for m in mh[4 * k: 4 * k + 4]:
+                v = v * 1000003 + m
+            bands.append(signed64(v))
+        want_mh[sid], want_bands[sid] = mh, bands
+
+    sig = dedup.minhash_signatures_with_bands_maponly(docs)
+    got = {r.sid: (list(r.mh), list(r.bands)) for r in sig.collect()}
+    assert set(got) == {1, 2, 4, 5}
+    for sid, (mh, bands) in got.items():
+        assert mh == want_mh[sid], sid
+        assert bands == want_bands[sid], sid
+
+    exploded = sorted(
+        tuple(r)
+        for r in sig.select(
+            "sid", F.posexplode("bands").alias("band", "sig")
+        ).collect()
+    )
+    buckets = sorted(
+        tuple(r)
+        for r in dedup.minhash_band_buckets_maponly(docs, min_parts=3)
+        .select("sid", "band", "sig")
+        .collect()
+    )
+    assert exploded == buckets
+    assert len(buckets) == 4 * 32
+
+
+def test_minhash_kernels_unpickle_without_the_package(tmp_path):
+    """The batch kernels the signature closures call must ship to
+    Python workers by value: a worker started outside the checkout
+    cannot import this package."""
+    import os
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    ids, texts = [7, 8], ["the quick brown fox", "a b"]
+    payload = cloudpickle.dumps(
+        (dedup._minhash_matrix, dedup._band_sigs, ids, texts)
+    )
+    code = (
+        "import pickle, sys\n"
+        "kernel, bands, ids, texts = pickle.loads(sys.stdin.buffer.read())\n"
+        "sids, M = kernel(ids, texts, 3)\n"
+        "assert 'dbeam_spark' not in sys.modules\n"
+        "sys.stdout.buffer.write(pickle.dumps((sids, M, bands(M))))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], input=payload, capture_output=True,
+        cwd=tmp_path, env=env, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr.decode()[-2000:]
+    sids, M, bands = pickle.loads(out.stdout)
+    want_sids, want_M = dedup._minhash_matrix(ids, texts, 3)
+    assert list(sids) == list(want_sids) == [7]
+    assert (M == want_M).all()
+    assert (bands == dedup._band_sigs(want_M)).all()
 
 
 def test_simhash_close_for_near_dups(docs):
@@ -2100,6 +2195,31 @@ def test_containment_prefix_filter_exact(spark):
         # the planted subset dups must survive every threshold
         planted = {(i - 50, i) for i in range(50, 62)}
         assert planted <= {(x, y) for x, y, _ in got}, f"thr={thr}"
+
+
+def test_containment_threshold_is_not_truncated(spark):
+    """A pair with 110 shared shingles and min(|A|, |B|) = 193 scores
+    110·10⁴ DIV 193 = 5699 (containment 0.56995): it passes 0.5699
+    but not 0.57, although 0.57 * 10000 is 5699.999… in floating
+    point. Filler docs repeat each side's unshared tail, so the shared
+    shingles are the rarest and the pair is a candidate at 0.57."""
+    a = [f"a{i}" for i in range(195)]  # 193 shingles
+    b = a[:112] + [f"b{i}" for i in range(83)]  # 193, 110 shared with a
+    rows = [(1, " ".join(a)), (2, " ".join(b))]
+    rows += [(10 + k, " ".join(a[110:])) for k in range(2)]
+    rows += [(20 + k, " ".join(b[110:])) for k in range(2)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def scores(thr):
+        return {
+            (r["id_a"], r["id_b"]): r["containment_x1e4"]
+            for r in dedup.containment_pairs(docs, thr).collect()
+        }
+
+    assert scores(0.5699)[(1, 2)] == 5699
+    at_057 = scores(0.57)
+    assert (1, 2) not in at_057
+    assert at_057[(1, 10)] == 10000  # the filler pairs still pass
 
 
 def test_verified_jaccard_broadcast_gate_both_sides(spark, monkeypatch):

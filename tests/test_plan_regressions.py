@@ -127,17 +127,26 @@ def test_minhash_signatures_parallelize_small_inputs(spark):
     # single-file local inputs must be round-robin rebalanced before
     # the Arrow signature stage (operators/util.rebalance_for_arrow):
     # without it the whole MinHash compute runs as ONE task. (The
-    # registered query's returned frame only contains the verify leg
-    # — candidates are materialized eagerly — so assert on the
-    # signature operator's own plan.)
-    from dbeam_spark.operators.dedup import minhash_signatures_maponly
+    # registered queries' returned frames only contain the verify or
+    # estimator legs — buckets and signatures are materialized eagerly
+    # — so assert on the two signature operators' own plans: the
+    # bucket layout as minhash_lsh_pairs calls it, and the array
+    # layout incremental_minhash_index persists.)
+    from dbeam_spark.operators.dedup import (
+        minhash_band_buckets_maponly,
+        minhash_signatures_with_bands_maponly,
+    )
     from dbeam_spark.sources.files import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
-    sig = minhash_signatures_maponly(docs)
-    plan = sig._jdf.queryExecution().executedPlan().toString()
-    assert "RoundRobinPartitioning" in plan
-    assert "MapInPandas" in plan
+    sig_parts = max(8, spark.sparkContext.defaultParallelism // 4)
+    for sig in (
+        minhash_band_buckets_maponly(docs, min_parts=sig_parts),
+        minhash_signatures_with_bands_maponly(docs),
+    ):
+        plan = sig._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" in plan
+        assert "MapInPandas" in plan
 
 
 def test_keyword_search_topk_is_distributed(spark):

@@ -311,9 +311,11 @@ def shingle_cap_stats(spark, data_dir: str | None = None) -> dict:
 
     Reports: (a) the flood's share and the template shingles' max
     document frequency (the df explosion), (b) MinHash band-bucket
-    occupancy vs lsh_candidates' max_bucket=1000 drop cap — buckets
-    over the cap are hash-collision boilerplate groups, droppable
-    because flood-pair J≈0.43 < τ=0.5, (c) the AllPairs tiers on the
+    occupancy vs minhash_lsh_pairs' max_bucket=1000 drop cap, read
+    from the (band, sig) rows of minhash_band_buckets_maponly that
+    the live path groups on — buckets over the cap are
+    hash-collision boilerplate groups, droppable because flood-pair
+    J≈0.43 < τ=0.5, (c) the AllPairs tiers on the
     flooded corpus at τ=0.5: how many prefix rows carry a flooded
     (df>1000) shingle and how many prefix-join candidates the PPJoin
     positional bound kills — the df-ascending prefix + alpha filter
@@ -323,9 +325,7 @@ def shingle_cap_stats(spark, data_dir: str | None = None) -> dict:
     from pyspark.sql import functions as F
 
     from dbeam_spark.operators.dedup import (
-        _BANDS,
-        _ROWS_PER_BAND,
-        minhash_signatures_maponly,
+        minhash_band_buckets_maponly,
         shingle_table,
     )
     from dbeam_spark.sources.files import load_table
@@ -340,18 +340,9 @@ def shingle_cap_stats(spark, data_dir: str | None = None) -> dict:
     }
 
     # (b) band-bucket occupancy vs the 1000 drop cap
-    sig = minhash_signatures_maponly(docs)
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.hash(*[F.col(f"mh{b * _ROWS_PER_BAND + j}")
-                     for j in range(_ROWS_PER_BAND)]).alias("sig"),
-        )
-        for b in range(_BANDS)
-    ])
     occ = (
-        sig.select(F.explode(bands).alias("bd"))
-        .groupBy("bd.band", "bd.sig")
+        minhash_band_buckets_maponly(docs)
+        .groupBy("band", "sig")
         .agg(F.count(F.lit(1)).alias("n"))
         .agg(
             F.max("n").alias("max_bucket"),
