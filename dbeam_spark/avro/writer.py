@@ -47,9 +47,8 @@ from dbeam_spark.avro import ocf
 
 _BLOCK_ROWS = 4096
 
-# Guards the session-conf save/flip/restore window in write_avro
-# against concurrent writers on the same SparkSession (see the
-# comment at the flip site).
+# Guards the session-conf save/flip/restore window of
+# unsorted_round_robin against concurrent callers on one SparkSession.
 _SORT_CONF_LOCK = threading.Lock()
 
 # Bumped whenever the OCF encoding path changes behavior. Consumers
@@ -455,43 +454,41 @@ def write_avro(
         os.replace(tmp, path)
         yield stat(path, rows, crc & 0xFFFFFFFF, False)
 
-    plan = df.mapInArrow(
+    stats = df.mapInArrow(
         write_partition,
         "file string, rows long, bytes long, crc32 long, skipped boolean",
-    )
-    # Round-robin repartitions upstream of the writer normally SORT
-    # the whole input partition first (sortBeforeRepartition=true) to
-    # canonicalize the row->partition assignment under task retries.
-    # For a one-shot export that sort is pure overhead — Spark marks
-    # the unsorted exchange indeterminate and recomputes the whole
-    # stage on a fetch failure, which is the right trade for an
-    # export (a serial 600k-row sort costs ~0.5s per single-split
-    # input; a retry is rare). resume=True keeps the sort: its
-    # crash-recovery contract needs run-to-run assignment determinism
-    # even for sources that return rows in arbitrary order (JDBC).
-    # The flip is a SESSION-wide conf (Spark reads it at shuffle-
-    # dependency creation, from the Dataset's session SQLConf — there
-    # is no per-plan override), so two hazards exist: (a) two
-    # concurrent write_avro calls racing the save/restore, guarded by
-    # the module lock below; (b) an UNRELATED query on the same
-    # SparkSession planned inside the window picks up the disabled
-    # sort. (b) cannot be fenced from here — callers running exports
-    # concurrently with other round-robin-repartitioning work on the
-    # SAME session should isolate via spark.newSession() (separate
-    # SQLConf, shared SparkContext) or pass resume=True (no flip).
-    spark = df.sparkSession
-    conf_key = "spark.sql.execution.sortBeforeRepartition"
-    if resume:
-        stats = plan.collect()
-    else:
-        with _SORT_CONF_LOCK:
-            prev = spark.conf.get(conf_key, "true")
-            spark.conf.set(conf_key, "false")
-            try:
-                stats = plan.collect()
-            finally:
-                spark.conf.set(conf_key, prev)
+    ).collect()
     return [r.asDict() for r in stats]
+
+
+@contextlib.contextmanager
+def unsorted_round_robin(spark):
+    """Run the body with ``spark.sql.execution.sortBeforeRepartition``
+    off, for callers that ``repartition(n)`` right before `write_avro`.
+
+    A round-robin repartition normally SORTS each input partition first
+    (sortBeforeRepartition=true) to canonicalize the row->partition
+    assignment under task retries. For a one-shot export that sort is
+    pure overhead (a serial 600k-row sort costs ~0.5 s per single-split
+    input): Spark marks the unsorted exchange indeterminate and
+    recomputes the whole stage on a fetch failure instead, and a retry
+    is rare. Exports that must resume keep the sort (do not use this):
+    their crash recovery needs run-to-run assignment determinism even
+    for sources that return rows in arbitrary order (JDBC).
+
+    The flag is SESSION-wide (Spark reads it at shuffle-dependency
+    creation from the session SQLConf; there is no per-plan override),
+    so an unrelated query planned on the same session inside the body
+    also skips the sort; isolate such work via ``spark.newSession()``.
+    The JDBC export has no round-robin exchange and never flips it."""
+    key = "spark.sql.execution.sortBeforeRepartition"
+    with _SORT_CONF_LOCK:
+        prev = spark.conf.get(key, "true")
+        spark.conf.set(key, "false")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prev)
 
 
 def file_crc32(path: str, chunk: int = 1 << 20) -> int:

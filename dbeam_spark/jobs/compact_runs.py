@@ -36,7 +36,11 @@ from pyspark.sql import functions as F
 
 from dbeam_spark.avro.reader import read_avro_schema
 from dbeam_spark.avro.schema import to_json
-from dbeam_spark.avro.writer import write_avro, write_checksums
+from dbeam_spark.avro.writer import (
+    unsorted_round_robin,
+    write_avro,
+    write_checksums,
+)
 from dbeam_spark.sources.avro import read_avro
 
 
@@ -97,7 +101,8 @@ def compact_runs(
 
     df = df.repartition(target_files)
     os.makedirs(tmp, exist_ok=True)
-    stats = write_avro(df, str(tmp), avro_schema, codec=codec)
+    with unsorted_round_robin(spark):
+        stats = write_avro(df, str(tmp), avro_schema, codec=codec)
     rows = sum(s["rows"] for s in stats)
     nbytes = sum(s["bytes"] for s in stats)
     (tmp / "_AVRO_SCHEMA.avsc").write_text(to_json(avro_schema) + "\n")

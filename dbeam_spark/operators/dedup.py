@@ -55,6 +55,13 @@ _BANDS = 32
 _ROWS_PER_BAND = _NUM_PERM // _BANDS
 # band-id polynomial base (see _band_sigs)
 _MIX = np.int64(1000003)
+# minhash_lsh_pairs verify tiers, by distinct candidate pairs: up to
+# _DRIVER_VERIFY_PAIRS on the driver, up to _ARROW_VERIFY_PAIRS in one
+# Arrow pass over candidate texts, beyond that (or past _RAW_PAIR_CAP
+# raw bucket pairs) the distributed hashed-array verify.
+_DRIVER_VERIFY_PAIRS = 10_000
+_ARROW_VERIFY_PAIRS = 200_000
+_RAW_PAIR_CAP = 400_000
 
 _rng = random.Random(42)
 _PERM_A = np.array(
@@ -796,11 +803,14 @@ def minhash_lsh_pairs(
     ).localCheckpoint(eager=True)
     raw_rows = (
         _expand_bucket_pairs(grp, distinct=False)
-        .limit(400_001)
+        .limit(_RAW_PAIR_CAP + 1)
         .collect()
     )
     pair_rows = sorted({(r[0], r[1]) for r in raw_rows})
-    if len(raw_rows) <= 400_000 and len(pair_rows) <= 200_000:
+    if (
+        len(raw_rows) <= _RAW_PAIR_CAP
+        and len(pair_rows) <= _ARROW_VERIFY_PAIRS
+    ):
         # Near-dup regime: pairs fit the driver easily. The id set
         # collects to an IN filter that rides the parquet scan
         # (PushedFilters) — the verify pass READS only candidate docs,
@@ -824,7 +834,7 @@ def minhash_lsh_pairs(
             )
             return sel.join(F.broadcast(ids_df), id_col, "left_semi")
 
-        if len(pair_rows) <= 10_000:
+        if len(pair_rows) <= _DRIVER_VERIFY_PAIRS:
             # Tiny near-dup set (the overwhelmingly common regime):
             # verification is O(pairs) work on O(pairs) docs, so ONE
             # JVM-only collect of the candidate texts (pushed IN

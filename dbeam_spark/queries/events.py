@@ -2462,7 +2462,7 @@ def cdc_rollup_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from dbeam_spark.avro.schema import spark_schema_to_avro
-    from dbeam_spark.avro.writer import write_avro
+    from dbeam_spark.avro.writer import unsorted_round_robin, write_avro
     from dbeam_spark.jobs.rollup_maintain import (
         maintain_rollup,
         read_rollup,
@@ -2494,7 +2494,8 @@ def cdc_rollup_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
             width = min(
                 df.sparkSession.sparkContext.defaultParallelism, 32
             )
-            write_avro(d.repartition(width), out, schema)
+            with unsorted_round_robin(spark):
+                write_avro(d.repartition(width), out, schema)
 
         _land(ev.filter(F.col("event_id") % 2 == 0), 0)
         _land(ev.filter(F.col("event_id") % 2 == 1), 1)

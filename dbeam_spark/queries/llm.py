@@ -8336,7 +8336,7 @@ def avro_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from dbeam_spark.avro.schema import spark_schema_to_avro
-    from dbeam_spark.avro.writer import write_avro
+    from dbeam_spark.avro.writer import unsorted_round_robin, write_avro
     from dbeam_spark.sources.avro import read_avro
 
     ensure_utc(spark)
@@ -8368,12 +8368,13 @@ def avro_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.isfile(os.path.join(out, "_ROUNDTRIP_OK")):
         os.makedirs(root, exist_ok=True)
         tmp = f"{out}.tmp-{uuid.uuid4().hex[:8]}"
-        write_avro(
-            li.repartition(n_parts),
-            tmp,
-            spark_schema_to_avro(li.schema, "lineitem"),
-            codec="deflate6",
-        )
+        with unsorted_round_robin(spark):
+            write_avro(
+                li.repartition(n_parts),
+                tmp,
+                spark_schema_to_avro(li.schema, "lineitem"),
+                codec="deflate6",
+            )
         with open(os.path.join(tmp, "_ROUNDTRIP_OK"), "w") as fh:
             fh.write(key)
         try:

@@ -3,6 +3,20 @@
 Defaults are scale-oriented: AQE on (runtime coalescing + skew-join
 splitting), Arrow on (fast pandas interchange for the few Pandas-UDF
 operators), UTC session time so date semantics are deterministic.
+
+Python worker daemon (``local[...]`` masters only). Every Python UDF
+task (``mapInArrow``/``mapInPandas``: the Avro writer, the JDBC Arrow
+handoff, the dedup kernels) pays a fixed start cost before its first
+row, and on CPython 3.11 most of it was ``importlib.invalidate_caches()``
+re-reading ``pyspark.zip`` and the spark-core jar once per zipimporter
+on every task: 0.2-0.4 s. ``dbeam_spark.worker_daemon`` is pyspark's
+daemon with ``zipimporter.invalidate_caches`` patched to re-read an
+archive only when its inode, size or mtime changed; the forked workers
+inherit it. The package root joins ``spark.executorEnv.PYTHONPATH`` so
+the daemon (and any worker code that imports the package) starts from
+any cwd. Off for non-local masters, whose executors may not have the
+package installed: they keep ``pyspark.daemon``. A caller's own
+``spark.python.daemon.module`` wins; its PYTHONPATH is kept in front.
 """
 
 from __future__ import annotations
@@ -12,6 +26,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+
+# The directory holding the dbeam_spark package, for worker PYTHONPATH.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -45,7 +62,16 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        extra_conf.setdefault(
+            "spark.python.daemon.module", "dbeam_spark.worker_daemon"
+        )
+        key = "spark.executorEnv.PYTHONPATH"
+        extra_conf[key] = os.pathsep.join(
+            p for p in (extra_conf.get(key), _PACKAGE_ROOT) if p
+        )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -63,8 +89,14 @@ def ensure_utc(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# The py4j gateway whose JVM already has the WindowExec level set.
+_quieted_gateway = None
+
+
 def _quiet_bounded_window_warn(spark: SparkSession) -> None:
-    """Set the WindowExec logger to ERROR for this JVM.
+    """Set the WindowExec logger to ERROR, once per JVM (keyed on the
+    py4j gateway): the level is JVM-wide, and resolving the log4j
+    classes over py4j costs ~14 ms, paid on every table load before.
 
     Every remaining unpartitioned window in the engine runs over a
     frame whose cardinality is bounded by calendar grain, enum
@@ -75,11 +107,19 @@ def _quiet_bounded_window_warn(spark: SparkSession) -> None:
     global windows are the real hazard and are guarded structurally
     by tests/test_plan_regressions.py, so the blanket WARN is pure
     noise here. Best-effort: never fails a query over logging."""
+    global _quieted_gateway
+    sc = spark.sparkContext
+    if sc._gateway is _quieted_gateway:
+        return
     try:
-        jvm = spark.sparkContext._jvm
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            "org.apache.spark.sql.execution.window.WindowExec",
-            jvm.org.apache.logging.log4j.Level.ERROR,
-        )
+        _set_window_log_level(sc._jvm)
     except Exception:
-        pass
+        return
+    _quieted_gateway = sc._gateway
+
+
+def _set_window_log_level(jvm) -> None:
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )

@@ -52,6 +52,38 @@ def test_minhash_lsh_equals_exhaustive(docs):
     assert lsh == exhaustive
 
 
+def test_minhash_lsh_verify_tiers_agree(spark, monkeypatch):
+    """With its tier caps lowered, minhash_lsh_pairs verifies the
+    sf0.01 documents' candidates in one Arrow pass
+    (`_pairwise_text_jaccard`), then by the distributed array fallback
+    (`_verified_jaccard_arrays`); both return the driver tier's pairs."""
+    import os
+
+    from dbeam_spark.sources.files import load_table
+    from test_queries_oracle import SF_DIR
+
+    docs = load_table(
+        spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01"), "documents"
+    )
+    tiers = []
+    for name in ("_pairwise_text_jaccard", "_verified_jaccard_arrays"):
+        tier = getattr(dedup, name)
+        monkeypatch.setattr(
+            dedup, name, lambda *a, _t=tier, _n=name: tiers.append(_n) or _t(*a)
+        )
+
+    def pairs():
+        return sorted(map(tuple, dedup.minhash_lsh_pairs(docs, 0.5).collect()))
+
+    driver = pairs()
+    assert driver and tiers == []
+    monkeypatch.setattr(dedup, "_DRIVER_VERIFY_PAIRS", 0)
+    assert pairs() == driver
+    monkeypatch.setattr(dedup, "_RAW_PAIR_CAP", 0)
+    assert pairs() == driver
+    assert tiers == ["_pairwise_text_jaccard", "_verified_jaccard_arrays"]
+
+
 def test_bucket_group_expansion_matches_direct(spark):
     """The split _bucket_groups → _expand_bucket_pairs pipeline (the
     r9 shared-checkpoint shape inside minhash_lsh_pairs) on every

@@ -459,16 +459,17 @@ def time_export(spark, sf_dir: str) -> tuple[float, int]:
     import tempfile
 
     from dbeam_spark.avro.schema import spark_schema_to_avro
-    from dbeam_spark.avro.writer import write_avro
+    from dbeam_spark.avro.writer import unsorted_round_robin, write_avro
     from dbeam_spark.sources.files import load_table
 
     li = load_table(spark, sf_dir, "lineitem").repartition(32)
     out = tempfile.mkdtemp(prefix="scale_avro_")
     t0 = time.monotonic()
-    stats = write_avro(
-        li, out, spark_schema_to_avro(li.schema, "lineitem"),
-        codec="deflate6",
-    )
+    with unsorted_round_robin(spark):
+        stats = write_avro(
+            li, out, spark_schema_to_avro(li.schema, "lineitem"),
+            codec="deflate6",
+        )
     el = time.monotonic() - t0
     shutil.rmtree(out, ignore_errors=True)
     return round(el, 2), sum(s["rows"] for s in stats)
