@@ -44,6 +44,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 
 from dbeam_spark.avro import ocf
+from dbeam_spark.avro.reader import count_ocf_rows
+from dbeam_spark.avro.schema import _avro_primitive
 
 _BLOCK_ROWS = 4096
 
@@ -109,8 +111,6 @@ def _array_as_bytes(list_type):
     """--arrayMode=bytes: the cell is the Avro binary encoding of the
     array with ["null", T] items, T the Avro type of the element."""
     from pyspark.sql.pandas.types import from_arrow_type
-
-    from dbeam_spark.avro.schema import _avro_primitive
 
     item = _avro_primitive(from_arrow_type(list_type.value_type), False)
     array = _make_cell_encoder({"type": "array", "items": ["null", item]})
@@ -423,8 +423,6 @@ def write_avro(
         schema = json.loads(schema_json)
         path = os.path.join(output_dir, f"{filename_prefix}-{pid:05d}.avro")
         if resume and os.path.exists(path):
-            from dbeam_spark.avro.reader import count_ocf_rows
-
             # drain the iterator without encoding (the task must still
             # consume its input), then credit the landed file
             for _ in batches:

@@ -31,22 +31,14 @@ from __future__ import annotations
 
 import random
 import re
-import sys
 import zlib
 from fractions import Fraction
 
 import numpy as np
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbeam_spark.operators.util import rebalance_for_arrow, round_half_up
-
-# The batch kernels below run inside mapInPandas closures on Python
-# workers. Ship them BY VALUE, like the closures themselves, so a
-# worker never imports this package: a driver that adds the checkout
-# to its own sys.path does not pass that path on to its workers.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # Mersenne prime 2^31-1: (a*x+b) stays < 2^62, no int64 overflow.
 _MERSENNE = 2147483647

@@ -2,14 +2,41 @@
 
 - `cosine` is a pure Catalyst expression (zip_with/aggregate): the
   math runs JVM-side in codegen, no Python, no UDF.
-- `knn_bruteforce`: broadcast the (small) query set, score map-only
-  across the base table, per-query top-k. Zero shuffle on the base
-  table — the plan that scales to 100 TB of vectors.
+- `knn_bruteforce`: the (small) query set ships in the task closure,
+  the base table is scored map-only, per-query top-k. Zero shuffle on
+  the base table — the plan that scales to 100 TB of vectors.
 - `knn_ivf`: inverted-file ANN — broadcast coarse centroids, assign
   rows to cells (map-only), probe the nprobe nearest cells per query.
   Cuts scored candidates by ~ncells/nprobe at the cost of recall.
 - `embedding_dedup_pairs`: exact pairwise cosine >= threshold; the
   documented scale path buckets by random-hyperplane signs first.
+
+The kNN operators share one set of kernels:
+
+- `_collect_vectors`: a small side collected for the task closure —
+  the queries or new batch of `knn_bruteforce`, `knn_int8`,
+  `knn_batch_candidates`, `knn_pq` and `query_ivf_index`, and the
+  size-gated comparison matrix of `knn_join` and
+  `embedding_dedup_pairs`.
+- `_seq_norms` / `_seq_cosine`: the exact tier's arithmetic —
+  `knn_bruteforce`, `knn_batch_candidates` (raw sims, rounded to 6 dp
+  before its in-kernel selection), `knn_join`'s rescore, `knn_int8`'s
+  norms and `queries.llm.embedding_pair_cosine_audit`'s norms.
+- `_assign_cells` (nearest, or `top` nearest, centroids): `knn_ivf`
+  (base rows and query probes), `build_ivf_index`, `append_ivf_index`.
+- `_cell_top_k` (per-cell top-k scorer): `knn_ivf`, `query_ivf_index`.
+- `_top_k`: the per-query ranking window of every kNN operator.
+
+Emitted exact-tier sims never come from BLAS: a matmul sums the
+dimension in pairwise/SIMD order, DuckDB's `list_inner_product` sums
+it left to right, and the last-bit difference flips 6-dp rounding on
+near-ties, so the oracle hashes would not match. `_seq_cosine`
+accumulates left to right and is bit-equal to the oracle; `knn_join`
+uses BLAS only to preselect candidates, then rescores them with it.
+The approximate tiers rank on their own arithmetic — IVF on BLAS
+cosines of normalized vectors, PQ on ADC tables, int8 on integer dots
+of codes — and IVF and PQ are gated by invariants and recall, not by
+the oracle's float bits.
 """
 
 from __future__ import annotations
@@ -54,6 +81,59 @@ def _dim_of(df: DataFrame, vec_col: str) -> int | None:
     return int(row[0]) if row else None
 
 
+def _collect_vectors(df: DataFrame, id_col: str, vec_col: str):
+    """Collect a side that is small by contract (queries, a new batch)
+    for a task closure: (int64 ids, float64 n×dim matrix)."""
+    import numpy as np
+
+    rows = (
+        _as_double(df, vec_col)
+        .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        .collect()
+    )
+    ids = np.array([r["id"] for r in rows], dtype=np.int64)
+    return ids, np.array([r["v"] for r in rows], dtype=np.float64)
+
+
+def _seq_norms(M):
+    """Row L2 norms of an (n × dim) matrix, accumulated left to right
+    over the dimension: bit-equal to DuckDB's
+    sqrt(list_inner_product(v, v)). np.dot's pairwise/SIMD order would
+    flip 6-dp rounding on ties."""
+    import numpy as np
+
+    acc = np.zeros(M.shape[0])
+    for i in range(M.shape[1]):
+        acc = acc + M[:, i] * M[:, i]
+    return np.sqrt(acc)
+
+
+def _seq_cosine(A, B, na=None, nb=None):
+    """(n × m) cosines of A's rows against B's rows, every dot
+    accumulated left to right like `_seq_norms`. `na`/`nb` are the
+    rows' `_seq_norms` when the caller already has them."""
+    import numpy as np
+
+    dots = np.zeros((A.shape[0], B.shape[0]))
+    for i in range(A.shape[1]):
+        dots += A[:, i][:, None] * B[:, i][None, :]
+    if na is None:
+        na = _seq_norms(A)
+    if nb is None:
+        nb = _seq_norms(B)
+    return dots / (na[:, None] * nb[None, :])
+
+
+def _top_k(scored: DataFrame, k: int, order) -> DataFrame:
+    """Per-query top-k of (query_id, neighbor_id, score) rows:
+    `row_number` within query_id by `order`, ties broken by
+    neighbor_id, kept while rank <= k."""
+    w = Window.partitionBy("query_id").orderBy(order, "neighbor_id")
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def knn_bruteforce(
     base: DataFrame,
     queries: DataFrame,
@@ -66,61 +146,35 @@ def knn_bruteforce(
     Returns (query_id, neighbor_id, sim, rank); similarity rounded to
     6 dp before ranking so ordering is reproducible across engines.
     """
-    dim = _dim_of(base, vec_col)
     base = _as_double(base, vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v_base")
     )
-    # The query set is small by contract (it was broadcast in the join
-    # formulation); collect it once and ship it in the task closure.
-    qrows = (
-        _as_double(queries, vec_col)
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("v_q"))
-        .collect()
-    )
-    q_ids = [int(r["query_id"]) for r in qrows]
-    q_vecs = [list(r["v_q"]) for r in qrows]
-    if not q_ids:
+    q_ids, Q = _collect_vectors(queries, id_col, vec_col)
+    if not len(q_ids):
         return base.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank int"
         )
+    nq = _seq_norms(Q)
 
     # Score map-side with blocked numpy instead of a 64-term Catalyst
     # product chain: the chain falls out of whole-stage codegen inside
     # the join and evaluates interpreted per pair (see the measured
-    # cliff in CLAUDE.md). Accumulation is an explicit left-to-right
-    # loop over the dimension, so every dot/norm reproduces the
-    # expression chain (and DuckDB's list_inner_product) bit-for-bit —
-    # np.dot's pairwise/SIMD order would flip 6-dp rounding on ties.
+    # cliff in CLAUDE.md).
     def score(batches):
         import numpy as np
         import pandas as pd
 
-        Q = np.array(q_vecs, dtype=np.float64)  # (m × dim)
-        m, d = Q.shape
-        nq = np.zeros(m)
-        for j in range(m):
-            acc = 0.0
-            for i in range(d):
-                acc = acc + Q[j, i] * Q[j, i]
-            nq[j] = np.sqrt(acc)
-        ids = np.array(q_ids, dtype=np.int64)
+        m = len(q_ids)
         for pdf in batches:
             if not len(pdf):
                 continue
             B = np.array(list(pdf["v_base"]), dtype=np.float64)  # (n × dim)
             n = B.shape[0]
-            dots = np.zeros((n, m))
-            nb = np.zeros(n)
-            for i in range(d):
-                col = B[:, i]
-                dots += col[:, None] * Q.T[i][None, :]
-                nb = nb + col * col
-            nb = np.sqrt(nb)
-            sims = dots / (nq[None, :] * nb[:, None])
+            sims = _seq_cosine(B, Q, nb=nq)
             neigh = pdf["neighbor_id"].to_numpy(dtype=np.int64)
             out = pd.DataFrame(
                 {
-                    "query_id": np.repeat(ids, n),
+                    "query_id": np.repeat(q_ids, n),
                     "neighbor_id": np.tile(neigh, m),
                     "sim_raw": sims.T.reshape(-1),
                 }
@@ -134,12 +188,7 @@ def knn_bruteforce(
     ).select(
         "query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, k, F.desc("sim")).orderBy("query_id", "rank")
 
 
 def knn_int8(
@@ -176,14 +225,8 @@ def knn_int8(
     base = _as_double(base, vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v_base")
     )
-    qrows = (
-        _as_double(queries, vec_col)
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("v_q"))
-        .collect()
-    )
-    q_ids = [int(r["query_id"]) for r in qrows]
-    q_vecs = [list(r["v_q"]) for r in qrows]
-    if not q_ids:
+    q_ids, Q = _collect_vectors(queries, id_col, vec_col)
+    if not len(q_ids):
         return base.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, dot_q long, rank int"
         )
@@ -192,12 +235,7 @@ def knn_int8(
         """(n × d) float64 → int64 codes; zero-norm rows masked out."""
         import numpy as np
 
-        n, d = M.shape
-        nrm = np.zeros(n)
-        for i in range(d):
-            col = M[:, i]
-            nrm = nrm + col * col
-        nrm = np.sqrt(nrm)
+        nrm = _seq_norms(M)
         ok = nrm > 0
         safe = np.where(ok, nrm, 1.0)
         X = M / safe[:, None] * 127.0
@@ -208,9 +246,8 @@ def knn_int8(
         import numpy as np
         import pandas as pd
 
-        Q = np.array(q_vecs, dtype=np.float64)
         Qc, q_ok = _codes(Q)
-        ids = np.array(q_ids, dtype=np.int64)[q_ok]
+        ids = q_ids[q_ok]
         Qc = Qc[q_ok]
         m = len(ids)
         for pdf in batches:
@@ -238,14 +275,7 @@ def knn_int8(
     scored = rebalance_for_arrow(base).mapInPandas(
         score, "query_id long, neighbor_id long, dot_q long"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_q"), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, k, F.desc("dot_q")).orderBy("query_id", "rank")
 
 
 def knn_batch_candidates(
@@ -261,51 +291,31 @@ def knn_batch_candidates(
     existing node's top-k, so the kernel keeps k candidates per base
     row IN the Arrow pass: output is ≤ k·|base| rows, the batch ships
     in the task closure, and the base is scored map-only (knn_bruteforce
-    transposed — same bit-exact sequential dot/norm loops, same 6-dp
-    rounding BEFORE selection so ties break like the full recompute)."""
+    transposed — same `_seq_cosine` sims, same 6-dp rounding BEFORE
+    selection so ties break like the full recompute)."""
     import numpy as np
 
     base = _as_double(base, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("v_base")
     )
-    qrows = (
-        _as_double(new_batch, vec_col)
-        .select(F.col(id_col).alias("rid"), F.col(vec_col).alias("v_q"))
-        .collect()
-    )
-    n_ids = [int(r["rid"]) for r in qrows]
-    n_vecs = [list(r["v_q"]) for r in qrows]
-    if not n_ids:
+    new_ids, Q = _collect_vectors(new_batch, id_col, vec_col)
+    if not len(new_ids):
         return base.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, sim double"
         )
+    nq = _seq_norms(Q)
 
     def score(batches):
         import pandas as pd
 
-        Q = np.array(n_vecs, dtype=np.float64)  # (m × d)
-        m, d = Q.shape
-        nq = np.zeros(m)
-        for j in range(m):
-            acc = 0.0
-            for i in range(d):
-                acc = acc + Q[j, i] * Q[j, i]
-            nq[j] = np.sqrt(acc)
-        new_ids = np.array(n_ids, dtype=np.int64)
+        m = len(new_ids)
         t = min(k, m)
         for pdf in batches:
             if not len(pdf):
                 continue
             B = np.array(list(pdf["v_base"]), dtype=np.float64)
             n = B.shape[0]
-            dots = np.zeros((n, m))
-            nb = np.zeros(n)
-            for i in range(d):
-                col = B[:, i]
-                dots += col[:, None] * Q.T[i][None, :]
-                nb = nb + col * col
-            nb = np.sqrt(nb)
-            sims = np.round(dots / (nb[:, None] * nq[None, :]), 6)
+            sims = np.round(_seq_cosine(B, Q, nb=nq), 6)
             b_ids = pdf["query_id"].to_numpy(dtype=np.int64)
             # top-k per BASE row on (sim desc, new_id asc) — the same
             # tie order the full recompute's ranking window uses
@@ -352,6 +362,89 @@ def _coarse_centroids(based, n_cells, id_col, vec_col):
     return cell_ids, Cn
 
 
+def _assign_cells(based, cell_ids, Cn, id_col, vec_col, top=1):
+    """Map-only nearest-centroid assignment: (rid, v, cell) rows with
+    the codebook shipped in the task closure (√n×dim — broadcastable
+    at any corpus size). `top` > 1 emits one row per each of the `top`
+    nearest cells (a query's probes), nearest first."""
+    import numpy as np
+
+    bc = based.sparkSession.sparkContext.broadcast((cell_ids, Cn))
+
+    def assign(batches):
+        import pandas as pd
+
+        cells_, Cn_ = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            A = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            An = A / np.maximum(
+                np.linalg.norm(A, axis=1, keepdims=True), 1e-300
+            )
+            S = An @ Cn_.T
+            if top == 1:
+                # ties: argmax takes the first (lowest) cell
+                idx = np.argmax(S, axis=1)[:, None]
+            else:
+                idx = np.argsort(-S, axis=1, kind="stable")[:, :top]
+            rows = np.repeat(np.arange(len(pdf)), idx.shape[1])
+            yield pd.DataFrame(
+                {
+                    "rid": pdf["rid"].to_numpy()[rows],
+                    "v": pdf["v"].iloc[rows].to_numpy(),
+                    "cell": cells_[idx].ravel(),
+                }
+            )
+
+    from dbeam_spark.operators.util import rebalance_for_arrow
+
+    return rebalance_for_arrow(
+        based.select(F.col(id_col).alias("rid"), F.col(vec_col).alias("v"))
+    ).mapInPandas(assign, "rid long, v array<double>, cell int")
+
+
+def _cell_top_k(k: int):
+    """Cogroup scorer for one IVF cell: the cell's base rows × the
+    queries probing it, per-query top-k WITHIN the cell (k rows per
+    query per cell reach the global rank — n_probe·k candidates per
+    query, never the cell contents). Cosine is a matmul of the
+    normalized vectors; a stable argsort keeps the earlier base row
+    on ties, and self-matches are excluded."""
+
+    def score(key, a_pdf, q_pdf):
+        import numpy as np
+        import pandas as pd
+
+        if not len(a_pdf) or not len(q_pdf):
+            return pd.DataFrame(
+                {"query_id": [], "neighbor_id": [], "sim": []}
+            ).astype(
+                {"query_id": "int64", "neighbor_id": "int64", "sim": "float64"}
+            )
+        B = np.stack(a_pdf["v"].to_numpy()).astype(np.float64)
+        b_ids = a_pdf["rid"].to_numpy(dtype=np.int64)
+        Q = np.stack(q_pdf["v"].to_numpy()).astype(np.float64)
+        q_ids = q_pdf["rid"].to_numpy(dtype=np.int64)
+        Bn = B / np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-300)
+        Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
+        S = Qn @ Bn.T
+        S[q_ids[:, None] == b_ids[None, :]] = -np.inf  # self-match
+        t = min(k, S.shape[1])
+        idx = np.argsort(-S, axis=1, kind="stable")[:, :t]
+        sims = np.take_along_axis(S, idx, axis=1).ravel()
+        keep = sims > -np.inf
+        return pd.DataFrame(
+            {
+                "query_id": np.repeat(q_ids, t)[keep],
+                "neighbor_id": b_ids[idx.ravel()][keep],
+                "sim": np.round(sims[keep], 6),
+            }
+        )
+
+    return score
+
+
 def knn_ivf(
     base: DataFrame,
     queries: DataFrame,
@@ -384,122 +477,23 @@ def knn_ivf(
     centroids and the base table can be *stored* partitioned by cell,
     making each query touch only nprobe/ncells of the data.
     """
-    import numpy as np
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
-
-    dim = _dim_of(base, vec_col)  # noqa: F841 — kept for API symmetry
     based = _as_double(base, vec_col)
     if n_cells is None:
         n_cells = max(10, int(based.count() ** 0.5))
-
-    # Deterministic coarse centroids: min-id row of every id-stride —
-    # a map-side-combinable min_by aggregate (the previous window
-    # formulation shuffled the whole table by cell). The centroid
-    # matrix is c×dim ≈ √n×dim: 16 MB at a BILLION rows — safe to
-    # hold on the driver and broadcast, same residency as k-means
-    # centroids everywhere.
     cell_ids, Cn = _coarse_centroids(based, n_cells, id_col, vec_col)
-    bc = based.sparkSession.sparkContext.broadcast((cell_ids, Cn))
-
-    def _assign(top: int):
-        """Map-only nearest-centroid assignment (numpy matmul against
-        the broadcast centroid matrix — the 64-term cosine chain falls
-        out of whole-stage codegen inside joins, the measured cliff in
-        CLAUDE.md, so vector math stays in Arrow-batched numpy)."""
-
-        def fn(batches):
-            import pandas as pd
-
-            cells_, Cn_ = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                A = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                An = A / np.maximum(
-                    np.linalg.norm(A, axis=1, keepdims=True), 1e-300
-                )
-                S = An @ Cn_.T
-                if top == 1:
-                    # ties: argmax takes the first (lowest cell id),
-                    # matching the old orderBy(desc(csim), cell)
-                    idx = np.argmax(S, axis=1)
-                    yield pd.DataFrame(
-                        {
-                            "rid": pdf["rid"].to_numpy(),
-                            "v": pdf["v"],
-                            "cell": cells_[idx],
-                        }
-                    )
-                else:
-                    t = min(top, S.shape[1])
-                    idx = np.argsort(-S, axis=1, kind="stable")[:, :t]
-                    n_rows = len(pdf)
-                    yield pd.DataFrame(
-                        {
-                            "rid": np.repeat(pdf["rid"].to_numpy(), t),
-                            "v": pdf["v"].iloc[
-                                np.repeat(np.arange(n_rows), t)
-                            ].to_numpy(),
-                            "cell": cells_[idx].ravel(),
-                        }
-                    )
-
-        return fn
-
-    schema = "rid long, v array<double>, cell int"
-    assigned = rebalance_for_arrow(
-        based.select(F.col(id_col).alias("rid"), F.col(vec_col).alias("v"))
-    ).mapInPandas(_assign(1), schema)
-    probed = rebalance_for_arrow(
-        _as_double(queries, vec_col).select(
-            F.col(id_col).alias("rid"), F.col(vec_col).alias("v")
-        )
-    ).mapInPandas(_assign(n_probe), schema)
-
-    def _score(key, a_pdf, q_pdf):
-        """Per-cell blocked matmul: cell base rows × this cell's
-        probing queries, per-query top-k WITHIN the cell (k rows per
-        query per cell reach the global rank — n_probe·k candidates
-        per query, never the cell contents)."""
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "sim": []}
-        ).astype({"query_id": "int64", "neighbor_id": "int64", "sim": "float64"})
-        if not len(a_pdf) or not len(q_pdf):
-            return empty
-        B = np.stack(a_pdf["v"].to_numpy()).astype(np.float64)
-        b_ids = a_pdf["rid"].to_numpy(dtype=np.int64)
-        Q = np.stack(q_pdf["v"].to_numpy()).astype(np.float64)
-        q_ids = q_pdf["rid"].to_numpy(dtype=np.int64)
-        Bn = B / np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-300)
-        Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-        S = Qn @ Bn.T
-        S[q_ids[:, None] == b_ids[None, :]] = -np.inf  # self-match
-        t = min(k, S.shape[1])
-        idx = np.argsort(-S, axis=1, kind="stable")[:, :t]
-        sims = np.take_along_axis(S, idx, axis=1).ravel()
-        keep = sims > -np.inf
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(q_ids, t)[keep],
-                "neighbor_id": b_ids[idx.ravel()][keep],
-                "sim": np.round(sims[keep], 6),
-            }
-        )
-
+    assigned = _assign_cells(based, cell_ids, Cn, id_col, vec_col)
+    probed = _assign_cells(
+        _as_double(queries, vec_col), cell_ids, Cn, id_col, vec_col,
+        top=n_probe,
+    )
     scored = (
         assigned.groupBy("cell")
         .cogroup(probed.groupBy("cell"))
-        .applyInPandas(_score, "query_id long, neighbor_id long, sim double")
+        .applyInPandas(
+            _cell_top_k(k), "query_id long, neighbor_id long, sim double"
+        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, k, F.desc("sim")).orderBy("query_id", "rank")
 
 
 def embedding_dedup_pairs(
@@ -538,9 +532,8 @@ def embedding_dedup_pairs(
         return rh_lsh_embedding_pairs(
             df, threshold, id_col=id_col, vec_col=vec_col
         )
-    rows = d.collect()  # comparison matrix: bounded by the gate above
-    ids = np.array([r["pid"] for r in rows], dtype=np.int64)
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)
+    # comparison matrix: bounded by the gate above
+    ids, mat = _collect_vectors(df, id_col, vec_col)
     mat_n = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     bc = d.sparkSession.sparkContext.broadcast((ids, mat_n))
 
@@ -931,23 +924,17 @@ def knn_join(
     )
     if d.count() > max_broadcast_rows:
         return knn_ivf(df, df, k=k, id_col=id_col, vec_col=vec_col)
-    rows = d.collect()
-    ids = np.array([r["rid"] for r in rows], dtype=np.int64)
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)
-    bc = d.sparkSession.sparkContext.broadcast((ids, mat))
+    bc = d.sparkSession.sparkContext.broadcast(
+        _collect_vectors(df, id_col, vec_col)
+    )
     pad = k + 8
 
     def score(batches):
         import pandas as pd
 
         b_ids, B = bc.value
-        n, dim = B.shape
-        # norms with explicit left-to-right accumulation: bit-equal
-        # to the SQL oracle's list_inner_product (see knn_bruteforce)
-        nb = np.zeros(n)
-        for i in range(dim):
-            nb = nb + B[:, i] * B[:, i]
-        nb = np.sqrt(nb)
+        n = B.shape[0]
+        nb = _seq_norms(B)
         Bt = np.ascontiguousarray(B.T)
         # cap the m×n preselection temp at ~4M doubles (32 MB): big
         # enough for dgemm efficiency, small enough that 32 workers'
@@ -960,23 +947,13 @@ def knn_join(
         # id) lexsort cut would have kept
         presel = pad + 8
 
-        def exact_sim(a_row, b_rows, nb_sel, na_j):
-            # left-to-right accumulation, identical to the oracle
-            acc = np.zeros(len(b_rows))
-            for i in range(dim):
-                acc = acc + a_row[i] * b_rows[:, i]
-            return acc / (na_j * nb_sel)
-
         for pdf in batches:
             if not len(pdf):
                 continue
             A = np.stack(pdf["v"].to_numpy()).astype(np.float64)
             a_ids = pdf["rid"].to_numpy(dtype=np.int64)
             m = A.shape[0]
-            na = np.zeros(m)
-            for i in range(dim):
-                na = na + A[:, i] * A[:, i]
-            na = np.sqrt(na)
+            na = _seq_norms(A)
             q_out, n_out, s_out = [], [], []
             for c0 in range(0, m, chunk_m):
                 Ac = A[c0: c0 + chunk_m]
@@ -1005,9 +982,9 @@ def knn_join(
                         if len(wide) > len(sel):
                             sel = wide
                     sel = sel[b_ids[sel] != a_ids[j]]
-                    sims_sel = exact_sim(
-                        A[j], B[sel], nb[sel], na[j]
-                    )
+                    sims_sel = _seq_cosine(
+                        A[j : j + 1], B[sel], na[j : j + 1], nb[sel]
+                    )[0]
                     order = np.lexsort((b_ids[sel], -sims_sel))[:pad]
                     q_out.append(np.full(len(order), a_ids[j]))
                     n_out.append(b_ids[sel][order])
@@ -1027,12 +1004,7 @@ def knn_join(
     ).select(
         "query_id", "neighbor_id", F.round("sim_raw", 6).alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, k, F.desc("sim")).orderBy("query_id", "rank")
 
 
 def knn_graph_artifact(
@@ -1302,13 +1274,7 @@ def knn_pq(
     B = np.array(books, dtype=np.float64)
     codes = pq_encode(normed, books, id_col=id_col, vec_col=vec_col)
 
-    qrows = (
-        _as_double(queries, vec_col)
-        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("v"))
-        .collect()
-    )
-    q_ids = [int(r["qid"]) for r in qrows]
-    Q = np.array([r["v"] for r in qrows], dtype=np.float64)
+    q_ids, Q = _collect_vectors(queries, id_col, vec_col)
     Q /= np.linalg.norm(Q, axis=1, keepdims=True)
     mm, kk, ss = B.shape
     # tables[q, j, c] = ||Q[q, sub j] - codeword c||²
@@ -1344,10 +1310,8 @@ def knn_pq(
     scored = codes.mapInPandas(
         score, "query_id long, neighbor_id long, adist double"
     )
-    w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        _top_k(scored, k, "adist")
         .select(
             "query_id",
             "neighbor_id",
@@ -1461,41 +1425,6 @@ def covariance_exact(
     (this is its (cov, mean, n) projection)."""
     cov, mean, n, _s1, _s2 = covariance_sufficient_stats(df, vec_col, scale)
     return cov, mean, n
-
-
-def _assign_cells(based, cell_ids, Cn, id_col, vec_col):
-    """Map-only nearest-centroid assignment: (rid, v, cell) rows with
-    the codebook shipped in the task closure (√n×dim — broadcastable
-    at any corpus size)."""
-    import numpy as np
-
-    bc = based.sparkSession.sparkContext.broadcast((cell_ids, Cn))
-
-    def assign(batches):
-        import pandas as pd
-
-        cells_, Cn_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            An = A / np.maximum(
-                np.linalg.norm(A, axis=1, keepdims=True), 1e-300
-            )
-            idx = np.argmax(An @ Cn_.T, axis=1)
-            yield pd.DataFrame(
-                {
-                    "rid": pdf["rid"].to_numpy(),
-                    "v": pdf["v"],
-                    "cell": cells_[idx],
-                }
-            )
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
-
-    return rebalance_for_arrow(
-        based.select(F.col(id_col).alias("rid"), F.col(vec_col).alias("v"))
-    ).mapInPandas(assign, "rid long, v array<double>, cell int")
 
 
 def build_ivf_index(
@@ -1667,17 +1596,11 @@ def query_ivf_index(
     meta = _json.loads((Path(index_dir) / "_CENTROIDS.json").read_text())
     cell_ids = np.array(meta["cell_ids"], dtype=np.int64)
     Cn = np.array(meta["centroids_normed"], dtype=np.float64)
-    qrows = (
-        _as_double(queries, vec_col)
-        .select(F.col(id_col).alias("rid"), F.col(vec_col).alias("v"))
-        .collect()
-    )
-    if not qrows:
+    q_ids, Q = _collect_vectors(queries, id_col, vec_col)
+    if not len(q_ids):
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank int"
         )
-    Q = np.array([list(r["v"]) for r in qrows], dtype=np.float64)
-    q_ids = np.array([int(r["rid"]) for r in qrows], dtype=np.int64)
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
     t = min(n_probe, Cn.shape[0])
     probe_idx = np.argsort(-(Qn @ Cn.T), axis=1, kind="stable")[:, :t]
@@ -1693,47 +1616,11 @@ def query_ivf_index(
     base_cells = _index_cells(spark, index_dir).filter(
         F.col("cell").isin(probe_cells)
     )
-
-    def score(key, a_pdf, q_pdf):
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "sim": []}
-        ).astype(
-            {"query_id": "int64", "neighbor_id": "int64", "sim": "float64"}
-        )
-        if not len(a_pdf) or not len(q_pdf):
-            return empty
-        B = np.stack(a_pdf["v"].to_numpy()).astype(np.float64)
-        b_ids = a_pdf["rid"].to_numpy(dtype=np.int64)
-        Qc = np.stack(q_pdf["v"].to_numpy()).astype(np.float64)
-        qc_ids = q_pdf["rid"].to_numpy(dtype=np.int64)
-        Bn = B / np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-300)
-        Qcn = Qc / np.maximum(
-            np.linalg.norm(Qc, axis=1, keepdims=True), 1e-300
-        )
-        S = Qcn @ Bn.T
-        S[qc_ids[:, None] == b_ids[None, :]] = -np.inf
-        tt = min(k, S.shape[1])
-        idx = np.argsort(-S, axis=1, kind="stable")[:, :tt]
-        sims = np.take_along_axis(S, idx, axis=1).ravel()
-        keep = sims > -np.inf
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qc_ids, tt)[keep],
-                "neighbor_id": b_ids[idx.ravel()][keep],
-                "sim": np.round(sims[keep], 6),
-            }
-        )
-
     scored = (
         base_cells.groupBy("cell")
         .cogroup(probed.groupBy("cell"))
-        .applyInPandas(score, "query_id long, neighbor_id long, sim double")
+        .applyInPandas(
+            _cell_top_k(k), "query_id long, neighbor_id long, sim double"
+        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, k, F.desc("sim")).orderBy("query_id", "rank")

@@ -11,6 +11,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbeam_spark.operators import dedup, multimodal, sampling, similarity, text
+from dbeam_spark.operators.multimodal import (
+    bmp_row_stride,
+    decode_bmp,
+    decode_jpeg,
+    decode_png,
+    decode_wav,
+    demux_mp4,
+    encode_bmp,
+    encode_jpeg,
+    encode_mp4,
+    encode_png,
+    encode_wav,
+    mp4_sample_bytes,
+    screen_jpeg,
+)
 from dbeam_spark.operators.util import bounded_grain_window
 from dbeam_spark.queries.registry import register
 from dbeam_spark.session import ensure_utc
@@ -1122,12 +1137,6 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     def part(batches):
         import pandas as pd
 
-        from dbeam_spark.operators.multimodal import (
-            bmp_row_stride,
-            decode_bmp,
-            encode_bmp,
-        )
-
         for pdf in batches:
             ids, ws, hs, nb, ok = [], [], [], [], []
             for did, txt in zip(pdf["doc_id"], pdf["text"]):
@@ -1203,11 +1212,6 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def part(batches):
         import pandas as pd
-
-        from dbeam_spark.operators.multimodal import (
-            decode_png,
-            encode_png,
-        )
 
         for pdf in batches:
             ids, ws, hs, rl, nf, ok = [], [], [], [], [], []
@@ -1290,11 +1294,6 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     def part(batches):
         import numpy as np
         import pandas as pd
-
-        from dbeam_spark.operators.multimodal import (
-            decode_jpeg,
-            encode_jpeg,
-        )
 
         for pdf in batches:
             ids, ws, hs, nb, ns, ok = [], [], [], [], [], []
@@ -1394,11 +1393,6 @@ def multimodal_jpeg_sampled_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     def screen_part(batches):
         import pandas as pd
 
-        from dbeam_spark.operators.multimodal import (
-            encode_jpeg,
-            screen_jpeg,
-        )
-
         for pdf in batches:
             ids, valid, blocks, scan_ok = [], [], [], []
             for did, txt in zip(pdf["doc_id"], pdf["text"]):
@@ -1424,11 +1418,6 @@ def multimodal_jpeg_sampled_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     def decode_part(batches):
         import numpy as np
         import pandas as pd
-
-        from dbeam_spark.operators.multimodal import (
-            decode_jpeg,
-            encode_jpeg,
-        )
 
         for pdf in batches:
             ids, ok = [], []
@@ -1537,12 +1526,6 @@ def multimodal_mp4_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     def part(batches):
         import pandas as pd
 
-        from dbeam_spark.operators.multimodal import (
-            demux_mp4,
-            encode_mp4,
-            mp4_sample_bytes,
-        )
-
         for pdf in batches:
             ids, ws, hs, nsam, nch, tb, dur, codec, ok = (
                 [], [], [], [], [], [], [], [], [],
@@ -1626,11 +1609,6 @@ def multimodal_wav_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def part(batches):
         import pandas as pd
-
-        from dbeam_spark.operators.multimodal import (
-            decode_wav,
-            encode_wav,
-        )
 
         for pdf in batches:
             ids, nf, fr, nb, nw, ok = [], [], [], [], [], []
@@ -5185,7 +5163,7 @@ def embedding_pair_cosine_audit(
     so the 1e-6-quantized rollup still hash-matches. O(n) pairs —
     the audit costs one scan + one join at any corpus size."""
     from dbeam_spark.operators.ranking import global_ranked
-    from dbeam_spark.operators.similarity import _as_double
+    from dbeam_spark.operators.similarity import _as_double, _seq_norms
 
     emb = _as_double(_emb(spark, sf_dir), "embedding")
     h = emb.select(
@@ -5215,16 +5193,11 @@ def embedding_pair_cosine_audit(
                 continue
             A = np.array(list(pdf["va"]), dtype=np.float64)
             B = np.array(list(pdf["vb"]), dtype=np.float64)
-            n, d = A.shape
-            dots = np.zeros(n)
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            for i in range(d):
+            dots = np.zeros(len(A))
+            for i in range(A.shape[1]):
                 dots = dots + A[:, i] * B[:, i]
-                na = na + A[:, i] * A[:, i]
-                nb = nb + B[:, i] * B[:, i]
             yield pd.DataFrame(
-                {"sim_raw": dots / (np.sqrt(na) * np.sqrt(nb))}
+                {"sim_raw": dots / (_seq_norms(A) * _seq_norms(B))}
             )
 
     return (
@@ -7310,13 +7283,7 @@ def knn_graph_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = g_old.select(
         "query_id", "neighbor_id", "sim"
     ).unionByName(cand)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), "neighbor_id"
-    )
-    upd_old = (
-        merged.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-    )
+    upd_old = similarity._top_k(merged, 3, F.desc("sim"))
     new_edges = similarity.knn_bruteforce(emb, new, k=3).select(
         "query_id", "neighbor_id", "sim", F.col("rank").cast("int")
     )

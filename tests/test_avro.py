@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import glob
+import os
 import re
 
 import pytest
@@ -321,7 +322,8 @@ def test_read_avro_plans_from_the_header_alone(spark, tmp_path, monkeypatch):
     """read_avro and compact_runs take the schema from a part file's
     header: with the reader's value decoders patched to raise on the
     driver, both still plan (data decoding happens in the tasks), with
-    the right schema."""
+    the right schema. The reader pickles by value, so the patch ships
+    to the tasks too: it raises only in the driver's process."""
     from dbeam_spark.avro import reader
     from dbeam_spark.jobs.compact_runs import compact_runs
     from dbeam_spark.sources.avro import read_avro
@@ -334,8 +336,13 @@ def test_read_avro_plans_from_the_header_alone(spark, tmp_path, monkeypatch):
         write_avro(df, str(tmp_path / run), avro)
         (tmp_path / run / "_SUCCESS").write_text("")
 
+    driver_pid = os.getpid()
+    make_decoder = reader._make_decoder
+
     def decode_on_driver(avro_type):
-        raise AssertionError("read a data block on the driver")
+        if os.getpid() == driver_pid:
+            raise AssertionError("read a data block on the driver")
+        return make_decoder(avro_type)
 
     monkeypatch.setattr(reader, "_make_decoder", decode_on_driver)
     back = read_avro(spark, str(tmp_path / "run_00000"))

@@ -12,9 +12,16 @@ from dbeam_spark.queries import QUERIES
 SF_DIR = "/root/testdata/sf0.001"
 
 
+_PLANS: dict[str, str] = {}
+
+
 def plan_of(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
+    """Executed plan of a registered query, planned once per test
+    session: the registry sweep reuses the named tests' plans."""
+    if name not in _PLANS:
+        df = QUERIES[name](spark, SF_DIR)
+        _PLANS[name] = df._jdf.queryExecution().executedPlan().toString()
+    return _PLANS[name]
 
 
 def test_q5_star_join_broadcasts_all_dims(spark):
@@ -268,10 +275,8 @@ def test_no_unpartitioned_window_in_any_registered_query(spark):
     the list. Any query not in BOUNDED_GLOBAL_WINDOW_OK (with a
     written boundedness argument) fails here."""
     offenders = {}
-    for name, fn in sorted(QUERIES.items()):
-        df = fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        u = _unpartitioned_windows(plan)
+    for name in sorted(QUERIES):
+        u = _unpartitioned_windows(plan_of(spark, name))
         if u and name not in BOUNDED_GLOBAL_WINDOW_OK:
             offenders[name] = u[0][:160]
     assert not offenders, (

@@ -93,47 +93,68 @@ _FOREIGN_CWD_CHILD = r'''
 import json, os, sys
 
 sys.path.insert(0, sys.argv[1])  # the checkout, on the driver only
-from dbeam_spark.jobs import jdbc_avro_job
-from dbeam_spark.options import JdbcExportOptions
 from dbeam_spark.queries import QUERIES
-from dbeam_spark.session import get_spark
 
-spark = get_spark("foreign-cwd", master="local[2]", shuffle_partitions=2)
-rows = {
-    name: len(QUERIES[name](spark, sys.argv[2]).collect())
-    for name in ("avro_roundtrip_audit", "stream_balance_floor", "dedup_minhash_lsh")
-}
-url = f"jdbc:derby:{os.getcwd()}/db"
-spark.range(0, 100).selectExpr("id AS ID", "CONCAT('v', id) AS V").write.format(
-    "jdbc"
-).option("url", url + ";create=true").option("user", "dbeam").option(
-    "dbtable", "T"
-).save()
-out = os.path.join(os.getcwd(), "export")
-jdbc_avro_job.run_export(spark, JdbcExportOptions(
-    connectionUrl=url, table="T", output=out, username="dbeam",
-    skipPartitionCheck=True, splitColumn="ID", queryParallelism=2,
-))
-with open(os.path.join(out, "_CHECKSUMS.json")) as fh:
-    rows["export"] = sum(r["rows"] for r in json.load(fh).values())
+names = ["avro_roundtrip_audit", "stream_balance_floor", "dedup_minhash_lsh"]
+if sys.argv[3] == "vanilla":
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.builder.master("local[2]").getOrCreate()
+    names += ["knn_bruteforce", "knn_ivf", "multimodal_bmp_decode"]
+else:
+    from dbeam_spark.session import get_spark
+
+    spark = get_spark("foreign-cwd", master="local[2]", shuffle_partitions=2)
+rows = {name: len(QUERIES[name](spark, sys.argv[2]).collect()) for name in names}
+if sys.argv[3] == "get_spark":
+    from dbeam_spark.jobs import jdbc_avro_job
+    from dbeam_spark.options import JdbcExportOptions
+
+    url = f"jdbc:derby:{os.getcwd()}/db"
+    spark.range(0, 100).selectExpr("id AS ID", "CONCAT('v', id) AS V").write.format(
+        "jdbc"
+    ).option("url", url + ";create=true").option("user", "dbeam").option(
+        "dbtable", "T"
+    ).save()
+    out = os.path.join(os.getcwd(), "export")
+    jdbc_avro_job.run_export(spark, JdbcExportOptions(
+        connectionUrl=url, table="T", output=out, username="dbeam",
+        skipPartitionCheck=True, splitColumn="ID", queryParallelism=2,
+    ))
+    with open(os.path.join(out, "_CHECKSUMS.json")) as fh:
+        rows["export"] = sum(r["rows"] for r in json.load(fh).values())
 print(json.dumps(rows))
 '''
 
 
-def test_workers_import_the_package_from_a_foreign_cwd(tmp_path):
-    """A driver started outside the checkout, with PYTHONPATH unset and
-    the package only on its own sys.path: the worker-side imports of
-    the Avro reader/writer and the streaming state kernels still
-    resolve, through the PYTHONPATH `get_spark` gives local workers."""
+def _run_from_foreign_cwd(tmp_path, session_kind: str) -> dict:
+    # A driver started outside the checkout, with PYTHONPATH unset and
+    # the package only on its own sys.path.
     from test_queries_oracle import SF_DIR
 
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["TMPDIR"] = str(tmp_path)  # a fresh avro_roundtrip_audit export
     proc = subprocess.run(
-        [sys.executable, "-c", _FOREIGN_CWD_CHILD, REPO, SF_DIR],
+        [sys.executable, "-c", _FOREIGN_CWD_CHILD, REPO, SF_DIR, session_kind],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     rows = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert rows["export"] == 100
     assert all(rows[name] > 0 for name in rows), rows
+    return rows
+
+
+def test_workers_import_the_package_from_a_foreign_cwd(tmp_path):
+    """Under a `get_spark` session the Avro reader/writer, the
+    streaming state kernels, the dedup kernels and a split Derby
+    export all run from a foreign cwd."""
+    assert _run_from_foreign_cwd(tmp_path, "get_spark")["export"] == 100
+
+
+def test_vanilla_session_workers_run_from_a_foreign_cwd(tmp_path):
+    """A plain session (the driver's kind: `pyspark.daemon`, no worker
+    PYTHONPATH) runs the same kernels plus the kNN operators and a
+    multimodal decode: the package pickles by value, so its workers
+    never import it."""
+    rows = _run_from_foreign_cwd(tmp_path, "vanilla")
+    assert set(rows) >= {"knn_bruteforce", "knn_ivf", "multimodal_bmp_decode"}
