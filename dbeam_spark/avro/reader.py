@@ -13,15 +13,15 @@ import io
 import json
 import struct
 
-from dbeam_spark.avro import ocf
-from dbeam_spark.avro.ocf import read_bytes, read_long
+from dbeam_spark.avro.ocf import blocks, read_bytes, read_header, read_long, unwrap
+from dbeam_spark.avro.ocf import codec as make_codec
 
 
 def _make_decoder(avro_type):
     if isinstance(avro_type, list):  # union — assume ["null", T]
         inner = _make_decoder(avro_type[1])
         return lambda buf: None if read_long(buf) == 0 else inner(buf)
-    t, _ = ocf.unwrap(avro_type)
+    t, _ = unwrap(avro_type)
     if isinstance(t, dict) and t.get("type") == "array":
         item = _make_decoder(t["items"])
 
@@ -53,7 +53,7 @@ def _make_decoder(avro_type):
 
 
 def _plain_type(t):
-    t, _ = ocf.unwrap(t)
+    t, _ = unwrap(t)
     return "array" if isinstance(t, dict) else t
 
 
@@ -131,14 +131,14 @@ def read_avro_file(
     dbeam consumers rely on the same Java Avro behavior)."""
     rows: list[tuple] = []
     with open(path, "rb") as fh:
-        meta, sync = ocf.read_header(fh)
+        meta, sync = read_header(fh)
         schema = json.loads(meta["avro.schema"])
-        codec = ocf.codec(meta.get("avro.codec", b"null").decode())
+        codec = make_codec(meta.get("avro.codec", b"null").decode())
         decoders, row = _resolve(
             schema["fields"],
             None if reader_schema is None else reader_schema["fields"],
         )
-        for count, payload in ocf.blocks(fh, sync):
+        for count, payload in blocks(fh, sync):
             block = io.BytesIO(codec.decompress(payload))
             for _ in range(count):
                 rows.append(row([d(block) for d in decoders]))
@@ -148,7 +148,7 @@ def read_avro_file(
 def read_avro_schema(path: str) -> dict:
     """The writer schema of one OCF file, from its header alone."""
     with open(path, "rb") as fh:
-        meta, _ = ocf.read_header(fh)
+        meta, _ = read_header(fh)
     return json.loads(meta["avro.schema"])
 
 
@@ -161,5 +161,5 @@ def count_ocf_rows(path: str) -> int:
     a partial file (impossible under the writer's tmp+rename protocol,
     but cheap to defend against) is never silently counted."""
     with open(path, "rb") as fh:
-        _, sync = ocf.read_header(fh)
-        return sum(count for count, _ in ocf.blocks(fh, sync, skip=True))
+        _, sync = read_header(fh)
+        return sum(count for count, _ in blocks(fh, sync, skip=True))

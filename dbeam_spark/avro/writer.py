@@ -43,7 +43,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
-from dbeam_spark.avro import ocf
+from dbeam_spark.avro.ocf import block, encode_bytes, encode_long, header, unwrap
+from dbeam_spark.avro.ocf import codec as make_codec
 from dbeam_spark.avro.reader import count_ocf_rows
 from dbeam_spark.avro.schema import _avro_primitive
 
@@ -67,15 +68,15 @@ def _make_cell_encoder(avro_type):
     """Encoder for a non-null value of an Avro type, given as the
     Python value the scalar path carries (timestamps and dates as
     epoch millis)."""
-    t, logical = ocf.unwrap(avro_type)
+    t, logical = unwrap(avro_type)
     if isinstance(t, dict) and t.get("type") == "array":
         nullable_items = isinstance(t["items"], list)
         inner = _make_cell_encoder(t["items"])
 
         def enc_array(items) -> bytes:
             if not items:
-                return ocf.encode_long(0)
-            buf = bytearray(ocf.encode_long(len(items)))
+                return encode_long(0)
+            buf = bytearray(encode_long(len(items)))
             for it in items:
                 if nullable_items:
                     if it is None:
@@ -88,12 +89,12 @@ def _make_cell_encoder(avro_type):
                         "items; export with --nullableArrayItems"
                     )
                 buf += inner(it)
-            buf += ocf.encode_long(0)
+            buf += encode_long(0)
             return bytes(buf)
 
         return enc_array
     if t in ("long", "int"):
-        return lambda v: ocf.encode_long(int(v))
+        return lambda v: encode_long(int(v))
     if t == "double":
         return lambda v: struct.pack("<d", float(v))
     if t == "float":
@@ -101,9 +102,9 @@ def _make_cell_encoder(avro_type):
     if t == "boolean":
         return lambda v: b"\x01" if v else b"\x00"
     if t == "bytes":
-        return lambda v: ocf.encode_bytes(bytes(v))
+        return lambda v: encode_bytes(bytes(v))
     if t == "string":
-        return lambda v: ocf.encode_bytes(str(v).encode("utf-8"))
+        return lambda v: encode_bytes(str(v).encode("utf-8"))
     raise ValueError(f"Unsupported Avro type: {avro_type!r} (logical={logical})")
 
 
@@ -114,7 +115,7 @@ def _array_as_bytes(list_type):
 
     item = _avro_primitive(from_arrow_type(list_type.value_type), False)
     array = _make_cell_encoder({"type": "array", "items": ["null", item]})
-    return lambda v: ocf.encode_bytes(array(v))
+    return lambda v: encode_bytes(array(v))
 
 
 # ------------------------------------------------------- column builder
@@ -300,7 +301,7 @@ class OcfEncoder:
 
     def __init__(self, avro_schema: dict, codec: str = "deflate6") -> None:
         self.schema = avro_schema
-        self._codec = ocf.codec(codec)
+        self._codec = make_codec(codec)
         # deterministic per-schema sync marker (content-derived, so
         # retried partitions produce identical files)
         import hashlib
@@ -309,12 +310,12 @@ class OcfEncoder:
             json.dumps(avro_schema, sort_keys=True).encode()
         ).digest()
         self._field_types = [
-            ocf.unwrap(f["type"])[0] for f in avro_schema["fields"]
+            unwrap(f["type"])[0] for f in avro_schema["fields"]
         ]
         self._encoders = [_make_cell_encoder(t) for t in self._field_types]
 
     def header(self) -> bytes:
-        return ocf.header(self.schema, self._codec.name, self.sync)
+        return header(self.schema, self._codec.name, self.sync)
 
     def encode_batch(self, rb) -> Iterator[bytes]:
         """Yield OCF blocks straight from an Arrow RecordBatch.
@@ -360,7 +361,7 @@ class OcfEncoder:
         for start in range(0, n, _BLOCK_ROWS):
             end = min(start + _BLOCK_ROWS, n)
             payload = data[int(ends[start]):int(ends[end])]
-            yield ocf.block(end - start, self._codec.compress(payload), self.sync)
+            yield block(end - start, self._codec.compress(payload), self.sync)
 
     def encode_rows(self, columns: list[list]) -> Iterator[bytes]:
         """Yield OCF blocks for rows given as normalized columns."""
@@ -368,16 +369,16 @@ class OcfEncoder:
         encs = self._encoders
         for start in range(0, n, _BLOCK_ROWS):
             end = min(start + _BLOCK_ROWS, n)
-            block = bytearray()
+            buf = bytearray()
             for i in range(start, end):
                 for col, enc in zip(columns, encs):
                     v = col[i]
                     if v is None:
-                        block += b"\x00"  # union branch 0 = null
+                        buf += b"\x00"  # union branch 0 = null
                     else:
-                        block += b"\x02"  # union branch 1 (zigzag(1))
-                        block += enc(v)
-            yield ocf.block(end - start, self._codec.compress(bytes(block)), self.sync)
+                        buf += b"\x02"  # union branch 1 (zigzag(1))
+                        buf += enc(v)
+            yield block(end - start, self._codec.compress(bytes(buf)), self.sync)
 
 
 def write_avro(

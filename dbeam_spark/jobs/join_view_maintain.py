@@ -22,9 +22,9 @@ into a shared directory would double-count on exactly that crash.)
 
 Scale: the three delta-join terms shuffle O(|delta|) rows from the
 delta sides; the accumulated side is read through a join whose other
-input is small — at 100 TB the accumulators are stored bucketed by
-the join key (operators/bucketing.materialize_bucketed), making each
-term a co-located join that reads only matching buckets. The view
+input is small — at 100 TB the accumulators would be stored bucketed
+by the join key (Spark's `bucketBy`), making each term a co-located
+join that reads only matching buckets. The view
 itself is never read during maintenance — only written.
 """
 

@@ -19,7 +19,7 @@ Scale: for time-ordered appends a new run touches recent days, and
 recent days live in few runs — each maintenance reads O(new data),
 not O(table). The rollup write is a dynamic partition overwrite of
 the touched days only (untouched partitions are never read or
-written, same contract as `operators.bucketing.upsert_partitioned`).
+written).
 """
 
 from __future__ import annotations

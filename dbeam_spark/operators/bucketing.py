@@ -1,435 +1,15 @@
-"""Bucketed-table materialization: pre-shuffle once, join forever.
+"""Key-bucket staging: stage a table once by key hash, scan a sample.
 
-At 100 TB the orders⋈lineitem shuffle dominates every query that
-touches both. Bucketing both tables by the join key at ingest time
-(`bucketBy(N, key)` + saveAsTable) stores them pre-partitioned and
-pre-sorted, so every subsequent equi-join or aggregation on that key
-runs with ZERO Exchange — the scan itself satisfies the required
-distribution. This module materializes star-schema facts bucketed and
-proves the plan property (tests assert no Exchange under the join).
+A key-sampled audit only pays off when the scan prunes. Staging a
+table into 16 hex-nibble directories of its key's md5 lets every
+sampled query read just the nibble directories it samples, so input
+bytes scale with the sample fraction, not with the corpus. The TPC-H
+and streaming sampled audits read through this layout.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def materialize_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Persist df as a bucketed (and optionally sorted) managed table."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.format("parquet").saveAsTable(table_name)
-
-
-def bucket_star_facts(
-    spark: SparkSession,
-    sf_dir: str,
-    n_buckets: int = 16,
-    prefix: str = "bkt",
-) -> dict[str, str]:
-    """Materialize orders+lineitem bucketed by the order key.
-
-    Returns {logical_name: table_name}. Any orders⋈lineitem join over
-    these tables is co-located (no shuffle on either side).
-    """
-    from dbeam_spark.sources.files import load_table
-
-    tables = {}
-    for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        tname = f"{prefix}_{name}"
-        materialize_bucketed(
-            load_table(spark, sf_dir, name), tname, key, n_buckets, sort_col=key
-        )
-        tables[name] = tname
-    return tables
-
-
-def materialize_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    max_records_per_file: int | None = None,
-) -> None:
-    """Persist df hive-partitioned (`path/col=value/part-*.parquet`).
-
-    The partition column becomes directory structure, so any filter on
-    it prunes whole directories BEFORE listing files — at 100 TB a
-    `WHERE ship_date = X` touches 1/N of the data without reading a
-    single footer. Combine with `max_records_per_file` to bound file
-    sizes (small-file storms are the classic failure of high-
-    cardinality partitioning: keep partition columns low-cardinality —
-    dates, regions — never ids).
-    """
-    writer = df.write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(*partition_cols).parquet(path)
-
-
-def read_partition_pruned(
-    spark: SparkSession, path: str
-) -> DataFrame:
-    """Read a hive-partitioned layout (partition cols inferred from
-    directories). Filters on partition columns turn into
-    PartitionFilters in the scan — tests assert the pruned file count."""
-    return spark.read.parquet(path)
-
-
-def _interleave_bits(a, b, bits: int = 16):
-    """Morton/Z-order key: interleave the low `bits` of two
-    non-negative int columns into one long, as a pure Catalyst
-    expression (shiftleft/or chain — stays in codegen)."""
-    from pyspark.sql import functions as F
-
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        abit = F.shiftright(a.cast("long"), i).bitwiseAND(F.lit(1))
-        bbit = F.shiftright(b.cast("long"), i).bitwiseAND(F.lit(1))
-        z = (
-            z.bitwiseOR(F.shiftleft(abit, 2 * i))
-            .bitwiseOR(F.shiftleft(bbit, 2 * i + 1))
-        )
-    return z
-
-
-def materialize_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write parquet sorted by the Z-order (Morton) interleaving of two
-    columns. A linear sort clusters ONE column's values per file —
-    filters on the other column hit every file. Z-ordering keeps BOTH
-    columns' per-file min/max ranges narrow, so parquet row-group
-    statistics prune scans on either (or both) predicates. The 100 TB
-    data-layout tool for two-dimensional access patterns (e.g.
-    date × customer); cost is one range-partitioned sort at write time.
-
-    Columns must be non-negative ints (rank/bucket-encode first
-    otherwise); `bits` bounds the per-column resolution.
-    """
-    from pyspark.sql import functions as F
-
-    z = _interleave_bits(F.col(col_a), F.col(col_b), bits)
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def hilbert_key_pass(col_a: str, col_b: str, bits: int = 16):
-    """mapInPandas factory adding `_h` = Hilbert-curve index of the
-    two non-negative int columns. The Hilbert rotation recurrence
-    cannot be a Catalyst expression (each iteration's (x, y) feed the
-    next through CASEs — the tree grows exponentially when inlined),
-    so the key computes in ONE vectorized numpy pass; everything else
-    about the layout write stays Catalyst."""
-
-    def part(batches):
-        import numpy as np
-
-        n_side = np.int64(1) << bits
-        for pdf in batches:
-            x = pdf[col_a].to_numpy(dtype=np.int64).copy()
-            y = pdf[col_b].to_numpy(dtype=np.int64).copy()
-            d = np.zeros(len(pdf), dtype=np.int64)
-            s = n_side >> 1
-            while s > 0:
-                rx = ((x & s) > 0).astype(np.int64)
-                ry = ((y & s) > 0).astype(np.int64)
-                d += s * s * ((3 * rx) ^ ry)
-                # rotate the quadrant
-                flip = (ry == 0) & (rx == 1)
-                x_f = np.where(flip, s - 1 - x, x)
-                y_f = np.where(flip, s - 1 - y, y)
-                swap = ry == 0
-                x, y = (
-                    np.where(swap, y_f, x_f),
-                    np.where(swap, x_f, y_f),
-                )
-                s >>= 1
-            out = pdf.copy()
-            out["_h"] = d
-            yield out
-
-    return part
-
-
-def materialize_hilbert(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write parquet sorted by the HILBERT-curve index of two columns
-    — Z-order's strictly-better-locality sibling: Hilbert never jumps
-    across the plane between consecutive keys (Morton does at every
-    power-of-two boundary), so per-file min/max boxes are tighter and
-    range predicates on either column prune slightly more row groups
-    for the same write cost. Same contract as materialize_zordered:
-    non-negative int columns (rank/bucket-encode first), one
-    range-partitioned sort at write time, columns must be
-    Arrow-compatible (the key computes in an Arrow pass)."""
-    from pyspark.sql import functions as F
-
-    schema = df.withColumn("_h", F.lit(0).cast("long")).schema
-    (
-        df.mapInPandas(hilbert_key_pass(col_a, col_b, bits), schema)
-        .repartitionByRange(n_files, "_h")
-        .sortWithinPartitions("_h")
-        .drop("_h")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def upsert_partitioned(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_col: str,
-    partition_col: str,
-) -> None:
-    """Apply an upsert batch to a hive-partitioned parquet layout —
-    the APPLY side of CDC (the incremental export job produces exactly
-    such delta batches).
-
-    Without a table format (Delta/Iceberg) the unit of atomic rewrite
-    is the PARTITION: only partitions present in the update batch are
-    read back, merged (existing rows lose to updates on `key_col`),
-    and rewritten via dynamic partition overwrite — untouched
-    partitions are never read or written. Keep partitions date-sized
-    so a typical CDC batch touches a handful.
-    """
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        from pyspark.sql import functions as F
-
-        touched = [
-            r[0] for r in updates.select(partition_col).distinct().collect()
-        ]
-        try:
-            existing = (
-                spark.read.parquet(path)
-                .filter(F.col(partition_col).isin(touched))
-                .select(*updates.columns)  # align column order
-            )
-        except Exception:
-            existing = None  # first batch: nothing to merge
-        if existing is not None:
-            keep = existing.join(
-                updates.select(key_col), key_col, "left_anti"
-            )
-            merged = keep.unionByName(updates)
-        else:
-            merged = updates
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-
-def file_pruning_stats(
-    path: str, predicates: dict[str, tuple]
-) -> dict:
-    """Measure how well a parquet layout prunes for range predicates,
-    from footer metadata alone (no data read — the same min/max
-    statistics Spark's scan uses for row-group skipping).
-
-    `predicates` maps column → (lo, hi) inclusive ranges; a row group
-    survives only if EVERY predicate's range overlaps the group's
-    [min, max]. Returns totals and the prunable fraction — run it
-    after `materialize_zordered` (or any sort/partition layout) to
-    verify the layout actually earns its write cost before shipping
-    it at 100 TB.
-    """
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    files = sorted(
-        _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-    total_rg = kept_rg = 0
-    total_rows = kept_rows = 0
-    kept_files = 0
-    for f in files:
-        meta = pq.ParquetFile(f).metadata
-        names = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
-        file_kept = False
-        for g in range(meta.num_row_groups):
-            rg = meta.row_group(g)
-            total_rg += 1
-            total_rows += rg.num_rows
-            survive = True
-            for col, (lo, hi) in predicates.items():
-                st = rg.column(names[col]).statistics
-                if st is None or not st.has_min_max:
-                    continue  # no stats → cannot prune this group
-                if st.max < lo or st.min > hi:
-                    survive = False
-                    break
-            if survive:
-                kept_rg += 1
-                kept_rows += rg.num_rows
-                file_kept = True
-        if file_kept:
-            kept_files += 1
-    return {
-        "files": len(files),
-        "files_kept": kept_files,
-        "row_groups": total_rg,
-        "row_groups_kept": kept_rg,
-        "rows_total": total_rows,
-        "rows_scanned_upper_bound": kept_rows,
-        "pruned_fraction": round(1 - kept_rg / total_rg, 4) if total_rg else 0.0,
-    }
-
-
-def merge_into(
-    spark: SparkSession,
-    path: str,
-    source: DataFrame,
-    key_col: str,
-    partition_col: str,
-    when_matched: str = "update",
-    delete_col: str | None = None,
-) -> dict:
-    """SQL MERGE semantics onto a hive-partitioned parquet table
-    (Delta/Iceberg's MERGE INTO without the table format):
-
-    - not matched            → insert the source row
-    - matched                → `when_matched`: "update" (source wins)
-                               or "ignore" (target wins)
-    - matched & delete flag  → delete the target row (CDC tombstones:
-                               `delete_col` names a boolean source
-                               column; those rows are never inserted)
-
-    The atomic rewrite unit is the PARTITION (dynamic overwrite):
-    only partitions named by the source batch are read, merged, and
-    rewritten — at 100 TB a date-partitioned table merges a daily CDC
-    batch touching a handful of partitions, never the full table.
-    A source key may move partitions (e.g. a corrected event date):
-    both the old and new partition are rewritten because the anti-join
-    removes the key wherever it lived among touched partitions — keys
-    moving from an UNtouched partition require including that
-    partition's value in the batch (standard CDC contract).
-
-    Returns {inserted, updated_or_kept, deleted} row counts.
-    """
-    from pyspark.sql import functions as F
-
-    tombstones = None
-    if delete_col is not None:
-        # NULL flags must not make rows vanish silently: coalesce to
-        # False so an unflagged row flows through the upsert path
-        flag = F.coalesce(F.col(delete_col), F.lit(False))
-        tombstones = source.filter(flag).select(key_col)
-        source = source.filter(~flag).drop(delete_col)
-
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        touched = [
-            r[0] for r in source.select(partition_col).distinct().collect()
-        ]
-        if tombstones is not None:
-            # a tombstone's partition must also be rewritten
-            tomb_parts = (
-                spark.read.parquet(path)
-                .join(F.broadcast(tombstones), key_col, "left_semi")
-                .select(partition_col)
-                .distinct()
-            )
-            touched = list(
-                {*touched, *[r[0] for r in tomb_parts.collect()]}
-            )
-        try:
-            existing = (
-                spark.read.parquet(path)
-                .filter(F.col(partition_col).isin(touched))
-                .select(*source.columns)
-            )
-        except Exception:
-            existing = None
-
-        stats = {"inserted": 0, "updated_or_kept": 0, "deleted": 0}
-        if existing is None:
-            merged = source
-            stats["inserted"] = source.count()
-        else:
-            if tombstones is not None:
-                n0 = existing.count()
-                existing = existing.join(
-                    F.broadcast(tombstones), key_col, "left_anti"
-                )
-                stats["deleted"] = n0 - existing.count()
-            matched_keys = existing.join(
-                source.select(key_col), key_col, "left_semi"
-            )
-            n_matched = matched_keys.count()
-            if when_matched == "update":
-                keep = existing.join(
-                    source.select(key_col), key_col, "left_anti"
-                )
-                merged = keep.unionByName(source)
-                stats["updated_or_kept"] = n_matched
-                stats["inserted"] = source.count() - n_matched
-            elif when_matched == "ignore":
-                new_rows = source.join(
-                    existing.select(key_col), key_col, "left_anti"
-                )
-                merged = existing.unionByName(new_rows)
-                stats["inserted"] = new_rows.count()
-                stats["updated_or_kept"] = n_matched
-            else:
-                raise ValueError(
-                    f"when_matched must be update|ignore: {when_matched}"
-                )
-        # dynamic overwrite only rewrites partitions PRESENT in
-        # `merged`: a touched partition whose rows were all deleted
-        # (or all migrated away) would otherwise survive on disk and
-        # resurface deleted rows — remove those directories explicitly
-        remaining = {
-            r[0] for r in merged.select(partition_col).distinct().collect()
-        }
-        merged.write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(path)
-        emptied = [p for p in touched if p not in remaining and p is not None]
-        if emptied:
-            jvm = spark._jvm
-            hconf = spark._jsc.hadoopConfiguration()
-            for p in emptied:
-                part_dir = jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/{partition_col}={p}"
-                )
-                fs = part_dir.getFileSystem(hconf)
-                fs.delete(part_dir, True)
-        return stats
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
 
 
 def stage_key_buckets(

@@ -1121,87 +1121,6 @@ def connected_components(
     return labels.select(F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
 
-def connected_components_twophase(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14): same (doc_id, cluster_id = component-min) contract as
-    `connected_components`, but O(log² n) rounds instead of
-    O(diameter).
-
-    Use this backend when the near-dup graph can contain long chains
-    (transitive text drift, linked-record graphs): label propagation
-    needs one shuffle round per hop of diameter, while each star
-    operation here halves the tree height. Every round is the same
-    groupBy-min + join primitive, so the 100 TB cost model is
-    unchanged — just fewer rounds on pathological graphs.
-
-    large-star: hang every neighbor LARGER than u onto u's minimum;
-    small-star: hang every neighbor SMALLER-OR-EQUAL onto it. Both
-    preserve components; a fixed point is a star per component rooted
-    at its minimum, read off as the label map directly."""
-    edges = (
-        pairs.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("src"),
-            F.least(F.col(id_a), F.col(id_b)).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        mins = sym.groupBy("src").agg(F.min("dst").alias("mn")).select(
-            "src", F.least("mn", "src").alias("m")
-        )
-        return (
-            sym.join(mins, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # e is oriented src > dst after large_star's construction
-        mins = e.groupBy("src").agg(F.min("dst").alias("m"))
-        joined = e.join(mins, "src")
-        return (
-            joined.filter(F.col("dst") != F.col("m"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .unionByName(
-                mins.select(F.col("src"), F.col("m").alias("dst"))
-            )
-            .distinct()
-        )
-
-    def sig(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)), F.sum("src"), F.sum("dst")
-        ).collect()[0]
-        return tuple(row)
-
-    prev = sig(edges)
-    for _ in range(max_iter):
-        edges = small_star(large_star(edges)).localCheckpoint()
-        cur = sig(edges)
-        if cur == prev:
-            break
-        prev = cur
-    # fixed point: edges are (member, component_min) stars
-    members = edges.select(
-        F.col("src").alias("doc_id"), F.col("dst").alias("cluster_id")
-    )
-    roots = edges.select(F.col("dst").alias("doc_id")).distinct().withColumn(
-        "cluster_id", F.col("doc_id")
-    )
-    return members.unionByName(roots).distinct()
-
-
 def incremental_minhash_index(
     docs_new: DataFrame,
     index_dir: str,

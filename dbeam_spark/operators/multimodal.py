@@ -16,8 +16,8 @@ Two tiers of decode:
   (largesize + co64), tkhd/mdhd/hdlr/stsd metadata, and the
   stts/stsc/stsz/stco sample-table walk mapping every sample to its
   absolute byte range (encode_mp4 is the muxer twin). That is the
-  container's entire pure-parsing surface and the part a training
-  pipeline runs (frame-range selection for downstream GPU decode).
+  container's entire pure-parsing surface: the byte ranges a
+  frame-sampling stage would hand to a real video decoder.
 - A stub for the one step that genuinely needs an external codec in
   this container (MP4 video BITSTREAM decode needs pyav):
   `decode_media` raises NotImplementedError for it, `fake_decode`
@@ -37,7 +37,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -1196,20 +1195,6 @@ def demux_mp4(payload: bytes) -> dict:
     return out
 
 
-def mp4_frame_ranges(
-    payload: bytes, every: int = 1, track: int = 0
-) -> list[tuple[int, int, int]]:
-    """(sample_index, offset, size) for every `every`-th sample of one
-    track — the byte ranges a frame-sampling stage ships to a real
-    decoder without touching the rest of the file."""
-    t = demux_mp4(payload)["tracks"][track]
-    return [
-        (i, off, sz)
-        for i, (off, sz) in enumerate(t["samples"])
-        if i % every == 0
-    ]
-
-
 def decode_media(payload: bytes, mime: str):
     """Decoder entry point. BMP and WAV decode for REAL (stdlib
     struct/wave — see decode_bmp/decode_wav); formats that need
@@ -1328,73 +1313,6 @@ def frame_sample(
             )
 
     return cols.mapInPandas(sample, FRAME_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-    ]
-)
-
-
-def resize_batch(
-    docs_with_payload: DataFrame, width: int = 64, height: int = 48
-) -> DataFrame:
-    """'Resize' each payload to a fixed byte budget (width×height) —
-    binary-in/binary-out Arrow plumbing (a real PIL resize swaps in at
-    the marked line; truncate/pad is the deterministic stand-in)."""
-    cols = docs_with_payload.select("doc_id", "payload")
-    budget = width * height
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [
-                bytes(p[:budget]).ljust(budget, b"\0")  # <- real resize here
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": resized,
-                    "width": [width] * len(resized),
-                    "height": [height] * len(resized),
-                }
-            )
-
-    return cols.mapInPandas(resize, RESIZED_SCHEMA)
-
-
-def extract_features(docs_with_payload: DataFrame, dim: int = 16) -> DataFrame:
-    """Payload → fixed-dim float vector (the embedding-extraction
-    shape: binary in, array<float> out, Arrow-batched numpy inside).
-    The stand-in folds a byte histogram into `dim` buckets and
-    L2-normalizes — deterministic, so tests are exact; a real model
-    forward pass replaces one line."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, FloatType
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("features", ArrayType(FloatType())),
-        ]
-    )
-    cols = docs_with_payload.select("doc_id", "payload")
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for p in pdf["payload"]:
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype("float64")
-                norm = np.linalg.norm(hist)
-                feats.append((hist / norm if norm else hist).astype("float32"))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
-
-    return cols.mapInPandas(featurize, schema)
 
 
 def window_slices(

@@ -1,7 +1,5 @@
 """Similarity search over embedding columns (`array<float>`).
 
-- `cosine` is a pure Catalyst expression (zip_with/aggregate): the
-  math runs JVM-side in codegen, no Python, no UDF.
 - `knn_bruteforce`: the (small) query set ships in the task closure,
   the base table is scored map-only, per-query top-k. Zero shuffle on
   the base table — the plan that scales to 100 TB of vectors.
@@ -41,35 +39,8 @@ the oracle's float bits.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _sum_arr(arr: Column) -> Column:
-    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product. With a known dimension this is an explicit
-    left-associated chain of products — whole-stage-codegen'd (HOF
-    lambdas are interpreted per element: ~10× slower) and summing in
-    the same sequential order DuckDB's list_inner_product uses, so
-    oracle values match bit-for-bit."""
-    if dim is None:
-        return _sum_arr(F.zip_with(a, b, lambda x, y: x * y))
-    expr = a[0] * b[0]
-    for i in range(1, dim):
-        expr = expr + a[i] * b[i]
-    return expr
-
-
-def norm(a: Column, dim: int | None = None) -> Column:
-    return F.sqrt(dot(a, a, dim))
-
-
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Cosine similarity dot/(|a|*|b|) in double precision."""
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
 
 
 def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
@@ -1267,6 +1238,12 @@ def knn_pq(
     different neighbors and recall craters on unnormalized data."""
     import numpy as np
 
+    q_ids, Q = _collect_vectors(queries, id_col, vec_col)
+    if not len(q_ids):
+        return base.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, adist double, rank int"
+        )
+    Q /= np.linalg.norm(Q, axis=1, keepdims=True)
     normed = _l2_normalized(base, id_col, vec_col)
     books = pq_train(
         normed, m=m, nbits=nbits, id_col=id_col, vec_col=vec_col
@@ -1274,8 +1251,6 @@ def knn_pq(
     B = np.array(books, dtype=np.float64)
     codes = pq_encode(normed, books, id_col=id_col, vec_col=vec_col)
 
-    q_ids, Q = _collect_vectors(queries, id_col, vec_col)
-    Q /= np.linalg.norm(Q, axis=1, keepdims=True)
     mm, kk, ss = B.shape
     # tables[q, j, c] = ||Q[q, sub j] - codeword c||²
     tables = np.zeros((len(q_ids), mm, kk))

@@ -231,20 +231,3 @@ def bpe_encode_expr(merges: list[tuple[str, str, int]]):
             )
 
     return part
-
-
-def save_merges(merges: list[tuple[str, str, int]], path: str) -> None:
-    """Persist a learned merge list as the tokenizer ARTIFACT (json,
-    merge order = rank order) — train once, re-tokenize every later
-    batch with bpe_encode_expr(load_merges(path))."""
-    import json
-
-    with open(path, "w") as fh:
-        json.dump([[a, b, int(n)] for a, b, n in merges], fh)
-
-
-def load_merges(path: str) -> list[tuple[str, str, int]]:
-    import json
-
-    with open(path) as fh:
-        return [(a, b, int(n)) for a, b, n in json.load(fh)]

@@ -2,9 +2,8 @@
 travel, snapshot isolation, and atomic partition upserts WITHOUT a
 table-format dependency.
 
-A30 (compaction), A32 (MERGE) and A36 (rollup maintenance) all note
-the same gap: plain parquet directories give atomic rewrites only at
-partition granularity, readers can observe half-written states, and
+Plain parquet directories give atomic rewrites only at partition
+granularity, readers can observe half-written states, and
 yesterday's table is gone after today's write. The classic fix is a
 manifest log — the core idea of Delta/Iceberg, reduced here to its
 load-bearing minimum:
@@ -18,9 +17,8 @@ load-bearing minimum:
   committers race on the same version number and the loser gets
   `SnapshotConflictError` (optimistic concurrency), never a merged
   half-state;
-- old files are never touched by commits ⇒ any retained version
-  remains readable (time travel); `vacuum` deletes files only when
-  no retained manifest references them.
+- old files are never touched by commits ⇒ every version remains
+  readable (time travel).
 
 At 100 TB the manifest lists file paths, not rows — commit cost is
 O(files touched), reads prune by the manifest's partition values
@@ -292,123 +290,3 @@ def history(table_dir: str) -> list[dict]:
             }
         )
     return out
-
-
-def vacuum(table_dir: str, keep_versions: int = 1) -> list[str]:
-    """Delete data files referenced ONLY by manifests older than the
-    newest `keep_versions` (and drop those manifests). Time travel
-    stays intact for every retained version."""
-    table = Path(table_dir)
-    latest = _latest_version(table)
-    keep = set(range(max(1, latest - keep_versions + 1), latest + 1))
-    kept_files: set[str] = set()
-    for v in keep:
-        kept_files |= {f["path"] for f in _read_manifest(table, v)["files"]}
-    removed: list[str] = []
-    for p in sorted(_manifest_dir(table).glob("v*.json")):
-        m = json.loads(p.read_text())
-        if m["version"] in keep:
-            continue
-        for f in m["files"]:
-            if f["path"] not in kept_files:
-                target = table / f["path"]
-                if target.exists():
-                    target.unlink()
-                    removed.append(f["path"])
-        p.unlink()
-    return removed
-
-
-def changes_between(
-    spark: SparkSession,
-    table_dir: str,
-    v_from: int,
-    v_to: int,
-    key_col: str,
-) -> DataFrame:
-    """Change data feed between two snapshots (the Delta CDF
-    analogue): returns the rows of `v_to` that are NEW or CHANGED
-    since `v_from`, tagged `_change_type` = 'insert' | 'update',
-    plus 'delete' markers (key only, other columns NULL) for keys
-    present in `v_from` but gone from `v_to`.
-
-    Cost model: only partitions whose FILE SET differs between the
-    two manifests are read — partitions carried by reference are
-    provably identical and never touched, so a CDC consumer pays for
-    the churn, not the table. Within a changed partition the
-    row-level diff is one key join over content fingerprints
-    (md5 of the non-key columns), the export_diff shape."""
-    table = Path(table_dir)
-    man_a = _read_manifest(table, v_from)
-    man_b = _read_manifest(table, v_to)
-    pcol = man_b["partition_col"]
-    ptype = man_b.get("partition_type")
-
-    def by_part(man: dict) -> dict:
-        out: dict = {}
-        for f in man["files"]:
-            out.setdefault(f["partition"], set()).add(f["path"])
-        return out
-
-    parts_a, parts_b = by_part(man_a), by_part(man_b)
-    changed = sorted(
-        (set(parts_a) | set(parts_b)),
-        key=lambda v: (v is None, v),
-    )
-    changed = [
-        p for p in changed if parts_a.get(p) != parts_b.get(p)
-    ]
-    files_a = [
-        f for f in man_a["files"] if f["partition"] in changed
-    ]
-    files_b = [
-        f for f in man_b["files"] if f["partition"] in changed
-    ]
-    side_a = _read_files(spark, table, files_a, pcol, ptype)
-    side_b = _read_files(spark, table, files_b, pcol, ptype)
-    if side_b is None and side_a is None:
-        raise ValueError("no changed partitions between the versions")
-
-    def fingerprinted(df: DataFrame, tag: str) -> DataFrame:
-        others = sorted(c for c in df.columns if c != key_col)
-        return df.select(
-            F.col(key_col),
-            F.md5(
-                F.concat_ws(
-                    "\x1f", *[F.col(c).cast("string") for c in others]
-                )
-            ).alias(f"fp_{tag}"),
-        )
-
-    if side_a is None:
-        side_a = side_b.limit(0)
-    if side_b is None:
-        side_b = side_a.limit(0)
-    fa = fingerprinted(side_a, "a")
-    fb = fingerprinted(side_b, "b")
-    j = fb.join(fa, key_col, "full_outer")
-    ops = j.select(
-        F.col(key_col),
-        F.when(F.col("fp_a").isNull(), "insert")
-        .when(F.col("fp_b").isNull(), "delete")
-        .when(F.col("fp_a") != F.col("fp_b"), "update")
-        .alias("_change_type"),
-    ).filter(F.col("_change_type").isNotNull())
-    out_cols = side_b.columns
-    upserts = (
-        side_b.join(
-            ops.filter(F.col("_change_type") != "delete"), key_col
-        ).select(*out_cols, "_change_type")
-    )
-    deletes = (
-        ops.filter(F.col("_change_type") == "delete")
-        .select(
-            *[
-                F.col(key_col) if c == key_col
-                else F.lit(None).cast(dict(side_b.dtypes)[c]).alias(c)
-                for c in out_cols
-            ],
-            "_change_type",
-        )
-    )
-    return upserts.unionByName(deletes)

@@ -780,8 +780,8 @@ def new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Current-state materialization (SCD type-1): each key's latest
-    row from the append-only event log — the batch twin of
-    stream_upsert_sink's CDC apply. One max_by aggregation (map-side
+    row from the append-only event log — the batch form of a CDC
+    apply. One max_by aggregation (map-side
     combinable: partials keep only their max) — no ranking window, no
     sort, the cheapest keep-latest formulation at 100 TB. Tie-broken
     on (ts, event_id) so replays are deterministic."""

@@ -373,48 +373,6 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_to_avro(
-    stream_df,
-    output_dir: str,
-    schema_name: str = "stream",
-    codec: str = "deflate6",
-    checkpoint: str | None = None,
-) -> None:
-    """Continuous Avro export: every micro-batch lands as OCF files in
-    `output_dir/batch_N/` through the same distributed writer the
-    batch export job uses — dbeam's output format fed by a stream.
-    Runs with availableNow (finite replay) here; remove the trigger
-    for a long-running sink. Pass `checkpoint` to make the run
-    RESUMABLE across crashes (Spark's commit log skips already-
-    committed batch ids on restart; caller owns the dir); without it
-    a throwaway checkpoint is used and removed on success."""
-    from dbeam_spark.avro.schema import spark_schema_to_avro
-    from dbeam_spark.avro.writer import write_avro
-
-    avro_schema = spark_schema_to_avro(stream_df.schema, schema_name)
-
-    def sink(batch_df, batch_id: int) -> None:
-        write_avro(
-            batch_df,
-            os.path.join(output_dir, f"batch_{batch_id}"),
-            avro_schema,
-            codec=codec,
-        )
-
-    owned = checkpoint is None
-    if owned:
-        checkpoint = tempfile.mkdtemp(prefix="ckpt_avro_sink_")
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if owned:
-        shutil.rmtree(checkpoint, ignore_errors=True)
-
-
 @register(
     "stream_stream_join",
     oracle="""
@@ -548,7 +506,6 @@ def _session_rows_via_parquet(spark: SparkSession, agg, prefix: str) -> DataFram
     )
 
 
-
 @register(
     "stream_session_window",
     oracle="""
@@ -653,61 +610,6 @@ def stream_session_window_bounded(
     )
     return _session_rows_via_parquet(spark, agg, "ssb")
 
-
-def stream_upsert_sink(
-    stream_df,
-    table_path: str,
-    key_col: str,
-    partition_col: str,
-    checkpoint: str | None = None,
-) -> None:
-    """Streaming CDC apply: every micro-batch merges into a
-    hive-partitioned parquet table via partition-level upsert
-    (operators/bucketing.py::upsert_partitioned) — the streaming twin
-    of the incremental-export → compact/apply pipeline. Last write
-    wins per key WITHIN and across batches: the batch is first
-    deduplicated to its latest row per key (no table format needed,
-    the atomic rewrite unit is the partition). Runs availableNow here
-    (finite replay); remove the trigger for a continuous pipeline.
-    Pass `checkpoint` for crash-resume (the commit log skips batches
-    already applied; upsert_partitioned's per-partition rewrite is
-    idempotent under replay of the SAME batch, so a crash between a
-    partition rewrite and the commit re-applies harmlessly); without
-    it a throwaway checkpoint is used and removed on success."""
-    from pyspark.sql import Window
-
-    from dbeam_spark.operators.bucketing import upsert_partitioned
-
-    def sink(batch_df, batch_id: int) -> None:
-        if not batch_df.columns:
-            return
-        spark = batch_df.sparkSession
-        # last-write-wins inside the batch: keep one row per key
-        w = (
-            Window.partitionBy(key_col)
-            .orderBy(F.col("ts").desc(), F.col("event_id").desc())
-            if "ts" in batch_df.columns and "event_id" in batch_df.columns
-            else Window.partitionBy(key_col).orderBy(F.lit(1))
-        )
-        latest = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        upsert_partitioned(spark, table_path, latest, key_col, partition_col)
-
-    owned = checkpoint is None
-    if owned:
-        checkpoint = tempfile.mkdtemp(prefix="ckpt_upsert_sink_")
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if owned:
-        shutil.rmtree(checkpoint, ignore_errors=True)
 
 def windowed_late_metrics(
     stream_df,
@@ -2006,7 +1908,6 @@ def stream_markov_stationary(
         .collect()  # enum-bounded: |types|^2 rows
     }
     return stationary_from_counts(spark, counts)
-
 
 
 from dbeam_spark.queries.events import _CHI2_ORACLE

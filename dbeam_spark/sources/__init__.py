@@ -1,3 +1,3 @@
-from dbeam_spark.sources.files import TABLES, load_table, load_tables
+from dbeam_spark.sources.files import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

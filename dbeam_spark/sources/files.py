@@ -25,11 +25,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Dimension tables small enough to broadcast at any realistic scale
-# (region/nation are bounded by geography; supplier/part stay MB-scale
-# relative to fact tables).
-BROADCAST_DIMS = {"region", "nation", "supplier", "part"}
-
 
 # WeakKeyDictionary[session] -> {(sf_dir, name, file_sig): DataFrame}.
 # spark.read.parquet pays footer/schema inference on EVERY call
@@ -89,9 +84,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # session is pinned UTC, so a plain cast is the identity map.
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}

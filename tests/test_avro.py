@@ -274,6 +274,18 @@ def test_unknown_codec_rejected():
         OcfEncoder(spark_schema_to_avro(T.StructType([]), "t"), "lz77")
 
 
+def test_encoder_closure_carries_only_the_container_code_it_uses():
+    """Tasks receive OcfEncoder by value (the package pickles by value).
+    Its pickle carries the ocf.py functions the writer calls, not the
+    whole ocf module: the reader's functions stay out."""
+    from pyspark import cloudpickle
+
+    payload = cloudpickle.dumps(lambda: OcfEncoder)
+    assert b"encode_long" in payload
+    assert b"read_header" not in payload
+    assert b"read_bytes" not in payload
+
+
 def test_distributed_write(spark, tmp_path):
     df = spark.range(0, 10_000, numPartitions=8).selectExpr(
         "id", "CAST(id AS STRING) AS s", "CAST(id * 0.5 AS DOUBLE) AS d"
@@ -319,22 +331,19 @@ def test_nan_vs_null_doubles(spark, tmp_path):
 
 
 def test_read_avro_plans_from_the_header_alone(spark, tmp_path, monkeypatch):
-    """read_avro and compact_runs take the schema from a part file's
-    header: with the reader's value decoders patched to raise on the
-    driver, both still plan (data decoding happens in the tasks), with
-    the right schema. The reader pickles by value, so the patch ships
-    to the tasks too: it raises only in the driver's process."""
+    """read_avro takes the schema from a part file's header: with the
+    reader's value decoders patched to raise on the driver, it still
+    plans (data decoding happens in the tasks), with the right schema.
+    The reader pickles by value, so the patch ships to the tasks too:
+    it raises only in the driver's process."""
     from dbeam_spark.avro import reader
-    from dbeam_spark.jobs.compact_runs import compact_runs
     from dbeam_spark.sources.avro import read_avro
 
     df = spark.range(0, 100, numPartitions=2).selectExpr(
         "id", "CAST(id AS STRING) AS s", "timestamp_millis(id) AS ts"
     )
     avro = spark_schema_to_avro(df.schema, "t", use_logical_types=True)
-    for run in ("run_00000", "run_00001"):
-        write_avro(df, str(tmp_path / run), avro)
-        (tmp_path / run / "_SUCCESS").write_text("")
+    write_avro(df, str(tmp_path / "run_00000"), avro)
 
     driver_pid = os.getpid()
     make_decoder = reader._make_decoder
@@ -349,7 +358,6 @@ def test_read_avro_plans_from_the_header_alone(spark, tmp_path, monkeypatch):
     assert [(f.name, f.dataType.simpleString()) for f in back.schema] == [
         ("id", "bigint"), ("s", "string"), ("ts", "timestamp")
     ]
-    assert compact_runs(spark, str(tmp_path), target_files=1)["rows"] == 200
 
 
 def test_read_avro_roundtrip_source(spark, tmp_path):

@@ -204,100 +204,6 @@ def test_retry_clears_stale_run_dir(spark, tmp_path):
     assert ids == list(range(20, 25))
 
 
-def test_compact_runs_append_only(spark, incr_db, tmp_path):
-    from dbeam_spark.jobs.compact_runs import compact_runs
-
-    dbdir = tempfile.mkdtemp(prefix="derby_cmp_") + "/db"
-    url = f"jdbc:derby:{dbdir};create=true"
-    _append_rows(spark, url, 0, 300, mode="overwrite")
-    derby = f"jdbc:derby:{dbdir}"
-    out = tmp_path / "cmp"
-    run_incremental(spark, _opts(derby, out), "C_ID")
-    _append_rows(spark, derby, 300, 50)
-    run_incremental(spark, _opts(derby, out), "C_ID")
-
-    res = compact_runs(spark, str(out), target_files=2)
-    assert res["rows"] == 350 and res["input_runs"] == 2
-    snap = Path(res["snapshot_dir"])
-    assert (snap / "_SUCCESS").exists()
-    parts = sorted(glob.glob(str(snap / "part-*.avro")))
-    assert len(parts) == 2
-    ids = sorted(r[0] for r in _rows_in(snap))
-    assert ids == list(range(350))
-    # the snapshot's metadata is written like an export's
-    schema = "_AVRO_SCHEMA.avsc"
-    assert (snap / schema).read_bytes() == (out / "run_00000" / schema).read_bytes()
-    cks = json.loads((snap / "_CHECKSUMS.json").read_text())
-    assert sorted(cks) == [Path(p).name for p in parts]
-    assert sum(r["rows"] for r in cks.values()) == 350
-    # snapshot is derived: runs untouched, recompaction idempotent
-    assert len(list(out.glob("run_*"))) == 2
-    res2 = compact_runs(spark, str(out), target_files=2)
-    assert res2["rows"] == 350
-
-
-def test_compact_runs_last_write_wins(spark, tmp_path):
-    """CDC upsert: later runs replace earlier rows with the same key."""
-    from dbeam_spark.avro.schema import spark_schema_to_avro
-    from dbeam_spark.avro.writer import write_avro
-    from dbeam_spark.jobs.compact_runs import compact_runs
-
-    root = tmp_path / "cdc"
-    frames = [
-        [(1, "a0"), (2, "b0"), (3, "c0")],
-        [(2, "b1"), (4, "d1")],
-        [(2, "b2"), (3, "c2")],
-    ]
-    for i, rows in enumerate(frames):
-        df = spark.createDataFrame(rows, "k long, v string")
-        run = root / f"run_{i:05d}"
-        write_avro(df, str(run), spark_schema_to_avro(df.schema, "t"))
-        (run / "_SUCCESS").write_text("")
-
-    res = compact_runs(spark, str(root), primary_key="k", target_files=1)
-    assert res["rows"] == 4
-    got = sorted(_rows_in(Path(res["snapshot_dir"])))
-    assert got == [(1, "a0"), (2, "b2"), (3, "c2"), (4, "d1")]
-
-
-def test_export_diff_classifies_keys(spark, tmp_path):
-    from dbeam_spark.avro.schema import spark_schema_to_avro
-    from dbeam_spark.avro.writer import write_avro
-    from dbeam_spark.jobs.export_diff import diff_exports, materialize_diff
-
-    old = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30), (5, "e", 50),
-         (6, None, 60), (7, "g", None)],
-        "id long, name string, amount long",
-    )
-    new = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 99), (5, "e", 50), (11, "k", 110),
-         (6, None, 60), (7, None, 7)],  # 7: g/None -> None/7
-        "id long, name string, amount long",
-    )
-    d_old, d_new = str(tmp_path / "old"), str(tmp_path / "new")
-    write_avro(old, d_old, spark_schema_to_avro(old.schema, "t"))
-    write_avro(new, d_new, spark_schema_to_avro(new.schema, "t"))
-
-    diff, stats = diff_exports(spark, d_old, d_new, "id")
-    got = {r["k"]: r["status"] for r in diff.collect()}
-    assert got == {
-        1: "unchanged", 2: "changed", 3: "removed", 5: "unchanged",
-        6: "unchanged", 7: "changed", 11: "added",
-    }
-    assert (stats.added, stats.removed, stats.changed, stats.unchanged) == (
-        1, 1, 2, 3
-    )
-    assert stats.total_delta == 0
-
-    out = str(tmp_path / "delta")
-    stats2 = materialize_diff(spark, d_old, d_new, "id", out)
-    ups = {r["id"] for r in spark.read.parquet(f"{out}/upserts").collect()}
-    dels = {r["id"] for r in spark.read.parquet(f"{out}/deletes").collect()}
-    assert ups == {2, 7, 11} and dels == {3}
-    assert stats2.changed == 2
-
-
 def test_join_view_maintenance_idempotent_replay(spark, tmp_path):
     """Re-running a completed maintenance index (the crash-recovery
     path) must be a byte-identical no-op: the numbered-overwrite

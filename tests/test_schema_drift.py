@@ -93,51 +93,3 @@ def test_export_dirs_and_exit_codes(tmp_path):
 def test_missing_schema_file_raises(tmp_path):
     with pytest.raises(FileNotFoundError):
         check_export_drift(str(tmp_path), str(tmp_path))
-
-
-def test_orc_read_enforced_and_pruned(spark, tmp_path):
-    import pytest
-    from pyspark.sql import types as T
-
-    from dbeam_spark.sources.orc import read_orc
-
-    p = str(tmp_path / "t.orc")
-    spark.range(0, 100).selectExpr(
-        "CAST(id AS INT) AS a",
-        "CAST(id * 1.5 AS FLOAT) AS b",
-        "CONCAT('x', id) AS c",
-    ).write.orc(p)
-
-    # exact read + lossless widening (int->long, float->double)
-    want = T.StructType(
-        [
-            T.StructField("a", T.LongType()),
-            T.StructField("b", T.DoubleType()),
-        ]
-    )
-    out = read_orc(spark, p, want)
-    assert [f.dataType.typeName() for f in out.schema.fields] == [
-        "long",
-        "double",
-    ]
-    assert out.count() == 100
-
-    # predicate pushdown reaches the ORC scan through the enforcement
-    plan = (
-        out.filter("a > 90")._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PushedFilters: [IsNotNull(a), GreaterThan(a,90)]" in plan
-
-    # missing column: fail by default, null-fill on request
-    want_missing = T.StructType(
-        [T.StructField("a", T.LongType()), T.StructField("z", T.StringType())]
-    )
-    with pytest.raises(ValueError, match="missing column: z"):
-        read_orc(spark, p, want_missing)
-    filled = read_orc(spark, p, want_missing, on_missing="null_fill")
-    assert filled.filter("z IS NULL").count() == 100
-
-    # lossy narrowing refused (string -> int)
-    bad = T.StructType([T.StructField("c", T.IntegerType())])
-    with pytest.raises(ValueError, match="type mismatch: c"):
-        read_orc(spark, p, bad)

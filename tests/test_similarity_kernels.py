@@ -97,21 +97,47 @@ def test_cell_top_k_empty_side_is_an_empty_frame():
     assert len(out) == 0
 
 
+def _embeddings(spark):
+    from dbeam_spark.sources.files import load_table
+    from test_queries_oracle import SF_DIR
+
+    return load_table(spark, SF_DIR, "embeddings")
+
+
+def _build(spark, build):
+    """(frame that build() returns, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"knn-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build a kNN frame")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_knn_bruteforce_frame_runs_one_spark_job(spark):
     """Building knn_bruteforce's frame collects the queries and runs
     nothing else."""
     from pyspark.sql import functions as F
 
-    from dbeam_spark.sources.files import load_table
-    from test_queries_oracle import SF_DIR
-
-    emb = load_table(spark, SF_DIR, "embeddings")
+    emb = _embeddings(spark)
     queries = emb.filter(F.col("vec_id") < 10)
-    sc = spark.sparkContext
-    group = f"knn-build-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "build knn_bruteforce")
-    try:
-        similarity.knn_bruteforce(emb, queries, k=5)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    _, jobs = _build(spark, lambda: similarity.knn_bruteforce(emb, queries, k=5))
+    assert jobs == 1
+
+
+def test_knn_pq_empty_query_set_returns_before_training(spark):
+    """No queries: knn_pq returns an empty frame of its usual schema
+    after the one job that collects the queries, without training or
+    encoding the base."""
+    from pyspark.sql import functions as F
+
+    emb = _embeddings(spark)
+    none = emb.filter(F.col("vec_id") < 0)
+    out, jobs = _build(spark, lambda: similarity.knn_pq(emb, none, m=16, nbits=4))
+    assert jobs == 1
+    assert out.collect() == []
+    assert out.schema.simpleString() == (
+        "struct<query_id:bigint,neighbor_id:bigint,adist:double,rank:int>"
+    )

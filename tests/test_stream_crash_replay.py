@@ -1,7 +1,6 @@
-"""Crash-replay contracts for the foreachBatch sinks (r7 judge
-directive #5): stream_upsert_sink, stream_to_avro, and the
-stream_dedup_index ledger all claim idempotency under micro-batch
-replay — these tests PROVE it by killing the stream between batches.
+"""Crash-replay contracts for the streaming sinks: the
+stream_dedup_index ledger claims idempotency under micro-batch replay
+— these tests prove it by killing the stream between batches.
 
 Mechanics: Structured Streaming plans a micro-batch's offsets into
 the checkpoint's offset log BEFORE running it and appends to the
@@ -20,6 +19,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+
 
 def _staged_files_stream(spark, tmp_path, frames, name="in"):
     """Land each frame as ONE parquet file in a stream dir and return
@@ -41,142 +41,6 @@ def _staged_files_stream(spark, tmp_path, frames, name="in"):
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-
-
-def _events_frames(spark):
-    """Three deterministic event frames (distinct keys + an overlap so
-    replay exercises last-write-wins)."""
-    rows = []
-    for b in range(3):
-        for i in range(40):
-            uid = (b * 25 + i) % 60  # overlaps across batches
-            rows.append(
-                (b * 1000 + i, 1_700_000_000_000 + b * 60_000 + i, uid,
-                 "upd", f"2024-01-0{b + 1}")
-            )
-    df = spark.createDataFrame(
-        rows, "event_id long, ms long, uid long, event_type string, day string"
-    ).withColumn("ts", F.timestamp_millis(F.col("ms"))).drop("ms")
-    return [
-        df.filter(F.col("event_id").between(b * 1000, b * 1000 + 999))
-        for b in range(3)
-    ]
-
-
-def test_stream_upsert_sink_crash_replay(spark, tmp_path, monkeypatch):
-    """Kill the CDC apply after batch 1's partition rewrites landed
-    but before its commit; restart from the checkpoint. The replayed
-    upsert re-applies the same batch (last-write-wins per key =
-    idempotent) and the final table equals the uninterrupted twin."""
-    import dbeam_spark.operators.bucketing as bucketing
-    from dbeam_spark.queries.streaming import stream_upsert_sink
-
-    frames = _events_frames(spark)
-
-    # uninterrupted twin
-    table_a = str(tmp_path / "tbl_a")
-    stream_upsert_sink(
-        _staged_files_stream(spark, tmp_path, frames, "a"),
-        table_a, key_col="uid", partition_col="day",
-        checkpoint=str(tmp_path / "ckpt_a"),
-    )
-
-    # crashed-and-resumed run
-    table_b = str(tmp_path / "tbl_b")
-    ckpt_b = str(tmp_path / "ckpt_b")
-    calls = {"current_batch": None, "crashed": set()}
-    real_upsert = bucketing.upsert_partitioned
-
-    def tracking_upsert(spark_, path, latest, key_col, partition_col):
-        out = real_upsert(spark_, path, latest, key_col, partition_col)
-        if calls["current_batch"] in (1,) and 1 not in calls["crashed"]:
-            calls["crashed"].add(1)
-            raise RuntimeError("injected crash after batch 1 work")
-        return out
-
-    # track batch ids through the sink's foreachBatch wrapper: patch
-    # upsert_partitioned (imported function-locally, so the module
-    # attribute is the live binding) and infer the batch from the
-    # batch's event_id range (batch b holds ids b*1000..)
-    def tracking_upsert_with_bid(spark_, path, latest, key_col, partition_col):
-        bid = latest.agg(F.min("event_id")).collect()[0][0] // 1000
-        calls["current_batch"] = bid
-        return tracking_upsert(spark_, path, latest, key_col, partition_col)
-
-    monkeypatch.setattr(bucketing, "upsert_partitioned", tracking_upsert_with_bid)
-    with pytest.raises(Exception, match="injected crash"):
-        stream_upsert_sink(
-            _staged_files_stream(spark, tmp_path, frames, "b"),
-            table_b, key_col="uid", partition_col="day", checkpoint=ckpt_b,
-        )
-    assert calls["crashed"] == {1}
-    # restart from the SAME checkpoint and stage: replays batch 1,
-    # then batch 2 (monkeypatch stays active but crashes only once)
-    stream_upsert_sink(
-        spark.readStream.schema(frames[0].schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(tmp_path / "b_stage")),
-        table_b, key_col="uid", partition_col="day", checkpoint=ckpt_b,
-    )
-    a = sorted(map(tuple, spark.read.parquet(table_a)
-                   .select("uid", "event_id", "day").collect()))
-    b = sorted(map(tuple, spark.read.parquet(table_b)
-                   .select("uid", "event_id", "day").collect()))
-    assert a == b and len(a) > 0
-
-
-def test_stream_to_avro_crash_replay(spark, tmp_path, monkeypatch):
-    """Kill the Avro sink after batch 1's OCF files landed but before
-    its commit; restart. The replay rewrites batch_1/ via the writer's
-    tmp+atomic-rename (same deterministic file names), so the resumed
-    export's row multiset equals the uninterrupted twin's."""
-    import dbeam_spark.avro.writer as writer_mod
-    from dbeam_spark.avro.reader import read_avro_file
-    from dbeam_spark.queries.streaming import stream_to_avro
-
-    frames = _events_frames(spark)
-
-    out_a = str(tmp_path / "avro_a")
-    stream_to_avro(
-        _staged_files_stream(spark, tmp_path, frames, "av_a"),
-        out_a, schema_name="events",
-        checkpoint=str(tmp_path / "av_ckpt_a"),
-    )
-
-    out_b = str(tmp_path / "avro_b")
-    ckpt_b = str(tmp_path / "av_ckpt_b")
-    state = {"crashed": False}
-    real_write = writer_mod.write_avro
-
-    def crashing_write(df, output_dir, avro_schema, **kwargs):
-        stats = real_write(df, output_dir, avro_schema, **kwargs)
-        if output_dir.endswith("batch_1") and not state["crashed"]:
-            state["crashed"] = True
-            raise RuntimeError("injected crash after batch 1 files landed")
-        return stats
-
-    monkeypatch.setattr(writer_mod, "write_avro", crashing_write)
-    with pytest.raises(Exception, match="injected crash"):
-        stream_to_avro(
-            _staged_files_stream(spark, tmp_path, frames, "av_b"),
-            out_b, schema_name="events", checkpoint=ckpt_b,
-        )
-    assert state["crashed"]
-    stream_to_avro(
-        spark.readStream.schema(frames[0].schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(tmp_path / "av_b_stage")),
-        out_b, schema_name="events", checkpoint=ckpt_b,
-    )
-
-    def rows_of(root):
-        rows = []
-        for f in sorted(glob.glob(root + "/batch_*/part-*.avro")):
-            rows.extend(read_avro_file(f)[1])
-        return sorted(map(tuple, rows))
-
-    ra, rb = rows_of(out_a), rows_of(out_b)
-    assert ra == rb and len(ra) == 120
 
 
 def _doc_frames(spark):

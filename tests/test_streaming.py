@@ -32,67 +32,6 @@ def test_stream_dedup_counts(spark):
     assert tuple(got) == tuple(expected)
 
 
-def test_stream_to_avro_sink(spark, tmp_path):
-    import glob
-
-    from dbeam_spark.avro.reader import read_avro_file
-    from dbeam_spark.queries.streaming import _events_stream, stream_to_avro
-
-    out = str(tmp_path / "stream_avro")
-    stream = _events_stream(spark, SF_DIR).select("event_id", "user_id", "event_type")
-    stream_to_avro(stream, out, schema_name="events")
-    files = glob.glob(out + "/batch_*/part-*.avro")
-    assert files
-    rows = []
-    for f in files:
-        rows.extend(read_avro_file(f)[1])
-    expected = load_table(spark, SF_DIR, "events").count()
-    assert len(rows) == expected
-    assert len({r[0] for r in rows}) == expected  # event_ids intact
-
-
-def test_stream_upsert_sink(spark, tmp_path):
-    """Streaming CDC apply: replay events into a keyed parquet table;
-    last write per user wins and a second replay is idempotent."""
-    from pyspark.sql import functions as F
-
-    from dbeam_spark.queries.streaming import _events_stream, stream_upsert_sink
-
-    table = str(tmp_path / "user_state")
-    updates = _events_stream(spark, SF_DIR).select(
-        "event_id",
-        "ts",
-        F.col("user_id").alias("uid"),
-        "event_type",
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-    )
-    stream_upsert_sink(updates, table, key_col="uid", partition_col="day")
-    got = spark.read.parquet(table)
-    ev = load_table(spark, SF_DIR, "events")
-    n_users = ev.select("user_id").distinct().count()
-    # one surviving row per user, and it is that user's LATEST event
-    assert got.count() == n_users
-    latest = (
-        ev.groupBy("user_id")
-        .agg(F.max(F.struct("ts", "event_id")).alias("m"))
-        .select(F.col("user_id").alias("uid"), F.col("m.event_id").alias("event_id"))
-    )
-    mismatched = got.select("uid", "event_id").exceptAll(latest).count()
-    assert mismatched == 0
-    # replaying the same data is a no-op (idempotent apply)
-    updates2 = _events_stream(spark, SF_DIR).select(
-        "event_id",
-        "ts",
-        F.col("user_id").alias("uid"),
-        "event_type",
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-    )
-    stream_upsert_sink(updates2, table, key_col="uid", partition_col="day")
-    again = spark.read.parquet(table)
-    assert again.count() == n_users
-    assert again.select("uid", "event_id").exceptAll(latest).count() == 0
-
-
 def test_windowed_late_metrics_counts_planted_late_rows(spark, tmp_path):
     """Plant rows that arrive behind the watermark (file 2 is an hour
     older than the watermark after file 1) and check the drop counter

@@ -1,5 +1,5 @@
 """Versioned parquet table (A38): time travel, snapshot isolation,
-partition-scoped upserts by reference, conflict detection, vacuum."""
+partition-scoped upserts by reference, conflict detection."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ from dbeam_spark.operators.versioned import (
     commit_upsert,
     history,
     read_snapshot,
-    vacuum,
 )
 
 
@@ -71,20 +70,6 @@ def test_conflicting_writers_detected(spark, tmp_path):
     (Path(t) / "_manifests" / "v00002.json").write_text("{}")
     with pytest.raises(SnapshotConflictError):
         commit_upsert(spark, t, _df(spark, [(2, "b", "d1")]), "k", "day")
-
-
-def test_vacuum_keeps_retained_versions_readable(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    commit_snapshot(_df(spark, [(1, "a", "d1")]), t, "day")
-    commit_upsert(spark, t, _df(spark, [(1, "b", "d1")]), "k", "day")
-    commit_upsert(spark, t, _df(spark, [(1, "c", "d1")]), "k", "day")
-    removed = vacuum(t, keep_versions=2)
-    assert removed  # v1's d1 file is referenced by no retained version
-    # retained versions still read
-    assert [r["v"] for r in read_snapshot(spark, t, version=3).collect()] == ["c"]
-    assert [r["v"] for r in read_snapshot(spark, t, version=2).collect()] == ["b"]
-    with pytest.raises(FileNotFoundError):
-        read_snapshot(spark, t, version=1)
 
 
 def test_upsert_with_escaped_partition_values(spark, tmp_path):
@@ -160,32 +145,3 @@ def test_schema_evolution_on_upsert(spark, tmp_path):
     latest2 = read_snapshot(spark, t)
     by_k = {r["k"]: r["note"] for r in latest2.collect()}
     assert by_k[3] is None and by_k[2] == "extra"
-
-
-def test_changes_between_versions(spark, tmp_path):
-    """Change data feed: inserts/updates/deletes between snapshots,
-    reading ONLY partitions whose file set differs (carried-by-
-    reference partitions never contribute rows)."""
-    from dbeam_spark.operators.versioned import changes_between
-
-    t = str(tmp_path / "tbl")
-    commit_snapshot(
-        _df(spark, [(1, "a", "d1"), (2, "b", "d2"), (3, "c", "d2")]),
-        t, "day",
-    )
-    # v2: update k=2, insert k=9 (both in d2); d1 carried by reference
-    commit_upsert(
-        spark, t, _df(spark, [(2, "B", "d2"), (9, "z", "d2")]), "k", "day"
-    )
-    feed = changes_between(spark, t, 1, 2, "k").collect()
-    by_k = {r["k"]: r["_change_type"] for r in feed}
-    assert by_k == {2: "update", 9: "insert"}
-    assert all(r["day"] == "d2" for r in feed)  # d1 never read
-    # a full overwrite that drops a key -> delete marker
-    commit_snapshot(
-        _df(spark, [(1, "a", "d1"), (2, "B", "d2"), (9, "z", "d2")]),
-        t, "day",
-    )
-    feed2 = {r["k"]: r["_change_type"]
-             for r in changes_between(spark, t, 2, 3, "k").collect()}
-    assert feed2[3] == "delete"
