@@ -18,14 +18,18 @@ Two tiers of decode:
   absolute byte range (encode_mp4 is the muxer twin). That is the
   container's entire pure-parsing surface: the byte ranges a
   frame-sampling stage would hand to a real video decoder.
-- A stub for the one step that genuinely needs an external codec in
-  this container (MP4 video BITSTREAM decode needs pyav):
-  `decode_media` raises NotImplementedError for it, `fake_decode`
-  is the deterministic stand-in. Swapping in an ffmpeg call is the
-  only change needed on a real cluster — the Spark-side contract
-  (binary column + metadata struct in, Arrow-batched `mapInPandas`
-  with explicit schema out) is identical either way, as the
-  BMP/PNG/JPEG/WAV tier proves.
+
+`roundtrip(docs, fmt)` runs any of these end to end in one
+Arrow-batched stage: it plants each document's bytes as a `fmt` asset,
+encodes, decodes and checks it, driven by the ROUNDTRIPS table.
+
+MP4 video BITSTREAM decode needs an external codec (pyav) that the
+package does not depend on, so the payload plumbing (`with_payload`,
+`decode_batch`, `slices`) runs on `fake_decode`, a deterministic
+stand-in. Swapping in an ffmpeg call is the only change needed on a
+real cluster — the Spark-side contract (binary column + metadata
+struct in, Arrow-batched `mapInPandas` with explicit schema out) is
+identical either way, as the round-trip tier proves.
 """
 
 from __future__ import annotations
@@ -43,6 +47,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from dbeam_spark.operators.util import rebalance_for_arrow
 
 DECODED_SCHEMA = StructType(
     [
@@ -877,10 +883,10 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, int, bytes]:
 # codec involved. A training pipeline's MP4 work is mostly HERE
 # (frame-sample selection, per-track metadata, byte-range extraction
 # for a downstream GPU decode); only the codec bitstream decode needs
-# pyav/ffmpeg, and that single call stays the declared stub in
-# decode_media. Muxer twin emits a spec-shaped one-video-track file
-# (ftyp + mdat + moov trailing, so chunk offsets are layout-stable)
-# so tests and the oracle pin the full sample-table walk.
+# pyav/ffmpeg, which the package does not depend on. Muxer twin
+# emits a spec-shaped one-video-track file (ftyp + mdat + moov
+# trailing, so chunk offsets are layout-stable) so tests and the
+# oracle pin the full sample-table walk.
 
 
 def _mp4_box(fourcc: bytes, payload: bytes, force_large: bool = False) -> bytes:
@@ -1195,28 +1201,175 @@ def demux_mp4(payload: bytes) -> dict:
     return out
 
 
-def decode_media(payload: bytes, mime: str):
-    """Decoder entry point. BMP and WAV decode for REAL (stdlib
-    struct/wave — see decode_bmp/decode_wav); formats that need
-    external codecs (PIL / soundfile / pyav) raise — deliberately
-    unimplemented in this container. Returns (n_bytes, width, height)
-    for images and (n_bytes, n_frames, framerate) for audio."""
-    payload = bytes(payload)
-    if mime == "image/bmp":
-        w, h, _, _ = decode_bmp(payload)
-        return len(payload), w, h
-    if mime == "image/png":
-        w, h, _, _, _ = decode_png(payload)
-        return len(payload), w, h
-    if mime == "image/jpeg":
-        w, h, _, _, _ = decode_jpeg(payload)
-        return len(payload), w, h
-    if mime in ("audio/wav", "audio/x-wav"):
-        _, _, rate, n_frames, _ = decode_wav(payload)
-        return len(payload), n_frames, rate
-    raise NotImplementedError(
-        f"codec for {mime!r} is not available in this environment"
+# ------------------------------------------------ round-trip kernel
+#
+# One row per format: a per-document function `raw bytes -> facts`
+# that plants an asset with length-derived geometry, encodes it,
+# decodes it and checks the round trip (the check is the last fact),
+# plus the DDL of those facts. The geometry formulas are the ones each
+# query's oracle restates in SQL from octet_length.
+
+
+def _tile(raw: bytes, need: int) -> bytes:
+    """The first `need` bytes of `raw` repeated; an empty document
+    tiles as one zero byte."""
+    raw = raw or b"\x00"
+    return (raw * (need // len(raw) + 1))[:need]
+
+
+def _bmp_facts(raw: bytes) -> tuple:
+    ln = len(raw)
+    w, h = 8 + ln % 25, 6 + ln % 19
+    pixels = _tile(raw, w * h * 3)
+    payload = encode_bmp(pixels, w, h)
+    dw, dh, bpp, dpix = decode_bmp(payload)
+    ok = (
+        bpp == 24
+        and dpix == pixels
+        and len(payload) == 54 + bmp_row_stride(dw) * dh
     )
+    return dw, dh, len(payload), ok
+
+
+def _png_facts(raw: bytes) -> tuple:
+    ln = len(raw)
+    w, h = 8 + ln % 21, 5 + ln % 17
+    pixels = _tile(raw, w * h * 3)
+    dw, dh, depth, dpix, filters = decode_png(encode_png(pixels, w, h))
+    return (
+        dw, dh, dh * (1 + dw * 3), len(set(filters)),
+        depth == 8 and dpix == pixels,
+    )
+
+
+def _jpeg_geometry(raw: bytes) -> tuple[int, int]:
+    ln = len(raw)
+    return 8 + ln % 23, 6 + ln % 15
+
+
+def _jpeg_facts(raw: bytes) -> tuple:
+    """pixels_close: max per-channel |err| <= 8, a wide margin over
+    the measured all-ones-quant bound of 2."""
+    import numpy as np
+
+    w, h = _jpeg_geometry(raw)
+    pixels = _tile(raw, w * h * 3)
+    dw, dh, dpix, segs, blocks = decode_jpeg(encode_jpeg(pixels, w, h))
+    err = int(
+        np.abs(
+            np.frombuffer(dpix, np.uint8).astype(np.int16)
+            - np.frombuffer(pixels, np.uint8).astype(np.int16)
+        ).max()
+    )
+    return dw, dh, blocks, len(segs), dw == w and dh == h and err <= 8
+
+
+def _jpeg_screen_facts(raw: bytes) -> tuple:
+    """Structural screen of a constant-color JPEG with the document's
+    geometry: no entropy decode."""
+    w, h = _jpeg_geometry(raw)
+    payload = encode_jpeg(bytes([127]) * (w * h * 3), w, h)
+    rep = screen_jpeg(payload)
+    valid = (
+        rep["valid"] and rep["width"] == w and rep["height"] == h
+        and rep["n_segments"] == 11 and rep["n_dqt"] == 2
+        and rep["n_dht"] == 4
+    )
+    blocks = 3 * ((w + 7) // 8) * ((h + 7) // 8)
+    scan_ok = 0 < rep["scan_start"] <= rep["scan_end"] < len(payload)
+    return valid, blocks, scan_ok
+
+
+def _mp4_facts(raw: bytes) -> tuple:
+    ln = len(raw)
+    w, h = 16 * (2 + ln % 9), 16 * (1 + ln % 5)
+    n = 5 + ln % 20
+    payload = encode_mp4(raw, w, h, n)
+    d = demux_mp4(payload)
+    t = d["tracks"][0]
+    ok = (
+        d["brand"] == "isom"
+        and t["handler"] == "vide"
+        and t["sample_deltas"] == [(n, 512)]
+        and all(
+            payload[off : off + sz] == mp4_sample_bytes(raw, i)
+            for i, (off, sz) in enumerate(t["samples"])
+        )
+    )
+    return (
+        t["width"], t["height"], t["n_samples"], (n + 2) // 3,
+        sum(sz for _, sz in t["samples"]), d["duration_ms"], t["codec"], ok,
+    )
+
+
+def _wav_facts(raw: bytes) -> tuple:
+    """Windows are 32 frames at a 16-frame hop, partial kept."""
+    frames = 64 + len(raw) % 157
+    samples = _tile(raw, frames * 2)
+    payload = encode_wav(samples, rate=8000)
+    ch, sw, rate, n_frames, dec = decode_wav(payload)
+    return (
+        n_frames, rate, len(payload), (n_frames + 15) // 16,
+        ch == 1 and sw == 2 and dec == samples,
+    )
+
+
+ROUNDTRIPS = {
+    "bmp": (
+        _bmp_facts,
+        "width long, height long, n_bytes long, pixels_roundtrip boolean",
+    ),
+    "png": (
+        _png_facts,
+        "width long, height long, raw_stream_len long, filters_used long, "
+        "pixels_roundtrip boolean",
+    ),
+    "jpeg": (
+        _jpeg_facts,
+        "width long, height long, n_blocks long, n_segments long, "
+        "pixels_close boolean",
+    ),
+    "jpeg_screen": (
+        _jpeg_screen_facts,
+        "ok boolean, blocks long, scan_ok boolean",
+    ),
+    "mp4": (
+        _mp4_facts,
+        "width long, height long, n_samples long, n_chunks long, "
+        "total_sample_bytes long, duration_ms long, codec string, "
+        "samples_ok boolean",
+    ),
+    "wav": (
+        _wav_facts,
+        "n_frames long, framerate long, n_bytes long, n_windows long, "
+        "frames_roundtrip boolean",
+    ),
+}
+
+
+def roundtrip(docs: DataFrame, fmt: str) -> DataFrame:
+    """Plant each document's utf-8 bytes as a `fmt` asset, round-trip
+    it through the real codec in one Arrow-batched stage, and return
+    (doc_id, *facts) with the columns of ROUNDTRIPS[fmt]."""
+    facts, ddl = ROUNDTRIPS[fmt]
+    names = ["doc_id"] + [col.split()[0] for col in ddl.split(", ")]
+
+    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    (did, *facts(txt.encode("utf-8")))
+                    for did, txt in zip(pdf["doc_id"], pdf["text"])
+                ],
+                columns=names,
+            )
+
+    return rebalance_for_arrow(docs.select("doc_id", "text")).mapInPandas(
+        part, "doc_id long, " + ddl
+    )
+
+
+# ------------------------------------------------------ plumbing
 
 
 def fake_decode(payload: bytes) -> tuple[int, int, int]:
@@ -1243,27 +1396,23 @@ def with_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def decode_batch(docs_with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched 'decode': mapInPandas over (doc_id, payload).
+    """Arrow-batched 'decode': mapInPandas over (doc_id, payload)
+    through the `fake_decode` stand-in.
 
     Partitioning note: batches arrive as whole input partitions —
     size them with spark.sql.files.maxPartitionBytes so a batch of
     decoded frames fits executor memory.
     """
     cols = docs_with_payload.select("doc_id", "payload", "media_meta.mime")
-    real = {"image/bmp", "audio/wav", "audio/x-wav"}
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            decoded = [
-                decode_media(p, m) if m in real else fake_decode(p)
-                for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
+            decoded = [fake_decode(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "mime": pdf["mime"],
                     "n_bytes": [d[0] for d in decoded],
-                    # images: (width, height); audio: (n_frames, rate)
                     "width": [d[1] for d in decoded],
                     "height": [d[2] for d in decoded],
                 }
@@ -1281,73 +1430,36 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def frame_sample(
-    docs_with_payload: DataFrame,
-    frame_bytes: int = 256,
-    every_k: int = 4,
+def slices(
+    docs_with_payload: DataFrame, size: int, hop: int, every: int = 1
 ) -> DataFrame:
-    """Video-style frame sampling: treat the payload as a sequence of
-    fixed-size frames and emit every k-th (doc_id, frame_idx,
-    frame_len) row — the 1→N fan-out plumbing a real decoder needs
-    (pyav would yield decoded frames here; the slicing is the same).
+    """1→N fan-out of each payload into `size`-byte slices that start
+    every `hop` bytes, keeping every `every`-th: one (doc_id,
+    frame_idx, frame_len) row per kept slice, the final partial slice
+    clipped, not dropped.
 
-    Arrow-batched mapInPandas: output rows per input row vary freely,
-    which is exactly what per-frame extraction produces. Partition
-    sizing note: output is ≈ input_bytes/(frame_bytes·k) rows — bound
-    input partition bytes accordingly.
+    - video-style frame sampling: `size == hop`, `every = k` (pyav
+      would yield decoded frames here; the slicing is the same);
+    - audio-style overlapping windows: `hop < size`, `every = 1` (the
+      STFT/feature-window fan-out; librosa frames slot straight in).
+
+    Arrow-batched mapInPandas: output rows per input row vary freely.
+    Output is ≈ input_bytes/(hop·every) rows, so overlap multiplies
+    volume by size/hop — bound input partition bytes accordingly.
     """
     cols = docs_with_payload.select("doc_id", "payload")
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_id, out_idx, out_len = [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 n = len(payload)
-                for idx in range(0, (n + frame_bytes - 1) // frame_bytes, every_k):
-                    start = idx * frame_bytes
+                for idx in range(0, (n + hop - 1) // hop, every):
                     out_id.append(doc_id)
                     out_idx.append(idx)
-                    out_len.append(min(frame_bytes, n - start))
+                    out_len.append(min(size, n - idx * hop))
             yield pd.DataFrame(
                 {"doc_id": out_id, "frame_idx": out_idx, "frame_len": out_len}
             )
 
-    return cols.mapInPandas(sample, FRAME_SCHEMA)
-
-
-def window_slices(
-    docs_with_payload: DataFrame,
-    window_bytes: int = 512,
-    hop_bytes: int = 256,
-) -> DataFrame:
-    """Audio-style OVERLAPPING windowing: slide a `window_bytes`
-    window over the payload at `hop_bytes` stride and emit one row
-    per window (doc_id, win_idx, win_len) — the STFT/feature-window
-    fan-out a real audio front end performs (librosa frames slot
-    straight into this shape); the final partial window is kept, as
-    feature extractors do with padding.
-
-    Same Arrow-batched 1→N contract as `frame_sample`; with
-    hop < window the fan-out is input_bytes/hop rows, so overlap
-    multiplies output volume by window/hop — size input partitions
-    accordingly at scale."""
-    cols = docs_with_payload.select("doc_id", "payload")
-
-    def slide(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_idx, out_len = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload)
-                idx = 0
-                start = 0
-                while start < n:
-                    out_id.append(doc_id)
-                    out_idx.append(idx)
-                    out_len.append(min(window_bytes, n - start))
-                    idx += 1
-                    start += hop_bytes
-            yield pd.DataFrame(
-                {"doc_id": out_id, "frame_idx": out_idx, "frame_len": out_len}
-            )
-
-    return cols.mapInPandas(slide, FRAME_SCHEMA)
+    return cols.mapInPandas(cut, FRAME_SCHEMA)

@@ -11,21 +11,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbeam_spark.operators import dedup, multimodal, sampling, similarity, text
-from dbeam_spark.operators.multimodal import (
-    bmp_row_stride,
-    decode_bmp,
-    decode_jpeg,
-    decode_png,
-    decode_wav,
-    demux_mp4,
-    encode_bmp,
-    encode_jpeg,
-    encode_mp4,
-    encode_png,
-    encode_wav,
-    mp4_sample_bytes,
-    screen_jpeg,
-)
 from dbeam_spark.operators.util import bounded_grain_window
 from dbeam_spark.queries.registry import register
 from dbeam_spark.session import ensure_utc
@@ -1093,12 +1078,12 @@ def doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling plumbing over binary payloads: every 4th
     256-byte frame per document through the Arrow-batched 1→N
-    `frame_sample` operator (a real video decoder swaps into the same
+    `slices` operator (a real video decoder swaps into the same
     shape). The oracle recomputes the frame geometry in SQL from the
     payload length, so the fan-out arithmetic is exactly pinned."""
     docs = _docs(spark, sf_dir)
-    return multimodal.frame_sample(
-        multimodal.with_payload(docs), frame_bytes=256, every_k=4
+    return multimodal.slices(
+        multimodal.with_payload(docs), size=256, hop=256, every=4
     ).orderBy("doc_id", "frame_idx")
 
 
@@ -1131,45 +1116,7 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planted ones per row (decode really ran, not a metadata echo).
     Upgrades the r4 'decode stubbed' partial: the plumbing now carries
     genuinely decoded media for every stdlib-decodable format."""
-    ensure_utc(spark)
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def part(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, ws, hs, nb, ok = [], [], [], [], []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                raw = txt.encode("utf-8") or b"\x00"
-                ln = len(txt.encode("utf-8"))
-                w, h = 8 + ln % 25, 6 + ln % 19
-                need = w * h * 3
-                pixels = (raw * (need // len(raw) + 1))[:need]
-                payload = encode_bmp(pixels, w, h)
-                dw, dh, bpp, dpix = decode_bmp(payload)
-                ids.append(did)
-                ws.append(dw)
-                hs.append(dh)
-                nb.append(len(payload))
-                ok.append(
-                    bpp == 24
-                    and dpix == pixels
-                    and len(payload) == 54 + bmp_row_stride(dw) * dh
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids, "width": ws, "height": hs,
-                    "n_bytes": nb, "pixels_roundtrip": ok,
-                }
-            )
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
-
-    return rebalance_for_arrow(docs).mapInPandas(
-        part,
-        "doc_id long, width long, height long, n_bytes long, "
-        "pixels_roundtrip boolean",
-    ).orderBy("doc_id")
+    return multimodal.roundtrip(_docs(spark, sf_dir), "bmp").orderBy("doc_id")
 
 
 @register(
@@ -1207,43 +1154,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference has no media decode at all — this is the
     training-pipeline surface, cf. dbeam-core's byte-oriented
     column contract in JdbcAvroRecordConverter.java)."""
-    ensure_utc(spark)
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def part(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, ws, hs, rl, nf, ok = [], [], [], [], [], []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                raw = txt.encode("utf-8") or b"\x00"
-                ln = len(txt.encode("utf-8"))
-                w, h = 8 + ln % 21, 5 + ln % 17
-                need = w * h * 3
-                pixels = (raw * (need // len(raw) + 1))[:need]
-                payload = encode_png(pixels, w, h)
-                dw, dh, depth, dpix, filters = decode_png(payload)
-                ids.append(did)
-                ws.append(dw)
-                hs.append(dh)
-                rl.append(dh * (1 + dw * 3))
-                nf.append(len(set(filters)))
-                ok.append(depth == 8 and dpix == pixels)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids, "width": ws, "height": hs,
-                    "raw_stream_len": rl, "filters_used": nf,
-                    "pixels_roundtrip": ok,
-                }
-            )
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
-
-    return rebalance_for_arrow(docs).mapInPandas(
-        part,
-        "doc_id long, width long, height long, raw_stream_len long, "
-        "filters_used long, pixels_roundtrip boolean",
-    ).orderBy("doc_id")
+    return multimodal.roundtrip(_docs(spark, sf_dir), "png").orderBy("doc_id")
 
 
 @register(
@@ -1286,54 +1197,9 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     float error). Closes the r6 residual: JPEG was the last decode a
     real multimodal corpus needs that pure numpy permits (the
     reference has no media decode at all — this is the training-
-    pipeline surface; MP4/pyav stays the lone declared stub,
-    operators/multimodal.py decode_media)."""
-    ensure_utc(spark)
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def part(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            ids, ws, hs, nb, ns, ok = [], [], [], [], [], []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                raw = txt.encode("utf-8") or b"\x00"
-                ln = len(txt.encode("utf-8"))
-                w, h = 8 + ln % 23, 6 + ln % 15
-                need = w * h * 3
-                pixels = (raw * (need // len(raw) + 1))[:need]
-                payload = encode_jpeg(pixels, w, h)
-                dw, dh, dpix, segs, blocks = decode_jpeg(payload)
-                err = int(
-                    np.abs(
-                        np.frombuffer(dpix, np.uint8).astype(np.int16)
-                        - np.frombuffer(pixels, np.uint8).astype(
-                            np.int16
-                        )
-                    ).max()
-                )
-                ids.append(did)
-                ws.append(dw)
-                hs.append(dh)
-                nb.append(blocks)
-                ns.append(len(segs))
-                ok.append(dw == w and dh == h and err <= 8)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids, "width": ws, "height": hs,
-                    "n_blocks": nb, "n_segments": ns,
-                    "pixels_close": ok,
-                }
-            )
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
-
-    return rebalance_for_arrow(docs).mapInPandas(
-        part,
-        "doc_id long, width long, height long, n_blocks long, "
-        "n_segments long, pixels_close boolean",
-    ).orderBy("doc_id")
+    pipeline surface; MP4 codec bitstream decode, which needs pyav,
+    is the one decode the package does not run)."""
+    return multimodal.roundtrip(_docs(spark, sf_dir), "jpeg").orderBy("doc_id")
 
 
 @register(
@@ -1387,64 +1253,7 @@ def multimodal_jpeg_sampled_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     geometry block totals, capped sample size) and the two wide
     invariants (every structure valid, every sampled decode within
     the bound)."""
-    ensure_utc(spark)
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def screen_part(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, valid, blocks, scan_ok = [], [], [], []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                ln = len(txt.encode("utf-8"))
-                w, h = 8 + ln % 23, 6 + ln % 15
-                payload = encode_jpeg(bytes([127]) * (w * h * 3), w, h)
-                rep = screen_jpeg(payload)
-                ids.append(did)
-                valid.append(
-                    rep["valid"] and rep["width"] == w
-                    and rep["height"] == h and rep["n_segments"] == 11
-                    and rep["n_dqt"] == 2 and rep["n_dht"] == 4
-                )
-                blocks.append(3 * ((w + 7) // 8) * ((h + 7) // 8))
-                scan_ok.append(
-                    0 < rep["scan_start"] <= rep["scan_end"] < len(payload)
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "ok": valid, "blocks": blocks,
-                 "scan_ok": scan_ok}
-            )
-
-    def decode_part(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            ids, ok = [], []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                raw = txt.encode("utf-8") or b"\x00"
-                ln = len(raw)
-                w, h = 8 + ln % 23, 6 + ln % 15
-                need = w * h * 3
-                pixels = (raw * (need // len(raw) + 1))[:need]
-                dw, dh, dpix, _segs, _blocks = decode_jpeg(
-                    encode_jpeg(pixels, w, h)
-                )
-                err = int(
-                    np.abs(
-                        np.frombuffer(dpix, np.uint8).astype(np.int16)
-                        - np.frombuffer(pixels, np.uint8).astype(np.int16)
-                    ).max()
-                )
-                ids.append(did)
-                ok.append(dw == w and dh == h and err <= 8)
-            yield pd.DataFrame({"doc_id": ids, "ok": ok})
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
-
-    screened = rebalance_for_arrow(docs).mapInPandas(
-        screen_part, "doc_id long, ok boolean, blocks long, scan_ok boolean"
-    )
+    docs = _docs(spark, sf_dir)
     sampled = (
         docs.filter(
             F.substring(
@@ -1454,10 +1263,7 @@ def multimodal_jpeg_sampled_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         .orderBy("doc_id")
         .limit(256)
     )
-    decoded = rebalance_for_arrow(sampled).mapInPandas(
-        decode_part, "doc_id long, ok boolean"
-    )
-    s = screened.agg(
+    s = multimodal.roundtrip(docs, "jpeg_screen").agg(
         F.count(F.lit(1)).cast("long").alias("n_assets"),
         F.sum(F.col("ok").cast("long")).cast("long")
         .alias("n_structure_valid"),
@@ -1466,9 +1272,9 @@ def multimodal_jpeg_sampled_audit(spark: SparkSession, sf_dir: str) -> DataFrame
             F.min(F.col("scan_ok").cast("int")), F.lit(1)
         ).alias("_scan_min"),
     )
-    d = decoded.agg(
+    d = multimodal.roundtrip(sampled, "jpeg").agg(
         F.count(F.lit(1)).cast("long").alias("n_sampled"),
-        F.coalesce(F.min(F.col("ok").cast("int")), F.lit(1))
+        F.coalesce(F.min(F.col("pixels_close").cast("int")), F.lit(1))
         .alias("_dec_min"),
     )
     return s.join(d).select(
@@ -1516,64 +1322,12 @@ def multimodal_mp4_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples_ok asserts every sample's bytes read back from the
     muxed file at the WALKED offset equal the deterministic
     generator — byte-exact, hence TRUE-pinned, not invariant-band.
-    Codec bitstream decode (pyav) stays the declared stub in
-    decode_media; demux is the container's pure-parsing surface
+    Codec bitstream decode needs pyav, which the package does not
+    depend on; demux is the container's pure-parsing surface
     (reference has no media surface at all — this is training-
     pipeline scope)."""
-    ensure_utc(spark)
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def part(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, ws, hs, nsam, nch, tb, dur, codec, ok = (
-                [], [], [], [], [], [], [], [], [],
-            )
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                raw = txt.encode("utf-8")
-                ln = len(raw)
-                w, h = 16 * (2 + ln % 9), 16 * (1 + ln % 5)
-                n = 5 + ln % 20
-                payload = encode_mp4(raw, w, h, n)
-                d = demux_mp4(payload)
-                t = d["tracks"][0]
-                good = (
-                    d["brand"] == "isom"
-                    and t["handler"] == "vide"
-                    and t["sample_deltas"] == [(n, 512)]
-                    and all(
-                        payload[off : off + sz]
-                        == mp4_sample_bytes(raw, i)
-                        for i, (off, sz) in enumerate(t["samples"])
-                    )
-                )
-                n_chunks = (n + 2) // 3
-                ids.append(did)
-                ws.append(t["width"])
-                hs.append(t["height"])
-                nsam.append(t["n_samples"])
-                nch.append(n_chunks)
-                tb.append(sum(sz for _, sz in t["samples"]))
-                dur.append(d["duration_ms"])
-                codec.append(t["codec"])
-                ok.append(good)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids, "width": ws, "height": hs,
-                    "n_samples": nsam, "n_chunks": nch,
-                    "total_sample_bytes": tb, "duration_ms": dur,
-                    "codec": codec, "samples_ok": ok,
-                }
-            )
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
-
-    return rebalance_for_arrow(docs).mapInPandas(
-        part,
-        "doc_id long, width long, height long, n_samples long, "
-        "n_chunks long, total_sample_bytes long, duration_ms long, "
-        "codec string, samples_ok boolean",
+    return multimodal.roundtrip(
+        _docs(spark, sf_dir), "mp4"
     )  # no terminal sort (order-insensitive hash gate, guide §2.4)
 
 
@@ -1604,45 +1358,7 @@ def multimodal_wav_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes frame count, the 44-byte PCM header size, and
     the window fan-out from octet_length; frames_roundtrip asserts
     the decoded PCM equals the planted samples byte for byte."""
-    ensure_utc(spark)
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def part(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, nf, fr, nb, nw, ok = [], [], [], [], [], []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                raw = txt.encode("utf-8") or b"\x00"
-                ln = len(txt.encode("utf-8"))
-                frames = 64 + ln % 157
-                need = frames * 2
-                samples = (raw * (need // len(raw) + 1))[:need]
-                payload = encode_wav(samples, rate=8000)
-                ch, sw, rate, n_frames, dec = decode_wav(payload)
-                win, hop = 32, 16
-                n_win = (n_frames + hop - 1) // hop
-                ids.append(did)
-                nf.append(n_frames)
-                fr.append(rate)
-                nb.append(len(payload))
-                nw.append(n_win)
-                ok.append(ch == 1 and sw == 2 and dec == samples)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids, "n_frames": nf, "framerate": fr,
-                    "n_bytes": nb, "n_windows": nw,
-                    "frames_roundtrip": ok,
-                }
-            )
-
-    from dbeam_spark.operators.util import rebalance_for_arrow
-
-    return rebalance_for_arrow(docs).mapInPandas(
-        part,
-        "doc_id long, n_frames long, framerate long, n_bytes long, "
-        "n_windows long, frames_roundtrip boolean",
-    ).orderBy("doc_id")
+    return multimodal.roundtrip(_docs(spark, sf_dir), "wav").orderBy("doc_id")
 
 
 _SURVIVOR_ORACLE = f"""
@@ -4370,14 +4086,14 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping audio-style windowing over binary payloads
     (512-byte windows, 256-byte hop — 2× overlap) via the
-    Arrow-batched `window_slices` operator; a real STFT/feature
+    Arrow-batched `slices` operator; a real STFT/feature
     front end swaps into the same 1→N shape. The oracle recomputes
     the full window geometry (count, indices, tail clipping) from
     payload lengths alone, pinning the slide arithmetic exactly —
     the complement of multimodal_frames' non-overlapping stride."""
     docs = _docs(spark, sf_dir)
-    out = multimodal.window_slices(
-        multimodal.with_payload(docs), window_bytes=512, hop_bytes=256
+    out = multimodal.slices(
+        multimodal.with_payload(docs), size=512, hop=256
     )
     return out.select(
         "doc_id",

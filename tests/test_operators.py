@@ -302,15 +302,6 @@ def test_multimodal_decode_stub(spark):
     out = multimodal.decode_batch(multimodal.with_payload(df)).collect()[0]
     assert out["n_bytes"] == 5
     assert out["width"] == 5 and out["height"] == 35
-    # PNG (r6) and JPEG (r7) decode for REAL — garbage is a codec
-    # error now, not an unimplemented format; MP4 bitstream decode
-    # is the one declared stub left
-    with pytest.raises(ValueError):
-        multimodal.decode_media(b"x", "image/png")
-    with pytest.raises(ValueError):
-        multimodal.decode_media(b"x", "image/jpeg")
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_media(b"x", "video/mp4")
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -689,15 +680,25 @@ def test_multimodal_frame_sample(spark):
     docs = spark.createDataFrame(
         [(1, "a" * 1500), (2, "b" * 100)], ["doc_id", "text"]
     )
-    rows = multimodal.frame_sample(
-        multimodal.with_payload(docs), frame_bytes=256, every_k=2
-    ).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append((r.frame_idx, r.frame_len))
+    payload = multimodal.with_payload(docs)
+
+    def slices(**kw):
+        by_doc = {}
+        for r in multimodal.slices(payload, **kw).collect():
+            by_doc.setdefault(r.doc_id, []).append((r.frame_idx, r.frame_len))
+        return {d: sorted(v) for d, v in by_doc.items()}
+
     # doc1: 1500 bytes -> frames 0..5 (last len 220), sampled 0,2,4
-    assert sorted(by_doc[1]) == [(0, 256), (2, 256), (4, 256)]
-    assert sorted(by_doc[2]) == [(0, 100)]
+    assert slices(size=256, hop=256, every=2) == {
+        1: [(0, 256), (2, 256), (4, 256)],
+        2: [(0, 100)],
+    }
+    # overlapping windows: one per 256-byte hop, tails clipped to the
+    # bytes left
+    assert slices(size=512, hop=256) == {
+        1: [(0, 512), (1, 512), (2, 512), (3, 512), (4, 476), (5, 220)],
+        2: [(0, 100)],
+    }
 
 
 def test_hot_key_salted_join_equals_plain(spark):
@@ -2175,28 +2176,58 @@ def test_wav_codec_roundtrip():
         assert dec == samples
 
 
-def test_decode_media_dispatch():
-    """decode_media really decodes BMP/WAV and still refuses formats
-    whose codecs are absent (the honest stub boundary)."""
-    import pytest as _pt
+def _flip_first(b: bytes) -> bytes:
+    return bytes([b[0] ^ 0xFF]) + b[1:]
 
-    from dbeam_spark.operators.multimodal import (
-        decode_media,
-        encode_bmp,
-        encode_wav,
+
+def _shift_first_sample(d: dict) -> dict:
+    off, sz = d["tracks"][0]["samples"][0]
+    d["tracks"][0]["samples"][0] = (off + 1, sz)
+    return d
+
+
+# The decoder each ROUNDTRIPS row checks, and one corruption of its
+# output: a flipped output byte, or a walked range one byte off.
+_CORRUPT_DECODE = {
+    "bmp": ("decode_bmp", lambda o: (*o[:3], _flip_first(o[3]))),
+    "png": ("decode_png", lambda o: (*o[:3], _flip_first(o[3]), o[4])),
+    "jpeg": ("decode_jpeg", lambda o: (*o[:2], _flip_first(o[2]), *o[3:])),
+    "jpeg_screen": ("screen_jpeg", lambda rep: {**rep, "scan_end": -1}),
+    "mp4": ("demux_mp4", _shift_first_sample),
+    "wav": ("decode_wav", lambda o: (*o[:4], _flip_first(o[4]))),
+}
+
+# Each query oracle's facts at octet_length = 0, written with the
+# oracle's own formulas; the round-trip check (last fact) is TRUE.
+_EMPTY_DOC_FACTS = {
+    "bmp": (8, 6, 54 + ((8 * 3 + 3) // 4) * 4 * 6, True),
+    "png": (8, 5, 5 * (1 + 8 * 3), min(5, 5), True),
+    "jpeg": (8, 6, 3 * ((8 + 7) // 8) * ((6 + 7) // 8), 11, True),
+    "jpeg_screen": (True, 3 * ((8 + 7) // 8) * ((6 + 7) // 8), True),
+    "mp4": (
+        16 * 2, 16 * 1, 5, (5 + 2) // 3,
+        sum(16 + (7 * i + 0) % 48 for i in range(5)),
+        5 * 512 * 1000 // 12800, "mp4v", True,
+    ),
+    "wav": (64, 8000, 44 + 64 * 2, (64 + 15) // 16, True),
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(multimodal.ROUNDTRIPS))
+def test_roundtrip_check_is_live(fmt, monkeypatch):
+    """Each round-trip row's check really compares decoded output: a
+    decoder that corrupts one byte turns the last fact FALSE (the
+    oracles only ever see TRUE). An empty document plants at the
+    geometry its oracle computes from octet_length = 0."""
+    facts, ddl = multimodal.ROUNDTRIPS[fmt]
+    assert len(_EMPTY_DOC_FACTS[fmt]) == len(ddl.split(", "))
+    assert facts(b"") == _EMPTY_DOC_FACTS[fmt]
+    doc = "naïve round trip ".encode() * 3
+    assert facts(doc)[-1] is True
+    name, corrupt = _CORRUPT_DECODE[fmt]
+    decoder = getattr(multimodal, name)
+    monkeypatch.setattr(
+        multimodal, name, lambda payload: corrupt(decoder(payload))
     )
-
-    bmp = encode_bmp(bytes(range(36)) * 1, 4, 3)
-    assert decode_media(bmp, "image/bmp") == (len(bmp), 4, 3)
-    from dbeam_spark.operators.multimodal import encode_png
-
-    png = encode_png(bytes(range(60)), 4, 5)
-    assert decode_media(png, "image/png") == (len(png), 4, 5)
-    wav = encode_wav(bytes(range(200)), rate=8000)
-    assert decode_media(wav, "audio/wav") == (len(wav), 100, 8000)
-    from dbeam_spark.operators.multimodal import encode_jpeg
-
-    jpg = encode_jpeg(bytes(range(90)) + bytes(90), 6, 10)
-    assert decode_media(jpg, "image/jpeg") == (len(jpg), 6, 10)
-    with _pt.raises(NotImplementedError):
-        decode_media(b"\x00\x00\x00\x18ftypmp42", "video/mp4")
+    assert facts(doc)[-1] is False
+    assert facts(b"")[-1] is False

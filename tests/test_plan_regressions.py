@@ -130,6 +130,25 @@ def test_audits_are_aggregation_only(spark):
         assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, name
 
 
+# Python stages per multimodal round-trip query, as PLANS.md records
+# them: one Arrow stage each, two for the audit's screen + sample tiers.
+ROUNDTRIP_PYTHON_STAGES = {
+    "multimodal_bmp_decode": 1,
+    "multimodal_png_decode": 1,
+    "multimodal_jpeg_decode": 1,
+    "multimodal_jpeg_sampled_audit": 2,
+    "multimodal_mp4_demux": 1,
+    "multimodal_wav_windows": 1,
+}
+
+
+def test_roundtrip_queries_keep_their_python_stages(spark):
+    for name, want in ROUNDTRIP_PYTHON_STAGES.items():
+        plan = plan_of(spark, name)
+        got = plan.count("ArrowEvalPython") + plan.count("MapInPandas")
+        assert got == want, (name, got)
+
+
 def test_minhash_signatures_parallelize_small_inputs(spark):
     # single-file local inputs must be round-robin rebalanced before
     # the Arrow signature stage (operators/util.rebalance_for_arrow):
