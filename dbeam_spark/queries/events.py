@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from dbeam_spark.operators.util import bounded_grain_window
 from dbeam_spark.queries.registry import register
+from dbeam_spark.queries.tpch import _lc_sign
 from dbeam_spark.session import ensure_utc
 from dbeam_spark.sources.files import load_table
 
@@ -2828,16 +2829,6 @@ _MRK_STATES = ("s", "c", "e", "g", "v")  # start + channels (alphabetical)
 _MRK_TARGETS = ("c", "e", "g", "v", "p", "x")  # p=conversion, x=null
 
 
-def _mrk_perm_sign(p):
-    s = 1
-    q = list(p)
-    for i in range(len(q)):
-        for j in range(i + 1, len(q)):
-            if q[i] > q[j]:
-                s = -s
-    return s
-
-
 def _mrk_entry(fi: str, fj: str, repl: bool):
     """(I−Q) row scaled by the row sum, as a name-level expression:
     diagonal = rowsum − self-loop count, off-diagonal = −count;
@@ -2864,7 +2855,7 @@ def _mrk_det_terms(states, repl_col):
     n = len(states)
     terms = []
     for perm in itertools.permutations(range(n)):
-        sign = _mrk_perm_sign(perm)
+        sign = _lc_sign(perm)
         names = []
         for row in range(n):
             col = perm[row]

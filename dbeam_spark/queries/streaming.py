@@ -11,18 +11,21 @@ watermark delay instead of an unbounded seen-set.
 from __future__ import annotations
 
 import atexit
+import glob
 import os
 import shutil
 import tempfile
+import time
 import uuid
 from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbeam_spark.queries.registry import register
 from dbeam_spark.session import ensure_utc
-from dbeam_spark.sources.files import load_table
+from dbeam_spark.sources.files import load_table, normalize_ts
 
 # Temp-dir hygiene: repeated probe/bench/correctness runs in one host
 # session used to accumulate every invocation's stream dirs and
@@ -47,111 +50,166 @@ def _cleanup_tmp() -> None:
     _TEMP_DIRS.clear()
 
 
-def _run_stream(stream_df, name: str, output_mode: str) -> None:
+# --- the one runner: every sink below goes through it ----------------
+
+
+def _run_available_now(writer, name: str) -> str:
+    """Run an already-configured DataStreamWriter to completion with
+    Trigger.AvailableNow as query `name`_<unique suffix>, and return
+    that query name (a memory sink's table name). Every run is a
+    finite single-shot replay from a FRESH checkpoint, removed in a
+    `finally` so a failed micro-batch leaks nothing."""
+    name = f"{name}_{uuid.uuid4().hex[:8]}"
     checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    try:
+        (
+            writer.queryName(name)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
+    return name
+
+
+def _run_stream(stream_df, output_mode: str) -> DataFrame:
+    """Run `stream_df` into a memory sink and return the sink's table.
+    Only for bounded rollups: the memory sink holds every emitted row
+    in the driver heap, so raw-row output goes to _parquet_sink."""
+    name = _run_available_now(
+        stream_df.writeStream.format("memory").outputMode(output_mode), "mem"
     )
-    q.awaitTermination()
-    shutil.rmtree(checkpoint, ignore_errors=True)
+    return stream_df.sparkSession.table(name)
+
+
+def _parquet_sink(stream_df, name: str) -> str:
+    """Run `stream_df` in APPEND mode into a PARQUET sink and return
+    the sink dir: raw-row stream output (O(corpus) rows) must land in
+    FILES (catch #14: the memory sink turned stream_dedup at the 100x
+    replica into a 335 s driver-heap stress test). The dir is
+    exit-tracked, and removed at once if the run fails."""
+    out_dir = _track_tmp(tempfile.mkdtemp(prefix=f"{name}_out_"))
+    try:
+        _run_available_now(
+            stream_df.writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append"),
+            name,
+        )
+    except BaseException:
+        shutil.rmtree(out_dir, ignore_errors=True)
+        raise
+    return out_dir
+
+
+# --- the one file-stream source ----------------------------------------
+
+
+def _table_files(path: str) -> list[str]:
+    """A table's data files: the parquet file itself, or the part
+    files of a directory-shaped table (e.g. the 10x scale replica,
+    written by Spark) in name order."""
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+    return [path]
+
+
+def _file_stream(
+    spark: SparkSession, files, schema, max_files_per_trigger=None
+) -> DataFrame:
+    """File-source stream over `files`, in order. The source wants a
+    directory of FILES, and its lister skips a directory symlink named
+    *.parquet (a silent 0-row stream), so each file is symlinked into
+    an exit-tracked dir. The source takes files oldest-mtime first (a
+    symlink reports its target's mtime), so callers land files in
+    their arrival order."""
+    stream_dir = _track_tmp(tempfile.mkdtemp(prefix="stream_src_"))
+    for i, p in enumerate(files):
+        os.symlink(p, os.path.join(stream_dir, f"a_{i:05d}.parquet"))
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option(
+            "maxFilesPerTrigger", str(max_files_per_trigger)
+        )
+    return reader.parquet(stream_dir)
+
+
+def _land_one_file(df: DataFrame) -> str:
+    """Write `df` as ONE parquet file into an exit-tracked dir and
+    return its path: one landed file is one unit of stream arrival (a
+    sentinel row, a fixed shard, one side of a replay split)."""
+    out = _track_tmp(tempfile.mkdtemp(prefix="stream_land_"))
+    df.coalesce(1).write.mode("overwrite").parquet(out)
+    return glob.glob(os.path.join(out, "part-*.parquet"))[0]
+
+
+def _flushed_stream(
+    spark: SparkSession, files, schema, seen: DataFrame
+) -> DataFrame:
+    """_file_stream over `files` with ONE far-future marker row
+    (user_id = -1, 30 days past max(ts) of the batch frame `seen`)
+    landed after them, in `schema`'s physical ts type.
+
+    ALL real files arrive in batch 1 and the sentinel ALONE in batch 2
+    (it is the newest file). One-file-per-batch (the r7 shape) ran a
+    directory-shaped replica as 33 micro-batches: 33 state-store
+    commits, and — since part files are not time-ordered — the
+    watermark after batch 1 silently DROPPED most later batches'
+    events as late (rows_10x/30x/100x read 196k/198k/204k: flat = the
+    drop). One real batch keeps finite-replay semantics equal to the
+    batch oracle at every replica size; stream_session_window at 100x
+    measured 213 s -> 114 s while emitting the full 9.78M drop-free
+    sessions instead of the 204k survivors. max(n, 1): Spark rejects
+    maxFilesPerTrigger=0, and a directory-shaped events table or a
+    sampled nibble set can legally hold zero files (r8 ADVICE)."""
+    max_ts = seen.agg(F.max("ts")).collect()[0][0]
+    if isinstance(schema["ts"].dataType, T.LongType):  # nanos-as-long
+        ts = int(max_ts) + 30 * 86_400 * 10**9
+    else:  # timestamp / timestamp_ntz
+        ts = max_ts + timedelta(days=30)
+    marker = {
+        "event_id": -1,
+        "user_id": -1,
+        "event_type": "sentinel",
+        "value": 0.0,
+        "props": "{}",
+        "ts": ts,
+    }
+    sent = spark.createDataFrame(
+        [tuple(marker[f.name] for f in schema.fields)], schema
+    )
+    return _file_stream(
+        spark, [*files, _land_one_file(sent)], schema, max(len(files), 1)
+    )
 
 
 def _events_stream(
     spark: SparkSession, sf_dir: str, flush_sentinel: bool = False
 ):
-    """File-source stream over events.parquet. The file stores
-    TIMESTAMP(NANOS): stream it as long nanos and convert, like the
-    batch loader does.
+    """File-source stream over events.parquet, ts normalized to a
+    session-UTC TimestampType exactly like the batch loader.
 
     `flush_sentinel=True` adds a second input file holding ONE far-
-    future marker row (user_id = -1) and caps the trigger at one file
-    per micro-batch. Append-mode stateful operators only emit results
-    the watermark has passed, and the watermark only advances between
-    batches — so a finite replay would otherwise end with every
-    still-open window stuck in the state store. The sentinel batch
-    pushes the watermark past all real data and the no-data batch
-    AvailableNow runs before terminating flushes the state. Callers
-    must filter `user_id >= 0`. (Production streams don't need this;
-    it is the finite-replay analogue of the stream staying live.)"""
-    from pyspark.sql import types as T
-
+    future marker row (user_id = -1; see _flushed_stream). Append-mode
+    stateful operators only emit results the watermark has passed, and
+    the watermark only advances between batches — so a finite replay
+    would otherwise end with every still-open window stuck in the
+    state store. The sentinel batch pushes the watermark past all real
+    data and the no-data batch AvailableNow runs before terminating
+    flushes the state. Callers must filter `user_id >= 0`.
+    (Production streams don't need this; it is the finite-replay
+    analogue of the stream staying live.)"""
     ensure_utc(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.join(sf_dir, "events.parquet")
-    # The file source wants a directory of FILES; expose a single
-    # parquet file through a temp-dir symlink, and a directory-shaped
-    # table (e.g. the 10x scale replica, written by Spark) by
-    # symlinking each part file — a directory symlink named
-    # *.parquet is skipped by the file-stream lister (0-row stream).
-    stream_dir = _track_tmp(tempfile.mkdtemp(prefix="events_stream_"))
-    n_real = 1
-    if os.path.isdir(src):
-        import glob as _glob
-
-        parts = sorted(_glob.glob(os.path.join(src, "*.parquet")))
-        n_real = len(parts)
-        for i, p in enumerate(parts):
-            os.symlink(p, os.path.join(stream_dir, f"a_{i:05d}.parquet"))
-    else:
-        os.symlink(src, os.path.join(stream_dir, "a_events.parquet"))
-    schema = spark.read.parquet(src).schema
-    ts_type = schema["ts"].dataType
-    reader = spark.readStream.schema(schema)
+    seen = spark.read.parquet(src)
     if flush_sentinel:
-        import glob
-        import shutil
-
-        max_ts = spark.read.parquet(src).agg(F.max("ts")).collect()[0][0]
-        if isinstance(ts_type, T.LongType):  # nanos-as-long file
-            sentinel_ts = int(max_ts) + 30 * 86_400 * 10**9
-            sent_ts_sql = "ts long"
-        else:  # timestamp / timestamp_ntz file
-            sentinel_ts = max_ts + timedelta(days=30)
-            sent_ts_sql = (
-                "ts timestamp_ntz"
-                if isinstance(ts_type, T.TimestampNTZType)
-                else "ts timestamp"
-            )
-        sent = spark.createDataFrame(
-            [(-1, -1, "sentinel", 0.0, "{}", sentinel_ts)],
-            "event_id long, user_id long, event_type string, "
-            f"value double, props string, {sent_ts_sql}",
-        ).select(*[f.name for f in schema.fields])
-        tmp = os.path.join(stream_dir, "_sentinel_build")
-        sent.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(stream_dir, "z_sentinel.parquet"))
-        shutil.rmtree(tmp)
-        # ALL real files in batch 1, the sentinel ALONE in batch 2
-        # (the file source orders by mtime then listing order — the
-        # symlinked targets are older than the just-written sentinel).
-        # One-file-per-batch (the r7 shape) ran a directory-shaped
-        # replica as 33 micro-batches: 33 state-store commits, and —
-        # since part files are not time-ordered — the watermark after
-        # batch 1 silently DROPPED most later batches' events as late
-        # (rows_10x/30x/100x read 196k/198k/204k: flat = the drop).
-        # One real batch keeps finite-replay semantics equal to the
-        # batch oracle at every replica size; stream_session_window
-        # at 100x measured 213 s -> 114 s while emitting the full
-        # 9.78M drop-free sessions instead of the 204k survivors.
-        # max(n, 1): Spark rejects maxFilesPerTrigger=0, and a
-        # directory-shaped events table can legally contain zero
-        # part files (r8 ADVICE; _events_stream_nib_sampled symmetry)
-        reader = reader.option("maxFilesPerTrigger", str(max(n_real, 1)))
-    raw = reader.parquet(stream_dir)
-    # Normalize ts to a session-UTC TimestampType like the batch loader.
-    if isinstance(ts_type, T.LongType):
-        return raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000").cast("long"))
-        )
-    if isinstance(ts_type, T.TimestampNTZType):
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+        raw = _flushed_stream(spark, _table_files(src), seen.schema, seen)
+    else:
+        raw = _file_stream(spark, _table_files(src), seen.schema)
+    return normalize_ts(raw, "ts")
 
 
 # --- stateful-kernel helpers (round 9, guide §4) -------------------
@@ -231,7 +289,6 @@ def _transition_counts(prev_et, ets) -> dict:
 def stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window streaming aggregation (complete output mode, so
     the finite replay equals the batch answer exactly)."""
-    name = f"swa_{uuid.uuid4().hex[:8]}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -241,9 +298,8 @@ def stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
-    _run_stream(agg, name, "complete")
     return (
-        spark.table(name)
+        _run_stream(agg, "complete")
         .select(
             F.col("window.start").alias("window_start"),
             "event_type",
@@ -275,24 +331,12 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     step; the sink and checkpoint (10M rows/call at 100x) are removed
     as soon as the bounded aggregate is materialized — the returned
     1-row DataFrame carries the values, not a reference to /tmp."""
-    name = f"sdd_{uuid.uuid4().hex[:8]}"
-    out_dir = tempfile.mkdtemp(prefix=f"{name}_out_")
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     deduped = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    q = (
-        deduped.select("event_id", "user_id")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out_dir = _parquet_sink(deduped.select("event_id", "user_id"), "sdd")
     row = (
         spark.read.parquet(out_dir)
         .agg(
@@ -302,7 +346,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()[0]
     )
     shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.createDataFrame(
         [(row["n_unique"], row["n_users"])], "n_unique long, n_users long"
     )
@@ -344,7 +387,6 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.iat[0, 2] = round(total, 2)
         yield out
 
-    name = f"sus_{uuid.uuid4().hex[:8]}"
     out = (
         _events_stream(spark, sf_dir)
         # §4.1: the kernel reads only `value`; project before the
@@ -360,10 +402,9 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    _run_stream(out, name, "update")
     # one emission per user per batch; keep the final (max) state
     return (
-        spark.table(name)
+        _run_stream(out, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -391,10 +432,23 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     views in the preceding hour. Watermarks bound both join states to
     ~1 hour of events per side; an inner time-interval join emits the
     same matches as the batch oracle regardless of micro-batching."""
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
+
+    def side(event_type):
+        return _events_stream(spark, sf_dir).filter(
+            F.col("event_type") == event_type
+        )
+
+    joined = _run_stream(_purchase_view_join(side), "append")
+    return joined.orderBy("purchase_id", "view_id")
+
+
+def _purchase_view_join(side, how: str = "inner") -> DataFrame:
+    """Purchases joined to same-user views in the preceding hour.
+    `side(event_type)` returns one side's stream (its own replay);
+    2-hour watermarks bound both sides' join state to ~1 hour of
+    events."""
     purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
+        side("purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
@@ -403,8 +457,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("p_ts", "2 hours")
     )
     views = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
+        side("view")
         .select(
             F.col("event_id").alias("view_id"),
             F.col("user_id").alias("v_user"),
@@ -412,14 +465,13 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("v_ts", "2 hours")
     )
-    joined = purchases.join(
+    return purchases.join(
         views,
         (F.col("p_user") == F.col("v_user"))
         & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("v_ts") <= F.col("p_ts")),
+        how,
     ).select("purchase_id", "view_id", F.col("p_user").alias("user_id"))
-    _run_stream(joined, name, "append")
-    return spark.table(name).orderBy("purchase_id", "view_id")
 
 
 @register(
@@ -446,7 +498,6 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch `events_sliding_window` — same window replication, but
     maintained incrementally in the state store. Complete output mode
     over the finite replay equals the batch answer exactly."""
-    name = f"ssw_{uuid.uuid4().hex[:8]}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -456,9 +507,8 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
-    _run_stream(agg, name, "complete")
     return (
-        spark.table(name)
+        _run_stream(agg, "complete")
         .select(
             F.col("window.start").alias("window_start"),
             "n_events",
@@ -482,21 +532,12 @@ def _session_rows_via_parquet(spark: SparkSession, agg, prefix: str) -> DataFram
     pushed below the watermark node, and then the sentinel no longer
     advances the watermark — the final sessions stay unsealed
     (measured: 11 missing rows at sf0.01)."""
-    out_dir = _track_tmp(tempfile.mkdtemp(prefix=f"{prefix}_out_"))
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{prefix}_")
-    rows = agg.select(
-        "user_id", F.col("w.start").alias("session_start"), "n_events"
+    out_dir = _parquet_sink(
+        agg.select(
+            "user_id", F.col("w.start").alias("session_start"), "n_events"
+        ),
+        prefix,
     )
-    q = (
-        rows.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(checkpoint, ignore_errors=True)
     return (
         spark.read.schema(
             "user_id long, session_start timestamp, n_events long"
@@ -636,14 +677,13 @@ def windowed_late_metrics(
     DRIVER and is NOT checkpoint-recoverable — a restart that resumed
     an existing checkpoint would skip committed batches and silently
     zero their contribution. The function therefore always runs
-    availableNow from a FRESH internal checkpoint (created here,
-    removed on return; there is deliberately no checkpoint
+    availableNow from a FRESH internal checkpoint (_run_available_now's,
+    removed on return or failure; there is deliberately no checkpoint
     parameter), so every call re-reads the full finite input and the
     accounting is complete by construction. A crash-resumable ledger
     needs durable state instead (the idempotent parquet-ledger shape
     stream_dedup_index uses, proven in tests/test_stream_crash_replay
     .py); this helper is the REPORT tool, not the resumable sink."""
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     state = {"max_ts": None, "late": 0, "input": 0, "batches": 0}
 
     def ledger(batch_df, _batch_id: int) -> None:
@@ -670,15 +710,7 @@ def windowed_late_metrics(
         ):
             state["max_ts"] = row["mx"]
 
-    q = (
-        stream_df.writeStream.foreachBatch(ledger)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(checkpoint, ignore_errors=True)
+    _run_available_now(stream_df.writeStream.foreachBatch(ledger), name)
     return state["input"], state["late"], state["batches"]
 
 
@@ -719,38 +751,19 @@ def stream_late_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow from a fresh internal checkpoint (see its docstring;
     it is not crash-resumable and never claims to be), so repeated
     calls are deterministic and complete."""
-    import glob
-    import shutil
-
     ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
-    stage = _track_tmp(tempfile.mkdtemp(prefix="late_stage_"))
-
-    def land(df, fname: str, mtime: float) -> None:
-        tmp = os.path.join(stage, "_build")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(stage, fname)
-        shutil.move(part, dest)
-        shutil.rmtree(tmp)
-        os.utime(dest, (mtime, mtime))
-
-    import time as _time
-
-    now = _time.time()
     ontime = ev.filter(F.col("user_id") % 10 != 0)
     strag = ev.filter(F.col("user_id") % 10 == 0)
-    land(ontime, "1_ontime.parquet", now - 120)
-    land(strag, "2_stragglers.parquet", now - 60)
-
-    schema = spark.read.parquet(os.path.join(stage, "1_ontime.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-    )
-    name = f"sle_{uuid.uuid4().hex[:8]}"
-    n_input, dropped, _batches = windowed_late_metrics(stream, name)
+    # the older mtime makes the on-time file micro-batch 1
+    now = time.time()
+    files = []
+    for part, age in ((ontime, 120), (strag, 60)):
+        files.append(_land_one_file(part))
+        os.utime(files[-1], (now - age, now - age))
+    schema = spark.read.parquet(files[0]).schema
+    stream = _file_stream(spark, files, schema, 1)
+    n_input, dropped, _batches = windowed_late_metrics(stream, "sle")
     n_strag = strag.count()
     return spark.createDataFrame(
         [
@@ -787,7 +800,6 @@ def stream_enrich_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     never enters the state store; only the running aggregate is
     stateful. Complete output mode makes the finite replay equal the
     batch join exactly."""
-    name = f"sed_{uuid.uuid4().hex[:8]}"
     ensure_utc(spark)
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
@@ -803,8 +815,9 @@ def stream_enrich_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value_cents"),
         )
     )
-    _run_stream(enriched, name, "complete")
-    return spark.table(name).orderBy("c_mktsegment", "event_type")
+    return _run_stream(enriched, "complete").orderBy(
+        "c_mktsegment", "event_type"
+    )
 
 
 @register(
@@ -866,15 +879,7 @@ def stream_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         row = bdf.agg(*aggs).collect()[0].asDict()
         ledger.append(row)
 
-    checkpoint = tempfile.mkdtemp(prefix="ckpt_scs_")
-    q = (
-        cols.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(checkpoint, ignore_errors=True)
+    _run_available_now(cols.writeStream.foreachBatch(per_batch), "scs")
 
     out = []
     for c in ("a_user_id", "b_value_cents", "c_ts_us"):
@@ -976,7 +981,6 @@ def stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((last_us,))
         yield _emit(key, delivered, suppressed)
 
-    name = f"sth_{uuid.uuid4().hex[:8]}"
     ensure_utc(spark)
     out = (
         _events_stream(spark, sf_dir)
@@ -997,9 +1001,8 @@ def stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    _run_stream(out, name, "update")
     return (
-        spark.table(name)
+        _run_stream(out, "update")
         .groupBy("event_type")
         .agg(
             F.sum("n_delivered").cast("long").alias("n_delivered"),
@@ -1083,7 +1086,6 @@ def stream_balance_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.iat[0, 2] = n
         yield out
 
-    name = f"sbf_{uuid.uuid4().hex[:8]}"
     out = (
         _events_stream(spark, sf_dir)
         .select("user_id", "ts", "event_id", d.alias("d"))
@@ -1096,9 +1098,8 @@ def stream_balance_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    _run_stream(out, name, "update")
     return (
-        spark.table(name)
+        _run_stream(out, "update")
         .groupBy("user_id")
         .agg(
             F.max_by("balance_cents", "n_events").alias("balance_cents"),
@@ -1146,15 +1147,13 @@ def stream_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the streaming computation hash-matches the batch SQL spec
     exactly; top-10 drift days via TakeOrderedAndProject. The first
     day is excluded (no predecessor to drift from)."""
-    name = f"sdd_{uuid.uuid4().hex[:8]}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    _run_stream(agg, name, "complete")
-    daily = spark.table(name).select(
+    daily = _run_stream(agg, "complete").select(
         F.col("window.start").alias("day"), "event_type", "n"
     )
     tot = daily.groupBy("day").agg(F.sum("n").alias("t"))
@@ -1195,41 +1194,15 @@ def _orders_stream(spark: SparkSession, sf_dir: str):
     """File-source stream over orders.parquet, o_orderdate normalized
     to a session-UTC TimestampType exactly like the batch loader
     (the physical type varies by generator version — nanos-as-long,
-    TIMESTAMP_NTZ, or plain timestamp)."""
-    from pyspark.sql import types as T
-
+    TIMESTAMP_NTZ, or plain timestamp). A directory-shaped table
+    streams its part files (the 10x probe caught stream_survival_km
+    reading a 0-row stream off a directory symlink)."""
     ensure_utc(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.join(sf_dir, "orders.parquet")
-    # same file-vs-directory handling as _events_stream: a directory
-    # symlink named *.parquet is SKIPPED by the file-stream lister
-    # (the 10x probe caught stream_survival_km reading a 0-row stream
-    # off the directory-shaped replica) — symlink each part file.
-    stream_dir = _track_tmp(tempfile.mkdtemp(prefix="orders_stream_"))
-    if os.path.isdir(src):
-        import glob as _glob
-
-        for i, p in enumerate(
-            sorted(_glob.glob(os.path.join(src, "*.parquet")))
-        ):
-            os.symlink(p, os.path.join(stream_dir, f"a_{i:05d}.parquet"))
-    else:
-        os.symlink(src, os.path.join(stream_dir, "a_orders.parquet"))
     schema = spark.read.parquet(src).schema
-    dt = schema["o_orderdate"].dataType
-    raw = spark.readStream.schema(schema).parquet(stream_dir)
-    if isinstance(dt, T.LongType):
-        return raw.withColumn(
-            "o_orderdate",
-            F.timestamp_micros(
-                F.expr("o_orderdate DIV 1000").cast("long")
-            ),
-        )
-    if isinstance(dt, T.TimestampNTZType):
-        return raw.withColumn(
-            "o_orderdate", F.col("o_orderdate").cast("timestamp")
-        )
-    return raw
+    raw = _file_stream(spark, _table_files(src), schema)
+    return normalize_ts(raw, "o_orderdate")
 
 
 from dbeam_spark.queries.tpch import KM_ORACLE, km_from_spans  # noqa: E402
@@ -1277,7 +1250,6 @@ def stream_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.iat[0, 3] = n
         yield out
 
-    name = f"skm_{uuid.uuid4().hex[:8]}"
     spans = (
         _orders_stream(spark, sf_dir)
         .select(
@@ -1294,9 +1266,8 @@ def stream_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    _run_stream(spans, name, "update")
     per_cust = (
-        spark.table(name)
+        _run_stream(spans, "update")
         .groupBy("o_custkey")
         .agg(
             F.max_by("first_us", "n").alias("first_us"),
@@ -1323,21 +1294,7 @@ def _join_completeness_report(spark: SparkSession, joined) -> DataFrame:
     stream_session_hour_overlap already had cured). Only the 4-long
     report row is collected; sink and checkpoint are removed as soon
     as it is materialized."""
-    name = f"sjc_{uuid.uuid4().hex[:8]}"
-    # _track_tmp: a failure anywhere below must not leak the sink or
-    # checkpoint dirs for the process lifetime (r9 ADVICE #2) — the
-    # atexit sweep catches what the happy-path rmtree doesn't reach
-    out_dir = _track_tmp(tempfile.mkdtemp(prefix=f"{name}_out_"))
-    checkpoint = _track_tmp(tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out_dir = _parquet_sink(joined, "sjc")
     # explicit schema: a sink dir whose only batch was empty has no
     # data file to infer from
     row = (
@@ -1370,7 +1327,6 @@ def _join_completeness_report(spark: SparkSession, joined) -> DataFrame:
         .collect()[0]
     )
     shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.createDataFrame(
         [tuple(row)],
         "n_purchases long, n_match_rows long, "
@@ -1424,34 +1380,14 @@ def stream_join_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sentinel must PASS the type filters (user_id < 0) or it
     # never reaches the watermark node and the final windows stay
     # open; it is dropped again after the join
-    purchases = (
-        _events_stream(spark, sf_dir, flush_sentinel=True)
-        .filter((F.col("event_type") == "purchase") | (F.col("user_id") < 0))
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
+    def side(event_type):
+        return _events_stream(spark, sf_dir, flush_sentinel=True).filter(
+            (F.col("event_type") == event_type) | (F.col("user_id") < 0)
         )
-        .withWatermark("p_ts", "2 hours")
+
+    return _join_completeness_report(
+        spark, _purchase_view_join(side, "left_outer")
     )
-    views = (
-        _events_stream(spark, sf_dir, flush_sentinel=True)
-        .filter((F.col("event_type") == "view") | (F.col("user_id") < 0))
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "2 hours")
-    )
-    joined = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-        "left_outer",
-    ).select("purchase_id", "view_id", F.col("p_user").alias("user_id"))
-    return _join_completeness_report(spark, joined)
 
 
 def _events_stream_nib_sampled(
@@ -1471,8 +1407,6 @@ def _events_stream_nib_sampled(
     key-partitioned ingest (Kafka partitions, bucketed tables) gives
     you for free in production; ts is normalized to UTC timestamp at
     staging time so every generator's physical type streams alike."""
-    import glob
-
     from dbeam_spark.operators.bucketing import stage_key_buckets
 
     ensure_utc(spark)
@@ -1480,39 +1414,19 @@ def _events_stream_nib_sampled(
     # nibbles legal) is the shared layout operator — the same substrate
     # the batch sampled audits read (promoted r8 from this module)
     out = stage_key_buckets(spark, sf_dir, "events", "user_id")
-    # symlink only the SAMPLED nibble dirs' part files into the
-    # stream dir (the lister wants plain files)
-    stream_dir = _track_tmp(tempfile.mkdtemp(prefix="events_nib_stream_"))
-    n = 0
-    for nib in nibbles:
-        for p in sorted(
-            glob.glob(os.path.join(out, f"nib={nib}", "*.parquet"))
-        ):
-            os.symlink(p, os.path.join(stream_dir, f"a_{n:05d}.parquet"))
-            n += 1
+    files = [
+        p
+        for nib in nibbles
+        for p in sorted(glob.glob(f"{out}/nib={nib}/*.parquet"))
+    ]
     any_nib = sorted(glob.glob(os.path.join(out, "nib=*")))
     schema = spark.read.parquet(any_nib[0]).schema
-    reader = spark.readStream.schema(schema)
-    if flush_sentinel:
-        # sentinel ts from the FULL staging (parquet-stats cheap):
-        # correct even when every sampled nibble is empty
-        max_ts = (
-            spark.read.parquet(*any_nib).agg(F.max("ts")).collect()[0][0]
-        )
-        sent = spark.createDataFrame(
-            [(-1, -1, "sentinel", 0.0, "{}", max_ts + timedelta(days=30))],
-            "event_id long, user_id long, event_type string, "
-            "value double, props string, ts timestamp",
-        ).select(*[f.name for f in schema.fields])
-        tmp = os.path.join(stream_dir, "_sentinel_build")
-        sent.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(stream_dir, "z_sentinel.parquet"))
-        shutil.rmtree(tmp)
-        # all sampled files in batch 1, sentinel alone in batch 2 —
-        # same late-drop/commit-count reasoning as _events_stream
-        reader = reader.option("maxFilesPerTrigger", str(max(n, 1)))
-    return reader.parquet(stream_dir)
+    if not flush_sentinel:
+        return _file_stream(spark, files, schema)
+    # sentinel ts from the FULL staging (parquet-stats cheap): correct
+    # even when every sampled nibble is empty
+    seen = spark.read.parquet(*any_nib)
+    return _flushed_stream(spark, files, schema, seen)
 
 
 @register(
@@ -1586,44 +1500,17 @@ def stream_join_completeness_sampled(
     ).isin(*nibs)
     # sentinel rows (user_id < 0) must PASS the pre-watermark filters
     # or the final windows never flush; dropped again after the join
-    purchases = (
-        _events_stream_nib_sampled(
+    def side(event_type):
+        return _events_stream_nib_sampled(
             spark, sf_dir, nibs, flush_sentinel=True
-        )
-        .filter(
-            ((F.col("event_type") == "purchase") & gate)
+        ).filter(
+            ((F.col("event_type") == event_type) & gate)
             | (F.col("user_id") < 0)
         )
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
+
+    return _join_completeness_report(
+        spark, _purchase_view_join(side, "left_outer")
     )
-    views = (
-        _events_stream_nib_sampled(
-            spark, sf_dir, nibs, flush_sentinel=True
-        )
-        .filter(
-            ((F.col("event_type") == "view") & gate)
-            | (F.col("user_id") < 0)
-        )
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "2 hours")
-    )
-    joined = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-        "left_outer",
-    ).select("purchase_id", "view_id", F.col("p_user").alias("user_id"))
-    return _join_completeness_report(spark, joined)
 
 
 @register(
@@ -1665,7 +1552,6 @@ def stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescanning history. Integer cents end-to-end, so the streamed
     daily rollup and the batch restatement agree bit-for-bit and the
     whole report is hash-gated."""
-    name = f"scp_{uuid.uuid4().hex[:8]}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 day")
@@ -1676,8 +1562,7 @@ def stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents")
         )
     )
-    _run_stream(agg, name, "complete")
-    daily = spark.table(name).select(
+    daily = _run_stream(agg, "complete").select(
         F.col("window.start").alias("day"), "cents"
     )
     stats = daily.agg(
@@ -1775,11 +1660,7 @@ def stream_session_hour_overlap(
     sink and checkpoint are removed before returning (the returned
     frame carries literal values, not a /tmp reference)."""
     from dbeam_spark.queries.events import busiest_hours_overlap_rollup
-    from dbeam_spark.sources.files import load_table
 
-    name = f"sho_{uuid.uuid4().hex[:8]}"
-    out_dir = tempfile.mkdtemp(prefix=f"{name}_out_")
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     agg = (
         _events_stream(spark, sf_dir, flush_sentinel=True)
         .withWatermark("ts", "45 minutes")
@@ -1791,16 +1672,7 @@ def stream_session_hour_overlap(
             F.max("ts").alias("s_end"),
         )
     )
-    q = (
-        agg.select("user_id", "s_start", "s_end")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out_dir = _parquet_sink(agg.select("user_id", "s_start", "s_end"), "sho")
     sessions = (
         spark.read.parquet(out_dir)
         .filter(F.col("user_id") >= 0)
@@ -1812,7 +1684,6 @@ def stream_session_hour_overlap(
         for r in busiest_hours_overlap_rollup(ev, sessions).collect()
     ]
     shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "hour timestamp, n_sessions long, n_users long, "
@@ -1882,7 +1753,6 @@ def stream_markov_stationary(
             }
         )
 
-    name = f"mkv_{uuid.uuid4().hex[:8]}"
     out = (
         _events_stream(spark, sf_dir)
         # §4.1: the kernel reads (ts, event_id, event_type); project
@@ -1899,10 +1769,9 @@ def stream_markov_stationary(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    _run_stream(out, name, "update")
     counts = {
         (r["src"], r["dst"]): r["total"]
-        for r in spark.table(name)
+        for r in _run_stream(out, "update")
         .groupBy("src", "dst")
         .agg(F.sum("n").alias("total"))
         .collect()  # enum-bounded: |types|^2 rows
@@ -1926,7 +1795,6 @@ def stream_chi2_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial counts."""
     from dbeam_spark.queries.events import chi2_fold
 
-    name = f"chi2_{uuid.uuid4().hex[:8]}"
     agg = (
         _events_stream(spark, sf_dir)
         .groupBy(
@@ -1935,8 +1803,7 @@ def stream_chi2_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("long").alias("o"))
     )
-    _run_stream(agg, name, "complete")
-    cells = spark.table(name).collect()
+    cells = _run_stream(agg, "complete").collect()
     rows = [(r["event_type"], int(r["dow"]), int(r["o"])) for r in cells]
     n_cells, dof, g, chi2_x1e4 = chi2_fold(rows)
     return spark.createDataFrame(
@@ -1992,15 +1859,13 @@ def stream_ewma_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stream state is one row per (type, day); the O(days²)
     prefix re-fold runs on the bounded rollup, never on events."""
     ensure_utc(spark)
-    name = f"sewma_{uuid.uuid4().hex[:8]}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 day")
         .groupBy("event_type", F.window("ts", "1 day"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    _run_stream(agg, name, "complete")
-    daily = spark.table(name).select(
+    daily = _run_stream(agg, "complete").select(
         "event_type",
         F.col("window.start").alias("day"),
         F.col("n").cast("double").alias("n"),
@@ -2090,7 +1955,6 @@ def stream_cms_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-insensitive, so the STREAMED counters equal the batch SQL's
     bit-for-bit and the whole report is hash-gated."""
     ensure_utc(spark)
-    name = f"scms_{uuid.uuid4().hex[:8]}"
     rows4 = F.explode(F.array(*[F.lit(r) for r in range(4)])).alias("r")
     counters_stream = (
         _events_stream(spark, sf_dir)
@@ -2107,8 +1971,7 @@ def stream_cms_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r", "b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    _run_stream(counters_stream, name, "complete")
-    counters = spark.table(name)
+    counters = _run_stream(counters_stream, "complete")
 
     ev = load_table(spark, sf_dir, "events")
     tk = ev.select(F.col("user_id").cast("string").alias("tok"))
@@ -2145,26 +2008,11 @@ def _docs_shard_stream(spark: SparkSession, sf_dir: str, n_shards: int):
     micro-batches (doc_id % n_shards sharding, one file per
     trigger) — the arrival pattern of a crawl feed."""
     docs = load_table(spark, sf_dir, "documents")
-    stream_dir = _track_tmp(tempfile.mkdtemp(prefix="docs_stream_"))
-    import glob as _glob
-    import shutil as _shutil
-
-    for s in range(n_shards):
-        tmp = os.path.join(stream_dir, "_build")
-        (
-            docs.filter(F.col("doc_id") % n_shards == s)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        _shutil.move(part, os.path.join(stream_dir, f"a_{s}.parquet"))
-        _shutil.rmtree(tmp)
-    return (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stream_dir)
-    )
+    shards = [
+        _land_one_file(docs.filter(F.col("doc_id") % n_shards == s))
+        for s in range(n_shards)
+    ]
+    return _file_stream(spark, shards, docs.schema, 1)
 
 
 from dbeam_spark.queries.llm import (  # noqa: E402
@@ -2208,8 +2056,6 @@ def stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     certification slice (_cert_sample_docs: whole corpus ≤ 20k docs,
     else md5-nibble {0,1} lowest-20k — absolute cap), restated
     verbatim in the oracle."""
-    import tempfile as _tf
-
     from dbeam_spark.operators.dedup import (
         exact_jaccard_of_pairs,
         incremental_minhash_index,
@@ -2217,10 +2063,9 @@ def stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    index_root = _tf.mkdtemp(prefix="sidx_stream_")
-    ledger_root = _tf.mkdtemp(prefix="sidx_ledger_")
-    index_dir = index_root + "/idx"
-    ledger_dir = ledger_root + "/pairs"
+    root = _track_tmp(tempfile.mkdtemp(prefix="sidx_stream_"))
+    index_dir = os.path.join(root, "idx")
+    ledger_dir = os.path.join(root, "pairs")
 
     def per_batch(batch_df, bid):
         pairs = incremental_minhash_index(batch_df, index_dir, 0.5)
@@ -2230,15 +2075,8 @@ def stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(ledger_dir)
         )
 
-    checkpoint = _tf.mkdtemp(prefix="ckpt_sidx_")
-    q = (
-        _docs_shard_stream(spark, sf_dir, 3)
-        .writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    shards = _docs_shard_stream(spark, sf_dir, 3)
+    _run_available_now(shards.writeStream.foreachBatch(per_batch), "sidx")
 
     docs = load_table(spark, sf_dir, "documents")
     found = (
@@ -2269,9 +2107,7 @@ def stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_docs = docs.count()
     n_sampled = sampled.count()
-    shutil.rmtree(index_root, ignore_errors=True)
-    shutil.rmtree(ledger_root, ignore_errors=True)
-    shutil.rmtree(checkpoint, ignore_errors=True)
+    shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         [
             (

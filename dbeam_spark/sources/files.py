@@ -63,24 +63,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet's `ts` physical type varies by generator version:
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return normalize_ts(df, "ts")
+
+
+def normalize_ts(df: DataFrame, col: str) -> DataFrame:
+    """A timestamp column's physical type varies by generator version:
     TIMESTAMP(NANOS) (rejected by Spark unless read nanos-as-long),
     TIMESTAMP_NTZ (micros, no zone), or a plain UTC timestamp.
     Normalize all three to a session-UTC TimestampType so every
     downstream query sees one contract (micros, UTC — matching DuckDB's
-    reading of the same file)."""
+    reading of the same file). Works on batch and streaming frames."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ts_type = df.schema["ts"].dataType
+    ts_type = df.schema[col].dataType
     if isinstance(ts_type, T.LongType):  # nanos-as-long
         return df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000").cast("long"))
+            col, F.timestamp_micros(F.expr(f"{col} DIV 1000").cast("long"))
         )
     if isinstance(ts_type, T.TimestampNTZType):
         # Wall time with no zone: the oracle (DuckDB) reads it naive;
         # session is pinned UTC, so a plain cast is the identity map.
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df.withColumn(col, F.col(col).cast("timestamp"))
     return df

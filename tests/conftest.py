@@ -21,6 +21,51 @@ def spark():
     yield s
 
 
+def pytest_collection_modifyitems(items):
+    # The oracle test builds each registered query's frame and records
+    # its plan before collecting it; running it first lets the plan
+    # tests and the registry sweep read those plans instead of building
+    # every frame a second time. (Stable sort: all else keeps its order.)
+    items.sort(key=lambda item: item.path.name != "test_queries_oracle.py")
+
+
+class QueryFrames:
+    """Builds registered queries' frames at sf0.001 and keeps each one's
+    executed plan, read before anything collects the frame (under AQE a
+    collected frame reports its final plan). Building a frame runs most
+    of its query (collects, index builds, stream runs), so each query is
+    built once per test session: by the oracle test, which collects it,
+    or, when that test is deselected, by the first plan reader. No frame
+    is kept, so none pins its checkpointed blocks or broadcasts."""
+
+    def __init__(self, spark) -> None:
+        self._spark = spark
+        self._plans: dict[str, str] = {}
+
+    def build(self, name: str):
+        from dbeam_spark.queries import QUERIES
+
+        frame = QUERIES[name](self._spark, SF_DIR)
+        qe = frame._jdf.queryExecution()
+        self._plans[name] = qe.executedPlan().toString()
+        return frame
+
+    def plan(self, name: str) -> str:
+        if name not in self._plans:
+            self.build(name)
+        return self._plans[name]
+
+
+@pytest.fixture(scope="session")
+def query_frames(spark) -> QueryFrames:
+    return QueryFrames(spark)
+
+
+@pytest.fixture(scope="session")
+def plan_of(query_frames):
+    return query_frames.plan
+
+
 @pytest.fixture(scope="session")
 def derby_db(spark):
     """Embedded Derby database with a COFFEES fixture table (the

@@ -31,19 +31,14 @@ CONST_WIDTH = re.compile(r"\.(coalesce|repartition)\(\s*(\d+)\s*\)")
 # (filename, distinctive substring) -> justification. A constant here
 # must be correct at ANY scale, not just local[32].
 EXEMPT: dict[tuple[str, str], str] = {
-    ("streaming.py", 'sent.coalesce(1).write.mode("overwrite")'):
-        "sentinel flush frames: 1-row watermark sentinels by "
-        "construction, width 1 IS the contract (two call sites share "
-        "this line verbatim)",
     ("streaming.py", 'df.coalesce(1).write.mode("overwrite")'):
-        "single-interval symlink staging frame for a file-source "
-        "stream, rows bounded by the interval spec, not the corpus",
-    ("streaming.py", ".coalesce(1)"):
-        "_docs_shard_stream staging: each shard must land as ONE "
-        "file so maxFilesPerTrigger defines the micro-batch arrival "
-        "simulation (3 fixed shards); simulation harness inside "
-        "stream_dedup_index's measured 100x wall (64.1 s, b=0.77), "
-        "not a production write path",
+        "_land_one_file: one landed file is one unit of stream "
+        "arrival under maxFilesPerTrigger (the 1-row flush sentinel, "
+        "_docs_shard_stream's 3 fixed shards, stream_late_events' "
+        "two-arrival on-time/straggler split), so width 1 IS the "
+        "contract; a replay harness, not a production write path "
+        "(inside stream_dedup_index's measured 100x wall: 64.1 s, "
+        "b=0.77)",
     ("llm.py", 'F.col("doc_id") % 2 == 0).repartition(1)'):
         "versioned_table_demo snapshot layout: ONE file per lang "
         "partition is the manifest-reference granularity the "

@@ -12,34 +12,22 @@ from dbeam_spark.queries import QUERIES
 SF_DIR = "/root/testdata/sf0.001"
 
 
-_PLANS: dict[str, str] = {}
-
-
-def plan_of(spark, name: str) -> str:
-    """Executed plan of a registered query, planned once per test
-    session: the registry sweep reuses the named tests' plans."""
-    if name not in _PLANS:
-        df = QUERIES[name](spark, SF_DIR)
-        _PLANS[name] = df._jdf.queryExecution().executedPlan().toString()
-    return _PLANS[name]
-
-
-def test_q5_star_join_broadcasts_all_dims(spark):
-    plan = plan_of(spark, "q5_local_supplier_volume")
+def test_q5_star_join_broadcasts_all_dims(plan_of):
+    plan = plan_of("q5_local_supplier_volume")
     # every dim (region/nation/customer/supplier) ships as a broadcast;
     # the only sort-merge/shuffled-hash allowed is the fact-fact join
     assert plan.count("BroadcastHashJoin") >= 4
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_q1_scan_prunes_and_pushes(spark):
-    plan = plan_of(spark, "q1_pricing_summary")
+def test_q1_scan_prunes_and_pushes(plan_of):
+    plan = plan_of("q1_pricing_summary")
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # column pruning: the scan must not read the join keys it doesn't use
     assert "l_partkey" not in plan.split("ReadSchema")[1][:400]
 
 
-def test_no_python_udf_in_relational_suite(spark):
+def test_no_python_udf_in_relational_suite(plan_of):
     # §2.B queries must stay entirely JVM-side (no Arrow/Python eval)
     for name in (
         "q1_pricing_summary",
@@ -50,17 +38,17 @@ def test_no_python_udf_in_relational_suite(spark):
         "rfm_segments",
         "market_basket_types",
     ):
-        plan = plan_of(spark, name)
+        plan = plan_of(name)
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, name
 
 
-def test_interval_join_avoids_nested_loop(spark):
-    plan = plan_of(spark, "interval_join_events")
+def test_interval_join_avoids_nested_loop(plan_of):
+    plan = plan_of("interval_join_events")
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_dedup_exact_single_exchange(spark):
-    plan = plan_of(spark, "dedup_exact")
+def test_dedup_exact_single_exchange(plan_of):
+    plan = plan_of("dedup_exact")
     # scan → partial agg → ONE exchange → final agg (plus the sort's
     # range exchange if present); never more than two
     assert plan.count("Exchange") <= 2
@@ -87,17 +75,17 @@ def _unpartitioned_windows(plan: str) -> list[str]:
     return bad
 
 
-def test_no_global_window_in_data_scaled_queries(spark):
+def test_no_global_window_in_data_scaled_queries(plan_of):
     # these rank over per-customer grain (linear in the data): a
     # global unpartitioned window here is a single-task sort that
     # cannot survive a 100x scale-up. global_ranked replaces it.
     for name in ("customer_quartiles", "rfm_segments", "power_users_pareto"):
-        plan = plan_of(spark, name)
+        plan = plan_of(name)
         assert not _unpartitioned_windows(plan), (name, _unpartitioned_windows(plan))
 
 
-def test_knn_bruteforce_is_map_only_scoring(spark):
-    plan = plan_of(spark, "knn_bruteforce")
+def test_knn_bruteforce_is_map_only_scoring(plan_of):
+    plan = plan_of("knn_bruteforce")
     # query vectors ship in the task closure and scoring is numpy via
     # mapInPandas: map-only over the base table — no join of any kind,
     # no shuffle before the per-query top-k
@@ -106,8 +94,8 @@ def test_knn_bruteforce_is_map_only_scoring(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_knn_self_join_prefilters_before_window(spark):
-    plan = plan_of(spark, "knn_self_join")
+def test_knn_self_join_prefilters_before_window(plan_of):
+    plan = plan_of("knn_self_join")
     # self-join scores map-only against the closure matrix and emits
     # only n*(k+pad) candidate rows; the ranking window must be
     # partitioned by query_id (never global) and there is no join
@@ -116,17 +104,17 @@ def test_knn_self_join_prefilters_before_window(spark):
     assert not _unpartitioned_windows(plan)
 
 
-def test_new_queries_have_no_global_windows(spark):
+def test_new_queries_have_no_global_windows(plan_of):
     for name in ("cohort_ltv", "phrase_boilerplate", "dedup_span_share"):
-        plan = plan_of(spark, name)
+        plan = plan_of(name)
         assert not _unpartitioned_windows(plan), name
 
 
-def test_audits_are_aggregation_only(spark):
+def test_audits_are_aggregation_only(plan_of):
     # DQ audits must stay map-side conditional counts: no shuffle
     # beyond one exchange per table branch, no joins
     for name in ("uniqueness_audit", "domain_audit"):
-        plan = plan_of(spark, name)
+        plan = plan_of(name)
         assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, name
 
 
@@ -142,9 +130,9 @@ ROUNDTRIP_PYTHON_STAGES = {
 }
 
 
-def test_roundtrip_queries_keep_their_python_stages(spark):
+def test_roundtrip_queries_keep_their_python_stages(plan_of):
     for name, want in ROUNDTRIP_PYTHON_STAGES.items():
-        plan = plan_of(spark, name)
+        plan = plan_of(name)
         got = plan.count("ArrowEvalPython") + plan.count("MapInPandas")
         assert got == want, (name, got)
 
@@ -175,81 +163,81 @@ def test_minhash_signatures_parallelize_small_inputs(spark):
         assert "MapInPandas" in plan
 
 
-def test_keyword_search_topk_is_distributed(spark):
+def test_keyword_search_topk_is_distributed(plan_of):
     # top-10 must come from TakeOrderedAndProject (per-partition heads),
     # never a single-partition global ranking sort over matched docs
-    plan = plan_of(spark, "keyword_search")
+    plan = plan_of("keyword_search")
     assert "TakeOrderedAndProject" in plan
 
 
-def test_bloom_pruned_revenue_stays_jvm_side(spark):
-    plan = plan_of(spark, "bloom_pruned_revenue")
+def test_bloom_pruned_revenue_stays_jvm_side(plan_of):
+    plan = plan_of("bloom_pruned_revenue")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # the bloom probe (xxhash64 bit tests) must sit in the scan stage,
     # i.e. appear as a Filter before any exchange of lineitem rows
     assert "xxhash64" in plan
 
 
-def test_part_skyline_windows_are_partitioned(spark):
+def test_part_skyline_windows_are_partitioned(plan_of):
     # every window in the sweep must be partitioned (the carry-in pid);
     # windowspecdefinition(...) with no partition col would mean the
     # single-task global-window shape came back
-    plan = plan_of(spark, "part_skyline")
+    plan = plan_of("part_skyline")
     for frag in plan.split("windowspecdefinition(")[1:]:
         assert frag.lstrip().startswith("_pm_pid"), frag[:80]
 
 
-def test_knn_int8_scoring_is_map_only(spark):
+def test_knn_int8_scoring_is_map_only(plan_of):
     # int8 codes ship in the closure; the base is scored map-only
     # (one rebalance exchange is the only shuffle before the per-query
     # top-k window) and the recall join against the exact twin is a
     # broadcast of queries×k rows — never a sort-merge join
-    plan = plan_of(spark, "knn_int8_recall")
+    plan = plan_of("knn_int8_recall")
     assert "MapInPandas" in plan
     assert "SortMergeJoin" not in plan
 
 
-def test_embedding_outliers_broadcasts_centroids(spark):
+def test_embedding_outliers_broadcasts_centroids(plan_of):
     # the (label, pos) centroid rollup is labels×dim rows — it must
     # come back as a broadcast join onto the exploded stream, never a
     # shuffle join of the data-scaled side
-    plan = plan_of(spark, "embedding_outliers")
+    plan = plan_of("embedding_outliers")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert not _unpartitioned_windows(plan)
 
 
-def test_pair_cosine_audit_uses_arrow_kernel(spark):
+def test_pair_cosine_audit_uses_arrow_kernel(plan_of):
     # the 64-term cosine chain drops out of codegen inside the pair
     # join (the CLAUDE.md cliff): scoring must run as the Arrow numpy
     # stage, and the pairing join stays an equi join
-    plan = plan_of(spark, "embedding_pair_cosine_audit")
+    plan = plan_of("embedding_pair_cosine_audit")
     assert "MapInPandas" in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_embedding_health_is_single_scan(spark):
-    plan = plan_of(spark, "embedding_health")
+def test_embedding_health_is_single_scan(plan_of):
+    plan = plan_of("embedding_health")
     assert "Join" not in plan
     assert "BatchEvalPython" not in plan
 
 
-def test_phrase_search_topk_is_distributed(spark):
+def test_phrase_search_topk_is_distributed(plan_of):
     # top-10 must be TakeOrderedAndProject; the ranking window runs
     # only over the bounded 10-row frame
-    plan = plan_of(spark, "phrase_search")
+    plan = plan_of("phrase_search")
     assert "TakeOrderedAndProject" in plan
 
 
-def test_spearman_windows_are_partitioned(spark):
-    plan = plan_of(spark, "spearman_spend_balance")
+def test_spearman_windows_are_partitioned(plan_of):
+    plan = plan_of("spearman_spend_balance")
     assert not _unpartitioned_windows(plan)
 
 
-def test_quantile_normalize_no_global_window(spark):
+def test_quantile_normalize_no_global_window(plan_of):
     # pooled ranking must come from the range-partitioned primitive,
     # never a single-partition global row_number
-    plan = plan_of(spark, "quantile_normalize_lengths")
+    plan = plan_of("quantile_normalize_lengths")
     assert not _unpartitioned_windows(plan)
 
 
@@ -285,7 +273,7 @@ BOUNDED_GLOBAL_WINDOW_OK = {
 
 
 @pytest.mark.slow_sweep
-def test_no_unpartitioned_window_in_any_registered_query(spark):
+def test_no_unpartitioned_window_in_any_registered_query(plan_of):
     """Registry-wide sweep: EVERY registered query's executed plan is
     checked for `WindowExec: No Partition Defined` (a data-scaled
     single-task sort — the pattern that cannot survive a 100x
@@ -295,7 +283,7 @@ def test_no_unpartitioned_window_in_any_registered_query(spark):
     written boundedness argument) fails here."""
     offenders = {}
     for name in sorted(QUERIES):
-        u = _unpartitioned_windows(plan_of(spark, name))
+        u = _unpartitioned_windows(plan_of(name))
         if u and name not in BOUNDED_GLOBAL_WINDOW_OK:
             offenders[name] = u[0][:160]
     assert not offenders, (
@@ -338,9 +326,9 @@ def test_collect_surface_is_whitelisted():
             "retrieval_eval": 2,  # probe set + P@10 rows
         },
         "streaming.py": {
-            "_events_stream": 1,  # schema probe (1 row)
-            # sentinel max-ts over the staged dirs (1-row aggregate)
-            "_events_stream_nib_sampled": 1,
+            # the flush sentinel's max-ts (1-row aggregate), for both
+            # _events_stream and _events_stream_nib_sampled
+            "_flushed_stream": 1,
             # r8: 1-row distinct-count agg collected so the 10M-row
             # /tmp parquet sink can be deleted eagerly (catch #14's
             # fix kept, sink hygiene added)

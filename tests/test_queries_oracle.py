@@ -40,13 +40,9 @@ def _vhash(cols, rows):
     return hashlib.md5("\n".join(lines).encode()).hexdigest()
 
 
-# streaming entries are slow (~5s each); covered by test_streaming.py
-FAST = sorted(n for n in QUERIES if not n.startswith("stream_"))
-
-
-@pytest.mark.parametrize("name", FAST)
-def test_query_matches_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_query_matches_oracle(query_frames, duck, name):
+    sdf = query_frames.build(name)
     srows = [tuple(r) for r in sdf.collect()]
     if name not in ORACLES:
         assert len(srows) >= 0  # rows-only gate

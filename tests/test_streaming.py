@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbeam_spark.queries.streaming import stream_dedup, stream_window_agg
@@ -137,10 +138,9 @@ def test_nib_sampled_stream_prunes_and_matches_batch(spark):
     some = sorted(present)[:2]
 
     def run(nibbles):
-        name = f"nibtest_{os.urandom(4).hex()}"
         s = _events_stream_nib_sampled(spark, SF_DIR, tuple(nibbles))
-        _run_stream(s.select("event_id"), name, "append")
-        return {r[0] for r in spark.table(name).collect()}
+        rows = _run_stream(s.select("event_id"), "append").collect()
+        return {r[0] for r in rows}
 
     got = run(some)
     want = {
@@ -252,3 +252,51 @@ def test_join_completeness_oracles_report_zeros_on_empty_input():
     )
     for name in ("stream_join_completeness", "stream_join_completeness_sampled"):
         assert con.execute(ORACLES[name]).fetchall() == [(0, 0, 0, 0)], name
+
+
+@pytest.mark.parametrize("sink", ["memory", "parquet", "foreachBatch"])
+def test_failed_stream_removes_its_checkpoint_and_sink(
+    spark, tmp_path, monkeypatch, sink
+):
+    """A micro-batch that raises must propagate out of the run, and the
+    checkpoint and sink dirs that run created must be gone afterwards,
+    for each sink kind the streaming queries use: the memory sink
+    (_run_stream), a parquet sink (_session_rows_via_parquet) and a
+    foreachBatch ledger (windowed_late_metrics)."""
+    import os
+    import tempfile
+    from datetime import datetime
+
+    from pyspark.errors import StreamingQueryException
+
+    from dbeam_spark.queries import streaming as st
+
+    schema = "user_id long, ts timestamp"
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, datetime(2024, 1, 1))], schema).write.parquet(
+        src
+    )
+    stream = (
+        spark.readStream.schema(schema)
+        .parquet(src)
+        .filter(F.raise_error(F.lit("planted failure")).isNull())
+    )
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    with pytest.raises(StreamingQueryException, match="planted failure"):
+        if sink == "memory":
+            st._run_stream(stream, "append")
+        elif sink == "parquet":
+            st._session_rows_via_parquet(
+                spark,
+                stream.select(
+                    "user_id",
+                    F.struct(F.col("ts").alias("start")).alias("w"),
+                    F.lit(1).cast("long").alias("n_events"),
+                ),
+                "failing",
+            )
+        else:
+            st.windowed_late_metrics(stream, "failing")
+    assert os.listdir(scratch) == []
