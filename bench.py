@@ -5,7 +5,8 @@ Prints the machine-read summary as the LAST stdout line (compact —
 the driver tail-captures, so this line must stay small):
   {"metric": "headline_queries_total", "value": N, "unit": "sec",
    "queries": {...per-query best sec...}, "sf": ...}
-Per-run spreads are emitted on an EARLIER stdout line and mirrored to
+Per-run spreads, and the Catalyst classes each timed headline pass
+compiled, are emitted on an EARLIER stdout line and mirrored to
 BENCH_RUNS.json next to this script.
 
 Mirrors the role of reference jobs/BenchJdbcAvroJob.java (repeatable
@@ -158,7 +159,7 @@ def run_calibration(spark) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from dbeam_spark.queries import QUERIES
-    from dbeam_spark.session import get_spark
+    from dbeam_spark.session import codegen_compilations, get_spark
 
     spark = get_spark("dbeam-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -213,6 +214,9 @@ def main() -> None:
     # it lands (vs host-speed drift, which shifts every run together).
     n_runs = 3
     runs: dict[str, list[float]] = {}
+    # Catalyst classes compiled per headline pass: 0 once the codegen
+    # cache holds the pass's working set (see dbeam_spark/session.py)
+    compilations: list[int] = []
     for _ in range(n_runs):
         # one calibration reading per pass, INTERLEAVED with the keys:
         # host contention is nonstationary (the burner demo measured
@@ -223,12 +227,14 @@ def main() -> None:
         runs.setdefault("__calib_spark__", []).append(
             round(calib_spark_once(spark), 3)
         )
+        compiled = codegen_compilations(spark)
         for name in HEADLINE:
             t0 = time.monotonic()
             n = QUERIES[name](spark, sf_dir).collect()
             el = round(time.monotonic() - t0, 3)
             runs.setdefault(name, []).append(el)
             assert len(n) >= 0
+        compilations.append(codegen_compilations(spark) - compiled)
     per_query = {name: min(ts) for name, ts in runs.items()
                  if name != "__calib_spark__"}
     calibration["spark_sec_interleaved"] = min(runs["__calib_spark__"])
@@ -363,7 +369,7 @@ def main() -> None:
 
     lines = emit_lines(
         total, per_query, extended, runs, sf, sf_dir,
-        rows_per_minute, regressions, calibration, resolved,
+        rows_per_minute, regressions, calibration, resolved, compilations,
     )
     write_runs_sidecar(lines[0])
     for line in lines:
@@ -394,6 +400,7 @@ def write_runs_sidecar(runs_payload: str) -> None:
 def emit_lines(
     total, per_query, extended, runs, sf, sf_dir,
     rows_per_minute, regressions, calibration=None, resolved=None,
+    compilations=None,
 ) -> list[str]:
     """Build the bench's stdout lines — PURE (the BENCH_RUNS.json
     sidecar is written by main via write_runs_sidecar). CONTRACT
@@ -410,6 +417,12 @@ def emit_lines(
         "runs": runs,
         "sf_dir": sf_dir,
         **({"calibration": calibration} if calibration else {}),
+        # Catalyst classes compiled in each timed headline pass
+        **(
+            {"codegen_compilations": compilations}
+            if compilations is not None
+            else {}
+        ),
         # per-key host-normalized numbers (raw / host_factor): the
         # round-over-round comparable view; raw keys stay the contract
         "queries_normalized": {

@@ -412,7 +412,13 @@ def _jpeg_dct_matrix():
     x = np.arange(8)
     c = np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16) / 2.0
     c[0] /= np.sqrt(2.0)
-    return c  # DCT-II: C @ block @ C.T ; inverse: C.T @ coef @ C
+    c.flags.writeable = False
+    return c
+
+
+# The 8-point DCT-II basis, built once at import and only read:
+# DCT-II: C @ block @ C.T ; inverse: C.T @ coef @ C.
+_JPEG_DCT = _jpeg_dct_matrix()
 
 
 def _huffman_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -500,7 +506,7 @@ def encode_jpeg(
     padded[:height, :width] = ycc
     padded[height:, :width] = ycc[height - 1: height, :]  # edge replicate
     padded[:, width:] = padded[:, width - 1: width]
-    C = _jpeg_dct_matrix()
+    C = _JPEG_DCT
     qtabs = [
         np.array(ql, np.float64).reshape(8, 8),
         np.array(qc, np.float64).reshape(8, 8),
@@ -788,7 +794,7 @@ def decode_jpeg(
         raise ValueError("missing SOF0/SOS")
     bw, bh = (width + 7) // 8, (height + 7) // 8
     rd = _BitReader(payload, scan_at)
-    C = _jpeg_dct_matrix()
+    C = _JPEG_DCT
     zz = np.array(JPEG_ZIGZAG)
     planes = [np.empty((bh * 8, bw * 8), np.float64) for _ in range(3)]
     pred = [0, 0, 0]

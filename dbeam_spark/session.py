@@ -17,6 +17,32 @@ the daemon (and any worker code that imports the package) starts from
 any cwd. Off for non-local masters, whose executors may not have the
 package installed: they keep ``pyspark.daemon``. A caller's own
 ``spark.python.daemon.module`` wins; its PYTHONPATH is kept in front.
+
+Generated-class cache. Catalyst compiles every whole-stage-codegen
+stage and many expressions to a Java class with Janino (about 9 ms per
+class, and each new class starts out interpreted) and keeps the
+classes in one LRU cache per JVM, keyed by the generated source. Spark
+sizes it at 100 entries; one pass over the 18 headline queries
+(``bench.HEADLINE``) needs 247 at sf0.001 on ``local[4]``, so a pass
+run in a fixed order missed on nearly every lookup and recompiled
+249-252 classes, every pass. ``bench.py``'s 32 repeated queries
+(headline and extended) need 556. ``CODEGEN_CACHE_ENTRIES`` = 1000
+holds that largest repeated set with room to spare (Guava splits the
+limit over 4 segments, each evicting on its own): a warm headline pass
+now compiles 0 classes (``codegen_compilations``). The whole registry
+needs more: one pass over all 282 queries at sf0.001 on ``local[8]``
+compiles 3835 distinct classes, 68 of which change on every run
+(so a second pass with an unbounded cache still compiles 68); Spark's
+100 entries compile 6683 in that one pass. Holding all 3835 costs
+about 300 MB of JVM resident memory (2042 vs 1743 MB), about 100 MB of
+heap after a full GC (308-326 vs 209 MB) and 30 MB of metaspace: too
+much to pay in every session for a pass that only the test suite and
+``tools/check_correctness.py`` run, once each.
+``spark.sql.codegen.cache.maxEntries`` is a static conf, read once per
+JVM when ``CodeGenerator`` first loads, so it takes effect only in a
+session that starts the JVM; a caller's ``extra_conf`` still
+overrides it. A vanilla ``SparkSession`` (the driver contract's, and
+``tools/check_hostile_session.py``'s) keeps Spark's 100 entries.
 """
 
 from __future__ import annotations
@@ -26,6 +52,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+
+# Catalyst's generated-class cache size (see the module docstring).
+CODEGEN_CACHE_ENTRIES = "1000"
 
 # The directory holding the dbeam_spark package, for worker PYTHONPATH.
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -58,6 +87,7 @@ def get_spark(
         # whose dim filters are selective (no-op when not).
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
@@ -74,6 +104,14 @@ def get_spark(
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Classes Catalyst has compiled in this session's JVM so far: one
+    per generated-class cache miss, counted by Spark's
+    ``CodegenMetrics``. JVM-wide and only growing; read-only."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def ensure_utc(spark: SparkSession) -> SparkSession:

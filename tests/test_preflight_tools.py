@@ -115,13 +115,16 @@ def test_bench_summary_carries_calibration_and_normalized():
         total=10.0, per_query={"q1": 4.0, "q2": 6.0}, extended={},
         runs={"q1": [4.0], "q2": [6.0]}, sf="0.1", sf_dir="/x",
         rows_per_minute=1, regressions=[], calibration=calibration,
+        compilations=[0, 0, 0],
     )
     summary = json.loads(lines[-1])
     assert summary["calibration"]["host_factor"] == 2.0
     assert summary["value_normalized"] == 5.0  # 10.0 / 2.0
+    assert "codegen_compilations" not in summary
     spreads = json.loads(lines[0])
     assert spreads["queries_normalized"] == {"q1": 2.0, "q2": 3.0}
     assert spreads["calibration"] == calibration
+    assert spreads["codegen_compilations"] == [0, 0, 0]
 
 
 def test_bench_summary_sheds_to_fit_any_payload():

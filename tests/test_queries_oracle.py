@@ -18,10 +18,21 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def duck():
+    """Runs an oracle's SQL in DuckDB once per module, however many
+    queries share it (stream twins share their batch query's oracle),
+    and returns its column names and rows."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    return con
+    memo: dict[str, tuple[list[str], list[tuple]]] = {}
+
+    def run(sql: str) -> tuple[list[str], list[tuple]]:
+        if sql not in memo:
+            res = con.execute(sql)
+            memo[sql] = ([d[0] for d in res.description], res.fetchall())
+        return memo[sql]
+
+    return run
 
 
 def _norm(v):
@@ -47,9 +58,7 @@ def test_query_matches_oracle(query_frames, duck, name):
     if name not in ORACLES:
         assert len(srows) >= 0  # rows-only gate
         return
-    res = duck.execute(ORACLES[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
+    ocols, orows = duck(ORACLES[name])
     assert len(srows) == len(orows)
     assert sorted(sdf.columns) == sorted(ocols)
     assert _vhash(sdf.columns, srows) == _vhash(ocols, orows)

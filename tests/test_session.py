@@ -1,5 +1,6 @@
 """`session.get_spark` and `ensure_utc`: the worker daemon and its
-PYTHONPATH for local masters, and the once-per-JVM log level."""
+PYTHONPATH for local masters, the generated-class cache size, and the
+once-per-JVM log level."""
 
 from __future__ import annotations
 
@@ -67,6 +68,34 @@ def test_cluster_masters_keep_the_pyspark_daemon(monkeypatch):
     conf = _conf(monkeypatch, master="spark://head:7077")
     assert "spark.python.daemon.module" not in conf
     assert "spark.executorEnv.PYTHONPATH" not in conf
+
+
+def test_codegen_cache_size_is_a_default_the_caller_can_override(monkeypatch):
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert _conf(monkeypatch)[key] == session.CODEGEN_CACHE_ENTRIES
+    assert _conf(monkeypatch, extra_conf={key: "100"})[key] == "100"
+
+
+def test_repeated_headline_pass_compiles_no_classes(spark):
+    """The generated-class cache holds one headline pass's classes, so
+    a second pass compiles none. With Spark's default 100 entries the
+    pass needs about 250 and recompiles nearly all of them each time."""
+    import sys
+
+    sys.path.insert(0, REPO)
+    from bench import HEADLINE
+
+    from dbeam_spark.queries import QUERIES
+    from test_queries_oracle import SF_DIR
+
+    def headline_pass():
+        for name in HEADLINE:
+            QUERIES[name](spark, SF_DIR).collect()
+
+    headline_pass()
+    compiled = session.codegen_compilations(spark)
+    headline_pass()
+    assert session.codegen_compilations(spark) - compiled == 0
 
 
 def test_table_loads_set_the_log_level_once(spark, monkeypatch):
