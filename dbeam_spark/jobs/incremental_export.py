@@ -43,6 +43,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from dbeam_spark.jobs import _load_state, _save_state
 from dbeam_spark.jobs.jdbc_avro_job import run_export
 from dbeam_spark.options import JdbcExportOptions, parse_args
 from dbeam_spark.passwords import read_password
@@ -50,25 +51,6 @@ from dbeam_spark.query_builder import base_query
 from dbeam_spark.sources.jdbc import _base_reader
 
 STATE_FILE = "_WATERMARK"
-
-
-def _load_state(root: Path) -> dict:
-    p = root / STATE_FILE
-    if p.exists():
-        return json.loads(p.read_text())
-    return {"column": None, "value": None, "runs": []}
-
-
-def _save_state(root: Path, state: dict) -> None:
-    fd, tmp = tempfile.mkstemp(dir=str(root), prefix="._watermark_")
-    try:
-        with os.fdopen(fd, "w") as fh:
-            json.dump(state, fh, indent=2, default=str)
-            fh.write("\n")
-        os.replace(tmp, str(root / STATE_FILE))
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
 
 
 def _literal(value, numeric: bool) -> str:
@@ -89,7 +71,9 @@ def run_incremental(
     opts.validate()
     root = Path(opts.output)
     root.mkdir(parents=True, exist_ok=True)
-    state = _load_state(root)
+    state = _load_state(
+        root / STATE_FILE, {"column": None, "value": None, "runs": []}
+    )
     if state["column"] not in (None, watermark_column):
         raise ValueError(
             f"watermark column changed: state has {state['column']!r}, "
@@ -167,7 +151,7 @@ def run_incremental(
             "ts": time.time(),
         }
     )
-    _save_state(root, state)
+    _save_state(root / STATE_FILE, state)
     return {
         "rows": metrics.get("recordCount", 0),
         "run_dir": str(run_dir),

@@ -88,11 +88,7 @@ def run_with_timeout(spark: SparkSession, seconds: float, fn):
         spark.sparkContext.setJobGroup("", "")
 
 
-def run_export(
-    spark: SparkSession,
-    opts: JdbcExportOptions,
-    input_avro_schema: dict | None = None,
-) -> dict:
+def run_export(spark: SparkSession, opts: JdbcExportOptions) -> dict:
     """Run the export; returns the metrics dict."""
     opts.validate()
     password = read_password(
@@ -127,10 +123,10 @@ def run_export(
         nullable_array_items=opts.nullableArrayItems,
         logical_type_hints=hints,
     )
-    if opts.avroSchemaFilePath and input_avro_schema is None:
-        input_avro_schema = json.loads(Path(opts.avroSchemaFilePath).read_text())
-    if input_avro_schema is not None:
-        generated = merge_input_schema(generated, input_avro_schema)
+    if opts.avroSchemaFilePath:
+        generated = merge_input_schema(
+            generated, json.loads(Path(opts.avroSchemaFilePath).read_text())
+        )
     metrics.expose_execute_query_ms((time.monotonic_ns() - t0) // 1_000_000)
 
     out = Path(opts.output)

@@ -31,27 +31,13 @@ itself is never read during maintenance — only written.
 from __future__ import annotations
 
 import json
-import os
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dbeam_spark.jobs import _load_state, _save_state
+
 STATE_FILE = "_JOIN_VIEW_STATE.json"
-
-
-def _load_state(view_dir: Path) -> dict:
-    p = view_dir / STATE_FILE
-    if p.exists():
-        return json.loads(p.read_text())
-    return {"next_idx": 0}
-
-
-def _save_state(view_dir: Path, state: dict) -> None:
-    fd, tmp = tempfile.mkstemp(dir=str(view_dir), suffix=".tmp")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(state, fh, indent=2, sort_keys=True)
-    os.replace(tmp, view_dir / STATE_FILE)  # atomic on POSIX
 
 
 def _acc_frames(
@@ -81,7 +67,7 @@ def maintain_join_view(
     """Apply one maintenance step. Returns {idx, view_rows_added}."""
     root = Path(view_dir)
     root.mkdir(parents=True, exist_ok=True)
-    state = _load_state(root)
+    state = _load_state(root / STATE_FILE, {"next_idx": 0})
     idx = state["next_idx"]
 
     if left_delta is None and right_delta is None:
@@ -132,14 +118,14 @@ def maintain_join_view(
         "left": json.dumps(l_tmpl.schema.jsonValue()),
         "right": json.dumps(r_tmpl.schema.jsonValue()),
     }
-    _save_state(root, state)
+    _save_state(root / STATE_FILE, state)
     return {"idx": idx, "view_rows_added": added}
 
 
 def read_join_view(spark: SparkSession, view_dir: str) -> DataFrame:
     """The maintained view: union of every landed view delta."""
     root = Path(view_dir)
-    state = _load_state(root)
+    state = _load_state(root / STATE_FILE, {"next_idx": 0})
     dirs = [
         str(root / "view" / f"delta_{i:05d}")
         for i in range(state["next_idx"])

@@ -24,29 +24,14 @@ written).
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbeam_spark.jobs import _load_state, _save_state
+
 STATE_FILE = "_ROLLUP_STATE.json"
-
-
-def _load_state(rollup_dir: Path) -> dict:
-    p = rollup_dir / STATE_FILE
-    if p.exists():
-        return json.loads(p.read_text())
-    return {"runs": {}}
-
-
-def _save_state(rollup_dir: Path, state: dict) -> None:
-    fd, tmp = tempfile.mkstemp(dir=str(rollup_dir), suffix=".tmp")
-    with os.fdopen(fd, "w") as fh:
-        json.dump(state, fh, indent=2, sort_keys=True)
-    os.replace(tmp, rollup_dir / STATE_FILE)  # atomic on POSIX
 
 
 def _read_run(spark: SparkSession, run_dir: Path) -> DataFrame:
@@ -90,7 +75,7 @@ def maintain_rollup(
     change freely between versions."""
     root, out = Path(runs_root), Path(rollup_dir)
     out.mkdir(parents=True, exist_ok=True)
-    state = _load_state(out)
+    state = _load_state(out / STATE_FILE, {"runs": {}})
     all_runs = sorted(
         d.name
         for d in root.iterdir()
@@ -162,7 +147,7 @@ def maintain_rollup(
     # 4. atomic state update LAST: a crash before this line re-runs
     #    the same recomputation and produces identical partitions
     state["runs"].update(run_days)
-    _save_state(out, state)
+    _save_state(out / STATE_FILE, state)
     return {"new_runs": new_runs, "rebuilt_days": sorted(new_days)}
 
 

@@ -230,9 +230,7 @@ def interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counted
 
 
-@register(
-    "events_sliding_window",
-    oracle="""
+_SLIDING_WINDOW_ORACLE = """
     SELECT ws AS window_start,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            ROUND(SUM(value), 2) AS total_value
@@ -247,8 +245,10 @@ def interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE ts >= ws AND ts < ws + INTERVAL '1 hour'
     GROUP BY ws
     ORDER BY ws
-    """,
-)
+    """
+
+
+@register("events_sliding_window", oracle=_SLIDING_WINDOW_ORACLE)
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1-hour windows every 30 minutes: each event lands in
     duration/slide = 2 windows. Spark's `window()` does the replication
@@ -267,9 +267,7 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_session_window",
-    oracle="""
+_SESSION_WINDOW_ORACLE = """
     WITH marked AS (
       SELECT user_id, ts, event_id,
              CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -289,8 +287,10 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sess
     GROUP BY user_id, sess_id
     ORDER BY user_id, session_start
-    """,
-)
+    """
+
+
+@register("events_session_window", oracle=_SESSION_WINDOW_ORACLE)
 def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows with a 15-minute inactivity gap, using
     Spark's NATIVE session_window aggregate (the batch twin of
@@ -1785,9 +1785,7 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "session_hour_overlap",
-    oracle="""
+_SESSION_HOUR_OVERLAP_ORACLE = """
     WITH marked AS (
       SELECT user_id, ts, event_id,
              CASE WHEN LAG(ts) OVER uw IS NULL
@@ -1826,8 +1824,10 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
            CAST(SUM(ov) AS BIGINT) AS overlap_micros
     FROM j GROUP BY 1 ORDER BY 1
-    """,
-)
+    """
+
+
+@register("session_hour_overlap", oracle=_SESSION_HOUR_OVERLAP_ORACLE)
 def session_hour_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval × interval overlap join: user sessions (30-min-gap
     sessionization, [start, end] closed) against the 20 busiest
@@ -1994,7 +1994,12 @@ def holt_forecast_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-def _markov_oracle(iters: int = 20) -> str:
+# Power iterations of the event-type Markov chain, in the oracle and in
+# stationary_from_counts alike.
+_MARKOV_ITERS = 20
+
+
+def _markov_oracle() -> str:
     """Unrolled integer power-iteration CTE chain (the PageRank-oracle
     pattern): p0 = uniform 1e6 // k over types with outgoing edges;
     p{i+1}[j] = Σ_i (p{i}[i] · cnt_ij) // tot_i — all BIGINT, `//`
@@ -2021,7 +2026,7 @@ def _markov_oracle(iters: int = 20) -> str:
       FROM nodes
     )"""
     steps = []
-    for k in range(1, iters + 1):
+    for k in range(1, _MARKOV_ITERS + 1):
         steps.append(f""",
     p{k} AS (
       SELECT n.src AS t, CAST(COALESCE(f.inflow, 0) AS BIGINT) AS mass
@@ -2032,7 +2037,7 @@ def _markov_oracle(iters: int = 20) -> str:
       ) f ON f.t = n.src
     )""")
     tail = f"""
-    SELECT t AS event_type, mass AS pi_x1e6 FROM p{iters} ORDER BY 1
+    SELECT t AS event_type, mass AS pi_x1e6 FROM p{_MARKOV_ITERS} ORDER BY 1
     """
     return head + "".join(steps) + tail
 
@@ -2082,7 +2087,7 @@ def stationary_from_counts(
     tr = {k: v for k, v in counts.items() if k[1] in node_set}
     tot = {t: sum(v for (s, _), v in tr.items() if s == t) for t in nodes}
     mass = {t: 1_000_000 // len(nodes) for t in nodes}
-    for _ in range(20):
+    for _ in range(_MARKOV_ITERS):
         nxt = {t: 0 for t in nodes}
         for (s, d), c in tr.items():
             nxt[d] += mass[s] * c // tot[s]

@@ -7,7 +7,7 @@ down is at 0.07), and embedding cosine tops out near 0.51.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbeam_spark.operators import dedup, multimodal, sampling, similarity, text
@@ -19,10 +19,94 @@ from dbeam_spark.sources.files import load_table
 JACCARD_THRESHOLD = 0.5
 COSINE_THRESHOLD = 0.45
 
-# Shared DuckDB CTEs: distinct word-3-gram shingles per doc.
-_SHINGLE_CTE = """
+# Shared idioms, written once per engine and never restated at a call
+# site. Neither engine's text is derived from the other's code, so the
+# gate keeps comparing two independent implementations.
+
+# Whitespace tokenizer: lowercased text split on whitespace runs.
+_WORDS_SQL = "string_split_regex(lower(text), '\\s+')"
+
+
+def _words() -> Column:
+    return F.split(F.lower(F.col("text")), r"\s+")
+
+
+def _norm_sql(v: str) -> str:
+    """DuckDB L2 norm of the list expression `v`."""
+    return f"sqrt(list_inner_product({v}, {v}))"
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    """DuckDB exact cosine of the list expressions `a` and `b`."""
+    return f"list_inner_product({a}, {b}) / ({_norm_sql(a)} * {_norm_sql(b)})"
+
+
+# DuckDB kNN: the vectors as `e`; every ordered pair of distinct
+# vectors of a `vecs` CTE with its 6dp cosine as `scored`; and the
+# per-query ranking of `scored` that the top-k oracles cut at
+# `rank <= k`.
+_VECS_CTE = "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
+
+
+def _knn_scored_cte(vecs: str = "e", where: str = "") -> str:
+    return f"""
+    scored AS (
+      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
+             ROUND({_cosine_sql("q.v", "b.v")}, 6) AS sim
+      FROM {vecs} q JOIN {vecs} b ON b.vec_id <> q.vec_id
+      {where}
+    )"""
+
+
+_KNN_RANKED = """SELECT *, ROW_NUMBER() OVER (
+        PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
+      FROM scored"""
+
+
+def _knn_oracle(k: int, where: str = "") -> str:
+    """The top-k exact-cosine neighbors of the `e` vectors kept by
+    `where`."""
+    return f"""
+    WITH {_VECS_CTE},
+    {_knn_scored_cte(where=where)}
+    SELECT query_id, neighbor_id, sim, rank FROM (
+      {_KNN_RANKED}
+    ) WHERE rank <= {k}
+    ORDER BY query_id, rank
+    """
+
+
+# The exact top-3 kNN graph as `knn` (query_id, neighbor_id) edges —
+# knn_self_join's graph, under the graph oracles.
+_KNN_GRAPH_CTE = f"""
+    {_VECS_CTE},
+    {_knn_scored_cte()},
+    knn AS (
+      SELECT query_id, neighbor_id FROM (
+        {_KNN_RANKED}) WHERE rank <= 3
+    )"""
+
+
+# The kNN graph undirected, as `adj` (id, nb) rows in both directions —
+# the k-core and BFS oracles' graph.
+_KNN_ADJ_CTE = f"""{_KNN_GRAPH_CTE},
+    und AS (
+      SELECT DISTINCT LEAST(query_id, neighbor_id) AS a,
+             GREATEST(query_id, neighbor_id) AS b
+      FROM knn
+    ),
+    adj AS MATERIALIZED (
+      SELECT a AS id, b AS nb FROM und
+      UNION ALL SELECT b, a FROM und
+    )"""
+
+
+def _shingle_cte(src: str) -> str:
+    """DuckDB distinct word-3-gram shingles `sh` of `src`'s (doc_id,
+    text) rows, per-doc set `sizes` and pair intersections `inter`."""
+    return f"""
     toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents
+      SELECT doc_id, {_WORDS_SQL} AS t FROM {src}
     ),
     sh AS (
       SELECT doc_id,
@@ -36,7 +120,11 @@ _SHINGLE_CTE = """
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
       FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
       GROUP BY 1, 2
-    ),
+    )"""
+
+
+# The pair Jaccard `jraw` over _shingle_cte's inter and sizes.
+_JAC_CTE = """,
     jac AS (
       SELECT id_a, id_b,
              i * 1.0 / (sa.sz + sb.sz - i) AS jraw
@@ -45,6 +133,106 @@ _SHINGLE_CTE = """
       JOIN sizes sb ON sb.doc_id = id_b
     )
 """
+
+_SHINGLE_CTE = _shingle_cte("documents") + _JAC_CTE
+
+
+# Connected components of the undirected `pairs` (id_a, id_b) graph by
+# min-label propagation (WITH RECURSIVE): a node's minimum reachable
+# `lbl` is its component id.
+_REACH_CTE = """
+    edges AS (
+      SELECT id_a AS s, id_b AS d FROM pairs
+      UNION
+      SELECT id_b AS s, id_a AS d FROM pairs
+    ),
+    reach(id, lbl) AS (
+      SELECT s, s FROM edges
+      UNION
+      SELECT e.d, r.lbl FROM reach r JOIN edges e ON e.s = r.id
+    )"""
+
+# reach over the near-duplicate (Jaccard >= JACCARD_THRESHOLD) pairs.
+_NEAR_DUP_REACH_CTE = f"""
+    {_SHINGLE_CTE},
+    pairs AS (
+      SELECT id_a, id_b FROM jac WHERE jraw >= {JACCARD_THRESHOLD}
+    ),{_REACH_CTE}"""
+
+# The near-duplicate components as `clusters` (doc_id, cluster_id).
+_NEAR_DUP_CLUSTERS_CTE = f"""{_NEAR_DUP_REACH_CTE},
+    clusters AS (
+      SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY id
+    )"""
+
+# Each doc's near-dup cluster representative as `rep` (doc_id, rep_id),
+# and the ~75/12.5/12.5 train/val/test split of a rep_id's md5.
+_SPLIT_REP_CTE = f"""{_NEAR_DUP_CLUSTERS_CTE},
+    rep AS (
+      SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS rep_id
+      FROM documents d LEFT JOIN clusters c USING (doc_id)
+    )"""
+_SPLIT_SQL = """CASE WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 1) < 'c'
+                THEN 'train'
+                WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 1) < 'e'
+                THEN 'val'
+                ELSE 'test' END"""
+
+
+def _unnest_positions(struct: str) -> str:
+    """DuckDB: unnest one `struct` per 1-based embedding position i."""
+    return f"""unnest(list_transform(
+               range(1, len(embedding) + 1),
+               i -> {{{struct}}}))"""
+
+
+# Per (vector, position) the coordinate quantized to a ROUND(x·1e4)
+# BIGINT, as the struct u(pos, xq); Spark twin _quantized_positions.
+_QUANT_POSITIONS_CTE = f"""
+    ex AS (
+      SELECT vec_id, label,
+             {_unnest_positions(
+                 "'pos': i, 'xq': CAST(ROUND(embedding[i]::DOUBLE * 10000)"
+                 " AS BIGINT)"
+             )} AS u
+      FROM embeddings
+    )"""
+
+
+def _quantized_positions(emb: DataFrame) -> DataFrame:
+    """(vec_id, label, pos, xq): 1-based position and ROUND(x·1e4)."""
+    return emb.select(
+        "vec_id",
+        "label",
+        F.posexplode("embedding").alias("pos0", "xf"),
+    ).select(
+        "vec_id",
+        "label",
+        (F.col("pos0") + 1).alias("pos"),
+        F.round(F.col("xf").cast("double") * 10000)
+        .cast("long")
+        .alias("xq"),
+    )
+
+
+EXACT_SUBSTR_K = 20  # minimum exact-duplicate run length, in tokens
+
+# Every EXACT_SUBSTR_K-token window of every doc as an md5 `gram` at
+# its 1-based token `pos` (the exact-substring dedup oracles).
+_EXACT_SUBSTR_GRAMS_CTE = f"""
+    toks AS (
+      SELECT doc_id, {_WORDS_SQL} AS t
+      FROM documents
+    ),
+    grams AS (
+      SELECT doc_id, len(t) AS n_tokens, u.i AS pos,
+             md5(array_to_string(t[u.i : u.i + {EXACT_SUBSTR_K} - 1], ' '))
+               AS gram
+      FROM toks,
+           unnest(range(1, len(t) - {EXACT_SUBSTR_K} + 2)) AS u(i)
+      WHERE len(t) >= {EXACT_SUBSTR_K}
+    )"""
+
 
 _JACCARD_ORACLE = f"""
     WITH {_SHINGLE_CTE}
@@ -72,32 +260,7 @@ _SAMPLED_SHINGLE_CTE = f"""
       WHERE (SELECT COUNT(*) FROM documents) <= {_CERT_SAMPLE_CAP}
          OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0', '1')
       ORDER BY doc_id LIMIT {_CERT_SAMPLE_CAP}
-    ),
-    toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t
-      FROM sdocs
-    ),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(
-               range(1, len(t) - 1),
-               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-      FROM toks WHERE len(t) >= 3
-    ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    jac AS (
-      SELECT id_a, id_b,
-             i * 1.0 / (sa.sz + sb.sz - i) AS jraw
-      FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-    )
-"""
+    ),{_shingle_cte("sdocs")}{_JAC_CTE}"""
 
 
 def _cert_sample_docs(docs: DataFrame) -> DataFrame:
@@ -159,9 +322,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(_docs(spark, sf_dir), JACCARD_THRESHOLD)
 
 
-_SIMHASH_ORACLE = """
+# The portable 60-bit SimHash: per-bit vote sums v0..v59 over the
+# shingles' md5-derived hashes, and the fingerprint of the positive votes.
+_SIMHASH_VOTES = ",\n             ".join(
+    f"SUM(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
+    for b in range(60)
+)
+_SIMHASH_FP = " | ".join(
+    f"(CASE WHEN v{b} > 0 THEN (1::BIGINT << {b}) ELSE 0 END)"
+    for b in range(60)
+)
+
+_SIMHASH_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t
+      SELECT doc_id, {_WORDS_SQL} AS t
       FROM documents
     ),
     sh AS (
@@ -177,69 +351,10 @@ _SIMHASH_ORACLE = """
     ),
     votes AS (
       SELECT sid,
-             SUM(CASE WHEN (hv >> 0) & 1 = 1 THEN 1 ELSE -1 END) AS v0,
-             SUM(CASE WHEN (hv >> 1) & 1 = 1 THEN 1 ELSE -1 END) AS v1,
-             SUM(CASE WHEN (hv >> 2) & 1 = 1 THEN 1 ELSE -1 END) AS v2,
-             SUM(CASE WHEN (hv >> 3) & 1 = 1 THEN 1 ELSE -1 END) AS v3,
-             SUM(CASE WHEN (hv >> 4) & 1 = 1 THEN 1 ELSE -1 END) AS v4,
-             SUM(CASE WHEN (hv >> 5) & 1 = 1 THEN 1 ELSE -1 END) AS v5,
-             SUM(CASE WHEN (hv >> 6) & 1 = 1 THEN 1 ELSE -1 END) AS v6,
-             SUM(CASE WHEN (hv >> 7) & 1 = 1 THEN 1 ELSE -1 END) AS v7,
-             SUM(CASE WHEN (hv >> 8) & 1 = 1 THEN 1 ELSE -1 END) AS v8,
-             SUM(CASE WHEN (hv >> 9) & 1 = 1 THEN 1 ELSE -1 END) AS v9,
-             SUM(CASE WHEN (hv >> 10) & 1 = 1 THEN 1 ELSE -1 END) AS v10,
-             SUM(CASE WHEN (hv >> 11) & 1 = 1 THEN 1 ELSE -1 END) AS v11,
-             SUM(CASE WHEN (hv >> 12) & 1 = 1 THEN 1 ELSE -1 END) AS v12,
-             SUM(CASE WHEN (hv >> 13) & 1 = 1 THEN 1 ELSE -1 END) AS v13,
-             SUM(CASE WHEN (hv >> 14) & 1 = 1 THEN 1 ELSE -1 END) AS v14,
-             SUM(CASE WHEN (hv >> 15) & 1 = 1 THEN 1 ELSE -1 END) AS v15,
-             SUM(CASE WHEN (hv >> 16) & 1 = 1 THEN 1 ELSE -1 END) AS v16,
-             SUM(CASE WHEN (hv >> 17) & 1 = 1 THEN 1 ELSE -1 END) AS v17,
-             SUM(CASE WHEN (hv >> 18) & 1 = 1 THEN 1 ELSE -1 END) AS v18,
-             SUM(CASE WHEN (hv >> 19) & 1 = 1 THEN 1 ELSE -1 END) AS v19,
-             SUM(CASE WHEN (hv >> 20) & 1 = 1 THEN 1 ELSE -1 END) AS v20,
-             SUM(CASE WHEN (hv >> 21) & 1 = 1 THEN 1 ELSE -1 END) AS v21,
-             SUM(CASE WHEN (hv >> 22) & 1 = 1 THEN 1 ELSE -1 END) AS v22,
-             SUM(CASE WHEN (hv >> 23) & 1 = 1 THEN 1 ELSE -1 END) AS v23,
-             SUM(CASE WHEN (hv >> 24) & 1 = 1 THEN 1 ELSE -1 END) AS v24,
-             SUM(CASE WHEN (hv >> 25) & 1 = 1 THEN 1 ELSE -1 END) AS v25,
-             SUM(CASE WHEN (hv >> 26) & 1 = 1 THEN 1 ELSE -1 END) AS v26,
-             SUM(CASE WHEN (hv >> 27) & 1 = 1 THEN 1 ELSE -1 END) AS v27,
-             SUM(CASE WHEN (hv >> 28) & 1 = 1 THEN 1 ELSE -1 END) AS v28,
-             SUM(CASE WHEN (hv >> 29) & 1 = 1 THEN 1 ELSE -1 END) AS v29,
-             SUM(CASE WHEN (hv >> 30) & 1 = 1 THEN 1 ELSE -1 END) AS v30,
-             SUM(CASE WHEN (hv >> 31) & 1 = 1 THEN 1 ELSE -1 END) AS v31,
-             SUM(CASE WHEN (hv >> 32) & 1 = 1 THEN 1 ELSE -1 END) AS v32,
-             SUM(CASE WHEN (hv >> 33) & 1 = 1 THEN 1 ELSE -1 END) AS v33,
-             SUM(CASE WHEN (hv >> 34) & 1 = 1 THEN 1 ELSE -1 END) AS v34,
-             SUM(CASE WHEN (hv >> 35) & 1 = 1 THEN 1 ELSE -1 END) AS v35,
-             SUM(CASE WHEN (hv >> 36) & 1 = 1 THEN 1 ELSE -1 END) AS v36,
-             SUM(CASE WHEN (hv >> 37) & 1 = 1 THEN 1 ELSE -1 END) AS v37,
-             SUM(CASE WHEN (hv >> 38) & 1 = 1 THEN 1 ELSE -1 END) AS v38,
-             SUM(CASE WHEN (hv >> 39) & 1 = 1 THEN 1 ELSE -1 END) AS v39,
-             SUM(CASE WHEN (hv >> 40) & 1 = 1 THEN 1 ELSE -1 END) AS v40,
-             SUM(CASE WHEN (hv >> 41) & 1 = 1 THEN 1 ELSE -1 END) AS v41,
-             SUM(CASE WHEN (hv >> 42) & 1 = 1 THEN 1 ELSE -1 END) AS v42,
-             SUM(CASE WHEN (hv >> 43) & 1 = 1 THEN 1 ELSE -1 END) AS v43,
-             SUM(CASE WHEN (hv >> 44) & 1 = 1 THEN 1 ELSE -1 END) AS v44,
-             SUM(CASE WHEN (hv >> 45) & 1 = 1 THEN 1 ELSE -1 END) AS v45,
-             SUM(CASE WHEN (hv >> 46) & 1 = 1 THEN 1 ELSE -1 END) AS v46,
-             SUM(CASE WHEN (hv >> 47) & 1 = 1 THEN 1 ELSE -1 END) AS v47,
-             SUM(CASE WHEN (hv >> 48) & 1 = 1 THEN 1 ELSE -1 END) AS v48,
-             SUM(CASE WHEN (hv >> 49) & 1 = 1 THEN 1 ELSE -1 END) AS v49,
-             SUM(CASE WHEN (hv >> 50) & 1 = 1 THEN 1 ELSE -1 END) AS v50,
-             SUM(CASE WHEN (hv >> 51) & 1 = 1 THEN 1 ELSE -1 END) AS v51,
-             SUM(CASE WHEN (hv >> 52) & 1 = 1 THEN 1 ELSE -1 END) AS v52,
-             SUM(CASE WHEN (hv >> 53) & 1 = 1 THEN 1 ELSE -1 END) AS v53,
-             SUM(CASE WHEN (hv >> 54) & 1 = 1 THEN 1 ELSE -1 END) AS v54,
-             SUM(CASE WHEN (hv >> 55) & 1 = 1 THEN 1 ELSE -1 END) AS v55,
-             SUM(CASE WHEN (hv >> 56) & 1 = 1 THEN 1 ELSE -1 END) AS v56,
-             SUM(CASE WHEN (hv >> 57) & 1 = 1 THEN 1 ELSE -1 END) AS v57,
-             SUM(CASE WHEN (hv >> 58) & 1 = 1 THEN 1 ELSE -1 END) AS v58,
-             SUM(CASE WHEN (hv >> 59) & 1 = 1 THEN 1 ELSE -1 END) AS v59
+             {_SIMHASH_VOTES}
       FROM hv GROUP BY sid
     ),
-    fp AS (SELECT sid, (CASE WHEN v0 > 0 THEN (1::BIGINT << 0) ELSE 0 END) | (CASE WHEN v1 > 0 THEN (1::BIGINT << 1) ELSE 0 END) | (CASE WHEN v2 > 0 THEN (1::BIGINT << 2) ELSE 0 END) | (CASE WHEN v3 > 0 THEN (1::BIGINT << 3) ELSE 0 END) | (CASE WHEN v4 > 0 THEN (1::BIGINT << 4) ELSE 0 END) | (CASE WHEN v5 > 0 THEN (1::BIGINT << 5) ELSE 0 END) | (CASE WHEN v6 > 0 THEN (1::BIGINT << 6) ELSE 0 END) | (CASE WHEN v7 > 0 THEN (1::BIGINT << 7) ELSE 0 END) | (CASE WHEN v8 > 0 THEN (1::BIGINT << 8) ELSE 0 END) | (CASE WHEN v9 > 0 THEN (1::BIGINT << 9) ELSE 0 END) | (CASE WHEN v10 > 0 THEN (1::BIGINT << 10) ELSE 0 END) | (CASE WHEN v11 > 0 THEN (1::BIGINT << 11) ELSE 0 END) | (CASE WHEN v12 > 0 THEN (1::BIGINT << 12) ELSE 0 END) | (CASE WHEN v13 > 0 THEN (1::BIGINT << 13) ELSE 0 END) | (CASE WHEN v14 > 0 THEN (1::BIGINT << 14) ELSE 0 END) | (CASE WHEN v15 > 0 THEN (1::BIGINT << 15) ELSE 0 END) | (CASE WHEN v16 > 0 THEN (1::BIGINT << 16) ELSE 0 END) | (CASE WHEN v17 > 0 THEN (1::BIGINT << 17) ELSE 0 END) | (CASE WHEN v18 > 0 THEN (1::BIGINT << 18) ELSE 0 END) | (CASE WHEN v19 > 0 THEN (1::BIGINT << 19) ELSE 0 END) | (CASE WHEN v20 > 0 THEN (1::BIGINT << 20) ELSE 0 END) | (CASE WHEN v21 > 0 THEN (1::BIGINT << 21) ELSE 0 END) | (CASE WHEN v22 > 0 THEN (1::BIGINT << 22) ELSE 0 END) | (CASE WHEN v23 > 0 THEN (1::BIGINT << 23) ELSE 0 END) | (CASE WHEN v24 > 0 THEN (1::BIGINT << 24) ELSE 0 END) | (CASE WHEN v25 > 0 THEN (1::BIGINT << 25) ELSE 0 END) | (CASE WHEN v26 > 0 THEN (1::BIGINT << 26) ELSE 0 END) | (CASE WHEN v27 > 0 THEN (1::BIGINT << 27) ELSE 0 END) | (CASE WHEN v28 > 0 THEN (1::BIGINT << 28) ELSE 0 END) | (CASE WHEN v29 > 0 THEN (1::BIGINT << 29) ELSE 0 END) | (CASE WHEN v30 > 0 THEN (1::BIGINT << 30) ELSE 0 END) | (CASE WHEN v31 > 0 THEN (1::BIGINT << 31) ELSE 0 END) | (CASE WHEN v32 > 0 THEN (1::BIGINT << 32) ELSE 0 END) | (CASE WHEN v33 > 0 THEN (1::BIGINT << 33) ELSE 0 END) | (CASE WHEN v34 > 0 THEN (1::BIGINT << 34) ELSE 0 END) | (CASE WHEN v35 > 0 THEN (1::BIGINT << 35) ELSE 0 END) | (CASE WHEN v36 > 0 THEN (1::BIGINT << 36) ELSE 0 END) | (CASE WHEN v37 > 0 THEN (1::BIGINT << 37) ELSE 0 END) | (CASE WHEN v38 > 0 THEN (1::BIGINT << 38) ELSE 0 END) | (CASE WHEN v39 > 0 THEN (1::BIGINT << 39) ELSE 0 END) | (CASE WHEN v40 > 0 THEN (1::BIGINT << 40) ELSE 0 END) | (CASE WHEN v41 > 0 THEN (1::BIGINT << 41) ELSE 0 END) | (CASE WHEN v42 > 0 THEN (1::BIGINT << 42) ELSE 0 END) | (CASE WHEN v43 > 0 THEN (1::BIGINT << 43) ELSE 0 END) | (CASE WHEN v44 > 0 THEN (1::BIGINT << 44) ELSE 0 END) | (CASE WHEN v45 > 0 THEN (1::BIGINT << 45) ELSE 0 END) | (CASE WHEN v46 > 0 THEN (1::BIGINT << 46) ELSE 0 END) | (CASE WHEN v47 > 0 THEN (1::BIGINT << 47) ELSE 0 END) | (CASE WHEN v48 > 0 THEN (1::BIGINT << 48) ELSE 0 END) | (CASE WHEN v49 > 0 THEN (1::BIGINT << 49) ELSE 0 END) | (CASE WHEN v50 > 0 THEN (1::BIGINT << 50) ELSE 0 END) | (CASE WHEN v51 > 0 THEN (1::BIGINT << 51) ELSE 0 END) | (CASE WHEN v52 > 0 THEN (1::BIGINT << 52) ELSE 0 END) | (CASE WHEN v53 > 0 THEN (1::BIGINT << 53) ELSE 0 END) | (CASE WHEN v54 > 0 THEN (1::BIGINT << 54) ELSE 0 END) | (CASE WHEN v55 > 0 THEN (1::BIGINT << 55) ELSE 0 END) | (CASE WHEN v56 > 0 THEN (1::BIGINT << 56) ELSE 0 END) | (CASE WHEN v57 > 0 THEN (1::BIGINT << 57) ELSE 0 END) | (CASE WHEN v58 > 0 THEN (1::BIGINT << 58) ELSE 0 END) | (CASE WHEN v59 > 0 THEN (1::BIGINT << 59) ELSE 0 END) AS simhash FROM votes)
+    fp AS (SELECT sid, {_SIMHASH_FP} AS simhash FROM votes)
     SELECT a.sid AS id_a, b.sid AS id_b,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
     FROM fp a JOIN fp b ON a.sid < b.sid
@@ -269,15 +384,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_embedding",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+    WITH {_VECS_CTE}
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           ROUND(list_inner_product(a.v, b.v)
-                 / (sqrt(list_inner_product(a.v, a.v))
-                    * sqrt(list_inner_product(b.v, b.v))), 4) AS sim
+           ROUND({_cosine_sql("a.v", "b.v")}, 4) AS sim
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE list_inner_product(a.v, b.v)
-          / (sqrt(list_inner_product(a.v, a.v))
-             * sqrt(list_inner_product(b.v, b.v))) >= {COSINE_THRESHOLD}
+    WHERE {_cosine_sql("a.v", "b.v")} >= {COSINE_THRESHOLD}
     ORDER BY id_a, id_b
     """,
 )
@@ -288,24 +399,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "knn_bruteforce",
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    scored AS (
-      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-             ROUND(list_inner_product(q.v, b.v)
-                   / (sqrt(list_inner_product(q.v, q.v))
-                      * sqrt(list_inner_product(b.v, b.v))), 6) AS sim
-      FROM e q JOIN e b ON b.vec_id <> q.vec_id
-      WHERE q.vec_id < 10
-    )
-    SELECT query_id, neighbor_id, sim, rank FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= 5
-    ORDER BY query_id, rank
-    """,
+    "knn_bruteforce", oracle=_knn_oracle(5, where="WHERE q.vec_id < 10")
 )
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
@@ -399,11 +493,11 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_quality",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT doc_id,
              length(text) AS n_chars,
-             len(string_split_regex(lower(text), '\\s+')) AS n_words,
+             len({_WORDS_SQL}) AS n_words,
              len(regexp_extract_all(lower(text), '[^a-z0-9 ]')) AS n_symbols
       FROM documents
     )
@@ -445,9 +539,9 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_tokens",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           len(string_split_regex(lower(text), '\\s+')) AS n_ws_tokens,
+           len({_WORDS_SQL}) AS n_ws_tokens,
            len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_bpe_tokens
     FROM documents ORDER BY doc_id
     """,
@@ -463,10 +557,10 @@ def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            md5(array_to_string(
-             list_sort(list_distinct(string_split_regex(lower(text), '\\s+'))),
+             list_sort(list_distinct({_WORDS_SQL})),
              ' ')) AS fp
     FROM documents ORDER BY doc_id
     """,
@@ -553,9 +647,9 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_repetition",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t
+      SELECT doc_id, {_WORDS_SQL} AS t
       FROM documents
     ),
     g AS (
@@ -618,13 +712,11 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_embedding_lsh",
     oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+    WITH {_VECS_CTE}
     SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
            CAST(0 AS BIGINT) AS n_lsh_false_positives
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE list_inner_product(a.v, b.v)
-          / (sqrt(list_inner_product(a.v, a.v))
-             * sqrt(list_inner_product(b.v, b.v))) >= {COSINE_THRESHOLD}
+    WHERE {_cosine_sql("a.v", "b.v")} >= {COSINE_THRESHOLD}
     """,
 )
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -771,20 +863,7 @@ def dedup_rh_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CLUSTERS_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLE_CTE},
-    pairs AS (
-      SELECT id_a, id_b FROM jac WHERE jraw >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION
-      SELECT id_b AS s, id_a AS d FROM pairs
-    ),
-    reach(id, lbl) AS (
-      SELECT s, s FROM edges
-      UNION
-      SELECT e.d, r.lbl FROM reach r JOIN edges e ON e.s = r.id
-    )
+    WITH RECURSIVE {_NEAR_DUP_REACH_CTE}
     SELECT id AS doc_id, MIN(lbl) AS cluster_id
     FROM reach GROUP BY id ORDER BY doc_id
 """
@@ -873,9 +952,9 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "top_tokens",
-    oracle="""
+    oracle=f"""
     SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-      SELECT unnest(string_split_regex(lower(text), '\\s+')) AS tok
+      SELECT unnest({_WORDS_SQL}) AS tok
       FROM documents)
     WHERE tok <> ''
     GROUP BY tok
@@ -890,9 +969,7 @@ def top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-N is a TakeOrdered, not a full sort."""
     docs = _docs(spark, sf_dir)
     return (
-        docs.select(
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
-        )
+        docs.select(F.explode(_words()).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -968,9 +1045,9 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "heavy_hitters",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT unnest(string_split_regex(lower(text), '\\s+')) AS tok
+      SELECT unnest({_WORDS_SQL}) AS tok
       FROM documents),
     f AS (SELECT tok, COUNT(*) AS cnt FROM toks WHERE tok <> '' GROUP BY tok)
     SELECT tok, CAST(cnt AS BIGINT) AS cnt,
@@ -989,9 +1066,7 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     and verify survivors exactly with this same plan."""
     docs = _docs(spark, sf_dir)
     f = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
-        )
+        docs.select(F.explode(_words()).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1011,9 +1086,9 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_top_terms",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS tok
+      SELECT doc_id, unnest({_WORDS_SQL}) AS tok
       FROM documents),
     tf AS (SELECT doc_id, tok, COUNT(*) AS tf
            FROM toks WHERE tok <> '' GROUP BY doc_id, tok),
@@ -1038,10 +1113,7 @@ def doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc."""
     docs = _docs(spark, sf_dir)
     tf = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
-        )
+        docs.select("doc_id", F.explode(_words()).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -1362,23 +1434,7 @@ def multimodal_wav_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SURVIVOR_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLE_CTE},
-    pairs AS (
-      SELECT id_a, id_b FROM jac WHERE jraw >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION
-      SELECT id_b AS s, id_a AS d FROM pairs
-    ),
-    reach(id, lbl) AS (
-      SELECT s, s FROM edges
-      UNION
-      SELECT e.d, r.lbl FROM reach r JOIN edges e ON e.s = r.id
-    ),
-    clusters AS (
-      SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY id
-    ),
+    WITH RECURSIVE {_NEAR_DUP_CLUSTERS_CTE},
     ranked AS (
       SELECT c.cluster_id, c.doc_id, d.n_chars,
              row_number() OVER (
@@ -1429,33 +1485,9 @@ def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SPLIT_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLE_CTE},
-    pairs AS (
-      SELECT id_a, id_b FROM jac WHERE jraw >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION
-      SELECT id_b AS s, id_a AS d FROM pairs
-    ),
-    reach(id, lbl) AS (
-      SELECT s, s FROM edges
-      UNION
-      SELECT e.d, r.lbl FROM reach r JOIN edges e ON e.s = r.id
-    ),
-    clusters AS (
-      SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY id
-    ),
-    rep AS (
-      SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS rep_id
-      FROM documents d LEFT JOIN clusters c USING (doc_id)
-    )
+    WITH RECURSIVE {_SPLIT_REP_CTE}
     SELECT doc_id, rep_id,
-           CASE WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 1) < 'c'
-                THEN 'train'
-                WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 1) < 'e'
-                THEN 'val'
-                ELSE 'test' END AS split
+           {_SPLIT_SQL} AS split
     FROM rep
     ORDER BY doc_id
 """
@@ -1524,40 +1556,14 @@ _CORPUS_ORACLE = f"""
     ),
     keep AS (
       SELECT MIN(doc_id) AS doc_id, text FROM normd GROUP BY text
-    ),
-    toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM keep
-    ),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(
-               range(1, len(t) - 1),
-               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-      FROM toks WHERE len(t) >= 3
-    ),
-    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    ),{_shingle_cte("keep")},
     pairs AS (
       SELECT id_a, id_b
       FROM inter
       JOIN sizes sa ON sa.doc_id = id_a
       JOIN sizes sb ON sb.doc_id = id_b
       WHERE i * 1.0 / (sa.sz + sb.sz - i) >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION
-      SELECT id_b AS s, id_a AS d FROM pairs
-    ),
-    reach(id, lbl) AS (
-      SELECT s, s FROM edges
-      UNION
-      SELECT e.d, r.lbl FROM reach r JOIN edges e ON e.s = r.id
-    ),
+    ),{_REACH_CTE},
     clusters AS (
       SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY id
     ),
@@ -1575,11 +1581,7 @@ _CORPUS_ORACLE = f"""
     ),
     assigned AS (
       SELECT doc_id, text,
-             CASE WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 1) < 'c'
-                  THEN 'train'
-                  WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 1) < 'e'
-                  THEN 'val'
-                  ELSE 'test' END AS split
+             {_SPLIT_SQL} AS split
       FROM surv
     )
     SELECT doc_id, split,
@@ -1654,9 +1656,9 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vocab_coverage",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS tok
+      SELECT doc_id, unnest({_WORDS_SQL}) AS tok
       FROM documents
     ),
     vocab AS (
@@ -1686,10 +1688,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     are scored map-side and the only shuffles are the two aggregates
     (corpus counts, per-doc rollup)."""
     docs = _docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
-    )
+    toks = docs.select("doc_id", F.explode(_words()).alias("tok"))
     vocab = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1810,10 +1809,10 @@ def corpus_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_percentiles",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT lang,
-             len(string_split_regex(lower(text), '\\s+')) AS n_tokens
+             len({_WORDS_SQL}) AS n_tokens
       FROM documents
     )
     SELECT lang,
@@ -1859,10 +1858,10 @@ def token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pack_sequences",
-    oracle="""
+    oracle=f"""
     WITH sized AS (
       SELECT doc_id, source,
-             len(string_split_regex(lower(text), '\\s+')) AS n_tokens
+             len({_WORDS_SQL}) AS n_tokens
       FROM documents
     ), packed AS (
       SELECT source, doc_id, n_tokens,
@@ -1961,13 +1960,13 @@ def shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_filter_funnel",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT doc_id,
              length(text) >= 100 AS pass_len,
              len(regexp_extract_all(lower(text), '[^a-z0-9 ]')) * 1.0
                / length(text) <= 0.1 AS pass_sym,
-             len(string_split_regex(lower(text), '\\s+')) >= 20 AS pass_words
+             len({_WORDS_SQL}) >= 20 AS pass_words
       FROM documents
     )
     SELECT COUNT(*) AS n_input,
@@ -2151,14 +2150,14 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_quality_report",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT source,
              CAST(ROUND(ROUND(
                least(length(text) / 500.0, 1.0) * 0.5
                + CASE WHEN (length(text)
-                            - (len(string_split_regex(lower(text), '\\s+')) - 1))
-                           * 1.0 / len(string_split_regex(lower(text), '\\s+'))
+                            - (len({_WORDS_SQL}) - 1))
+                           * 1.0 / len({_WORDS_SQL})
                            BETWEEN 3 AND 8
                       THEN 1.0 ELSE 0.5 END * 0.3
                + (1.0 - len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
@@ -2259,9 +2258,9 @@ def dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lexical_diversity",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS tok
+      SELECT doc_id, unnest({_WORDS_SQL}) AS tok
       FROM documents
     ),
     cnt AS (SELECT doc_id, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2),
@@ -2290,10 +2289,7 @@ def lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: explode -> (doc, token) count -> per-doc rollup; both
     aggregations are map-side combinable and shuffle on doc_id only."""
     docs = _docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
-    )
+    toks = docs.select("doc_id", F.explode(_words()).alias("tok"))
     cnt = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     total = F.sum("c")
     rep2 = F.sum(F.col("c") * (F.col("c") - 1))
@@ -2316,9 +2312,9 @@ def lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared 5-gram phrase CTE (word shingles, distinct within doc).
-_PHRASE_CTE = r"""
+_PHRASE_CTE = rf"""
     toks AS (
-      SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
+      SELECT doc_id, source, {_WORDS_SQL} AS t
       FROM documents
     ),
     ph AS (
@@ -2482,25 +2478,10 @@ def text_compress_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@register(
-    "knn_self_join",
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    scored AS (
-      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-             ROUND(list_inner_product(q.v, b.v)
-                   / (sqrt(list_inner_product(q.v, q.v))
-                      * sqrt(list_inner_product(b.v, b.v))), 6) AS sim
-      FROM e q JOIN e b ON b.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, sim, rank FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= 3
-    ORDER BY query_id, rank
-    """,
-)
+_KNN_SELF_JOIN_ORACLE = _knn_oracle(3)
+
+
+@register("knn_self_join", oracle=_KNN_SELF_JOIN_ORACLE)
 def knn_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact k-NN self-join (k=3): every vector's top neighbors within
     the table — the all-pairs primitive behind semantic-dedup graphs
@@ -2703,10 +2684,10 @@ def embedding_pq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bpe_vocab",
-    oracle=r"""
+    oracle=rf"""
     WITH hist AS (
       SELECT w, COUNT(*) AS n FROM (
-        SELECT unnest(string_split_regex(lower(text), '\s+')) AS w
+        SELECT unnest({_WORDS_SQL}) AS w
         FROM documents
       ) WHERE w <> '' GROUP BY w
     ),
@@ -2714,9 +2695,9 @@ def embedding_pq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT s.a AS a, s.b AS b, CAST(SUM(n) AS BIGINT) AS cnt FROM (
         SELECT unnest(list_transform(
           range(1, length(w) + 1),
-          i -> {'a': w[i],
+          i -> {{'a': w[i],
                 'b': CASE WHEN i = length(w) THEN '</w>'
-                     ELSE w[i + 1] END})) AS s, n
+                     ELSE w[i + 1] END}})) AS s, n
         FROM hist
       ) GROUP BY s.a, s.b
     )
@@ -2775,10 +2756,10 @@ def bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bpe_compression",
-    oracle="""
+    oracle=f"""
     SELECT
       CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-      CAST(SUM(len(string_split_regex(lower(text), '\\s+')))
+      CAST(SUM(len({_WORDS_SQL}))
            AS BIGINT) AS ws_tokens
     FROM documents
     """,
@@ -2792,9 +2773,7 @@ def bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     return docs.agg(
         F.sum("n_chars").cast("long").alias("total_chars"),
-        F.sum(
-            F.size(F.split(F.lower(F.col("text")), r"\s+"))
-        ).cast("long").alias("ws_tokens"),
+        F.sum(F.size(_words())).cast("long").alias("ws_tokens"),
     )
 
 
@@ -2842,9 +2821,9 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bigram_lm_fluency",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t
+      SELECT doc_id, {_WORDS_SQL} AS t
       FROM documents
     ),
     bg AS (
@@ -2907,10 +2886,10 @@ def bigram_lm_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bpe_encode",
-    oracle=r"""
+    oracle=rf"""
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS docs,
-           CAST(SUM(len(string_split_regex(lower(text), '\s+')))
+           CAST(SUM(len({_WORDS_SQL}))
                 AS BIGINT) AS ws_tokens,
            TRUE AS bpe_tokens_in_bounds
     FROM documents
@@ -2947,7 +2926,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "n_chars",
-        F.size(F.split(F.lower(F.col("text")), r"\s+")).alias("ws"),
+        F.size(_words()).alias("ws"),
     ).join(enc, "doc_id")
     return (
         per_doc.groupBy("source")
@@ -3012,38 +2991,14 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "split_contamination",
     oracle=f"""
-    WITH RECURSIVE {_SHINGLE_CTE},
-    pairs AS (
-      SELECT id_a, id_b FROM jac WHERE jraw >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION
-      SELECT id_b AS s, id_a AS d FROM pairs
-    ),
-    reach(id, lbl) AS (
-      SELECT s, s FROM edges
-      UNION
-      SELECT e.d, r.lbl FROM reach r JOIN edges e ON e.s = r.id
-    ),
-    clusters AS (
-      SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY id
-    ),
-    rep AS (
-      SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS rep_id
-      FROM documents d LEFT JOIN clusters c USING (doc_id)
-    ),
+    WITH RECURSIVE {_SPLIT_REP_CTE},
     splits AS (
       SELECT doc_id,
-             CASE WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 1) < 'c'
-                  THEN 'train'
-                  WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 1) < 'e'
-                  THEN 'val'
-                  ELSE 'test' END AS split
+             {_SPLIT_SQL} AS split
       FROM rep
     ),
     toks5 AS (
-      SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t
+      SELECT doc_id, {_WORDS_SQL} AS t
       FROM documents
     ),
     g5 AS (
@@ -3117,181 +3072,47 @@ def split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAGERANK_ORACLE = """
+# Damped power iterations of embedding_pagerank, in the oracle and in
+# graph.pagerank alike.
+_PAGERANK_ITERS = 15
+
+
+def _pagerank_oracle() -> str:
+    """Unrolled integer PageRank over the top-3 kNN graph: pr0 = 1e6
+    per node; pr{i} = 0.15·1e6 + 0.85 · Σ in-neighbors' pr{i-1} // out-
+    degree, all BIGINT, as graph.pagerank computes it."""
+    head = f"""
     WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    scored AS (
-      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-             ROUND(list_inner_product(q.v, b.v)
-                   / (sqrt(list_inner_product(q.v, q.v))
-                      * sqrt(list_inner_product(b.v, b.v))), 6) AS sim
-      FROM e0 q JOIN e0 b ON b.vec_id <> q.vec_id
-    ),
+    {_knn_scored_cte("e0")},
     e AS (
       SELECT query_id AS src, neighbor_id AS dst FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM scored) WHERE rank <= 3
+        {_KNN_RANKED}) WHERE rank <= 3
     ),
     nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
     deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-    pr0 AS (SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes),
-    pr1 AS (
+    pr0 AS (SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes)"""
+    steps = []
+    for i in range(1, _PAGERANK_ITERS + 1):
+        steps.append(f""",
+    pr{i} AS (
       SELECT n.id,
              CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
                   AS BIGINT) AS r
       FROM nodes n LEFT JOIN (
         SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr0 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
+        FROM pr{i - 1} p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
         GROUP BY e.dst
       ) f ON f.id = n.id
-    ),
-    pr2 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr1 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr3 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr2 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr4 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr3 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr5 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr4 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr6 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr5 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr7 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr6 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr8 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr7 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr9 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr8 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr10 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr9 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr11 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr10 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr12 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr11 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr13 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr12 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr14 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr13 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    ),
-    pr15 AS (
-      SELECT n.id,
-             CAST(150000 + COALESCE(f.inflow, 0) * 850000 // 1000000
-                  AS BIGINT) AS r
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS inflow
-        FROM pr14 p JOIN deg d ON d.src = p.id JOIN e ON e.src = p.id
-        GROUP BY e.dst
-      ) f ON f.id = n.id
-    )
+    )""")
+    tail = f"""
     SELECT id, r AS rank_q6,
            ROW_NUMBER() OVER (ORDER BY r DESC, id) AS pos
-    FROM pr15 ORDER BY r DESC, id LIMIT 20
+    FROM pr{_PAGERANK_ITERS} ORDER BY r DESC, id LIMIT 20
     """
+    return head + "".join(steps) + tail
 
 
-@register("embedding_pagerank", oracle=_PAGERANK_ORACLE)
+@register("embedding_pagerank", oracle=_pagerank_oracle())
 def embedding_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic-centrality PageRank over the k-NN graph: edges are
     each vector's top-3 cosine neighbors (knn_self_join's graph), 15
@@ -3315,7 +3136,7 @@ def embedding_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
     )
-    pr = graph.pagerank(edges, n_iter=15)
+    pr = graph.pagerank(edges, n_iter=_PAGERANK_ITERS)
     # top-20 FIRST (TakeOrderedAndProject — distributed), then a
     # bounded 20-row window assigns positions
     top = pr.orderBy(F.col("rank_q6").desc(), F.col("id")).limit(20)
@@ -3416,7 +3237,7 @@ def sampling_quota_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_pca_variance",
-    oracle="""
+    oracle=f"""
     WITH meta AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n FROM embeddings),
     dims AS (
       SELECT CAST(LEN(embedding) AS BIGINT) AS dim FROM embeddings LIMIT 1
@@ -3427,9 +3248,7 @@ def sampling_quota_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT s.d AS d,
                CAST(FLOOR(s.x * 1000000) AS HUGEINT) AS qv
         FROM (
-          SELECT unnest(list_transform(
-            range(1, len(embedding) + 1),
-            i -> {'d': i, 'x': embedding[i]::DOUBLE})) AS s
+          SELECT {_unnest_positions("'d': i, 'x': embedding[i]::DOUBLE")} AS s
           FROM embeddings
         )
       ) GROUP BY d
@@ -3640,9 +3459,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
       FROM e a JOIN e b ON a.vec_id < b.vec_id
-      WHERE list_inner_product(a.v, b.v)
-            / (sqrt(list_inner_product(a.v, a.v))
-               * sqrt(list_inner_product(b.v, b.v)))
+      WHERE {_cosine_sql("a.v", "b.v")}
             >= {COSINE_THRESHOLD}
     ),
     edges AS (
@@ -3700,20 +3517,12 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "knn_graph_degrees",
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    scored AS (
-      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-             ROUND(list_inner_product(q.v, b.v)
-                   / (sqrt(list_inner_product(q.v, q.v))
-                      * sqrt(list_inner_product(b.v, b.v))), 6) AS sim
-      FROM e q JOIN e b ON b.vec_id <> q.vec_id
-    ),
+    oracle=f"""
+    WITH {_VECS_CTE},
+    {_knn_scored_cte()},
     edges AS (
       SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM scored
+        {_KNN_RANKED}
       ) WHERE rank <= 3
     ),
     indeg AS (
@@ -3931,7 +3740,7 @@ def dedup_longest_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.ngram_jaccard_pairs(docs, JACCARD_THRESHOLD).select(
         "id_a", "id_b"
     )
-    toks = F.split(F.lower(F.col("text")), r"\s+")
+    toks = _words()
     base = docs.select(F.col("doc_id"), toks.alias("t")).filter(
         F.size("t") >= 3
     )
@@ -3973,9 +3782,9 @@ def dedup_longest_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "heavy_hitters_cms",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT unnest(string_split_regex(lower(text), '\\s+')) AS tok
+      SELECT unnest({_WORDS_SQL}) AS tok
       FROM documents
     ),
     tk AS (SELECT tok FROM toks WHERE tok <> ''),
@@ -4023,7 +3832,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     is affordable because candidates are few; a pure-sketch
     deployment drops it."""
     docs = _docs(spark, sf_dir)
-    tok = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
+    tok = F.explode(_words()).alias("tok")
     tk = docs.select(tok).filter(F.col("tok") != "")
     rows4 = F.explode(
         F.array(*[F.lit(r) for r in range(4)])
@@ -4105,11 +3914,11 @@ def multimodal_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEARCH_TERMS = ("spark", "join", "hash")
 
 
-@register(
-    "keyword_search",
-    oracle=f"""
+# tf·idf-style top-10 for SEARCH_TERMS; the corpus scan, the served
+# index and the maintained index must all reproduce it bit-for-bit.
+_KW_ORACLE = f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS tok
+      SELECT doc_id, unnest({_WORDS_SQL}) AS tok
       FROM documents
     ),
     nd AS (SELECT COUNT(*) AS n_docs FROM documents),
@@ -4135,8 +3944,10 @@ SEARCH_TERMS = ("spark", "join", "hash")
       FROM scored
     ) WHERE rk <= 10
     ORDER BY rk
-    """,
-)
+    """
+
+
+@register("keyword_search", oracle=_KW_ORACLE)
 def keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranked keyword retrieval: top-10 docs for a fixed term set by
     tf·idf with a LINEAR idf surrogate (n_docs − df + 1) — linear
@@ -4153,7 +3964,7 @@ def keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the same plan serves with a pre-materialized
     (tok, doc, tf) posting table bucketed by tok."""
     docs = _docs(spark, sf_dir)
-    tok = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
+    tok = F.explode(_words()).alias("tok")
     tf = (
         docs.select("doc_id", tok)
         .filter(F.col("tok").isin(*SEARCH_TERMS))
@@ -4223,9 +4034,7 @@ def crossmodal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_chars").cast("long").alias("total_chars"),
-            F.sum(F.size(F.split(F.lower(F.col("text")), r"\s+")))
-            .cast("long")
-            .alias("total_tokens"),
+            F.sum(F.size(_words())).cast("long").alias("total_tokens"),
             F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
             .cast("long")
             .alias("n_en"),
@@ -4354,21 +4163,8 @@ def versioned_table_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "knn_triangles",
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    scored AS (
-      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-             ROUND(list_inner_product(q.v, b.v)
-                   / (sqrt(list_inner_product(q.v, q.v))
-                      * sqrt(list_inner_product(b.v, b.v))), 6) AS sim
-      FROM e q JOIN e b ON b.vec_id <> q.vec_id
-    ),
-    knn AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM scored) WHERE rank <= 3
-    ),
+    oracle=f"""
+    WITH {_KNN_GRAPH_CTE},
     u AS (
       SELECT DISTINCT LEAST(query_id, neighbor_id) AS a,
                       GREATEST(query_id, neighbor_id) AS b
@@ -4477,9 +4273,9 @@ def knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_similarity_sparse",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS tok
+      SELECT doc_id, unnest({_WORDS_SQL}) AS tok
       FROM documents
     ),
     tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
@@ -4522,7 +4318,7 @@ def doc_similarity_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact across engines."""
     ensure_utc(spark)
     docs = _docs(spark, sf_dir)
-    tok = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
+    tok = F.explode(_words()).alias("tok")
     tf = (
         docs.select("doc_id", tok)
         .groupBy("doc_id", "tok")
@@ -4566,24 +4362,10 @@ def doc_similarity_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(20)
 
 
-EXACT_SUBSTR_K = 20  # minimum exact-duplicate run length, in tokens
-
-
 @register(
     "dedup_exact_substring",
     oracle=rf"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-      FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, len(t) AS n_tokens, u.i AS pos,
-             md5(array_to_string(t[u.i : u.i + {EXACT_SUBSTR_K} - 1], ' '))
-               AS gram
-      FROM toks,
-           unnest(range(1, len(t) - {EXACT_SUBSTR_K} + 2)) AS u(i)
-      WHERE len(t) >= {EXACT_SUBSTR_K}
-    ),
+    WITH {_EXACT_SUBSTR_GRAMS_CTE},
     dup AS (
       SELECT gram FROM grams
       GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2
@@ -4718,18 +4500,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_span_repair",
     oracle=rf"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-      FROM documents
-    ),
-    grams AS (
-      SELECT doc_id, len(t) AS n_tokens, u.i AS pos,
-             md5(array_to_string(t[u.i : u.i + {EXACT_SUBSTR_K} - 1], ' '))
-               AS gram
-      FROM toks,
-           unnest(range(1, len(t) - {EXACT_SUBSTR_K} + 2)) AS u(i)
-      WHERE len(t) >= {EXACT_SUBSTR_K}
-    ),
+    WITH {_EXACT_SUBSTR_GRAMS_CTE},
     owner AS (SELECT gram, MIN(doc_id) AS keeper FROM grams GROUP BY gram),
     redundant AS (
       SELECT g.doc_id, g.n_tokens, g.pos
@@ -4828,7 +4599,7 @@ def dedup_span_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_pair_cosine_audit",
-    oracle="""
+    oracle=f"""
     WITH h AS (
       SELECT vec_id, embedding::DOUBLE[] AS v,
              md5(CAST(vec_id AS VARCHAR)) AS hk
@@ -4841,9 +4612,7 @@ def dedup_span_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             ROUND(list_inner_product(a.v, b.v)
-                   / (sqrt(list_inner_product(a.v, a.v))
-                      * sqrt(list_inner_product(b.v, b.v))), 6) AS sim
+             ROUND({_cosine_sql("a.v", "b.v")}, 6) AS sim
       FROM r a JOIN r b ON b.rk = a.rk + 1
       WHERE a.rk % 2 = 1
     )
@@ -5012,37 +4781,21 @@ def knn_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("n_probe")
 
 
-def _kcore_oracle(k: int = 3, rounds: int = 10) -> str:
+# knn_kcore's core order and peel rounds, in the oracle and the Spark
+# peel alike.
+_KCORE_K = 3
+_KCORE_ROUNDS = 10
+
+
+def _kcore_oracle() -> str:
     """Unrolled k-core peel: c0 = all kNN-graph nodes; c{i+1} = nodes
-    with ≥ k neighbors INSIDE c{i}. Fixpoint in practice well before
-    `rounds`; convergence is reported, not assumed."""
-    head = """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    scored AS (
-      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-             ROUND(list_inner_product(q.v, b.v)
-                   / (sqrt(list_inner_product(q.v, q.v))
-                      * sqrt(list_inner_product(b.v, b.v))), 6) AS sim
-      FROM e q JOIN e b ON b.vec_id <> q.vec_id
-    ),
-    knn AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM scored) WHERE rank <= 3
-    ),
-    und AS (
-      SELECT DISTINCT LEAST(query_id, neighbor_id) AS a,
-             GREATEST(query_id, neighbor_id) AS b
-      FROM knn
-    ),
-    adj AS MATERIALIZED (
-      SELECT a AS id, b AS nb FROM und
-      UNION ALL SELECT b, a FROM und
-    ),
+    with ≥ _KCORE_K neighbors INSIDE c{i}. Fixpoint in practice well
+    before _KCORE_ROUNDS; convergence is reported, not assumed."""
+    head = f"""
+    WITH {_KNN_ADJ_CTE},
     c0 AS MATERIALIZED (SELECT DISTINCT id FROM adj)"""
     steps = []
-    for i in range(1, rounds + 1):
+    for i in range(1, _KCORE_ROUNDS + 1):
         steps.append(f""",
     deg{i} AS (
       SELECT id, COUNT(*) AS dg FROM adj
@@ -5050,17 +4803,17 @@ def _kcore_oracle(k: int = 3, rounds: int = 10) -> str:
         AND nb IN (SELECT id FROM c{i - 1})
       GROUP BY id
     ),
-    c{i} AS MATERIALIZED (SELECT id FROM deg{i} WHERE dg >= {k})""")
+    c{i} AS MATERIALIZED (SELECT id FROM deg{i} WHERE dg >= {_KCORE_K})""")
     tail = f""",
     final_deg AS (
       SELECT id, CAST(COUNT(*) AS BIGINT) AS core_degree FROM adj
-      WHERE id IN (SELECT id FROM c{rounds})
-        AND nb IN (SELECT id FROM c{rounds})
+      WHERE id IN (SELECT id FROM c{_KCORE_ROUNDS})
+        AND nb IN (SELECT id FROM c{_KCORE_ROUNDS})
       GROUP BY id
     )
     SELECT id AS vec_id, core_degree,
-           (SELECT COUNT(*) FROM c{rounds})
-             = (SELECT COUNT(*) FROM c{rounds - 1}) AS converged
+           (SELECT COUNT(*) FROM c{_KCORE_ROUNDS})
+             = (SELECT COUNT(*) FROM c{_KCORE_ROUNDS - 1}) AS converged
     FROM final_deg ORDER BY vec_id
     """
     return head + "".join(steps) + tail
@@ -5101,7 +4854,7 @@ def knn_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     core = adj.select("id").distinct()
     penultimate = None
-    for i in range(10):
+    for i in range(_KCORE_ROUNDS):
         deg = (
             adj.join(core, "id", "left_semi")
             .join(
@@ -5110,8 +4863,10 @@ def knn_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("dg"))
         )
-        core = deg.filter(F.col("dg") >= 3).select("id").localCheckpoint()
-        if i == 8:
+        core = (
+            deg.filter(F.col("dg") >= _KCORE_K).select("id").localCheckpoint()
+        )
+        if i == _KCORE_ROUNDS - 2:
             penultimate = core
     # convergence = |c10| == |c9|, matching the oracle — checked ONCE
     # at the end instead of a count action per round (the CLAUDE.md
@@ -5132,10 +4887,10 @@ def knn_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_freq_octaves",
-    oracle="""
+    oracle=f"""
     WITH freq AS (
       SELECT tok, COUNT(*) AS f FROM (
-        SELECT unnest(string_split_regex(lower(text), '\\s+')) AS tok
+        SELECT unnest({_WORDS_SQL}) AS tok
         FROM documents)
       WHERE tok <> ''
       GROUP BY tok
@@ -5162,11 +4917,7 @@ def token_freq_octaves(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python."""
     docs = _docs(spark, sf_dir)
     freq = (
-        docs.select(
-            F.explode(
-                F.split(F.lower(F.col("text")), r"\s+")
-            ).alias("tok")
-        )
+        docs.select(F.explode(_words()).alias("tok"))
         .where(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("f"))
@@ -5309,15 +5060,12 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rrf_hybrid_search",
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    oracle=f"""
+    WITH {_VECS_CTE},
     q AS (SELECT v FROM e WHERE vec_id = 0),
     vs AS (
       SELECT e.vec_id AS doc_id,
-             ROUND(list_inner_product((SELECT v FROM q), e.v)
-                   / (sqrt(list_inner_product((SELECT v FROM q),
-                                              (SELECT v FROM q)))
-                      * sqrt(list_inner_product(e.v, e.v))), 6) AS sim
+             ROUND({_cosine_sql("(SELECT v FROM q)", "e.v")}, 6) AS sim
       FROM e WHERE e.vec_id <> 0
     ),
     vrank AS (
@@ -5330,7 +5078,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf AS (
       SELECT doc_id, tok, COUNT(*) AS tf FROM (
         SELECT doc_id,
-               unnest(string_split_regex(lower(text), '\\s+')) AS tok
+               unnest({_WORDS_SQL}) AS tok
         FROM documents)
       WHERE tok IN ('spark', 'join', 'hash')
       GROUP BY 1, 2
@@ -5389,7 +5137,7 @@ def rrf_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("neighbor_id").alias("doc_id"),
         F.col("rank").cast("long").alias("vec_rank"),
     )
-    tok = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
+    tok = F.explode(_words()).alias("tok")
     tf = (
         docs.select("doc_id", tok)
         .filter(F.col("tok").isin("spark", "join", "hash"))
@@ -5512,10 +5260,10 @@ def dedup_source_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "data_mix_epochs",
-    oracle="""
+    oracle=f"""
     WITH st AS (
       SELECT source,
-             CAST(SUM(len(string_split_regex(lower(text), '\\s+')))
+             CAST(SUM(len({_WORDS_SQL}))
                   AS BIGINT) AS tokens
       FROM documents GROUP BY source
     ),
@@ -5559,9 +5307,7 @@ def data_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast total."""
     docs = _docs(spark, sf_dir)
     st = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.lower(F.col("text")), r"\s+")))
-        .cast("long")
-        .alias("tokens")
+        F.sum(F.size(_words())).cast("long").alias("tokens")
     )
     t = st.agg(
         F.sum("tokens").cast("long").alias("total"),
@@ -5590,13 +5336,6 @@ def data_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from dbeam_spark.queries.registry import ORACLES as _ORACLES  # noqa: E402
-
-# identical result contract: serving from the materialized index must
-# reproduce the corpus-scan ranking bit-for-bit
-_KW_ORACLE = _ORACLES["keyword_search"]
-
-
 @register("keyword_search_indexed", oracle=_KW_ORACLE)
 def keyword_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """keyword_search served from a MATERIALIZED inverted index — the
@@ -5619,9 +5358,7 @@ def keyword_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="kwidx_")
     try:
-        tok = F.explode(
-            F.split(F.lower(F.col("text")), r"\s+")
-        ).alias("tok")
+        tok = F.explode(_words()).alias("tok")
         postings = (
             docs.select("doc_id", tok)
             .filter(F.col("tok") != "")
@@ -5679,39 +5416,21 @@ def keyword_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out, ignore_errors=True)
 
 
-def _bfs_oracle(hops: int = 6) -> str:
+# knn_bfs_hops' frontier expansions, in the oracle and the Spark BFS.
+_BFS_HOPS = 6
+
+
+def _bfs_oracle() -> str:
     """Unrolled BFS from vec_id 0 over the undirected kNN graph:
     f{i} = the hop-i frontier, v{i} = everything visited through hop
     i. MATERIALIZED per the CLAUDE.md exponential-CTE-inlining
     gotcha."""
-    head = """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    scored AS (
-      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-             ROUND(list_inner_product(q.v, b.v)
-                   / (sqrt(list_inner_product(q.v, q.v))
-                      * sqrt(list_inner_product(b.v, b.v))), 6) AS sim
-      FROM e q JOIN e b ON b.vec_id <> q.vec_id
-    ),
-    knn AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM scored) WHERE rank <= 3
-    ),
-    und AS (
-      SELECT DISTINCT LEAST(query_id, neighbor_id) AS a,
-             GREATEST(query_id, neighbor_id) AS b
-      FROM knn
-    ),
-    adj AS MATERIALIZED (
-      SELECT a AS id, b AS nb FROM und
-      UNION ALL SELECT b, a FROM und
-    ),
+    head = f"""
+    WITH {_KNN_ADJ_CTE},
     f0 AS MATERIALIZED (SELECT 0 AS id),
     v0 AS MATERIALIZED (SELECT 0 AS id, 0 AS hop)"""
     steps = []
-    for i in range(1, hops + 1):
+    for i in range(1, _BFS_HOPS + 1):
         steps.append(f""",
     f{i} AS MATERIALIZED (
       SELECT DISTINCT nb AS id FROM adj
@@ -5725,12 +5444,12 @@ def _bfs_oracle(hops: int = 6) -> str:
     tail = f""",
     hist AS (
       SELECT hop, CAST(COUNT(*) AS BIGINT) AS n_nodes
-      FROM v{hops} GROUP BY hop
+      FROM v{_BFS_HOPS} GROUP BY hop
     ),
     unreached AS (
       SELECT -1 AS hop, CAST(COUNT(*) AS BIGINT) AS n_nodes FROM (
         SELECT DISTINCT id FROM adj
-        WHERE id NOT IN (SELECT id FROM v{hops}))
+        WHERE id NOT IN (SELECT id FROM v{_BFS_HOPS}))
     )
     SELECT CAST(hop AS BIGINT) AS hop, n_nodes FROM (
       SELECT * FROM hist UNION ALL
@@ -5777,7 +5496,7 @@ def knn_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frontier = spark.createDataFrame([(0,)], "id long")
     visited = spark.createDataFrame([(0, 0)], "id long, hop int")
-    for i in range(1, 7):
+    for i in range(1, _BFS_HOPS + 1):
         frontier = (
             adj.join(frontier, "id", "left_semi")
             .select(F.col("nb").alias("id"))
@@ -5806,20 +5525,18 @@ def knn_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "bm25_search",
-    oracle="""
+_BM25_ORACLE = f"""
     WITH tf AS (
       SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (
         SELECT doc_id,
-               unnest(string_split_regex(lower(text), '\\s+')) AS tok
+               unnest({_WORDS_SQL}) AS tok
         FROM documents)
       WHERE tok IN ('spark', 'join', 'hash')
       GROUP BY 1, 2
     ),
     dl AS (
       SELECT doc_id,
-             CAST(len(string_split_regex(lower(text), '\\s+'))
+             CAST(len({_WORDS_SQL})
                   AS BIGINT) AS dl
       FROM documents
     ),
@@ -5862,8 +5579,10 @@ def knn_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, bm25_x1000, n_terms_hit FROM sc
     ORDER BY bm25_x1000 DESC, doc_id LIMIT 10
-    """,
-)
+    """
+
+
+@register("bm25_search", oracle=_BM25_ORACLE)
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval (Robertson & Walker 1994; k1=1.2,
     b=0.75) — what keyword_search's plain tf·idf lacks: TF SATURATION
@@ -5880,7 +5599,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (joined only for MATCHED docs); df and totals broadcast; top-10
     is a TakeOrderedAndProject."""
     docs = _docs(spark, sf_dir)
-    tok = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
+    tok = F.explode(_words()).alias("tok")
     tf = (
         docs.select("doc_id", tok)
         .filter(F.col("tok").isin(*SEARCH_TERMS))
@@ -5889,9 +5608,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dl = docs.select(
         "doc_id",
-        F.size(F.split(F.lower(F.col("text")), r"\s+"))
-        .cast("long")
-        .alias("dl"),
+        F.size(_words()).cast("long").alias("dl"),
     )
     dfq = tf.groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("df")
@@ -5927,9 +5644,9 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_count_moments",
-    oracle="""
+    oracle=f"""
     WITH x AS (
-      SELECT CAST(len(string_split_regex(lower(text), '\\s+'))
+      SELECT CAST(len({_WORDS_SQL})
                   AS HUGEINT) AS x
       FROM documents
     ),
@@ -5981,9 +5698,7 @@ def token_count_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF); the moment algebra is O(1) driver big-int work."""
     docs = _docs(spark, sf_dir)
     x = docs.select(
-        F.size(F.split(F.lower(F.col("text")), r"\s+"))
-        .cast("long")
-        .alias("x")
+        F.size(_words()).cast("long").alias("x")
     )
     xd = x.select(F.col("x").cast("decimal(38,0)").alias("xd"), "x")
     row = xd.agg(
@@ -6023,11 +5738,10 @@ def token_count_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "knn_int8_recall",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT vec_id, embedding::DOUBLE[] AS v,
-             sqrt(list_inner_product(embedding::DOUBLE[],
-                                     embedding::DOUBLE[])) AS nrm
+             {_norm_sql("embedding::DOUBLE[]")} AS nrm
       FROM embeddings
     ),
     c AS (
@@ -6105,16 +5819,8 @@ def knn_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_outliers",
-    oracle="""
-    WITH ex AS (
-      SELECT vec_id, label,
-             unnest(list_transform(
-               range(1, len(embedding) + 1),
-               i -> {'pos': i,
-                     'xq': CAST(ROUND(embedding[i]::DOUBLE * 10000)
-                                AS BIGINT)})) AS u
-      FROM embeddings
-    ),
+    oracle=f"""
+    WITH {_QUANT_POSITIONS_CTE},
     flat AS (SELECT vec_id, label, u.pos AS pos, u.xq AS xq FROM ex),
     cent AS (
       SELECT label, pos,
@@ -6156,18 +5862,7 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALREADY co-located from the explode (partial aggregation does the
     work map-side; no data-scaled shuffle beyond the centroid agg)."""
     emb = _emb(spark, sf_dir)
-    flat = emb.select(
-        "vec_id",
-        "label",
-        F.posexplode("embedding").alias("pos0", "xf"),
-    ).select(
-        "vec_id",
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.round(F.col("xf").cast("double") * 10000)
-        .cast("long")
-        .alias("xq"),
-    )
+    flat = _quantized_positions(emb)
     cent = flat.groupBy("label", "pos").agg(
         F.sum("xq").cast("long").alias("s"),
         F.count(F.lit(1)).alias("n"),
@@ -6189,15 +5884,15 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "trigram_backoff_fluency",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
+      SELECT doc_id, {_WORDS_SQL} AS t
       FROM documents
     ),
     tri AS (
       SELECT doc_id,
              unnest(list_transform(range(1, len(t) - 1),
-               i -> {'w1': t[i], 'w2': t[i+1], 'w3': t[i+2]})) AS u
+               i -> {{'w1': t[i], 'w2': t[i+1], 'w3': t[i+2]}})) AS u
       FROM toks WHERE len(t) >= 3
     ),
     tri2 AS (
@@ -6464,7 +6159,7 @@ def ivf_maintain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_health",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
     ),
@@ -6476,7 +6171,7 @@ def ivf_maintain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                   ELSE len(list_filter(v, x -> isnan(x) OR isinf(x)))
              END AS n_bad,
              CASE WHEN v IS NULL THEN 0.0
-                  ELSE sqrt(list_inner_product(v, v)) END AS nrm
+                  ELSE {_norm_sql("v")} END AS nrm
       FROM e
     )
     SELECT COUNT(*) AS n_vecs,
@@ -6652,16 +6347,8 @@ def sampling_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_drift",
-    oracle="""
-    WITH ex AS (
-      SELECT vec_id, label,
-             unnest(list_transform(
-               range(1, len(embedding) + 1),
-               i -> {'pos': i,
-                     'xq': CAST(ROUND(embedding[i]::DOUBLE * 10000)
-                                AS BIGINT)})) AS u
-      FROM embeddings
-    ),
+    oracle=f"""
+    WITH {_QUANT_POSITIONS_CTE},
     flat AS (
       SELECT vec_id, label, u.pos AS pos, u.xq AS xq FROM ex
     ),
@@ -6699,18 +6386,7 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     products pass int64 already at sf0.1 cohort sizes. One
     (label, pos) rollup (labels×dim rows), one per-label reduce."""
     emb = _emb(spark, sf_dir)
-    flat = emb.select(
-        "vec_id",
-        "label",
-        F.posexplode("embedding").alias("pos0", "xf"),
-    ).select(
-        "vec_id",
-        "label",
-        (F.col("pos0") + 1).alias("pos"),
-        F.round(F.col("xf").cast("double") * 10000)
-        .cast("long")
-        .alias("xq"),
-    )
+    flat = _quantized_positions(emb)
     even = F.col("vec_id") % 2 == 0
     m = flat.groupBy("label", "pos").agg(
         F.expr(
@@ -6738,10 +6414,10 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "gopher_quality_rules",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
       SELECT doc_id, source,
-             string_split_regex(lower(text), '\s+') AS t,
+             {_WORDS_SQL} AS t,
              length(regexp_replace(text, '\s', '', 'g')) AS word_chars
       FROM documents
     ),
@@ -6796,7 +6472,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        F.split(F.lower(F.col("text")), r"\s+").alias("t"),
+        _words().alias("t"),
         F.length(F.regexp_replace(F.col("text"), r"\s", "")).alias(
             "word_chars"
         ),
@@ -6861,9 +6537,9 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "phrase_search",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
+      SELECT doc_id, {_WORDS_SQL} AS t
       FROM documents
     ),
     bg AS (
@@ -6934,25 +6610,7 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rk")
 
 
-@register(
-    "knn_graph_maintain",
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    scored AS (
-      SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-             ROUND(list_inner_product(q.v, b.v)
-                   / (sqrt(list_inner_product(q.v, q.v))
-                      * sqrt(list_inner_product(b.v, b.v))), 6) AS sim
-      FROM e q JOIN e b ON b.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, sim, rank FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= 3
-    ORDER BY query_id, rank
-    """,
-)
+@register("knn_graph_maintain", oracle=_KNN_SELF_JOIN_ORACLE)
 def knn_graph_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental kNN-graph maintenance with an EXACT-equality gate:
     a batch of new vectors (vec_id % 5 = 0) joins an existing graph
@@ -7011,38 +6669,7 @@ def knn_graph_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "keyword_index_maintain",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS tok
-      FROM documents
-    ),
-    nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-    tf AS (
-      SELECT doc_id, tok, COUNT(*) AS tf FROM toks
-      WHERE tok IN ('spark', 'join', 'hash')
-      GROUP BY 1, 2
-    ),
-    df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
-    scored AS (
-      SELECT t.doc_id,
-             SUM(t.tf * (n.n_docs - d.df + 1)) AS score,
-             COUNT(*) AS n_terms_hit
-      FROM tf t JOIN df d USING (tok), nd n
-      GROUP BY t.doc_id
-    )
-    SELECT doc_id, CAST(score AS BIGINT) AS score,
-           CAST(n_terms_hit AS BIGINT) AS n_terms_hit,
-           CAST(rk AS BIGINT) AS rk
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (
-        ORDER BY score DESC, n_terms_hit DESC, doc_id) AS rk
-      FROM scored
-    ) WHERE rk <= 10
-    ORDER BY rk
-    """,
-)
+@register("keyword_index_maintain", oracle=_KW_ORACLE)
 def keyword_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental inverted-index maintenance — the posting-table
     sibling of ivf_maintain_report: the index is built over 75% of
@@ -7062,7 +6689,7 @@ def keyword_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     docs = _docs(spark, sf_dir)
-    tok = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
+    tok = F.explode(_words()).alias("tok")
 
     def postings_of(d):
         return (
@@ -7141,23 +6768,7 @@ def keyword_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KFOLD_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLE_CTE},
-    pairs AS (
-      SELECT id_a, id_b FROM jac WHERE jraw >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION
-      SELECT id_b AS s, id_a AS d FROM pairs
-    ),
-    reach(id, lbl) AS (
-      SELECT s, s FROM edges
-      UNION
-      SELECT e.d, r.lbl FROM reach r JOIN edges e ON e.s = r.id
-    ),
-    clusters AS (
-      SELECT id AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY id
-    ),
+    WITH RECURSIVE {_NEAR_DUP_CLUSTERS_CTE},
     rep AS MATERIALIZED (
       SELECT d.doc_id, d.n_chars,
              COALESCE(c.cluster_id, d.doc_id) AS rep_id,
@@ -7334,29 +6945,24 @@ def quantile_normalize_lengths(
     )
 
 
-def _retrieval_eval_oracle() -> str:
-    from dbeam_spark.queries.registry import ORACLES
-
-    kw = ORACLES["keyword_search"]
-    bm = ORACLES["bm25_search"]
-    return f"""
+_RETRIEVAL_EVAL_ORACLE = f"""
     WITH rel AS (
       SELECT doc_id FROM (
         SELECT doc_id,
-               list_distinct(string_split_regex(lower(text), '\\s+')) AS t
+               list_distinct({_WORDS_SQL}) AS t
         FROM documents
       ) WHERE list_contains(t, 'spark') AND list_contains(t, 'join')
           AND list_contains(t, 'hash')
     ),
-    kw10 AS (SELECT doc_id FROM ({kw}) ),
-    bm10 AS (SELECT doc_id FROM ({bm}) ),
+    kw10 AS (SELECT doc_id FROM ({_KW_ORACLE}) ),
+    bm10 AS (SELECT doc_id FROM ({_BM25_ORACLE}) ),
     ov AS (
       SELECT COUNT(*) AS n FROM kw10 JOIN bm10 USING (doc_id)
     ),
     nrel AS (SELECT COUNT(*) AS n FROM rel),
     tf AS (
       SELECT doc_id,
-             len(list_filter(string_split_regex(lower(text), '\\s+'),
+             len(list_filter({_WORDS_SQL},
                  x -> x IN ('spark', 'join', 'hash'))) AS termmass
       FROM documents
     ),
@@ -7382,7 +6988,7 @@ def _retrieval_eval_oracle() -> str:
     """
 
 
-@register("retrieval_eval", oracle=_retrieval_eval_oracle())
+@register("retrieval_eval", oracle=_RETRIEVAL_EVAL_ORACLE)
 def retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval evaluation harness — measure, don't guess, for the
     search stack: precision@10 of the tf·idf and BM25 rankings
@@ -7400,9 +7006,7 @@ def retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs(spark, sf_dir)
         .select(
             "doc_id",
-            F.array_distinct(
-                F.split(F.lower(F.col("text")), r"\s+")
-            ).alias("t"),
+            F.array_distinct(_words()).alias("t"),
         )
         .filter(
             F.array_contains("t", "spark")
@@ -7446,9 +7050,9 @@ def retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_lexical_divergence",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT source, unnest(string_split_regex(lower(text), '\\s+')) AS tok
+      SELECT source, unnest({_WORDS_SQL}) AS tok
       FROM documents
     ),
     toks2 AS (SELECT source, tok FROM toks WHERE tok <> ''),
@@ -7496,7 +7100,7 @@ def source_lexical_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs daily to catch a source whose crawl drifted."""
     ensure_utc(spark)
     docs = _docs(spark, sf_dir)
-    tok = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
+    tok = F.explode(_words()).alias("tok")
     sc = (
         docs.select("source", tok)
         .filter(F.col("tok") != "")
@@ -7540,10 +7144,10 @@ def source_lexical_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "contamination_fuzzy",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id, md5(text) LIKE '0%' AS is_eval,
-             list_filter(string_split_regex(lower(text), '\\s+'),
+             list_filter({_WORDS_SQL},
                          x -> x <> '') AS t
       FROM documents
     ),
@@ -7581,7 +7185,7 @@ def contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; the only shuffle is the per-doc distinct-hit rollup."""
     ensure_utc(spark)
     docs = _docs(spark, sf_dir)
-    toks = F.split(F.lower(F.col("text")), r"\s+")
+    toks = _words()
     base = docs.select(
         "doc_id",
         F.md5(F.col("text")).startswith("0").alias("is_eval"),
@@ -7681,11 +7285,11 @@ def sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vocab_growth_curve",
-    oracle="""
+    oracle=f"""
     WITH ranked AS (
       SELECT doc_id, ROW_NUMBER() OVER (ORDER BY doc_id) AS rk,
              COUNT(*) OVER () AS n_docs,
-             list_filter(string_split_regex(lower(text), '\\s+'),
+             list_filter({_WORDS_SQL},
                          x -> x <> '') AS t
       FROM documents
     ),
@@ -7728,7 +7332,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rk, n_docs = global_ranked(
         docs.select("doc_id"), [F.col("doc_id")], rank_col="rk"
     )
-    tok = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
+    tok = F.explode(_words()).alias("tok")
     first_seen = (
         docs.select("doc_id", tok)
         .filter(F.col("tok") != "")
@@ -7773,13 +7377,13 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_rule_ablation",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id,
              length(text) >= 100 AS p_len,
              len(regexp_extract_all(lower(text), '[^a-z0-9 ]')) * 10
                <= length(text) AS p_sym,
-             len(list_filter(string_split_regex(lower(text), '\\s+'),
+             len(list_filter({_WORDS_SQL},
                              x -> x <> '')) >= 20 AS p_words,
              length(text) <= 20000 AS p_maxlen
       FROM documents
@@ -7887,10 +7491,10 @@ def quality_rule_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_ngram_overlap",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT source,
-             list_filter(string_split_regex(lower(text), '\\s+'),
+             list_filter({_WORDS_SQL},
                          x -> x <> '') AS t
       FROM documents
     ),

@@ -23,6 +23,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dbeam_spark.queries.events import (
+    _CHI2_ORACLE,
+    _SESSION_HOUR_OVERLAP_ORACLE,
+    _SESSION_WINDOW_ORACLE,
+    _SLIDING_WINDOW_ORACLE,
+    _markov_oracle,
+)
 from dbeam_spark.queries.registry import register
 from dbeam_spark.session import ensure_utc
 from dbeam_spark.sources.files import load_table, normalize_ts
@@ -474,25 +481,7 @@ def _purchase_view_join(side, how: str = "inner") -> DataFrame:
     ).select("purchase_id", "view_id", F.col("p_user").alias("user_id"))
 
 
-@register(
-    "stream_sliding_window",
-    oracle="""
-    SELECT ws AS window_start,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           ROUND(SUM(value), 2) AS total_value
-    FROM (
-      SELECT value, ts,
-             unnest([
-               time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)),
-               time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP))
-                 - INTERVAL '30 minutes'
-             ]) AS ws
-      FROM events)
-    WHERE ts >= ws AND ts < ws + INTERVAL '1 hour'
-    GROUP BY ws
-    ORDER BY ws
-    """,
-)
+@register("stream_sliding_window", oracle=_SLIDING_WINDOW_ORACLE)
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sliding windows (1 h / 30 min): the streaming twin of
     batch `events_sliding_window` — same window replication, but
@@ -547,30 +536,7 @@ def _session_rows_via_parquet(spark: SparkSession, agg, prefix: str) -> DataFram
     )
 
 
-@register(
-    "stream_session_window",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       > INTERVAL '15 minutes'
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                     IS NULL
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events),
-    sess AS (
-      SELECT user_id, ts,
-             SUM(new_sess) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS sess_id
-      FROM marked)
-    SELECT user_id, MIN(ts) AS session_start,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM sess
-    GROUP BY user_id, sess_id
-    ORDER BY user_id, session_start
-    """,
-)
+@register("stream_session_window", oracle=_SESSION_WINDOW_ORACLE)
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming session windows in APPEND mode: sessions are emitted
     once, when the watermark passes their close — the production shape
@@ -1593,47 +1559,7 @@ def stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "stream_session_hour_overlap",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN LAG(ts) OVER uw IS NULL
-                  OR epoch_us(ts) - epoch_us(LAG(ts) OVER uw)
-                     > 1800000000
-             THEN 1 ELSE 0 END AS brk
-      FROM events
-      WINDOW uw AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, ts,
-             SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS UNBOUNDED PRECEDING) AS sid
-      FROM marked
-    ),
-    s AS (
-      SELECT user_id, sid, MIN(ts) AS s_start, MAX(ts) AS s_end
-      FROM sess GROUP BY 1, 2
-    ),
-    hr AS (
-      SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-             COUNT(*) AS n_ev
-      FROM events GROUP BY 1
-      ORDER BY n_ev DESC, hour LIMIT 20
-    ),
-    j AS (
-      SELECT hr.hour, s.user_id,
-             LEAST(epoch_us(s.s_end), epoch_us(hr.hour) + 3600000000)
-               - GREATEST(epoch_us(s.s_start), epoch_us(hr.hour)) AS ov
-      FROM s JOIN hr
-        ON epoch_us(s.s_start) < epoch_us(hr.hour) + 3600000000
-       AND epoch_us(hr.hour) <= epoch_us(s.s_end)
-    )
-    SELECT hour,
-           CAST(COUNT(*) AS BIGINT) AS n_sessions,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(SUM(ov) AS BIGINT) AS overlap_micros
-    FROM j GROUP BY 1 ORDER BY 1
-    """,
+    "stream_session_hour_overlap", oracle=_SESSION_HOUR_OVERLAP_ORACLE
 )
 def stream_session_hour_overlap(
     spark: SparkSession, sf_dir: str
@@ -1691,10 +1617,7 @@ def stream_session_hour_overlap(
     ).orderBy("hour")
 
 
-from dbeam_spark.queries.events import _markov_oracle as _mk_oracle
-
-
-@register("stream_markov_stationary", oracle=_mk_oracle())
+@register("stream_markov_stationary", oracle=_markov_oracle())
 def stream_markov_stationary(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1777,9 +1700,6 @@ def stream_markov_stationary(
         .collect()  # enum-bounded: |types|^2 rows
     }
     return stationary_from_counts(spark, counts)
-
-
-from dbeam_spark.queries.events import _CHI2_ORACLE
 
 
 @register("stream_chi2_type_dow", oracle=_CHI2_ORACLE)

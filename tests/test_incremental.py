@@ -4,7 +4,9 @@ idempotent no-new-rows runs — end-to-end on embedded Derby."""
 from __future__ import annotations
 
 import glob
+import importlib
 import json
+import os
 from pathlib import Path
 
 import tempfile
@@ -253,3 +255,25 @@ def test_join_view_requires_both_schemas_first(spark, tmp_path):
         maintain_join_view(
             spark, str(tmp_path / "v2"), "k", "rk", left_delta=left
         )
+
+
+@pytest.mark.parametrize(
+    "job", ["incremental_export", "rollup_maintain", "join_view_maintain"]
+)
+def test_state_save_is_atomic_and_leaves_no_temp_file(tmp_path, job):
+    """Each maintenance job's state write replaces the file whole or
+    not at all: a dump that raises keeps the previous state and leaves
+    no temp file beside it."""
+    mod = importlib.import_module(f"dbeam_spark.jobs.{job}")
+    path = tmp_path / mod.STATE_FILE
+    mod._save_state(path, {"b": 2, "a": 1})
+    assert path.read_text() == '{\n  "a": 1,\n  "b": 2\n}\n'
+
+    class Unserializable:
+        def __str__(self):
+            raise TypeError("no text form")
+
+    with pytest.raises(TypeError):
+        mod._save_state(path, {"a": Unserializable()})
+    assert os.listdir(tmp_path) == [mod.STATE_FILE]
+    assert mod._load_state(path, {}) == {"a": 1, "b": 2}

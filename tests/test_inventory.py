@@ -1,6 +1,6 @@
 """The package carries no code that only tests reach.
 
-Two checks:
+Three checks:
 
 - ``tools/check_inventory.py`` (SURVEY §2 against the live registry)
   passes.
@@ -14,6 +14,8 @@ Two checks:
   read from the AST: names and attribute chains, resolved through each
   file's (absolute) imports. Docstrings and comments never count, and
   ``tests/`` is not a root.
+- Each cross-engine idiom in ``LLM_IDIOMS`` is spelled out once in
+  ``queries/llm.py``, at its shared definition.
 
 Run ``python tests/test_inventory.py`` to print the scan's findings.
 """
@@ -199,6 +201,25 @@ def test_every_package_name_is_reached_outside_tests():
     dead = [n for n in unreached if n not in ALLOWED]
     assert not dead, "reached only from tests/ (or not at all):\n  " + "\n  ".join(dead)
     assert not stale, f"allowlisted but reached, drop from ALLOWED: {stale}"
+
+
+# Idioms of queries/llm.py that are written once, in the shared block at
+# the top of the file, and never restated at a call site.
+LLM_IDIOMS = (
+    "string_split_regex(lower(text)",
+    "F.split(F.lower(",
+    "sqrt(list_inner_product(",
+    "range(1, len(embedding) + 1)",
+)
+
+
+def test_llm_idioms_are_written_once():
+    src = (ROOT / PKG / "queries" / "llm.py").read_text()
+    shared = src[: src.index("@register(")]
+    counts = {i: (src.count(i), shared.count(i)) for i in LLM_IDIOMS}
+    assert counts == dict.fromkeys(LLM_IDIOMS, (1, 1)), counts
+    unrolled = re.findall(r"\bpr[1-9][0-9]* AS \(", src)
+    assert not unrolled, f"hand-unrolled PageRank CTEs: {unrolled[:3]}"
 
 
 if __name__ == "__main__":

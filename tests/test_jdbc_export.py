@@ -234,15 +234,17 @@ def test_sql_file_export(spark, derby_db, tmp_path):
 
 
 def test_input_avro_schema_docs(spark, derby_db, tmp_path):
+    """dbeam's --avroSchemaFilePath: docs and namespace of the input
+    schema file carry into the written schema."""
     out = tmp_path / "docs"
+    schema_file = tmp_path / "input.avsc"
+    schema_file.write_text(json.dumps({
+        "doc": "coffee table",
+        "namespace": "com.example",
+        "fields": [{"name": "C_ID", "doc": "the id"}],
+    }))
     run_export(
-        spark,
-        opts_for(derby_db, out),
-        input_avro_schema={
-            "doc": "coffee table",
-            "namespace": "com.example",
-            "fields": [{"name": "C_ID", "doc": "the id"}],
-        },
+        spark, opts_for(derby_db, out, avroSchemaFilePath=str(schema_file))
     )
     schema = json.loads((out / "_AVRO_SCHEMA.avsc").read_text())
     assert schema["doc"] == "coffee table"
